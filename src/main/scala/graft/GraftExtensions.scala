@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.internal.SQLConf
 import graft.functions.CosineSimExpr
 
 /** SparkSessionExtensions entry point: inject the engine's native
@@ -10,9 +11,25 @@ import graft.functions.CosineSimExpr
   * (`spark.sql.extensions=graft.GraftExtensions`). Runtime
   * registration via [[CosineSimExpr.register]] is equivalent for
   * sessions built without the conf.
+  *
+  * Every session built with these extensions also shares one class
+  * space. Spark caches generated classes by (thread context class
+  * loader, code), and with artifact isolation on (the default) each
+  * session's tasks run under a class loader of their own, so every
+  * fresh session — each `newSession()` and each session a streaming
+  * query clones — would compile and JIT-compile every generated class
+  * again. The engine adds no per-session jars or artifacts, so it
+  * turns isolation off; the price is that a jar one session adds is
+  * visible to all of them. The check-rule builder runs when a session
+  * builds its analyzer, at its first analysis, which precedes its
+  * first execution, where `ArtifactManager` reads the flag.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectCheckRule { session =>
+      session.conf.set(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, false)
+      _ => ()
+    }
     ext.injectOptimizerRule(_ =>
       graft.plans.CollapseIdempotentStringOps)
     ext.injectOptimizerRule(_ => graft.plans.RewriteHofCosine)

@@ -1217,13 +1217,16 @@ object OpsQueries {
         .withColumn("h", lit(1000000L))
       val (h2, a2) = (1 to 2)
         .foldLeft((h0, h0.select(col("c").as("p"), col("h").as("a")))) {
-          case ((h, _), _) =>
+          case ((h, aPrev), round) =>
             val a = maxNorm(
               cp.join(h, Seq("c"))
                 .groupBy("p").agg(sum(col("h")).as("a")), "a")
             val hn = maxNorm(
               cp.join(a, Seq("p"))
                 .groupBy("c").agg(sum(col("a")).as("h")), "h")
+            // This round's frames are materialized: release the
+            // previous round's pins (round 1's inputs are unpinned).
+            if (round > 1) { Checkpoints.unpin(h); Checkpoints.unpin(aPrev) }
             (hn, a)
         }
       a2.orderBy(col("a").desc, col("p")).limit(10)

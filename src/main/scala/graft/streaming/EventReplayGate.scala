@@ -57,8 +57,9 @@ object EventReplayGate {
     * the event-formatting scan n times (guide §2.4: one staging pass;
     * the same single-pass rewrite StreamGates.stageSlices got in
     * r18). Row routing is IDENTICAL to the old per-partition filters
-    * (`pmod(event_id, n) === p`), so each staged file's contents are
-    * byte-identical; only the number of jobs changed. Returns the
+    * (`pmod(event_id, n) === p`), so each staged file holds the same
+    * set of lines; their order may differ, because `repartition` does
+    * not keep it. Only the number of jobs changed. Returns the
     * per-partition file paths (partition i = i-th path).
     */
   private def stageLogParts(
@@ -75,9 +76,12 @@ object EventReplayGate {
       val dst = dstDir.resolve("part-00000.txt")
       val pdir = new java.io.File(s"$tmp/__p=$p")
       if (pdir.isDirectory) {
-        val part = pdir.listFiles()
-          .filter(_.getName.startsWith("part-")).head
-        java.nio.file.Files.move(part.toPath, dst,
+        val parts = pdir.listFiles()
+          .filter(_.getName.startsWith("part-"))
+        require(parts.length == 1,
+          s"log partition $p staged ${parts.length} part files " +
+            s"(${parts.map(_.getName).sorted.mkString(", ")}), expected 1")
+        java.nio.file.Files.move(parts(0).toPath, dst,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       } else {
         // No rows routed to this partition: the old per-partition
