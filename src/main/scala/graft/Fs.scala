@@ -114,6 +114,20 @@ object Fs {
     } finally ls.close()
   }
 
+  /** The one `part-` file (name ending in `suffix`) that a
+    * single-task write left in `dir`. More than one fails loudly
+    * instead of silently staging only the first.
+    */
+  def onlyPart(dir: String, suffix: String = ""): Path = {
+    val parts = Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(f => f.getName.startsWith("part-") &&
+        f.getName.endsWith(suffix))
+    require(parts.length == 1,
+      s"$dir holds ${parts.length} part files " +
+        s"(${parts.map(_.getName).sorted.mkString(", ")}), expected 1")
+    parts.head.toPath
+  }
+
   /** Canonical scratch-sink path for gate queries that exercise a
     * write+read-back round trip — run-id suffixed (see [[runId]]);
     * stable within one JVM so repeated in-process runs overwrite

@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 import graft.functions.CosineSimExpr
 
 /** SparkSessionExtensions entry point: inject the engine's native
@@ -26,6 +28,7 @@ import graft.functions.CosineSimExpr
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftExtensions.sizeCodegenCache()
     ext.injectCheckRule { session =>
       session.conf.set(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, false)
       _ => ()
@@ -66,5 +69,33 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "parse_movies"),
         (args: Seq[Expression]) =>
           graft.functions.ParseMoviesGenerator(args(0), args(1))))
+  }
+}
+
+object GraftExtensions {
+
+  /** Entries of Spark's one JVM-wide codegen cache. Its default, 100,
+    * holds less than one pass of a workload: a class compiled on a
+    * driver thread and again in a task keys two entries (the key
+    * includes the thread's class loader), so a warm pass evicts
+    * classes it needs again and recompiles them. 1000 entries hold
+    * every workload's classes; the cost is that up to 1000 generated
+    * classes stay loaded.
+    */
+  val CodegenCacheEntries = 1000
+
+  /** Spark sizes the cache once, from `SQLConf.get`, when
+    * `CodeGenerator` first loads; a context that sets the key itself
+    * keeps its own size. Loading it here, under a conf that sets the
+    * key, fixes the size before any session compiles a class.
+    */
+  private def sizeCodegenCache(): Unit = {
+    val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+    if (!Option(SparkEnv.get).exists(_.conf.contains(key))) {
+      val conf = new SQLConf
+      conf.setConfString(key, CodegenCacheEntries.toString)
+      // Referencing the object runs its initializer, which sizes the cache.
+      SQLConf.withExistingConf(conf)(CodeGenerator)
+    }
   }
 }

@@ -1,8 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, expr, unix_micros}
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.functions.{expr, unix_micros}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 
 /** Loaders for the driver-generated parquet star schema
   * (/root/testdata/sf{0.001,0.01,0.1} — see TESTDATA.md / FIXTURES.md §B).
@@ -66,19 +70,19 @@ object Tables {
       "vec_id" -> Set("bigint"), "embedding" -> Set("array<float>"),
       "label" -> Set("int")))
 
-  private def check(name: String, df: DataFrame): DataFrame = {
+  private def check(name: String, schema: StructType): Unit =
     expected.get(name).foreach { cols =>
       // Order-insensitive on purpose: every loader and query selects
       // columns BY NAME, so a reordered fixture (or a spec's synthetic
       // twin table) is harmless; missing/renamed columns and changed
       // physical types are the drifts that corrupt results silently.
       val actual =
-        df.schema.map(f => f.name -> f.dataType.catalogString).toMap
+        schema.map(f => f.name -> f.dataType.catalogString).toMap
       val missing = cols.map(_._1).filterNot(actual.contains)
       val extra = actual.keySet -- cols.map(_._1).toSet
       require(missing.isEmpty && extra.isEmpty,
         s"fixture schema drift: table '$name' has columns " +
-          s"[${df.schema.fieldNames.mkString(", ")}], expected " +
+          s"[${schema.fieldNames.mkString(", ")}], expected " +
           s"[${cols.map(_._1).mkString(", ")}]" +
           (if (missing.nonEmpty) s"; missing: ${missing.mkString(", ")}"
            else "") +
@@ -95,8 +99,6 @@ object Tables {
             "result (FIXTURES.md §B)")
       }
     }
-    df
-  }
 
   /** Spread the per-row work above a scan whose input layout cannot
     * feed every core (guide §2.5 "input skew: one huge unsplittable
@@ -125,8 +127,49 @@ object Tables {
   def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
+  /** Inferred schemas, one per (files, parquet confs) key, kept for
+    * the whole JVM. Inferring a parquet schema launches a Spark job
+    * that reads a footer, on every read of every table, although the
+    * fixture files never change; with the schema given, Spark plans
+    * the same relation (both paths make it nullable) and starts no
+    * job. The key holds each file's path, length and modification
+    * time, so a replaced file infers again, and every set
+    * `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` entry plus
+    * `spark.sql.caseSensitive` — every conf the parquet schema
+    * converter reads, `nanosAsLong` among them — so a changed conf
+    * infers again too.
+    */
+  private val schemas =
+    new ConcurrentHashMap[(Seq[(String, Long, Long)], Map[String, String]),
+      StructType]()
+
+  /** Schema of `dir/name.parquet`, from [[schemas]]. The canary runs
+    * once per key, when the schema is inferred; a failed check stores
+    * nothing, so the drift fails again on the next load.
+    */
+  def schema(spark: SparkSession, dir: String, name: String): StructType = {
+    val path = new Path(s"$dir/$name.parquet")
+    // A file lists as itself; a directory as every file under it.
+    val it = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(path, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.")
+    } + (SQLConf.CASE_SENSITIVE.key ->
+      spark.conf.get(SQLConf.CASE_SENSITIVE.key))
+    val key = (files.map(f =>
+      (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq, confs)
+    Option(schemas.get(key)).getOrElse {
+      val inferred = spark.read.parquet(path.toString).schema
+      check(name, inferred)
+      schemas.put(key, inferred)
+      inferred
+    }
+  }
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    check(name, spark.read.parquet(s"$dir/$name.parquet"))
+    spark.read.schema(schema(spark, dir, name)).parquet(s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")

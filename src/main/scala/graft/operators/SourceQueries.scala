@@ -1838,7 +1838,7 @@ object SourceQueries {
       s.sql(s"DROP TABLE IF EXISTS $t")
       s.sql(s"CREATE TABLE $t (vec_id BIGINT, embedding ARRAY<DOUBLE>) " +
         "TBLPROPERTIES ('snapshots'='true')")
-      val n = s.read.parquet(s"$d/embeddings.parquet").count()
+      val n = graft.Tables.embeddings(s, d).count()
       val cut = 4L * n / 5
       s.sql(s"INSERT INTO $t SELECT vec_id, " +
         "CAST(embedding AS ARRAY<DOUBLE>) " +
@@ -2686,13 +2686,13 @@ object SourceQueries {
         s"FROM parquet.`$d/orders.parquet`") // main v1
       s.sql("CALL graft_kv.system.create_branch(" +
         "table => 'default.wap_gate', name => 'audit')")
-      s.read.parquet(s"$d/orders.parquet")
+      graft.Tables.orders(s, d)
         .where("o_orderkey % 3 = 0")
         .selectExpr("o_orderkey + 20000000 AS key",
           "concat('W-', o_orderpriority) AS value")
         .writeTo(t).option("branch", "audit").append()
       val mainCnt = s.table(t).count()
-      val origCnt = s.read.parquet(s"$d/orders.parquet").count()
+      val origCnt = graft.Tables.orders(s, d).count()
       require(mainCnt == origCnt,
         s"catalog_wap: branch write leaked into main " +
           s"($mainCnt rows, expected $origCnt)")
@@ -2711,12 +2711,12 @@ object SourceQueries {
       // (file-replacing) and expire everything untagged.
       s.sql("CALL graft_kv.system.create_branch(" +
         "table => 'default.wap_gate', name => 'stage2')")
-      s.read.parquet(s"$d/orders.parquet")
+      graft.Tables.orders(s, d)
         .where("o_orderkey % 7 = 0")
         .selectExpr("o_orderkey + 30000000 AS key",
           "'S2' AS value")
         .writeTo(t).option("branch", "stage2").append()
-      val staged2 = s.read.parquet(s"$d/orders.parquet")
+      val staged2 = graft.Tables.orders(s, d)
         .where("o_orderkey % 7 = 0").count()
       s.sql(s"DELETE FROM $t WHERE key % 2 = 0") // CoW rewrite
       s.sql("CALL graft_kv.system.expire_snapshots(" +

@@ -31,10 +31,7 @@ object EventReplayGate {
     */
   private def stageLog(df: DataFrame, dir: String): String = {
     df.coalesce(1).write.mode("overwrite").text(dir)
-    new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("part-"))
-      .map(_.getAbsolutePath)
-      .head
+    graft.Fs.onlyPart(dir).toAbsolutePath.toString
   }
 
   /** One TSV line per event: integer-only fields so the text
@@ -76,12 +73,7 @@ object EventReplayGate {
       val dst = dstDir.resolve("part-00000.txt")
       val pdir = new java.io.File(s"$tmp/__p=$p")
       if (pdir.isDirectory) {
-        val parts = pdir.listFiles()
-          .filter(_.getName.startsWith("part-"))
-        require(parts.length == 1,
-          s"log partition $p staged ${parts.length} part files " +
-            s"(${parts.map(_.getName).sorted.mkString(", ")}), expected 1")
-        java.nio.file.Files.move(parts(0).toPath, dst,
+        java.nio.file.Files.move(graft.Fs.onlyPart(pdir.getPath), dst,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       } else {
         // No rows routed to this partition: the old per-partition

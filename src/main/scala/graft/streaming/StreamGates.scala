@@ -80,10 +80,8 @@ object StreamGates {
       val dst =
         java.nio.file.Paths.get(stageDir, f"slice_$i%03d.parquet")
       if (pdir.isDirectory) {
-        val part = pdir.listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, dst)
+        java.nio.file.Files.move(
+          graft.Fs.onlyPart(pdir.getPath, ".parquet"), dst)
       } else {
         // Empty slice (no keys in its range): the dynamic writer
         // skips the dir, but the replay contract needs one file per
@@ -92,10 +90,7 @@ object StreamGates {
         val tmpE = s"$stageDir-tmp-empty-$i"
         df.filter(org.apache.spark.sql.functions.lit(false))
           .coalesce(1).write.mode("overwrite").parquet(tmpE)
-        val part = new java.io.File(tmpE).listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, dst)
+        java.nio.file.Files.move(graft.Fs.onlyPart(tmpE, ".parquet"), dst)
         graft.Fs.deleteRecursively(tmpE)
       }
       java.nio.file.Files.setLastModifiedTime(dst,

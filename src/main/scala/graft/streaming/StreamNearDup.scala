@@ -205,20 +205,15 @@ object StreamNearDup {
       val dst = java.nio.file.Paths.get(stageDir, s"docs_$sfx.parquet")
       val pdir = new java.io.File(s"$tmp/__slice=$i")
       if (pdir.isDirectory) {
-        val part = pdir.listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, dst)
+        java.nio.file.Files.move(
+          graft.Fs.onlyPart(pdir.getPath, ".parquet"), dst)
       } else {
         // Empty slice: the dynamic writer skips the dir; the replay
         // contract still needs one (empty) file per micro-batch.
         val tmpE = s"$stageDir-tmp-empty-$sfx"
         docs.filter(lit(false)).coalesce(1)
           .write.mode("overwrite").parquet(tmpE)
-        val part = new java.io.File(tmpE).listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, dst)
+        java.nio.file.Files.move(graft.Fs.onlyPart(tmpE, ".parquet"), dst)
         graft.Fs.deleteRecursively(tmpE)
       }
       java.nio.file.Files.setLastModifiedTime(dst,

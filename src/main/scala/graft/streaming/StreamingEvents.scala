@@ -22,8 +22,8 @@ object StreamingEvents {
     * encoding ACTUALLY ON DISK — the fixtures have shipped both
     * ns-int64 (arrives as LongType under nanosAsLong) and native
     * timestamp[us] (arrives as TIMESTAMP_NTZ). A file stream needs an
-    * explicit schema, so [[stream]] sniffs the footer type with a
-    * driver-side schema-only batch read first; declaring the wrong
+    * explicit schema, so [[stream]] takes the footer type from the
+    * batch loaders' schema memo first; declaring the wrong
     * flavor would silently reinterpret raw µs ints (the round-8
     * 1000×-compressed-timeline failure).
     */
@@ -35,14 +35,11 @@ object StreamingEvents {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** Footer type of events.ts as stored in `dir` (schema-only read —
-    * no data scan).
+  /** Footer type of events.ts as stored in `dir`, from the schema
+    * memo the batch loaders share (no job once the file is known).
     */
   private def fileTsType(spark: SparkSession, dir: String): DataType =
-    spark.read
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .schema("ts").dataType
+    graft.Tables.schema(spark, dir, "events")("ts").dataType
 
   /** The shared (batch ≡ stream) aggregation: tumbling 1-day event-time
     * windows per event_type with integer-cents value sums.

@@ -35,6 +35,21 @@ class SessionClassSpaceSpec extends SparkTestBase {
     assert(compilesInFreshSession(query) == 0)
   }
 
+  test("a fresh session recompiles nothing after more than 100 classes") {
+    // Each query compiles its own classes, once on the driver and once
+    // in a task (two cache entries), so the 80 need more entries than
+    // Spark's default codegen cache of 100 holds.
+    def queries(s: SparkSession): Unit = (1 to 80).foreach { i =>
+      val rows = Tables.lineitem(s, sfDir)
+        .where(col("l_orderkey") % (8101 + i) =!= i)
+        .select((col("l_quantity") * (9103 + i)).as("q"))
+        .collect()
+      assert(rows.nonEmpty)
+    }
+    assert(compilesInFreshSession(queries) >= 80)
+    assert(compilesInFreshSession(queries) == 0)
+  }
+
   test("a stream's cloned session compiles no class an earlier stream compiled") {
     def stream(name: String)(s: SparkSession): Unit = {
       val q = StreamingEvents.stream(s, sfDir)
