@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.local.LocalFs
 import org.apache.spark.SparkEnv
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -25,12 +27,20 @@ import graft.functions.CosineSimExpr
   * visible to all of them. The check-rule builder runs when a session
   * builds its analyzer, at its first analysis, which precedes its
   * first execution, where `ArtifactManager` reads the flag.
+  *
+  * The same builder binds `FileContext`'s `file:` scheme to
+  * [[NioLocalFs]] on the context's Hadoop configuration, while the key
+  * still names Hadoop's default, so checkpoint and state-store files
+  * are written without a `chmod`/`readlink` child process each. Hadoop
+  * keeps no `AbstractFileSystem` cache, so every Hadoop conf copied
+  * afterwards, streaming checkpoints' among them, resolves to it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.sizeCodegenCache()
     ext.injectCheckRule { session =>
       session.conf.set(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, false)
+      GraftExtensions.bindLocalFileContext(session.sparkContext.hadoopConfiguration)
       _ => ()
     }
     ext.injectOptimizerRule(_ =>
@@ -83,6 +93,16 @@ object GraftExtensions {
     * classes stay loaded.
     */
   val CodegenCacheEntries = 1000
+
+  /** `FileContext`'s `file:` implementation key. */
+  val LocalFileContextKey = "fs.AbstractFileSystem.file.impl"
+
+  /** Name [[NioLocalFs]] under [[LocalFileContextKey]] unless `conf`
+    * already names a class other than Hadoop's default, `LocalFs`.
+    */
+  private[graft] def bindLocalFileContext(conf: Configuration): Unit =
+    if (conf.get(LocalFileContextKey) == classOf[LocalFs].getName)
+      conf.set(LocalFileContextKey, classOf[NioLocalFs].getName)
 
   /** Spark sizes the cache once, from `SQLConf.get`, when
     * `CodeGenerator` first loads; a context that sets the key itself

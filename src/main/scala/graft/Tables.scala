@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{expr, unix_micros}
 import org.apache.spark.sql.internal.SQLConf
@@ -149,17 +149,21 @@ object Tables {
     */
   def schema(spark: SparkSession, dir: String, name: String): StructType = {
     val path = new Path(s"$dir/$name.parquet")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // A file lists as itself; a directory as every file under it.
-    val it = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listFiles(path, true)
-    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+    // `listStatus`, not `listFiles`: a `LocatedFileStatus` copies the
+    // permissions, which the local filesystem reads with an `ls`
+    // process per file; path, length and mtime need none.
+    def files(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files)
+      else Seq(st)
     val confs = spark.conf.getAll.filter { case (k, _) =>
       k.startsWith("spark.sql.parquet.") ||
         k.startsWith("spark.sql.legacy.parquet.")
     } + (SQLConf.CASE_SENSITIVE.key ->
       spark.conf.get(SQLConf.CASE_SENSITIVE.key))
-    val key = (files.map(f =>
-      (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq, confs)
+    val key = (files(fs.getFileStatus(path)).map(f =>
+      (f.getPath.toString, f.getLen, f.getModificationTime)), confs)
     Option(schemas.get(key)).getOrElse {
       val inferred = spark.read.parquet(path.toString).schema
       check(name, inferred)
