@@ -114,6 +114,25 @@ object Fs {
     } finally ls.close()
   }
 
+  /** Replace the small file `target` with `bytes` atomically: write a
+    * uniquely named temp file beside it, then `ATOMIC_MOVE` it over the
+    * target. Readers see the old or the new content, never a torn
+    * file, and concurrent writers never share a temp file (a fixed
+    * `.tmp` name let one writer's move take another's half-written
+    * temp, or fail on a temp already moved). Last mover wins.
+    */
+  def replaceAtomically(target: Path, bytes: Array[Byte]): Unit = {
+    val tmp = target.resolveSibling(
+      s"${target.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      Files.write(tmp, bytes, java.nio.file.StandardOpenOption.CREATE_NEW,
+        java.nio.file.StandardOpenOption.WRITE)
+      Files.move(tmp, target,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
+  }
+
   /** The one `part-` file (name ending in `suffix`) that a
     * single-task write left in `dir`. More than one fails loudly
     * instead of silently staging only the first.

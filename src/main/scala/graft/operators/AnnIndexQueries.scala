@@ -459,13 +459,9 @@ object AnnIndexQueries {
     val body =
       s"""{"table":"${pin.tableDir}","version":${pin.version},""" +
         s""""deltas":${pin.deltas}}"""
-    val tmp = java.nio.file.Paths.get(idxDir, "_pin.json.tmp")
-    java.nio.file.Files.createDirectories(tmp.getParent)
-    java.nio.file.Files.write(tmp,
+    java.nio.file.Files.createDirectories(pinPath(idxDir).getParent)
+    graft.Fs.replaceAtomically(pinPath(idxDir),
       body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, pinPath(idxDir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
   private val PinRe =

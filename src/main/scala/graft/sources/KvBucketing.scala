@@ -216,14 +216,9 @@ object KvBucketing {
     // Temp + atomic rename, same as the manifest commit: an in-place
     // rewrite (ALTER flipping the snapshots flag) interrupted mid-write
     // would leave a truncated meta that bricks every subsequent access.
-    val tmp = java.nio.file.Paths.get(dir, MetaFile + ".tmp")
-    java.nio.file.Files.write(tmp,
+    graft.Fs.replaceAtomically(java.nio.file.Paths.get(dir, MetaFile),
       fields.mkString("{", ",", "}").getBytes(
         java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(dir, MetaFile),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
   def writeMeta(dir: String, buckets: Int): Unit =
@@ -299,8 +294,8 @@ object KvBucketing {
 
   private val BucketInName = """-b(\d+)\.jsonl$""".r
 
-  /** Final-name suffix the bucketed writer appends; [[fileBucket]] is
-    * its exact inverse on the file NAME (not path).
+  /** Final-name suffix the routed writer (KvDataWriter) appends;
+    * [[fileBucket]] is its exact inverse on the file NAME (not path).
     */
   def bucketSuffix(bucket: Int): String = f"-b$bucket%04d"
 

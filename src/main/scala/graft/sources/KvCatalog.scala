@@ -1488,10 +1488,9 @@ class KvRowLevelOperation(
   /** `_file` rides along so Catalyst plans the metadata-aware
     * replace-write (ProjectingInternalRow strips the rewrite's
     * bookkeeping columns before rows reach the writer — the same
-    * task path Iceberg's copy-on-write uses). The commit here
-    * replaces the whole table, so the writer discards the metadata
-    * row; a file-group committer would collect it to replace only
-    * touched files.
+    * task path Iceberg's copy-on-write uses). The commit replaces
+    * exactly the files the rewrite's scan planned, so the writer
+    * discards the metadata row.
     */
   override def requiredMetadataAttributes():
       Array[org.apache.spark.sql.connector.expressions.NamedReference] =
@@ -1508,76 +1507,21 @@ class KvRowLevelOperation(
       s"kvjsonl row-level write needs " +
         s"${KvSchema.toStruct(want).catalogString}; " +
         s"got ${s.catalogString}")
-    val keyName = KvSchema.keyName(want)
+    // The rewrite requests the same (distribution, ordering) as the
+    // table's own writes (row-level ops always resolve through the
+    // catalog, so the bucket function resolves): without it every
+    // rewrite task of a bucketed table fans out across ALL buckets —
+    // up to n open writers per task and tasks×n files per DML instead
+    // of ~n — and a sorted table's replacement bands stop being
+    // zone-map-prunable. No partition transform is passed.
+    val requirement = KvJsonlTable.writeRequirement(
+      KvSchema.keyName(want), buckets, partition = None, sorted)
     new WriteBuilder {
-      override def build(): Write = buckets match {
-        // The rewrite of a bucketed table requests the same
-        // clustered-by-bucket distribution the ordinary catalog write
-        // does (row-level ops always resolve through the catalog, so
-        // the bucket function resolves): without it every rewrite
-        // task fans out across ALL buckets — up to n open writers per
-        // task and tasks×n files per DML instead of ~n.
-        case Some(n) =>
-          new Write with org.apache.spark.sql.connector.write
-            .RequiresDistributionAndOrdering {
-            override def requiredDistribution()
-                : org.apache.spark.sql.connector.distributions.Distribution =
-              org.apache.spark.sql.connector.distributions.Distributions
-                .clustered(Array(
-                  org.apache.spark.sql.connector.expressions.Expressions
-                    .bucket(n, keyName)))
-            // a SORTED bucketed table's rewrite re-requests the
-            // (bucket, key) ordering, so replacement files stay
-            // per-bucket key-ascending (the write path's contract)
-            override def requiredOrdering()
-                : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-              if (sorted) {
-                import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
-                Array(
-                  Expressions.sort(Expressions.bucket(n, keyName),
-                    SortDirection.ASCENDING),
-                  Expressions.sort(Expressions.column(keyName),
-                    SortDirection.ASCENDING))
-              } else Array.empty
-            override def toBatch
-                : org.apache.spark.sql.connector.write.BatchWrite =
-              new KvJsonlBatchWrite(
-                path, truncateFirst = true, info.queryId(),
-                replaceOnly = Some(replacedFiles _))
-          }
-        // A sorted table's rewrite re-requests the global key order,
-        // so replacement bands stay zone-map-prunable.
-        case None if sorted =>
-          new Write with org.apache.spark.sql.connector.write
-            .RequiresDistributionAndOrdering {
-            private val keyAsc =
-              org.apache.spark.sql.connector.expressions.Expressions
-                .sort(
-                  org.apache.spark.sql.connector.expressions.Expressions
-                    .column(keyName),
-                  org.apache.spark.sql.connector.expressions
-                    .SortDirection.ASCENDING)
-            override def requiredDistribution()
-                : org.apache.spark.sql.connector.distributions.Distribution =
-              org.apache.spark.sql.connector.distributions.Distributions
-                .ordered(Array(keyAsc))
-            override def requiredOrdering()
-                : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-              Array(keyAsc)
-            override def toBatch
-                : org.apache.spark.sql.connector.write.BatchWrite =
-              new KvJsonlBatchWrite(
-                path, truncateFirst = true, info.queryId(),
-                replaceOnly = Some(replacedFiles _))
-          }
-        case None => new Write {
-          override def toBatch
-              : org.apache.spark.sql.connector.write.BatchWrite =
-            new KvJsonlBatchWrite(
-              path, truncateFirst = true, info.queryId(),
-              replaceOnly = Some(replacedFiles _))
-        }
-      }
+      override def build(): Write = new KvWrite(path, info.queryId(),
+        requirement,
+        new KvJsonlBatchWrite(path, truncateFirst = true, info.queryId(),
+          replaceOnly = Some(replacedFiles _)),
+        streamRefusal = Some("a row-level rewrite is batch-only"))
     }
   }
 

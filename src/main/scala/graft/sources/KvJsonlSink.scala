@@ -4,7 +4,8 @@ import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.distributions.Distribution
+import org.apache.spark.sql.connector.expressions.{SortOrder, Transform}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -83,8 +84,8 @@ object KvJsonlSink {
     * never delete a CONCURRENT job's in-flight attempt files — found
     * by KvOccSpec's racing-INSERT test (NoSuchFileException in the
     * loser's writer when the winner's commit swept the shared dir).
-    * The streaming writer keeps the base dir: one query owns a sink,
-    * and its per-epoch names are reaped by prefix, not recursively.
+    * A streaming epoch's job id is its epoch tag (`[q<qid>-]e<epoch>`),
+    * so an epoch's scratch is one subdir too.
     */
   def tempDir(path: String, jobId: String): java.nio.file.Path =
     java.nio.file.Paths.get(path, "_temporary", jobId)
@@ -100,8 +101,25 @@ object KvJsonlSink {
     catch { case _: java.nio.file.DirectoryNotEmptyException => () }
   }
 
-  /** One row → one sink line; shared by the plain and bucketed
-    * writers so [[parseLine]] stays the single inverse.
+  /** Publish one written file into the table dir: move its temp file
+    * to the final name, then write its bloom sidecar. The sidecar
+    * lands AFTER its data file: a reader racing the window sees data
+    * without sidecar = "unknown, don't skip" — the safe direction.
+    * Every commit (batch, streaming epoch, merge-on-read) publishes
+    * through here.
+    */
+  def publish(dir: java.nio.file.Path, f: KvWrittenFile): Unit = {
+    java.nio.file.Files.move(
+      java.nio.file.Paths.get(f.tempFile),
+      dir.resolve(f.finalName),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    if (f.blooms.nonEmpty)
+      KvBloom.writeSidecar(
+        dir.resolve(KvBloom.sidecarName(f.finalName)), f.blooms)
+  }
+
+  /** One founding-schema row → one sink line ([[KvDataWriter]]);
+    * [[parseLine]] is its single inverse.
     */
   def formatLine(row: InternalRow): String = {
     val value =
@@ -175,7 +193,7 @@ object KvJsonlSink {
   def parseKey(line: String): Option[Any] = parseKeyTok(line)._1
 
   /** Exact inverse of the writer's line format (see
-    * [[KvJsonlDataWriter.write]]): `{"key":K,"value":V}` with K a
+    * [[formatLine]]): `{"key":K,"value":V}` with K a
     * long, a quoted [[escape]]d string (string-keyed tables) or
     * `null`, and V `null` or a double-quoted [[escape]]d
     * string. Strict by design — these files are only ever written by
@@ -249,6 +267,62 @@ object KvJsonlTable {
       case KvBucketing.PartMonths => E.months(colName)
       case KvBucketing.PartYears => E.years(colName)
       case KvBucketing.PartHours => E.hours(colName)
+    }
+  }
+
+  /** The (distribution, ordering) a kv write requests — one decision
+    * for the table's writes and the row-level rewrite
+    * (KvRowLevelOperation). `buckets` and `partition` (unit, column
+    * name) are the transforms the caller can resolve; a format-path
+    * write passes neither. Correctness never depends on the request:
+    * the routed writer sends any row to its cell's file. It is the
+    * file-count control — each task sees ~one cell and writes ~one
+    * file.
+    *
+    *   - `layoutRewrite` (the system.* maintenance rewrites): the
+    *     procedure's own repartition decides file boundaries — a
+    *     standing distribution would re-shuffle a range-split rewrite,
+    *     and AQE would then coalesce it to one task — while a plain
+    *     key sort keeps every per-bucket file sorted (any subsequence
+    *     of a key-sorted task stream is key-sorted).
+    *   - composed (unit × bucket): cluster by both transforms.
+    *   - bucketed: cluster by bucket; a SORTED bucketed table also
+    *     orders by (bucket, key), so every bucket FILE lands sorted —
+    *     what lets the scan report SupportsReportOrdering and a
+    *     co-bucketed sort-merge join skip its sorts.
+    *   - date-partitioned: cluster by the partition transform.
+    *   - sorted (TBLPROPERTIES 'write.sort'='key'): a GLOBAL key order
+    *     — range distribution plus in-partition sort — so each task
+    *     emits one file with a key range disjoint from its siblings'
+    *     and the manifest zone maps prune from the first INSERT
+    *     (Iceberg's write.sort-order as a standing property).
+    *   - otherwise nothing.
+    */
+  def writeRequirement(
+      keyName: String, buckets: Option[Int],
+      partition: Option[(KvBucketing.PartUnit, String)],
+      sorted: Boolean, layoutRewrite: Boolean = false)
+      : (Distribution, Array[SortOrder]) = {
+    import org.apache.spark.sql.connector.distributions.Distributions
+    import org.apache.spark.sql.connector.expressions.{Expressions => E, SortDirection}
+    val keyAsc = E.sort(E.column(keyName), SortDirection.ASCENDING)
+    (buckets, partition) match {
+      case _ if layoutRewrite => (Distributions.unspecified(), Array(keyAsc))
+      case (Some(n), Some((unit, col))) =>
+        (Distributions.clustered(
+          Array(partTransform(unit, col), E.bucket(n, keyName))),
+          Array.empty)
+      case (Some(n), None) =>
+        (Distributions.clustered(Array(E.bucket(n, keyName))),
+          if (sorted)
+            Array(E.sort(E.bucket(n, keyName), SortDirection.ASCENDING),
+              keyAsc)
+          else Array.empty)
+      case (None, Some((unit, col))) =>
+        (Distributions.clustered(Array(partTransform(unit, col))),
+          Array.empty)
+      case _ if sorted => (Distributions.ordered(Array(keyAsc)), Array(keyAsc))
+      case _ => (Distributions.unspecified(), Array.empty)
     }
   }
 }
@@ -438,13 +512,7 @@ class KvJsonlTable(
         s"${KvSchema.toStruct(want).catalogString}; got ${s.catalogString}")
     // Maintenance rewrites (system.rewrite_buckets / rebucket) OWN
     // their placement: `.option("layout_rewrite", "true")` suppresses
-    // the standing distribution requests below — the procedure's
-    // explicit repartition decides file boundaries (a global-key
-    // ordered distribution would re-shuffle a range-split rewrite,
-    // and AQE would then coalesce it to one task) — while a plain
-    // key-ascending ordering is still REQUIRED, which keeps every
-    // per-bucket file sorted (any subsequence of a key-sorted task
-    // stream is key-sorted).
+    // the standing distribution request (writeRequirement).
     val layoutRewrite = "true" == info.options.get("layout_rewrite")
     // `maintenance=true` (set ONLY by the system.* rewrite
     // procedures): the commit is flagged live-rows-unchanged, so the
@@ -484,187 +552,55 @@ class KvJsonlTable(
       // never leaves the target half-cleared (abort keeps old files).
       private var truncateFirst = false
       override def truncate(): WriteBuilder = { truncateFirst = true; this }
-      override def build(): Write = (buckets, meta.partition) match {
-        case _ if layoutRewrite =>
-          new Write with RequiresDistributionAndOrdering {
-            override def requiredDistribution()
-                : org.apache.spark.sql.connector.distributions.Distribution =
-              org.apache.spark.sql.connector.distributions.Distributions
-                .unspecified()
-            override def requiredOrdering()
-                : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-              Array(
-                org.apache.spark.sql.connector.expressions.Expressions
-                  .sort(
-                    org.apache.spark.sql.connector.expressions.Expressions
-                      .column(keyName),
-                    org.apache.spark.sql.connector.expressions
-                      .SortDirection.ASCENDING))
-            override def toBatch: BatchWrite =
-              new KvJsonlBatchWrite(path, truncateFirst, info.queryId(),
-                writeBranch,
-                replaceOnly = replaceFiles.map(s => () => s),
-                maintenance = maint,
-                requireBase = maintBase)
-            override def toStreaming: streaming.StreamingWrite =
-              throw new UnsupportedOperationException(
-                "layout_rewrite is a batch-maintenance option")
-          }
-        // COMPOSED layout (months(ts) × bucket(n, key)): request
-        // clustering by BOTH transforms, so each task sees ~one
-        // (unit, bucket) cell and writes ~one file. Correctness never
-        // depends on it — the composed fan-out writer routes any
-        // distribution.
-        case (Some(n), Some((unit, id))) if viaCatalog =>
-          val pcolName = cols.find(_.id == id).map(_.name).getOrElse(
-            throw new IllegalStateException(
-              s"partition field id $id missing from the schema of $path"))
-          new Write with RequiresDistributionAndOrdering {
-            override def requiredDistribution()
-                : org.apache.spark.sql.connector.distributions.Distribution =
-              org.apache.spark.sql.connector.distributions.Distributions
-                .clustered(Array(
-                  KvJsonlTable.partTransform(unit, pcolName),
-                  org.apache.spark.sql.connector.expressions.Expressions
-                    .bucket(n, keyName)))
-            override def requiredOrdering()
-                : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-              Array.empty
-            override def toBatch: BatchWrite =
-              new KvJsonlBatchWrite(path, truncateFirst, info.queryId(),
-                writeBranch, maintenance = maint,
-                requireBase = maintBase)
-            override def toStreaming: streaming.StreamingWrite = {
-              require(writeBranch.isEmpty,
-                "streaming append to a BRANCH is not supported")
-              new KvJsonlStreamingWrite(path, info.queryId())
-            }
-          }
-        // Bucketed table reached through the catalog: REQUEST the
-        // clustered-by-bucket distribution (Spark shuffles incoming
-        // rows by the V2 bucket function before the write), so each
-        // task sees ~one bucket and writes ~one file — the layout a
-        // 100 TB bucketed write needs. Correctness never depends on
-        // it (the fan-out writer routes any distribution); it's the
-        // file-count optimization. Only on the catalog path because
-        // resolving the bucket transform needs the FunctionCatalog —
-        // a format/path write to a bucketed dir still bucket-routes,
-        // it just can't ask for the pre-shuffle.
-        case (Some(n), _) if viaCatalog =>
-          new Write with RequiresDistributionAndOrdering {
-            override def requiredDistribution()
-                : org.apache.spark.sql.connector.distributions.Distribution =
-              org.apache.spark.sql.connector.distributions.Distributions
-                .clustered(Array(
-                  org.apache.spark.sql.connector.expressions.Expressions
-                    .bucket(n, keyName)))
-            // A SORTED bucketed table ('write.sort'='key' + buckets)
-            // additionally requests (bucket, key) task ordering: a
-            // task's rows arrive grouped by bucket and key-ascending
-            // within each group, so every bucket FILE lands sorted —
-            // what lets the scan report SupportsReportOrdering and a
-            // co-bucketed sort-merge join skip its sorts on top of
-            // its exchanges.
-            override def requiredOrdering()
-                : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-              if (meta.sorted) {
-                import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
-                Array(
-                  Expressions.sort(Expressions.bucket(n, keyName),
-                    SortDirection.ASCENDING),
-                  Expressions.sort(Expressions.column(keyName),
-                    SortDirection.ASCENDING))
-              } else Array.empty
-            override def toBatch: BatchWrite =
-              new KvJsonlBatchWrite(path, truncateFirst, info.queryId(),
-                writeBranch, maintenance = maint,
-                requireBase = maintBase)
-            override def toStreaming: streaming.StreamingWrite = {
-              require(writeBranch.isEmpty,
-                "streaming append to a BRANCH is not supported")
-              new KvJsonlStreamingWrite(path, info.queryId())
-            }
-          }
-        // Date-partitioned catalog write: REQUEST clustering by the
-        // partition transform (Spark resolves it through this
-        // catalog's days/months function and shuffles rows by unit
-        // before the write), so each task writes ~one file per unit
-        // value instead of every task fanning out across all of them
-        // — the file-count control a date-partitioned 100 TB write
-        // needs. Correctness never depends on it: the fan-out writer
-        // routes any distribution (format-path writes still route).
-        case (None, Some((unit, id))) if viaCatalog =>
-          val pcolName = cols.find(_.id == id).map(_.name).getOrElse(
-            throw new IllegalStateException(
-              s"partition field id $id missing from the schema of $path"))
-          new Write with RequiresDistributionAndOrdering {
-            override def requiredDistribution()
-                : org.apache.spark.sql.connector.distributions.Distribution =
-              org.apache.spark.sql.connector.distributions.Distributions
-                .clustered(Array(
-                  KvJsonlTable.partTransform(unit, pcolName)))
-            override def requiredOrdering()
-                : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-              Array.empty
-            override def toBatch: BatchWrite =
-              new KvJsonlBatchWrite(path, truncateFirst, info.queryId(),
-                writeBranch, maintenance = maint,
-                requireBase = maintBase)
-            override def toStreaming: streaming.StreamingWrite = {
-              require(writeBranch.isEmpty,
-                "streaming append to a BRANCH is not supported")
-              new KvJsonlStreamingWrite(path, info.queryId())
-            }
-          }
-        // SORTED table (TBLPROPERTIES 'write.sort'='key'): every batch
-        // write requests a GLOBAL key order — range distribution +
-        // in-partition sort — so each task emits one file with a key
-        // range disjoint from every sibling's and the manifest zone
-        // maps prune from the FIRST INSERT, no system.cluster call
-        // needed (Iceberg's write.sort-order as a standing property).
-        case _ if meta.sorted =>
-          new Write with RequiresDistributionAndOrdering {
-            private val keyAsc =
-              org.apache.spark.sql.connector.expressions.Expressions
-                .sort(
-                  org.apache.spark.sql.connector.expressions.Expressions
-                    .column(keyName),
-                  org.apache.spark.sql.connector.expressions
-                    .SortDirection.ASCENDING)
-            override def requiredDistribution()
-                : org.apache.spark.sql.connector.distributions.Distribution =
-              org.apache.spark.sql.connector.distributions.Distributions
-                .ordered(Array(keyAsc))
-            override def requiredOrdering()
-                : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-              Array(keyAsc)
-            override def toBatch: BatchWrite =
-              new KvJsonlBatchWrite(path, truncateFirst, info.queryId(),
-                writeBranch, maintenance = maint,
-                requireBase = maintBase)
-            override def toStreaming: streaming.StreamingWrite = {
-              require(writeBranch.isEmpty,
-                "streaming append to a BRANCH is not supported")
-              new KvJsonlStreamingWrite(path, info.queryId())
-            }
-          }
-        case _ => new Write {
-          // The per-write queryId is baked into batch final names so an
-          // APPEND write can never collide with (and REPLACE) an earlier
-          // job's same-numbered partitions.
-          override def toBatch: BatchWrite =
-            new KvJsonlBatchWrite(path, truncateFirst, info.queryId(),
-              writeBranch, maintenance = maint,
-                requireBase = maintBase)
-          override def toStreaming: streaming.StreamingWrite = {
-            require(writeBranch.isEmpty,
-              "streaming append to a BRANCH is not supported — stream " +
-                "to main, or stage with batch writes and fast_forward")
-            new KvJsonlStreamingWrite(path, info.queryId())
-          }
-        }
-      }
+      // The per-write queryId is baked into batch final names so an
+      // APPEND write can never collide with (and REPLACE) an earlier
+      // job's same-numbered partitions.
+      override def build(): Write = new KvWrite(path, info.queryId(),
+        KvJsonlTable.writeRequirement(keyName,
+          // Resolving the layout transforms needs the catalog's
+          // FunctionCatalog: a format/path write to a bucketed or
+          // partitioned dir still routes rows to their files, it just
+          // can't ask for the pre-shuffle.
+          if (viaCatalog) buckets else None,
+          if (viaCatalog) meta.partition.map { case (unit, id) =>
+            unit -> cols.find(_.id == id).map(_.name).getOrElse(
+              throw new IllegalStateException(
+                s"partition field id $id missing from the schema of $path"))
+          } else None,
+          meta.sorted, layoutRewrite),
+        new KvJsonlBatchWrite(path, truncateFirst, info.queryId(),
+          writeBranch,
+          replaceOnly = replaceFiles.map(s => () => s),
+          maintenance = maint,
+          requireBase = maintBase),
+        streamRefusal =
+          if (layoutRewrite)
+            Some("layout_rewrite is a batch-maintenance option")
+          else if (writeBranch.nonEmpty)
+            Some("streaming append to a BRANCH is not supported — " +
+              "stream to main, or stage with batch writes and fast_forward")
+          else None)
     }
+  }
+}
+
+/** The one kv `Write`: the layout's (distribution, ordering) request
+  * ([[KvJsonlTable.writeRequirement]]) over a batch write, plus the
+  * streaming write unless `streamRefusal` says why this write is
+  * batch-only.
+  */
+class KvWrite(
+    path: String, queryId: String,
+    requirement: (Distribution, Array[SortOrder]),
+    batch: BatchWrite,
+    streamRefusal: Option[String])
+    extends RequiresDistributionAndOrdering {
+  override def requiredDistribution(): Distribution = requirement._1
+  override def requiredOrdering(): Array[SortOrder] = requirement._2
+  override def toBatch: BatchWrite = batch
+  override def toStreaming: streaming.StreamingWrite = {
+    streamRefusal.foreach(m => throw new UnsupportedOperationException(m))
+    new KvJsonlStreamingWrite(path, queryId)
   }
 }
 
@@ -684,10 +620,18 @@ case class KvWrittenFile(
       * keys" and licenses zone-map skipping under IsNotNull(key),
       * which would silently drop every row of a string-keyed file.
       */
-    keyStatsKnown: Boolean = true)
+    keyStatsKnown: Boolean = true) {
 
-/** Per-file stat accumulation shared by the plain and bucketed
-  * writers — ONE definition of what the manifest records. Beyond the
+  /** The manifest entry this file commits as — the one conversion
+    * every commit (batch, streaming, merge-on-read) uses.
+    */
+  def stat: KvSnapshots.KvFileStat =
+    KvSnapshots.KvFileStat(finalName, rows, minKey, maxKey,
+      keysKnown = keyStatsKnown, colStats = colStats)
+}
+
+/** Per-file stat accumulation, one per file [[KvDataWriter]] opens —
+  * ONE definition of what the manifest records. Beyond the
   * key zone map, every EVOLVED fixed-domain column (bigint / double /
   * timestamp / date, id > 2) gets a per-file min/max tracked in the
   * same single pass — the manifest-level data skipping parquet
@@ -822,14 +766,11 @@ final class KvKeyStats(
       }.toMap)
 }
 
-case class KvJsonlCommitMessage(file: KvWrittenFile)
-    extends WriterCommitMessage
-
-/** Bucketed task message: one written file per bucket the task saw.
-  * Publish semantics are identical — the driver renames exactly the
+/** A task's message: the files it wrote, in cell order (one per cell
+  * it saw; a plain task's one file). The driver publishes exactly the
   * named files.
   */
-case class KvJsonlBucketedCommitMessage(files: Seq[KvWrittenFile])
+case class KvCommitMessage(files: Seq[KvWrittenFile])
     extends WriterCommitMessage
 
 class KvJsonlBatchWrite(
@@ -840,26 +781,13 @@ class KvJsonlBatchWrite(
     requireBase: Option[Int] = None)
     extends BatchWrite {
 
+  // Bucket/day routing is decided by the TABLE DIR's metadata, not
+  // the caller, so every write path (catalog insert, DML rewrite,
+  // format-path save) keeps a bucketed table bucketed and a
+  // partitioned table partitioned.
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory = {
-    val tmp = KvJsonlSink.tempDir(path, jobId)
-    java.nio.file.Files.createDirectories(tmp)
-    // Bucket/day routing is decided by the TABLE DIR's metadata, not
-    // the caller, so every write path (catalog insert, DML rewrite,
-    // format-path save) keeps a bucketed table bucketed and a
-    // partitioned table partitioned. The column registry is captured
-    // HERE (driver-side, once per job) so every task of this write
-    // formats rows against the same schema version even if an ALTER
-    // lands mid-job.
-    val meta = KvBucketing.readMetaFull(path)
-    // During a bucket-count evolution (system.rebucket) writers route
-    // by the TARGET count: the rewrite itself and any interleaved
-    // append land new-generation files, while scans claim Unknown
-    // until the publish flips `buckets` (KvBucketing.KvMeta).
-    new KvJsonlWriterFactory(path, jobId,
-      meta.rebucketTarget.orElse(meta.buckets),
-      KvSchema.currentCols(path), meta.partition, meta.blooms)
-  }
+      info: PhysicalWriteInfo): DataWriterFactory =
+    KvWriterFactory.forTable(path, jobId)
 
   /** Driver-side publish: ONLY files named in commit messages become
     * visible. Rename is per-file; the `_SUCCESS` manifest written last
@@ -892,10 +820,7 @@ class KvJsonlBatchWrite(
     // version.
     val replaced: Option[Set[String]] = replaceOnly.map(_.apply())
     val published = {
-      val all = messages.flatMap {
-        case KvJsonlCommitMessage(file) => Seq(file)
-        case KvJsonlBucketedCommitMessage(files) => files
-      }
+      val all = messages.toSeq.flatMap { case KvCommitMessage(fs) => fs }
       if (replaced.isDefined) all.filter(_.rows > 0L) else all
     }
     publishFiles(dir, published)
@@ -939,10 +864,7 @@ class KvJsonlBatchWrite(
             prev.filterNot(st => scanned(st.name))
           case None => if (truncateFirst) Seq.empty else prev
         }
-        kept ++ published.map(f =>
-          KvSnapshots.KvFileStat(f.finalName, f.rows, f.minKey, f.maxKey,
-            colStats = f.colStats,
-            keysKnown = f.keyStatsKnown))
+        kept ++ published.map(_.stat)
       }
       branch match {
         // Branch-targeted write (write-audit-publish): the commit
@@ -1019,19 +941,7 @@ class KvJsonlBatchWrite(
     */
   private[graft] def publishFiles(
       dir: java.nio.file.Path, published: Seq[KvWrittenFile]): Unit =
-    published.foreach { f =>
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(f.tempFile),
-        dir.resolve(f.finalName),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      // Bloom sidecar published AFTER its data file: a reader racing
-      // the window sees data without sidecar = "unknown, don't skip"
-      // — the safe direction. (Sidecar before data would have no
-      // window to be wrong in either, but this order needs no proof.)
-      if (f.blooms.nonEmpty)
-        KvBloom.writeSidecar(
-          dir.resolve(KvBloom.sidecarName(f.finalName)), f.blooms)
-    }
+    published.foreach(KvJsonlSink.publish(dir, _))
 
   /** Step 2: delete every data file the replacement didn't publish
     * (and its bloom sidecar — a sidecar's lifetime IS its data
@@ -1051,306 +961,6 @@ class KvJsonlBatchWrite(
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     KvJsonlSink.cleanupJobTemp(path, jobId)
-}
-
-class KvJsonlWriterFactory(
-    path: String, jobId: String, buckets: Option[Int] = None,
-    cols: Seq[KvSchema.Col] = KvSchema.Legacy,
-    partition: Option[(KvBucketing.PartUnit, Int)] = None,
-    bloomIds: Seq[Int] = Nil)
-    extends DataWriterFactory {
-  override def createWriter(
-      partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] = (buckets, partition) match {
-    case (Some(n), Some((unit, id))) =>
-      new KvJsonlComposedDataWriter(path, jobId, partitionId, taskId,
-        n, unit, id, cols, bloomIds)
-    case (Some(n), None) =>
-      new KvJsonlBucketedDataWriter(path, jobId, partitionId, taskId, n,
-        cols, bloomIds)
-    case (None, Some((unit, id))) =>
-      new KvJsonlPartitionedDataWriter(path, jobId, partitionId,
-        taskId, unit, id, cols, bloomIds)
-    case _ =>
-      new KvJsonlDataWriter(path,
-        f"attempt-$jobId-$partitionId%05d-$taskId",
-        f"part-$jobId-$partitionId%05d.jsonl",
-        jobSubdir = jobId, cols = cols, bloomIds = bloomIds)
-  }
-}
-
-/** Bucketed task writer: routes each row to its bucket's file
-  * (`bucketOf(key, n)` — the same function the scan reports and the
-  * catalog serves), opening at most one file per bucket SEEN. Under
-  * the write's requested clustered-by-bucket distribution a task sees
-  * ~one bucket; without it (format-path writes) the fan-out is the
-  * correctness backstop. Same attempt-isolation + driver-publish
-  * protocol as the plain writer, just with a per-bucket file list in
-  * the commit message.
-  */
-class KvJsonlBucketedDataWriter(
-    path: String, jobId: String, partitionId: Int, taskId: Long, n: Int,
-    cols: Seq[KvSchema.Col] = KvSchema.Legacy,
-    bloomIds: Seq[Int] = Nil)
-    extends DataWriter[InternalRow] {
-
-  // Founding tables keep the byte-identical fast-path formatter.
-  private val evolved = cols != KvSchema.Legacy
-
-  private class BucketOut(val temp: java.nio.file.Path) {
-    val out: java.io.BufferedWriter =
-      java.nio.file.Files.newBufferedWriter(
-        temp, java.nio.charset.StandardCharsets.UTF_8)
-    val stats = new KvKeyStats(cols, bloomIds)
-  }
-
-  private val open =
-    scala.collection.mutable.LinkedHashMap.empty[Int, BucketOut]
-
-  private val tempBase = {
-    val d = KvJsonlSink.tempDir(path, jobId)
-    java.nio.file.Files.createDirectories(d) // idempotent; executor-side
-    d
-  }
-
-  private def writerFor(b: Int): BucketOut =
-    open.getOrElseUpdate(b, new BucketOut(
-      tempBase.resolve(
-        f"attempt-$jobId-$partitionId%05d-$taskId-b$b%04d")))
-
-  /** Bucket routing by the table's key TYPE — the same two specs the
-    * scan claims and the served V2 function evaluates
-    * (KvBucketing.bucketOf / bucketOfString), resolved once per task.
-    */
-  private val keyIsLong =
-    KvSchema.keyType(cols) == org.apache.spark.sql.types.LongType
-
-  override def write(row: InternalRow): Unit = {
-    val b =
-      if (keyIsLong)
-        KvBucketing.bucketOf(
-          if (row.isNullAt(0)) null else Long.box(row.getLong(0)), n)
-      else
-        KvBucketing.bucketOfString(
-          if (row.isNullAt(0)) null else row.getUTF8String(0), n)
-    val w = writerFor(b)
-    w.out.write(
-      if (evolved) KvSchema.formatRow(row, cols)
-      else KvJsonlSink.formatLine(row))
-    w.out.write('\n')
-    w.stats.update(row)
-  }
-
-  override def write(meta: InternalRow, row: InternalRow): Unit =
-    write(row)
-
-  override def commit(): WriterCommitMessage = {
-    open.values.foreach(_.out.close())
-    KvJsonlBucketedCommitMessage(
-      open.toSeq.sortBy(_._1).map { case (b, w) =>
-        w.stats.written(
-          w.temp.toString,
-          f"part-$jobId-$partitionId%05d${KvBucketing.bucketSuffix(b)}.jsonl")
-      })
-  }
-
-  override def abort(): Unit =
-    open.values.foreach { w =>
-      w.out.close()
-      java.nio.file.Files.deleteIfExists(w.temp)
-    }
-
-  override def close(): Unit = ()
-}
-
-/** Temporally-partitioned task writer: routes each row to its
-  * UNIT's file (`partSuffix(partToken(...))` — the same token the
-  * scan's partition pruning parses back from the name), opening at
-  * most one file per unit value SEEN. Under the write's requested
-  * clustered-by-transform distribution a task sees ~one value;
-  * without it (format-path writes) the fan-out is the correctness
-  * backstop — the bucketed writer's exact shape, keyed by day/month
-  * instead of bucket. NULL partition values route to the explicit
-  * `null` partition file.
-  */
-class KvJsonlPartitionedDataWriter(
-    path: String, jobId: String, partitionId: Int, taskId: Long,
-    unit: KvBucketing.PartUnit, partitionFieldId: Int,
-    cols: Seq[KvSchema.Col],
-    bloomIds: Seq[Int] = Nil)
-    extends DataWriter[InternalRow] {
-
-  private val evolved = cols != KvSchema.Legacy
-
-  /** The partition column's row ordinal and date-ness, resolved once
-    * (the write schema was validated type-for-type against `cols`).
-    */
-  private val partIdx = cols.indexWhere(_.id == partitionFieldId)
-  require(partIdx >= 0,
-    s"partition field id $partitionFieldId missing from the write " +
-      s"schema of $path")
-  private val partIsDate =
-    cols(partIdx).dtype == org.apache.spark.sql.types.DateType
-
-  private class DayOut(val temp: java.nio.file.Path) {
-    val out: java.io.BufferedWriter =
-      java.nio.file.Files.newBufferedWriter(
-        temp, java.nio.charset.StandardCharsets.UTF_8)
-    val stats = new KvKeyStats(cols, bloomIds)
-  }
-
-  private val open =
-    scala.collection.mutable.LinkedHashMap.empty[Option[Long], DayOut]
-
-  private val tempBase = {
-    val d = KvJsonlSink.tempDir(path, jobId)
-    java.nio.file.Files.createDirectories(d) // idempotent; executor-side
-    d
-  }
-
-  private def writerFor(tok: Option[Long]): DayOut =
-    open.getOrElseUpdate(tok, new DayOut(
-      tempBase.resolve(
-        f"attempt-$jobId-$partitionId%05d-$taskId" +
-          KvBucketing.partSuffix(tok, unit))))
-
-  override def write(row: InternalRow): Unit = {
-    val raw: Option[Long] =
-      if (row.isNullAt(partIdx)) None
-      else if (partIsDate) Some(row.getInt(partIdx).toLong)
-      else Some(row.getLong(partIdx))
-    val w = writerFor(KvBucketing.partToken(raw, partIsDate, unit))
-    w.out.write(
-      if (evolved) KvSchema.formatRow(row, cols)
-      else KvJsonlSink.formatLine(row))
-    w.out.write('\n')
-    w.stats.update(row)
-  }
-
-  override def write(meta: InternalRow, row: InternalRow): Unit =
-    write(row)
-
-  override def commit(): WriterCommitMessage = {
-    open.values.foreach(_.out.close())
-    KvJsonlBucketedCommitMessage(
-      open.toSeq.sortBy(_._1.getOrElse(Long.MinValue)).map {
-        case (tok, w) =>
-          w.stats.written(
-            w.temp.toString,
-            f"part-$jobId-$partitionId%05d" +
-              s"${KvBucketing.partSuffix(tok, unit)}.jsonl")
-      })
-  }
-
-  override def abort(): Unit =
-    open.values.foreach { w =>
-      w.out.close()
-      java.nio.file.Files.deleteIfExists(w.temp)
-    }
-
-  override def close(): Unit = ()
-}
-
-/** COMPOSED-layout task writer (`PARTITIONED BY (months(ts),
-  * bucket(n, key))` — the standard 100 TB fact layout: temporal unit
-  * for retention/pruning, hash bucket for exchange-free joins):
-  * routes each row to its (unit value, bucket) file, the product of
-  * the two single-transform writers' routings. The final name
-  * carries BOTH tokens — partition first, bucket last
-  * (`-m334-b0007.jsonl`) — so the partition pruner and the bucket
-  * grouper each parse their own suffix independently; neither
-  * machinery knows the other exists. Under the write's requested
-  * clustered-by-(unit, bucket) distribution a task sees ~one cell;
-  * without it the fan-out is the correctness backstop, as for the
-  * single-transform writers.
-  */
-class KvJsonlComposedDataWriter(
-    path: String, jobId: String, partitionId: Int, taskId: Long,
-    n: Int, unit: KvBucketing.PartUnit, partitionFieldId: Int,
-    cols: Seq[KvSchema.Col],
-    bloomIds: Seq[Int] = Nil)
-    extends DataWriter[InternalRow] {
-
-  private val evolved = cols != KvSchema.Legacy
-
-  private val partIdx = cols.indexWhere(_.id == partitionFieldId)
-  require(partIdx >= 0,
-    s"partition field id $partitionFieldId missing from the write " +
-      s"schema of $path")
-  private val partIsDate =
-    cols(partIdx).dtype == org.apache.spark.sql.types.DateType
-  private val keyIsLong =
-    KvSchema.keyType(cols) == org.apache.spark.sql.types.LongType
-
-  private class CellOut(val temp: java.nio.file.Path) {
-    val out: java.io.BufferedWriter =
-      java.nio.file.Files.newBufferedWriter(
-        temp, java.nio.charset.StandardCharsets.UTF_8)
-    val stats = new KvKeyStats(cols, bloomIds)
-  }
-
-  private val open =
-    scala.collection.mutable.LinkedHashMap.empty[(Option[Long], Int), CellOut]
-
-  private val tempBase = {
-    val d = KvJsonlSink.tempDir(path, jobId)
-    java.nio.file.Files.createDirectories(d) // idempotent; executor-side
-    d
-  }
-
-  private def suffix(cell: (Option[Long], Int)): String =
-    KvBucketing.partSuffix(cell._1, unit) +
-      KvBucketing.bucketSuffix(cell._2)
-
-  private def writerFor(cell: (Option[Long], Int)): CellOut =
-    open.getOrElseUpdate(cell, new CellOut(
-      tempBase.resolve(
-        f"attempt-$jobId-$partitionId%05d-$taskId${suffix(cell)}")))
-
-  override def write(row: InternalRow): Unit = {
-    val raw: Option[Long] =
-      if (row.isNullAt(partIdx)) None
-      else if (partIsDate) Some(row.getInt(partIdx).toLong)
-      else Some(row.getLong(partIdx))
-    val b =
-      if (keyIsLong)
-        KvBucketing.bucketOf(
-          if (row.isNullAt(0)) null else Long.box(row.getLong(0)), n)
-      else
-        KvBucketing.bucketOfString(
-          if (row.isNullAt(0)) null else row.getUTF8String(0), n)
-    val w = writerFor(
-      (KvBucketing.partToken(raw, partIsDate, unit), b))
-    w.out.write(
-      if (evolved) KvSchema.formatRow(row, cols)
-      else KvJsonlSink.formatLine(row))
-    w.out.write('\n')
-    w.stats.update(row)
-  }
-
-  override def write(meta: InternalRow, row: InternalRow): Unit =
-    write(row)
-
-  override def commit(): WriterCommitMessage = {
-    open.values.foreach(_.out.close())
-    KvJsonlBucketedCommitMessage(
-      open.toSeq
-        .sortBy { case ((tok, b), _) =>
-          (tok.getOrElse(Long.MinValue), b) }
-        .map { case (cell, w) =>
-          w.stats.written(
-            w.temp.toString,
-            f"part-$jobId-$partitionId%05d${suffix(cell)}.jsonl")
-        })
-  }
-
-  override def abort(): Unit =
-    open.values.foreach { w =>
-      w.out.close()
-      java.nio.file.Files.deleteIfExists(w.temp)
-    }
-
-  override def close(): Unit = ()
 }
 
 /** Streaming (micro-batch) write path: same attempt-isolation protocol
@@ -1383,13 +993,14 @@ class KvJsonlStreamingWrite(path: String, queryId: String = "")
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): streaming.StreamingDataWriterFactory = {
     val meta = KvBucketing.readMetaFull(path)
-    // Bucketed / date-partitioned targets stream through the SAME
-    // routed writers the batch path uses, with the epoch-scoped job
-    // tag as their jobId — file names come out epoch-prefixed AND
-    // unit/bucket-suffixed, so replay detection and layout contracts
-    // compose. They need snapshots: the manifest commit is what makes
-    // a replayed epoch a no-op (an unsnapshotted routed layout has no
-    // transactional membership to dedup against).
+    // Every target streams through the SAME writer the batch path
+    // uses, with the epoch-scoped job tag as its jobId — file names
+    // come out epoch-prefixed AND unit/bucket-suffixed
+    // (`part-q<qid>-e00001-00003-d9862.jsonl`), so replay detection
+    // and layout contracts compose. Routed layouts need snapshots:
+    // the manifest commit is what makes a replayed epoch a no-op (an
+    // unsnapshotted routed layout has no transactional membership to
+    // dedup against).
     require(meta.buckets.isEmpty && meta.partition.isEmpty ||
       meta.snapshots,
       "streaming append to a BUCKETED or DATE-PARTITIONED kvjsonl " +
@@ -1397,12 +1008,9 @@ class KvJsonlStreamingWrite(path: String, queryId: String = "")
     require(!snapshots || queryId.nonEmpty,
       s"snapshotted streaming append to $path needs the query id " +
         "for epoch replay detection")
-    java.nio.file.Files.createDirectories(KvJsonlSink.tempDir(path))
     // A named top-level factory: the instance ships to executors, so it
     // must not capture this (non-serializable) driver-side write object.
-    KvJsonlStreamingWriterFactory(path, KvSchema.currentCols(path), qTag,
-      meta.rebucketTarget.orElse(meta.buckets), meta.partition,
-      meta.blooms)
+    KvWriterFactory.forTable(path, qTag, meta)
   }
 
   /** Per-epoch publish. Unsnapshotted: idempotent renames onto
@@ -1424,47 +1032,34 @@ class KvJsonlStreamingWrite(path: String, queryId: String = "")
       epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     val dir = java.nio.file.Paths.get(path)
-    def publish(f: KvWrittenFile): Unit = {
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(f.tempFile),
-        dir.resolve(f.finalName),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      if (f.blooms.nonEmpty)
-        KvBloom.writeSidecar(
-          dir.resolve(KvBloom.sidecarName(f.finalName)), f.blooms)
-    }
+    val files = messages.toSeq.flatMap { case KvCommitMessage(fs) => fs }
     if (!snapshots) {
-      messages.foreach { case KvJsonlCommitMessage(f) => publish(f) }
+      files.foreach(KvJsonlSink.publish(dir, _))
     } else {
-      val prefix = f"part-${qTag}e$epochId%05d-"
+      val prefix = s"part-${epochJob(epochId)}-"
       val replayed = KvSnapshots.latest(path).exists(v =>
         KvSnapshots.members(path, v).exists(_.startsWith(prefix)))
       if (!replayed) {
         // 0-row task files never publish: an epoch's manifest commit
         // carries exactly its data, and an all-empty epoch commits
-        // NOTHING (no snapshot churn from idle triggers). Routed
-        // writers (bucketed / partitioned) report one file per
-        // bucket/unit SEEN, so they never produce empties.
-        val data = messages.flatMap {
-          case KvJsonlCommitMessage(f) => Seq(f)
-          case KvJsonlBucketedCommitMessage(fs) => fs
-        }.filter(_.rows > 0L)
+        // NOTHING (no snapshot churn from idle triggers). A routed
+        // task reports one file per bucket/unit SEEN, so only plain
+        // tasks produce empties.
+        val data = files.filter(_.rows > 0L)
         if (data.nonEmpty) {
-          data.foreach(publish)
+          data.foreach(KvJsonlSink.publish(dir, _))
           KvSnapshots.commitWith(path) { base =>
             val prev =
               if (base == 0) Seq.empty[KvSnapshots.KvFileStat]
               else KvSnapshots.membersWithStats(path, base)
-            prev ++ data.map(f =>
-              KvSnapshots.KvFileStat(f.finalName, f.rows, f.minKey,
-                f.maxKey, keysKnown = f.keyStatsKnown,
-                colStats = f.colStats))
+            prev ++ data.map(_.stat)
           }
           ()
         }
       }
     }
-    dropEpochTemps(epochId) // losing speculative attempts of this epoch
+    // losing speculative attempts of this epoch
+    KvJsonlSink.cleanupJobTemp(path, epochJob(epochId))
     java.nio.file.Files.write(
       dir.resolve("_SUCCESS"), Array.emptyByteArray)
     // POLICY MAINTENANCE (write.auto_compact): each epoch commit
@@ -1480,115 +1075,240 @@ class KvJsonlStreamingWrite(path: String, queryId: String = "")
   override def abort(
       epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
-    dropEpochTemps(epochId)
+    KvJsonlSink.cleanupJobTemp(path, epochJob(epochId))
 
-  private def dropEpochTemps(epochId: Long): Unit = {
-    val tmp = KvJsonlSink.tempDir(path)
-    if (java.nio.file.Files.isDirectory(tmp)) {
-      val s = java.nio.file.Files.list(tmp)
-      try s.forEach { p =>
-        if (p.getFileName.toString
-            .startsWith(f"attempt-${qTag}e$epochId%05d-"))
-          java.nio.file.Files.deleteIfExists(p)
-      } finally s.close()
-    }
-    // Routed writers (bucketed / partitioned) stage under the
-    // epoch-scoped JOB subdir instead of the base temp dir.
-    KvJsonlSink.cleanupJobTemp(path, f"${qTag}e$epochId%05d")
-  }
+  private def epochJob(epochId: Long): String =
+    KvWriterFactory.epochJob(qTag, epochId)
 }
 
-case class KvJsonlStreamingWriterFactory(
-    path: String, cols: Seq[KvSchema.Col] = KvSchema.Legacy,
-    qTag: String = "",
-    buckets: Option[Int] = None,
-    partition: Option[(KvBucketing.PartUnit, Int)] = None,
-    bloomIds: Seq[Int] = Nil)
-    extends streaming.StreamingDataWriterFactory {
-  override def createWriter(
-      partitionId: Int,
-      taskId: Long,
-      epochId: Long): DataWriter[InternalRow] = {
-    // Routed targets reuse the batch writers verbatim: the
-    // epoch-scoped tag is their jobId, so final names come out
-    // `part-q<qid>-e00001-00003-d9862.jsonl` — epoch-prefixed for
-    // replay detection, unit/bucket-suffixed for the layout
-    // contracts (partition pruning, storage-partitioned joins).
-    val epochJob = f"${qTag}e$epochId%05d"
-    (buckets, partition) match {
-      case (Some(n), Some((unit, id))) =>
-        new KvJsonlComposedDataWriter(
-          path, epochJob, partitionId, taskId, n, unit, id, cols,
-          bloomIds)
-      case (Some(n), None) =>
-        new KvJsonlBucketedDataWriter(
-          path, epochJob, partitionId, taskId, n, cols, bloomIds)
-      case (None, Some((unit, id))) =>
-        new KvJsonlPartitionedDataWriter(
-          path, epochJob, partitionId, taskId, unit, id, cols, bloomIds)
-      case _ =>
-        new KvJsonlDataWriter(path,
-          f"attempt-$epochJob-$partitionId%05d-$taskId",
-          f"part-$epochJob-$partitionId%05d.jsonl",
-          cols = cols, bloomIds = bloomIds)
-    }
-  }
-}
-
-/** One task attempt's writer: a private temp file keyed by the
-  * attempt identity (partition + task, plus epoch when streaming), so
-  * a speculative duplicate attempt writes elsewhere and only the
-  * attempt whose message reaches the driver is published under the
-  * partition's final name.
+/** The one kv writer factory — batch, streaming and merge-on-read
+  * delta writes: the table's write layout, read from its meta ONCE per
+  * job on the driver ([[KvWriterFactory.forTable]]), so every task of
+  * a write formats and routes rows the same way even if an ALTER lands
+  * mid-job. A batch task's job id is `tag` (the write's queryId); a
+  * streaming task's is its epoch tag `<tag>e<epoch>`
+  * ([[KvWriterFactory.epochJob]]).
   */
-class KvJsonlDataWriter(
-    path: String, tempName: String, finalName: String,
-    jobSubdir: String = "",
-    cols: Seq[KvSchema.Col] = KvSchema.Legacy,
-    bloomIds: Seq[Int] = Nil)
-    extends DataWriter[InternalRow] {
+case class KvWriterFactory(
+    path: String, tag: String, cols: Seq[KvSchema.Col],
+    buckets: Option[Int], partition: Option[(KvBucketing.PartUnit, Int)],
+    bloomIds: Seq[Int])
+    extends DeltaWriterFactory with streaming.StreamingDataWriterFactory {
+  override def createWriter(
+      partitionId: Int, taskId: Long): KvDataWriter =
+    new KvDataWriter(this, tag, partitionId, taskId)
+
+  override def createWriter(
+      partitionId: Int, taskId: Long,
+      epochId: Long): DataWriter[InternalRow] =
+    new KvDataWriter(this, KvWriterFactory.epochJob(tag, epochId),
+      partitionId, taskId)
+}
+
+object KvWriterFactory {
+  /** The layout of the table at `path` as of now. During a bucket-count
+    * evolution (system.rebucket) writers route by the TARGET count:
+    * the rewrite itself and any interleaved append land
+    * new-generation files, while scans claim Unknown until the publish
+    * flips `buckets` (KvBucketing.KvMeta). A caller that already read
+    * the meta to check it passes that read, so the check and the
+    * routing see the same meta.
+    */
+  def forTable(path: String, tag: String): KvWriterFactory =
+    forTable(path, tag, KvBucketing.readMetaFull(path))
+
+  def forTable(path: String, tag: String,
+      meta: KvBucketing.KvMeta): KvWriterFactory =
+    KvWriterFactory(path, tag, KvSchema.currentCols(path),
+      meta.rebucketTarget.orElse(meta.buckets), meta.partition,
+      meta.blooms)
+
+  /** A streaming epoch's job id. The per-query tag is empty for an
+    * unsnapshotted sink (one query owns it, and a replayed epoch's
+    * renames REPLACE in place).
+    */
+  def epochJob(tag: String, epochId: Long): String = f"${tag}e$epochId%05d"
+}
+
+/** One task attempt's writer, for every kv layout. A row's CELL is its
+  * (partition-unit value, bucket) under the layout — `-d9862`,
+  * `-b0007`, both (`-m334-b0007`, partition first, so the partition
+  * pruner and the bucket grouper each parse their own suffix), or none
+  * on a plain table. Each cell the task sees gets a private temp file
+  * `attempt-<job>-<pid>-<task><suffix>`, keyed by the attempt identity
+  * so a speculative duplicate writes elsewhere; the driver publishes
+  * only the attempt whose message reaches it, as
+  * `part-<job>-<pid><suffix>.jsonl`.
+  *
+  * Bucket routing is the table's key-type spec (KvBucketing.bucketOf /
+  * bucketOfString — what the scan claims and the served V2 function
+  * evaluates); partition routing is the unit's token, with NULL values
+  * in the explicit `null` partition. Under the write's requested
+  * clustering a task sees ~one cell; without it (format-path writes)
+  * the fan-out is the correctness backstop. A plain task opens its
+  * one file eagerly, so a 0-row task still reports a 0-row file; a
+  * routed task reports one file per cell it saw.
+  *
+  * As a merge-on-read delta writer (KvMerge.scala) inserts are plain
+  * writes; deletes buffer (file, pos) tombstones, flushed sorted to one
+  * `.del` file reported after the task's data files. The buffer is
+  * bounded by the task's matched-row count — two numbers and a name
+  * per row, the order of memory the task's shuffle buffers hold.
+  */
+final class KvDataWriter(
+    layout: KvWriterFactory, jobId: String, partitionId: Int,
+    taskId: Long)
+    extends DeltaWriter[InternalRow] {
+  import layout.cols
 
   // Founding tables keep the byte-identical fast-path formatter.
   private val evolved = cols != KvSchema.Legacy
-
-  private val tempFile = {
-    val d =
-      if (jobSubdir.isEmpty) KvJsonlSink.tempDir(path)
-      else KvJsonlSink.tempDir(path, jobSubdir)
-    java.nio.file.Files.createDirectories(d) // idempotent; executor-side
-    d.resolve(tempName)
+  private val keyIsLong =
+    KvSchema.keyType(cols) == org.apache.spark.sql.types.LongType
+  private val nBuckets = layout.buckets.getOrElse(0)
+  private val unit = layout.partition.map(_._1)
+  /** The partition column's row ordinal (-1: unpartitioned), resolved
+    * once — the write schema was validated type-for-type against
+    * `cols`.
+    */
+  private val partIdx = layout.partition.fold(-1) { case (_, id) =>
+    val i = cols.indexWhere(_.id == id)
+    require(i >= 0, s"partition field id $id missing from the write " +
+      s"schema of ${layout.path}")
+    i
   }
-  private val out = java.nio.file.Files.newBufferedWriter(
-    tempFile, java.nio.charset.StandardCharsets.UTF_8)
-  private val stats = new KvKeyStats(cols, bloomIds)
+  private val partIsDate = partIdx >= 0 &&
+    cols(partIdx).dtype == org.apache.spark.sql.types.DateType
+  private val routed = partIdx >= 0 || nBuckets > 0
+
+  private val tempBase = {
+    val d = KvJsonlSink.tempDir(layout.path, jobId)
+    java.nio.file.Files.createDirectories(d) // idempotent; executor-side
+    d
+  }
+
+  /** One cell's file: `tok` is the partition-unit value (NullTok for
+    * the null partition, 0 when unpartitioned), `bucket` -1 when
+    * unbucketed.
+    */
+  private final class CellOut(val tok: Long, val bucket: Int) {
+    val suffix: String =
+      unit.fold("")(u => KvBucketing.partSuffix(
+        if (tok == KvDataWriter.NullTok) None else Some(tok), u)) +
+        (if (bucket < 0) "" else KvBucketing.bucketSuffix(bucket))
+    val temp: java.nio.file.Path =
+      tempBase.resolve(f"attempt-$jobId-$partitionId%05d-$taskId$suffix")
+    val out: java.io.BufferedWriter = java.nio.file.Files.newBufferedWriter(
+      temp, java.nio.charset.StandardCharsets.UTF_8)
+    val stats = new KvKeyStats(cols, layout.bloomIds)
+  }
+
+  private val open =
+    scala.collection.mutable.HashMap.empty[(Long, Int), CellOut]
+
+  private def cell(tok: Long, bucket: Int): CellOut =
+    open.getOrElseUpdate((tok, bucket), new CellOut(tok, bucket))
+
+  /** The last row's cell: a task that sees one cell — every plain
+    * task, and a routed one under its requested clustering — writes
+    * with no map lookup.
+    */
+  private var last: CellOut = if (routed) null else cell(0L, -1)
 
   override def write(row: InternalRow): Unit = {
-    out.write(
+    if (routed) {
+      val tok =
+        if (partIdx < 0) 0L
+        else if (row.isNullAt(partIdx)) KvDataWriter.NullTok
+        else unit.get.unitOf(
+          if (partIsDate) row.getInt(partIdx).toLong
+          else row.getLong(partIdx), partIsDate)
+      val b =
+        if (nBuckets == 0) -1
+        else if (keyIsLong)
+          KvBucketing.bucketOf(
+            if (row.isNullAt(0)) null else Long.box(row.getLong(0)),
+            nBuckets)
+        else
+          KvBucketing.bucketOfString(
+            if (row.isNullAt(0)) null else row.getUTF8String(0), nBuckets)
+      if (last == null || last.tok != tok || last.bucket != b)
+        last = cell(tok, b)
+    }
+    last.out.write(
       if (evolved) KvSchema.formatRow(row, cols)
       else KvJsonlSink.formatLine(row))
-    out.newLine()
-    stats.update(row)
+    last.out.write('\n')
+    last.stats.update(row)
   }
 
   /** Metadata-carrying variant invoked by the row-level-operation
     * rewrite (DataAndMetadataWritingSparkTask): `meta` is the
-    * operation's required metadata projection (`_file`). This sink
-    * commits by replacing the whole table, so provenance is
-    * discarded; a per-file-group committer would collect it here to
-    * scope the replacement.
+    * operation's required metadata projection (`_file`). The commit
+    * scopes its replacement by the files the rewrite's scan planned
+    * (KvRowLevelOperation), so the writer discards it.
     */
   override def write(meta: InternalRow, row: InternalRow): Unit =
     write(row)
 
+  override def insert(row: InternalRow): Unit = write(row)
+
+  private val tombstones =
+    scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+
+  /** `id` is the MoR rowId projection in declaration order: (_file
+    * STRING, _pos BIGINT). The delete file records the file NAME —
+    * manifests are location-independent.
+    */
+  override def delete(meta: InternalRow, id: InternalRow): Unit =
+    tombstones += ((
+      java.nio.file.Paths.get(id.getUTF8String(0).toString)
+        .getFileName.toString,
+      id.getLong(1)))
+
+  /** Unreachable under representUpdateAsDeleteAndInsert = true; kept
+    * semantically correct anyway — an update IS delete + insert.
+    */
+  override def update(
+      meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
+    delete(meta, id)
+    insert(row)
+  }
+
   override def commit(): WriterCommitMessage = {
-    out.close()
-    KvJsonlCommitMessage(stats.written(tempFile.toString, finalName))
+    val cells = open.values.toSeq.sortBy(c => (c.tok, c.bucket))
+    cells.foreach(_.out.close())
+    val data = cells.map(c => c.stats.written(c.temp.toString,
+      f"part-$jobId-$partitionId%05d${c.suffix}.jsonl"))
+    KvCommitMessage(
+      if (tombstones.isEmpty) data
+      else {
+        val tmp = tempBase.resolve(
+          f"attempt-$jobId-$partitionId%05d-$taskId.del")
+        java.nio.file.Files.write(tmp,
+          tombstones.sorted.map { case (n, p) => s"$n\t$p" }
+            .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        // a delete file carries no key statistics
+        data :+ KvWrittenFile(tmp.toString,
+          f"delete-$jobId-$partitionId%05d.del",
+          tombstones.size.toLong, None, None, keyStatsKnown = false)
+      })
   }
 
   override def abort(): Unit = {
-    out.close()
-    java.nio.file.Files.deleteIfExists(tempFile)
+    open.values.foreach { c =>
+      c.out.close()
+      java.nio.file.Files.deleteIfExists(c.temp)
+    }
+    tombstones.clear()
   }
 
   override def close(): Unit = ()
+}
+
+object KvDataWriter {
+  /** The null partition's cell token; sorts first, as the null
+    * partition always has.
+    */
+  val NullTok: Long = Long.MinValue
 }

@@ -99,8 +99,7 @@ class KvMorRowLevelOperation(
     new DeltaWriteBuilder {
       override def build(): DeltaWrite = new DeltaWrite {
         override def toBatch: DeltaBatchWrite =
-          new KvMorDeltaBatchWrite(
-            path, info.queryId(), buckets, scanVersion)
+          new KvMorDeltaBatchWrite(path, info.queryId(), scanVersion)
       }
     }
   }
@@ -109,51 +108,30 @@ class KvMorRowLevelOperation(
     s"kvjsonl MoR $cmd on $path (scan v$scanVersion)"
 }
 
-/** One delta task's output: ordinary data files (inserts) plus at
-  * most one positional delete file (tombstones). `deleteFile.rows` is
-  * the tombstone count the manifest records — what makes the
-  * manifest-only COUNT(*) still exact on a MoR table.
-  */
-case class KvDeltaCommitMessage(
-    dataFiles: Seq[KvWrittenFile],
-    deleteFile: Option[KvWrittenFile])
-    extends WriterCommitMessage
-
 class KvMorDeltaBatchWrite(
-    path: String, jobId: String, buckets: Option[Int], scanVersion: Int)
+    path: String, jobId: String, scanVersion: Int)
     extends DeltaBatchWrite {
 
+  // The table's own writer factory (KvDataWriter is also the delta
+  // writer): inserts route by the layout read once, driver-side — an
+  // in-flight rebucket's target count included — as for every write.
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DeltaWriterFactory = {
-    java.nio.file.Files.createDirectories(
-      KvJsonlSink.tempDir(path, jobId))
-    // Column registry captured driver-side, once per job — same
-    // mid-job-ALTER isolation as the batch write factory.
-    val meta = KvBucketing.readMetaFull(path)
-    new KvMorDeltaWriterFactory(path, jobId, buckets,
-      KvSchema.currentCols(path), meta.blooms, meta.partition)
-  }
+      info: PhysicalWriteInfo): DeltaWriterFactory =
+    KvWriterFactory.forTable(path, jobId)
 
+  /** Publish every task's data and delete files through the one
+    * publish (data files get their bloom sidecars), then APPEND their
+    * manifest entries. A delete file's `rows` is its tombstone count —
+    * what keeps the manifest-only COUNT(*) exact on a MoR table. The
+    * 0-row file a plain task opens eagerly is not data: a pure DELETE
+    * adds only its tombstones.
+    */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val dir = java.nio.file.Paths.get(path)
-    val published = messages.toSeq.flatMap {
-      case KvDeltaCommitMessage(data, del) => data ++ del
-    }
-    published.foreach { f =>
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(f.tempFile),
-        dir.resolve(f.finalName),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    val added = messages.toSeq.flatMap {
-      case KvDeltaCommitMessage(data, del) =>
-        data.map(f => KvSnapshots.KvFileStat(
-          f.finalName, f.rows, f.minKey, f.maxKey,
-          keysKnown = f.keyStatsKnown,
-          colStats = f.colStats)) ++
-          del.map(f => KvSnapshots.KvFileStat(
-            f.finalName, f.rows, None, None, keysKnown = false))
-    }
+    val published = messages.toSeq
+      .flatMap { case KvCommitMessage(fs) => fs }.filter(_.rows > 0L)
+    published.foreach(KvJsonlSink.publish(dir, _))
+    val added = published.map(_.stat)
     KvSnapshots.commitWith(path) { base =>
       val cur =
         if (base == 0) Seq.empty[KvSnapshots.KvFileStat]
@@ -191,114 +169,4 @@ class KvMorDeltaBatchWrite(
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     KvJsonlSink.cleanupJobTemp(path, jobId)
-}
-
-class KvMorDeltaWriterFactory(
-    path: String, jobId: String, buckets: Option[Int],
-    cols: Seq[KvSchema.Col] = KvSchema.Legacy,
-    bloomIds: Seq[Int] = Nil,
-    partition: Option[(KvBucketing.PartUnit, Int)] = None)
-    extends DeltaWriterFactory {
-  override def createWriter(
-      partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new KvMorDeltaWriter(path, jobId, partitionId, taskId, buckets, cols,
-      bloomIds, partition)
-}
-
-/** Per-task delta writer: inserts delegate to the ordinary data
-  * writers (plain or bucket-routing — a MoR commit is always an
-  * APPEND, so the existing attempt-isolation naming applies
-  * unchanged); deletes buffer (file, pos) tombstones and flush them
-  * to one sorted `.del` temp file at task commit. Buffer size is
-  * bounded by the task's matched-row count — tombstones are two
-  * numbers and a name, the same order of memory the task's shuffle
-  * buffers already hold.
-  */
-class KvMorDeltaWriter(
-    path: String, jobId: String, partitionId: Int, taskId: Long,
-    buckets: Option[Int],
-    cols: Seq[KvSchema.Col] = KvSchema.Legacy,
-    bloomIds: Seq[Int] = Nil,
-    partition: Option[(KvBucketing.PartUnit, Int)] = None)
-    extends DeltaWriter[InternalRow] {
-
-  private var dataWriter: DataWriter[InternalRow] = _
-
-  private def writer(): DataWriter[InternalRow] = {
-    if (dataWriter == null)
-      dataWriter = (buckets, partition) match {
-        case (Some(n), Some((unit, id))) =>
-          new KvJsonlComposedDataWriter(
-            path, jobId, partitionId, taskId, n, unit, id, cols,
-            bloomIds)
-        case (Some(n), None) =>
-          new KvJsonlBucketedDataWriter(
-            path, jobId, partitionId, taskId, n, cols, bloomIds)
-        case (None, Some((unit, id))) =>
-          new KvJsonlPartitionedDataWriter(
-            path, jobId, partitionId, taskId, unit, id, cols, bloomIds)
-        case (None, None) =>
-          new KvJsonlDataWriter(path,
-            f"attempt-$jobId-$partitionId%05d-$taskId",
-            f"part-$jobId-$partitionId%05d.jsonl",
-            jobSubdir = jobId, cols = cols, bloomIds = bloomIds)
-      }
-    dataWriter
-  }
-
-  private val tombstones =
-    scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-
-  override def insert(row: InternalRow): Unit = writer().write(row)
-
-  /** `id` is the rowId projection in declaration order:
-    * (_file STRING, _pos BIGINT). The delete file records the file
-    * NAME — manifests are location-independent.
-    */
-  override def delete(meta: InternalRow, id: InternalRow): Unit = {
-    val file = id.getUTF8String(0).toString
-    val name = java.nio.file.Paths.get(file).getFileName.toString
-    tombstones += ((name, id.getLong(1)))
-  }
-
-  /** Unreachable under representUpdateAsDeleteAndInsert = true; kept
-    * semantically correct anyway — an update IS delete + insert.
-    */
-  override def update(
-      meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
-    delete(meta, id)
-    insert(row)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    val data: Seq[KvWrittenFile] =
-      if (dataWriter == null) Seq.empty
-      else dataWriter.commit() match {
-        case KvJsonlCommitMessage(f) => Seq(f)
-        case KvJsonlBucketedCommitMessage(fs) => fs
-      }
-    val del: Option[KvWrittenFile] =
-      if (tombstones.isEmpty) None
-      else {
-        val tmp = KvJsonlSink.tempDir(path, jobId).resolve(
-          f"attempt-$jobId-$partitionId%05d-$taskId.del")
-        java.nio.file.Files.write(tmp,
-          tombstones.sorted
-            .map { case (n, p) => s"$n\t$p" }
-            .mkString("\n").getBytes(
-              java.nio.charset.StandardCharsets.UTF_8))
-        Some(KvWrittenFile(
-          tmp.toString,
-          f"delete-$jobId-$partitionId%05d.del",
-          tombstones.size.toLong, None, None))
-      }
-    KvDeltaCommitMessage(data, del)
-  }
-
-  override def abort(): Unit = {
-    if (dataWriter != null) dataWriter.abort()
-    tombstones.clear()
-  }
-
-  override def close(): Unit = if (dataWriter != null) dataWriter.close()
 }

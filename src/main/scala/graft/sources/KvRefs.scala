@@ -47,12 +47,8 @@ object KvRefs {
     val body = tags.toSeq.sortBy(_._1)
       .map { case (n, v) => s""""$n":$v""" }
       .mkString("""{"tags":{""", ",", "}}")
-    val tmp = Paths.get(dir, FileName + ".tmp")
-    Files.write(tmp,
+    graft.Fs.replaceAtomically(Paths.get(dir, FileName),
       body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(dir, FileName),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Create a tag. Fails on an invalid name, an existing tag (drop it

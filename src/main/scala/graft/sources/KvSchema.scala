@@ -261,12 +261,8 @@ object KvSchema {
           s""""type":"${typeName(c.dtype)}"}""").mkString("[", ",", "]")
       s"""{"from":${v.from},"cols":$cols}"""
     }.mkString("""{"versions":[""", ",", "]}")
-    val tmp = Paths.get(dir, FileName + ".tmp")
-    Files.write(tmp,
+    graft.Fs.replaceAtomically(Paths.get(dir, FileName),
       body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(dir, FileName),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
   // Column names land inside JSON string literals; the catalog

@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Fs.deleteRecursively` must tolerate a concurrent deleter of the
@@ -100,5 +102,34 @@ class FsSpec extends AnyFunSuite {
       assert(errs.isEmpty, s"concurrent delete threw: ${errs.peek()}")
       assert(!Files.exists(root))
     }
+  }
+
+  test("concurrent rewrites of one table's _meta.json never throw") {
+    // Each rewrite goes through Fs.replaceAtomically: a private temp
+    // file, then an atomic move. A shared fixed temp name made
+    // concurrent writers move each other's temp away
+    // (NoSuchFileException) or publish a half-written one.
+    val dir = Files.createTempDirectory("graft-fsspec-meta")
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val threads = (1 to 6).map { t =>
+      new Thread(() =>
+        try (1 to 40).foreach { i =>
+          graft.sources.KvBucketing.writeMeta(dir.toString, t * 100 + i)
+        } catch { case e: Throwable => errs.add(e) })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(errs.isEmpty, s"concurrent meta rewrite threw: ${errs.peek()}")
+    val meta = graft.sources.KvBucketing.readMetaFull(dir.toString)
+    assert(meta.buckets.exists(n => n % 100 == 40),
+      s"the last write of some thread should win, got $meta")
+    val left = {
+      val s = Files.list(dir)
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq
+      finally s.close()
+    }
+    assert(left === Seq(graft.sources.KvBucketing.MetaFile),
+      s"temp files left behind: $left")
+    Fs.deleteRecursively(dir)
   }
 }

@@ -211,4 +211,40 @@ class KvCdcMaintenanceSpec extends SparkTestBase {
     assert(KvSnapshots.isMaintenance(dir, 4))
     assert(spark.sql(s"SELECT count(*) FROM $t").head.getLong(0) == 20L)
   }
+
+  test("replace_files without layout_rewrite replaces only the named files") {
+    cat()
+    val t = "graft_kv.default.cdcm_replace"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
+      "TBLPROPERTIES ('snapshots'='true')")
+    val dir = dirOf("cdcm_replace")
+    def members(): Seq[String] =
+      KvSnapshots.members(dir, KvSnapshots.latest(dir).get).sorted
+    def append(from: Long, to: Long): Unit =
+      spark.range(from, to).selectExpr("id AS key", "'a' AS value")
+        .repartition(1)
+        .write.format("graft.sources.KvJsonlSink").mode("append").save(dir)
+    append(0, 5) // v1: file A
+    val a = members().head
+    append(5, 8) // v2: files A, B
+    val b = members().filterNot(_ == a).head
+    // rewrite A alone — a maintenance write that keeps the table's
+    // standing layout (no layout_rewrite) but names what it replaces
+    spark.read.format("graft.sources.KvJsonlSink")
+      .option("scan_files", a).load(dir)
+      .repartition(1)
+      .write.format("graft.sources.KvJsonlSink")
+      .option("maintenance", "true")
+      .option("maintenance_base", "2")
+      .option("replace_files", a)
+      .mode("append").save(dir)
+    val after = members()
+    assert(after.size === 2 && after.contains(b) && !after.contains(a),
+      s"expected B plus A's replacement, got $after")
+    assert(KvSnapshots.isMaintenance(dir, 3))
+    assert(spark.sql(s"SELECT count(*), sum(key) FROM $t").head().toSeq ===
+      Seq(8L, 28L))
+    assert(changesByVersion("cdcm_replace") === Map(1 -> 5L, 2 -> 3L))
+  }
 }

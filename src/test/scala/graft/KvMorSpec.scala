@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import graft.sources.KvSnapshots
+import graft.sources.{KvBloom, KvBucketing, KvSnapshots}
 
 /** Merge-on-read DML (`TBLPROPERTIES ('dml'='mor')`, KvMerge.scala):
   * DELETE commits positional tombstones WITHOUT rewriting surviving
@@ -197,5 +197,57 @@ class KvMorSpec extends SparkTestBase {
       "table => 'default.mor_unset', keep_last => 1)")
     assert(spark.sql(s"SELECT count(*) c FROM $t2")
       .head().getLong(0) === 9L)
+  }
+
+  test("MoR inserts publish their bloom sidecars") {
+    cat()
+    val t = "graft_kv.default.mor_bloom"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
+      "TBLPROPERTIES ('snapshots'='true', 'dml'='mor', " +
+      "'bloom_cols'='value')")
+    seed(t, 100)
+    val d = dir("mor_bloom")
+    val seeded = manifestNames(d).toSet
+    // UPDATE is delete + insert: the re-inserted rows land in new
+    // data files, which must carry sidecars like any other write's
+    spark.sql(s"UPDATE $t SET value = 'u' WHERE key < 10")
+    val inserted = manifestNames(d)
+      .filterNot(seeded).filterNot(KvSnapshots.isDeleteFile)
+    assert(inserted.nonEmpty)
+    (seeded.toSeq ++ inserted).foreach { n =>
+      assert(Files.isRegularFile(Paths.get(d, KvBloom.sidecarName(n))),
+        s"no bloom sidecar for $n")
+    }
+    assert(spark.sql(s"SELECT count(*) FROM $t WHERE value = 'u'")
+      .head().getLong(0) === 10L)
+  }
+
+  test("MoR inserts during an in-flight rebucket route by the target") {
+    cat()
+    val t = "graft_kv.default.mor_rbk"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
+      "PARTITIONED BY (bucket(2, key)) " +
+      "TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
+    seed(t, 40)
+    val d = dir("mor_rbk")
+    // a rebucket to 8 is in flight (marked, not yet rewritten)
+    KvBucketing.writeMeta(d,
+      KvBucketing.readMetaFull(d).copy(rebucketTarget = Some(8)))
+    val before = manifestNames(d).toSet
+    spark.sql(s"UPDATE $t SET value = 'u' WHERE key >= 20")
+    val added = manifestNames(d)
+      .filterNot(before).filterNot(KvSnapshots.isDeleteFile).toSet
+    val moved = spark.sql(s"SELECT key, _file FROM $t WHERE value = 'u'")
+      .collect()
+    assert(moved.length === 20)
+    moved.foreach { r =>
+      val name = Paths.get(r.getString(1)).getFileName.toString
+      assert(added(name), s"$name is not one of the UPDATE's files")
+      assert(KvBucketing.fileBucket(name) ===
+        Some(KvBucketing.bucketOf(r.getLong(0), 8)),
+        s"key ${r.getLong(0)} in $name is not routed by the target count")
+    }
   }
 }
