@@ -116,24 +116,16 @@ object SkewBench {
     val d = dim(spark, sfDir).cache()
     f.count(); d.count() // materialize inputs outside the timings
 
-    def withAqe[T](on: Boolean)(body: => T): T = {
-      val prev = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", on.toString)
-      if (on) {
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        spark.conf.set(
-          "spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-        spark.conf.set(
-          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-          "256KB")
-        spark.conf.set(
-          "spark.sql.adaptive.advisoryPartitionSizeInBytes", "128KB")
-        spark.conf.set(
-          "spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-      }
-      try body
-      finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-    }
+    def withAqe[T](on: Boolean)(body: => T): T =
+      Confs.scoped(spark,
+        Seq("spark.sql.adaptive.enabled" -> on.toString) ++ (if (on) Seq(
+          "spark.sql.adaptive.skewJoin.enabled" -> "true",
+          "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" ->
+            "256KB",
+          "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "128KB",
+          "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")
+        else Nil): _*)(body)
 
     // Untimed warmup of each plan (codegen/JIT)
     withAqe(false) { naivePlan(f, d).collect(); saltedPlan(f, d).collect() }

@@ -208,20 +208,11 @@ object FlagshipQueries {
     // complete-mode stateful aggregation, and the bounded aggregated
     // state yields the identical top-10 report — pinned by the SAME
     // oracle as the batch flagship.
-    "flagship_stream" -> ((spark, _) => {
-      val id = java.util.UUID.randomUUID().toString.replace("-", "")
-      // withStateParts (r19): the complete-mode aggregation holds
-      // O(titles) state — at the session's cluster-shaped partition
-      // count every micro-batch paid 32 state-store load/commit
-      // cycles for kilobytes of state (see StreamGates doc; every
-      // other stateful gate already runs under this wrapper).
-      graft.streaming.StreamGates.withStateParts(spark) {
-        graft.streaming.StreamingFlagship.flagshipReport(
-          spark,
-          graft.Fs.sinkDir("graft_flagship_snaps"),
-          "flagship_stream_" + id)
-      }
-    }),
+    "flagship_stream" -> ((spark, _) =>
+      graft.streaming.StreamingFlagship.flagshipReport(
+        spark,
+        graft.Fs.sinkDir("graft_flagship_snaps"),
+        "flagship_stream")),
 
     // S10: union-all accumulation — per-source row counts.
     "union_counts" -> ((spark, _) =>

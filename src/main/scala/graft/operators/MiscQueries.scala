@@ -739,40 +739,39 @@ object MiscQueries {
     // the emitted binaries, proving the streamed state is
     // byte-compatible with the batch sketch column format — and pins
     // the identical rank contract. See StreamKllQuantile.
-    "stream_kll_quantile" -> ((s, d) =>
-      graft.streaming.StreamGates.withStateParts(s) {
-        val cents = orders(s, d).select(
-          col("o_orderpriority"),
-          graft.operators.Money.cents(col("o_totalprice")).as("v"))
-        val perPrio = graft.streaming.StreamKllQuantile
-          .finalSketches(s, d)
-          .select(col("prio").as("o_orderpriority"), col("n"),
-            expr("kll_sketch_get_quantile_bigint(sk, 0.5d)").as("q50"),
-            col("sk"))
-        val perChecked = perPrio.as("p")
-          .join(cents.as("c"),
-            col("p.o_orderpriority") === col("c.o_orderpriority"))
-          .groupBy(col("p.o_orderpriority").as("scope"),
-            col("p.n").as("n"))
-          .agg(
-            (abs(sum(when(col("c.v") <= col("p.q50"), 1L).otherwise(0L))
-              .cast("double") / count(lit(1)) - 0.5) <= 0.05)
-              .as("p50_rank_within_tol"))
-        val mergedQ = perPrio
-          .agg(expr(
-            "kll_sketch_get_quantile_bigint(kll_merge_agg_bigint(sk), 0.5d)")
-            .as("q50"))
-        val allChecked = cents
-          .crossJoin(broadcast(mergedQ))
-          .agg(
-            count(lit(1)).as("n"),
-            (abs(sum(when(col("v") <= col("q50"), 1L).otherwise(0L))
-              .cast("double") / count(lit(1)) - 0.5) <= 0.05)
-              .as("p50_rank_within_tol"))
-          .select(lit("ALL_MERGED").as("scope"), col("n"),
-            col("p50_rank_within_tol"))
-        perChecked.unionByName(allChecked).orderBy("scope")
-      }),
+    "stream_kll_quantile" -> ((s, d) => {
+      val cents = orders(s, d).select(
+        col("o_orderpriority"),
+        graft.operators.Money.cents(col("o_totalprice")).as("v"))
+      val perPrio = graft.streaming.StreamKllQuantile
+        .finalSketches(s, d)
+        .select(col("prio").as("o_orderpriority"), col("n"),
+          expr("kll_sketch_get_quantile_bigint(sk, 0.5d)").as("q50"),
+          col("sk"))
+      val perChecked = perPrio.as("p")
+        .join(cents.as("c"),
+          col("p.o_orderpriority") === col("c.o_orderpriority"))
+        .groupBy(col("p.o_orderpriority").as("scope"),
+          col("p.n").as("n"))
+        .agg(
+          (abs(sum(when(col("c.v") <= col("p.q50"), 1L).otherwise(0L))
+            .cast("double") / count(lit(1)) - 0.5) <= 0.05)
+            .as("p50_rank_within_tol"))
+      val mergedQ = perPrio
+        .agg(expr(
+          "kll_sketch_get_quantile_bigint(kll_merge_agg_bigint(sk), 0.5d)")
+          .as("q50"))
+      val allChecked = cents
+        .crossJoin(broadcast(mergedQ))
+        .agg(
+          count(lit(1)).as("n"),
+          (abs(sum(when(col("v") <= col("q50"), 1L).otherwise(0L))
+            .cast("double") / count(lit(1)) - 0.5) <= 0.05)
+            .as("p50_rank_within_tol"))
+        .select(lit("ALL_MERGED").as("scope"), col("n"),
+          col("p50_rank_within_tol"))
+      perChecked.unionByName(allChecked).orderBy("scope")
+    }),
 
     // NATIVE DataSketches HLL (Spark 3.5+ hll_sketch_agg /
     // hll_union_agg / hll_sketch_estimate — the interoperable binary

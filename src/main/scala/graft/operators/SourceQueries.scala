@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.{Page, PageParsers}
-import graft.streaming.StreamingEvents
+import graft.streaming.{StreamGates, StreamingEvents}
 
 /** Queries exercising the custom source and streaming surfaces:
   *   - the `webpage` DataSourceV2 (one InputPartition per URL,
@@ -36,20 +36,6 @@ object SourceQueries {
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (key BIGINT, value STRING)")
     t
-  }
-
-  /** Scoped session-conf override with restore — for gates that need
-    * a planner switch (SPJ enablement, broadcast suppression) without
-    * leaking it into the rest of the shared-session run.
-    */
-  private def withConfs[T](
-      s: SparkSession, kvs: (String, String)*)(body: => T): T = {
-    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
-    kvs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(p)) => s.conf.set(k, p)
-      case (k, None) => s.conf.unset(k)
-    }
   }
 
   /** The bucketed-table pair behind the storage-partitioned-join and
@@ -541,21 +527,13 @@ object SourceQueries {
       for (r <- 0 to 2)
         s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
           s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 3 = $r")
-      val sink = "cf_gate_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = s.readStream.table(t)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+      val (rows, progress) =
+        StreamGates.memory(s.readStream.table(t), "cf_gate")
+      val dataBatches = StreamGates.dataBatches(progress)
       require(dataBatches == 3,
         s"catalog_changefeed: expected 3 one-commit micro-batches, " +
           s"saw $dataBatches")
-      graft.streaming.MemorySinks.drain(s, sink)
+      rows
         .groupBy("value")
         .agg(
           count(lit(1)).as("n_orders"),
@@ -576,7 +554,7 @@ object SourceQueries {
     // and the oracle pins the join result against the raw parquet.
     "catalog_spj_join" -> ((s, d) => {
       val (t1, t2) = spjPair(s, d)
-      withConfs(s,
+      graft.Confs.scoped(s,
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         // plain (non-AQE) plan so the no-shuffle assertion can walk
@@ -619,7 +597,7 @@ object SourceQueries {
         s"FROM parquet.`$d/orders.parquet`")
       s.sql(s"INSERT INTO $t2 SELECT l_orderkey, l_returnflag " +
         s"FROM parquet.`$d/lineitem.parquet`")
-      withConfs(s,
+      graft.Confs.scoped(s,
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.enabled" -> "false") {
@@ -666,7 +644,7 @@ object SourceQueries {
         s"FROM parquet.`$d/orders.parquet`")
       s.sql(s"INSERT INTO $t2 SELECT l_orderkey, l_returnflag " +
         s"FROM parquet.`$d/lineitem.parquet`")
-      withConfs(s,
+      graft.Confs.scoped(s,
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.enabled" -> "false") {
@@ -760,7 +738,7 @@ object SourceQueries {
         s"o_orderpriority FROM parquet.`$d/orders.parquet`")
       s.sql(s"INSERT INTO $t2 SELECT concat('o-', l_orderkey), " +
         s"l_returnflag FROM parquet.`$d/lineitem.parquet`")
-      withConfs(s,
+      graft.Confs.scoped(s,
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.enabled" -> "false") {
@@ -892,7 +870,7 @@ object SourceQueries {
         s"o_orderdate FROM parquet.`$d/orders.parquet`")
       s.sql(s"INSERT INTO $t2 SELECT l_orderkey, l_returnflag " +
         s"FROM parquet.`$d/lineitem.parquet`")
-      withConfs(s,
+      graft.Confs.scoped(s,
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.enabled" -> "false") {
@@ -1094,7 +1072,7 @@ object SourceQueries {
            |FROM $ta a JOIN $tb b ON a.o_orderkey = b.l_orderkey
            |GROUP BY a.value, b.value
            |ORDER BY priority, flag""".stripMargin)
-      withConfs(s,
+      graft.Confs.scoped(s,
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.enabled" -> "false") {
@@ -1199,7 +1177,7 @@ object SourceQueries {
     // rows never move, only the aggregate does.
     "catalog_bucketed_agg" -> ((s, d) => {
       val (_, t2) = spjPair(s, d)
-      withConfs(s,
+      graft.Confs.scoped(s,
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.adaptive.enabled" -> "false") {
         val df = s.sql(
@@ -2054,13 +2032,8 @@ object SourceQueries {
         s"o_orderdate FROM parquet.`$d/orders.parquet`")
       val cp = graft.Fs.sinkDir("sp_cp_" +
         java.util.UUID.randomUUID().toString.replace("-", ""))
-      val q = s.readStream.table(src)
-        .writeStream
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .toTable(dst)
-      q.awaitTermination(120000)
-      require(!q.isActive, "catalog_stream_partitioned: drain timeout")
+      StreamGates.run(s.readStream.table(src))(
+        _.option("checkpointLocation", cp).toTable(dst))
       val before = graft.sources.KvPartitionPrune.prunedFiles.get()
       val out = s.sql(
         s"""SELECT value, count(*) AS n_orders,
@@ -2131,12 +2104,11 @@ object SourceQueries {
       s.sql(s"DROP TABLE IF EXISTS $t")
       s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true', 'write.sort'='key')")
-      s.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
-        "false")
-      try s.sql(s"INSERT INTO $t SELECT o_orderkey, " +
-        s"o_orderpriority FROM parquet.`$d/orders.parquet`")
-      finally s.conf.unset(
-        "spark.sql.adaptive.coalescePartitions.enabled")
+      graft.Confs.scoped(s,
+          "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+        s.sql(s"INSERT INTO $t SELECT o_orderkey, " +
+          s"o_orderpriority FROM parquet.`$d/orders.parquet`")
+      }
       val before = graft.sources.KvZoneMap.prunedFiles.get()
       val out = s.sql(
         s"""SELECT value, count(*) AS n_orders,
@@ -2525,13 +2497,8 @@ object SourceQueries {
           s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 3 = $r")
       val cp = graft.Fs.sinkDir("sk_cp_" +
         java.util.UUID.randomUUID().toString.replace("-", ""))
-      val q = s.readStream.table(src)
-        .writeStream
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .toTable(dst)
-      q.awaitTermination(120000)
-      require(!q.isActive, "catalog_stream_sink: drain timed out")
+      StreamGates.run(s.readStream.table(src))(
+        _.option("checkpointLocation", cp).toTable(dst))
       val dstDir = s"${graft.Fs.sinkDir("graft_kv_wh")}/default/sk_dst"
       val nSnaps = graft.sources.KvSnapshots.versions(dstDir).size
       require(nSnaps == 3,
@@ -2575,13 +2542,8 @@ object SourceQueries {
       val fired0 = graft.sources.KvAutoCompact.compactions.get()
       val cp = graft.Fs.sinkDir("ac_cp_" +
         java.util.UUID.randomUUID().toString.replace("-", ""))
-      val q = s.readStream.table(src)
-        .writeStream
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .toTable(dst)
-      q.awaitTermination(120000)
-      require(!q.isActive, "catalog_auto_compact: drain timed out")
+      StreamGates.run(s.readStream.table(src))(
+        _.option("checkpointLocation", cp).toTable(dst))
       val dstDir = s"${graft.Fs.sinkDir("graft_kv_wh")}/default/ac_dst"
       val fired =
         graft.sources.KvAutoCompact.compactions.get() - fired0
@@ -2819,24 +2781,13 @@ object SourceQueries {
     // reduced to per-type counts. If dedup dropped nothing, n_events
     // doubles; if it over-dropped, counts fall short — the oracle
     // (raw events, undoubled) pins both failure directions.
-    "stream_dedup" -> ((s, d) => graft.streaming.StreamGates.withStateParts(s) {
-      val sink = "stream_dedup_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.StreamingEvents.dedupStream(s, d)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.MemorySinks.drain(s, sink)
+    "stream_dedup" -> ((s, d) =>
+      StreamGates.memory(StreamingEvents.dedupStream(s, d), "stream_dedup")._1
         .groupBy("event_type")
         .agg(
           count(lit(1)).as("n_events"),
           countDistinct(col("event_id")).as("n_ids"))
-        .orderBy("event_type")
-    }),
+        .orderBy("event_type")),
 
     // Per-key ingest QUOTA through flatMapGroupsWithState: at most
     // QuotaPerDay events accepted per (user, event-time day), the
@@ -2845,28 +2796,16 @@ object SourceQueries {
     // active (user, day); the accept decision sorts each group by
     // (event time, event_id), so it is deterministic under any
     // partitioning and the oracle reproduces it as a row_number cut.
-    "stream_quota" -> ((s, d) => graft.streaming.StreamGates.withStateParts(s) {
-      val sink = "stream_quota_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.StreamingEvents.quotaStream(s, d)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamingEvents.assertSingleBatch(
-        q, "stream_quota")
-      graft.streaming.MemorySinks.drain(s, sink)
+    "stream_quota" -> ((s, d) =>
+      StreamingEvents.singleBatch(
+        StreamingEvents.quotaStream(s, d), "stream_quota")
         .groupBy("event_type")
         .agg(
           sum(when(col("accepted"), 1L).otherwise(0L))
             .as("n_accepted"),
           sum(when(col("accepted"), 0L).otherwise(1L))
             .as("n_dropped"))
-        .orderBy("event_type")
-    }),
+        .orderBy("event_type")),
 
     // foreachBatch UPSERT — the dominant production sink pattern
     // (per-micro-batch merge into a serving table, for sinks with no
@@ -2880,7 +2819,7 @@ object SourceQueries {
     // reading vN and writing vN+1 also never overwrites what it
     // reads. Counts/sums are associative, so the final state ≡ the
     // oracle's one-shot aggregation.
-    "stream_foreach_upsert" -> ((s, d) => graft.streaming.StreamGates.withStateParts(s) {
+    "stream_foreach_upsert" -> ((s, d) => {
       val base = graft.Fs.sinkDir("graft_feb")
       graft.Fs.deleteRecursively(base)
       val ingest = s"$base/ingest"
@@ -2889,37 +2828,35 @@ object SourceQueries {
         graft.operators.Money.cents(col("value")).as("cents"))
       ev.filter(col("event_id") % 2 === 0).write.parquet(s"$ingest/f0")
       ev.filter(col("event_id") % 2 === 1).write.parquet(s"$ingest/f1")
-      val schema = s.read.parquet(s"$ingest/f0").schema
+      val schema = ev.schema
       val maxVersion = new java.util.concurrent.atomic.AtomicLong(0L)
-      val q = s.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$ingest/*")
-        .writeStream
-        .option("checkpointLocation", s"$base/ckpt")
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val agg = batch
-            .groupBy("event_type")
-            .agg(
-              count(lit(1)).as("n_events"),
-              sum(col("cents")).as("sum_cents"))
-          val merged =
-            if (id == 0) agg
-            else
-              s.read.parquet(s"$base/state/v$id")
-                .unionByName(agg)
-                .groupBy("event_type")
-                .agg(
-                  sum(col("n_events")).as("n_events"),
-                  sum(col("sum_cents")).as("sum_cents"))
-          merged.write.mode("overwrite")
-            .parquet(s"$base/state/v${id + 1}")
-          maxVersion.updateAndGet(_ max (id + 1))
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      StreamGates.run(
+        s.readStream
+          .schema(schema)
+          .option("maxFilesPerTrigger", "1")
+          .parquet(s"$ingest/*"))(
+        _.option("checkpointLocation", s"$base/ckpt")
+          .foreachBatch { (batch: DataFrame, id: Long) =>
+            val agg = batch
+              .groupBy("event_type")
+              .agg(
+                count(lit(1)).as("n_events"),
+                sum(col("cents")).as("sum_cents"))
+            val merged =
+              if (id == 0) agg
+              else
+                s.read.parquet(s"$base/state/v$id")
+                  .unionByName(agg)
+                  .groupBy("event_type")
+                  .agg(
+                    sum(col("n_events")).as("n_events"),
+                    sum(col("sum_cents")).as("sum_cents"))
+            merged.write.mode("overwrite")
+              .parquet(s"$base/state/v${id + 1}")
+            maxVersion.updateAndGet(_ max (id + 1))
+            ()
+          }
+          .start())
       val last = maxVersion.get()
       require(last >= 2,
         s"foreachBatch ran $last micro-batches — the upsert loop " +
@@ -2978,51 +2915,24 @@ object SourceQueries {
     // directions pin: un-dropped late rows add ~15 days of windows;
     // over-dropping loses the final-day hours.
     "stream_late_drop" -> ((s, d) =>
-      graft.streaming.StreamGates.withStateParts(s) {
-        graft.streaming.StreamingEvents.lateDropResult(s, d)
-      }),
+      StreamingEvents.lateDropResult(s, d)),
 
     // The SAME quota through Spark 4's transformWithState (typed
     // MapState handles on the RocksDB state store the operator
     // requires) — run against the IDENTICAL oracle as stream_quota,
     // so the legacy and successor state APIs are proven
-    // gate-indistinguishable. The provider conf is scoped to this
-    // query and restored after.
-    "stream_quota_tws" -> ((s, d) => graft.streaming.StreamGates.withStateParts(s) {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      try {
-        val sink = "stream_quota_tws_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = graft.streaming.StreamingEvents.quotaStreamTws(s, d)
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .trigger(
-            org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        graft.streaming.StreamingEvents.assertSingleBatch(
-          q, "stream_quota_tws")
-        graft.streaming.MemorySinks.drain(s, sink)
-          .groupBy("event_type")
-          .agg(
-            sum(when(col("accepted"), 1L).otherwise(0L))
-              .as("n_accepted"),
-            sum(when(col("accepted"), 0L).otherwise(1L))
-              .as("n_dropped"))
-          .orderBy("event_type")
-      } finally {
-        prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
-        }
-      }
-    }),
+    // gate-indistinguishable. The runner scopes the provider to this
+    // query.
+    "stream_quota_tws" -> ((s, d) =>
+      StreamingEvents.singleBatch(
+        StreamingEvents.quotaStreamTws(s, d), "stream_quota_tws")
+        .groupBy("event_type")
+        .agg(
+          sum(when(col("accepted"), 1L).otherwise(0L))
+            .as("n_accepted"),
+          sum(when(col("accepted"), 0L).otherwise(1L))
+            .as("n_dropped"))
+        .orderBy("event_type")),
 
     // Per-key RECENCY BUFFER on ListState (the remaining typed state
     // primitive): the last K=3 events per user stay buffered — the
@@ -3030,39 +2940,14 @@ object SourceQueries {
     // arrival beyond K emits the evicted oldest event. The oracle
     // derives evictions as rank-from-newest > K, so both over- and
     // under-eviction break the hash.
-    "stream_recent_k" -> ((s, d) => graft.streaming.StreamGates.withStateParts(s) {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      try {
-        val sink = "stream_recent_k_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = graft.streaming.StreamingEvents.recentKStream(s, d)
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .trigger(
-            org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        graft.streaming.StreamingEvents.assertSingleBatch(
-          q, "stream_recent_k")
-        graft.streaming.MemorySinks.drain(s, sink)
-          .groupBy("event_type")
-          .agg(
-            count(lit(1)).as("n_evicted"),
-            countDistinct(col("user_id")).as("n_users"))
-          .orderBy("event_type")
-      } finally {
-        prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
-        }
-      }
-    }),
+    "stream_recent_k" -> ((s, d) =>
+      StreamingEvents.singleBatch(
+        StreamingEvents.recentKStream(s, d), "stream_recent_k")
+        .groupBy("event_type")
+        .agg(
+          count(lit(1)).as("n_evicted"),
+          countDistinct(col("user_id")).as("n_users"))
+        .orderBy("event_type")),
 
     // Streaming FUNNEL: the batch conversion funnel as a per-user
     // state machine — ValueState holds the three stage-first
@@ -3071,41 +2956,16 @@ object SourceQueries {
     // the min-based batch semantics exact in one pass), and each
     // stage emits once when first reached. The drained emission
     // counts ARE the batch funnel row — same oracle string.
-    "stream_funnel" -> ((s, d) => graft.streaming.StreamGates.withStateParts(s) {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      try {
-        val sink = "stream_funnel_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = graft.streaming.StreamingEvents.funnelStream(s, d)
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .trigger(
-            org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        graft.streaming.StreamingEvents.assertSingleBatch(
-          q, "stream_funnel")
-        graft.streaming.MemorySinks.drain(s, sink)
-          .agg(
-            sum(when(col("stage") === "viewed", 1L).otherwise(0L))
-              .as("n_viewed"),
-            sum(when(col("stage") === "clicked", 1L).otherwise(0L))
-              .as("n_clicked_after_view"),
-            sum(when(col("stage") === "purchased", 1L).otherwise(0L))
-              .as("n_purchased_after_click"))
-      } finally {
-        prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
-        }
-      }
-    }),
+    "stream_funnel" -> ((s, d) =>
+      StreamingEvents.singleBatch(
+        StreamingEvents.funnelStream(s, d), "stream_funnel")
+        .agg(
+          sum(when(col("stage") === "viewed", 1L).otherwise(0L))
+            .as("n_viewed"),
+          sum(when(col("stage") === "clicked", 1L).otherwise(0L))
+            .as("n_clicked_after_view"),
+          sum(when(col("stage") === "purchased", 1L).otherwise(0L))
+            .as("n_purchased_after_click"))),
 
     // Streaming MARKOV TRANSITIONS: the batch `event_transitions`
     // matrix built in-stream — one ValueState row per user (the last
@@ -3115,42 +2975,16 @@ object SourceQueries {
     // identical matrix, so the query pins against the SAME oracle
     // string as its batch twin — replay ≡ batch is the gate, not an
     // aspiration.
-    "stream_event_transitions" -> ((s, d) => graft.streaming.StreamGates.withStateParts(s) {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      try {
-        val sink = "stream_event_transitions_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = graft.streaming.StreamingEvents
-          .transitionsStream(s, d)
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .trigger(
-            org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        graft.streaming.StreamingEvents.assertSingleBatch(
-          q, "stream_event_transitions")
-        val ws = org.apache.spark.sql.expressions.Window
-          .partitionBy("src")
-        graft.streaming.MemorySinks.drain(s, sink)
-          .groupBy("src", "dst")
-          .agg(count(lit(1)).as("n"))
-          .withColumn("tot", sum(col("n")).over(ws))
-          .withColumn("p_ppm", expr("1000000 * n DIV tot"))
-          .select("src", "dst", "n", "p_ppm")
-          .orderBy("src", "dst")
-      } finally {
-        prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
-        }
-      }
+    "stream_event_transitions" -> ((s, d) => {
+      val ws = org.apache.spark.sql.expressions.Window.partitionBy("src")
+      StreamingEvents.singleBatch(
+        StreamingEvents.transitionsStream(s, d), "stream_event_transitions")
+        .groupBy("src", "dst")
+        .agg(count(lit(1)).as("n"))
+        .withColumn("tot", sum(col("n")).over(ws))
+        .withColumn("p_ppm", expr("1000000 * n DIV tot"))
+        .select("src", "dst", "n", "p_ppm")
+        .orderBy("src", "dst")
     }),
 
     // Stateful EWMA ANOMALY screen: per event_type the stream keeps
@@ -3161,28 +2995,16 @@ object SourceQueries {
     // recurrence as a recursive CTE and the final state values
     // hash-pin the whole per-key update order, not just the flag
     // counts.
-    "stream_anomaly" -> ((s, d) => graft.streaming.StreamGates.withStateParts(s) {
-      val sink = "stream_anomaly_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.StreamingEvents.anomalyStream(s, d)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamingEvents.assertSingleBatch(
-        q, "stream_anomaly")
-      graft.streaming.MemorySinks.drain(s, sink)
+    "stream_anomaly" -> ((s, d) =>
+      StreamingEvents.singleBatch(
+        StreamingEvents.anomalyStream(s, d), "stream_anomaly")
         .groupBy("event_type")
         .agg(
           count(lit(1)).as("n_events"),
           sum(when(col("flagged"), 1L).otherwise(0L)).as("n_flagged"),
           max_by(col("ewma_cents"), col("seq")).as("last_ewma_cents"),
           max_by(col("ewmad_cents"), col("seq")).as("last_ewmad_cents"))
-        .orderBy("event_type")
-    }),
+        .orderBy("event_type")),
 
     // UPDATE output mode — the dashboard shape (append emits a
     // window only when the watermark CLOSES it; update re-emits a
@@ -3193,26 +3015,14 @@ object SourceQueries {
     // makes over-emission (stale versions winning) and missed updates
     // both detectable.
     "stream_update_mode" -> ((s, d) =>
-      graft.streaming.StreamGates.withStateParts(s) {
-        val sink = "stream_upd_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = graft.streaming.StreamingEvents
-          .windowedAgg(graft.streaming.StreamingEvents.stream(s, d))
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("update")
-          .trigger(
-            org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        graft.streaming.MemorySinks.drain(s, sink)
-          .groupBy("day", "event_type")
-          .agg(
-            max(col("n_events")).as("n_events"),
-            max(col("value_cents")).as("value_cents"))
-          .orderBy("day", "event_type")
-      }),
+      StreamGates.memory(
+        StreamingEvents.windowedAgg(StreamingEvents.stream(s, d)),
+        "stream_upd", "update")._1
+        .groupBy("day", "event_type")
+        .agg(
+          max(col("n_events")).as("n_events"),
+          max(col("value_cents")).as("value_cents"))
+        .orderBy("day", "event_type")),
 
     // COMPLETE output mode — the full-snapshot-per-trigger shape for
     // small-cardinality aggregates (a memory sink in complete mode
@@ -3220,26 +3030,15 @@ object SourceQueries {
     // trigger is exactly the final snapshot). Pinned against the
     // one-shot batch totals.
     "stream_complete_mode" -> ((s, d) =>
-      graft.streaming.StreamGates.withStateParts(s) {
-        val sink = "stream_cmp_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = graft.streaming.StreamingEvents.stream(s, d)
+      StreamGates.memory(
+        StreamingEvents.stream(s, d)
           .groupBy("event_type")
           .agg(
             count(lit(1)).as("n_events"),
             sum(graft.operators.Money.cents(col("value")))
-              .as("value_cents"))
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("complete")
-          .trigger(
-            org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        graft.streaming.MemorySinks.drain(s, sink)
-          .orderBy("event_type")
-      }),
+              .as("value_cents")),
+        "stream_cmp", "complete")._1
+        .orderBy("event_type")),
 
     // STREAMING REACH — the cumulative unique-user curve fed by a
     // first-seen detector (one BIT of ValueState per user; the state
@@ -3250,48 +3049,24 @@ object SourceQueries {
     // as the batch `reach_curve` — replay ≡ batch, the gate not an
     // aspiration. The observed-day calendar joins from the batch
     // read so zero-new days still advance the curve.
-    "stream_reach" -> ((s, d) => graft.streaming.StreamGates.withStateParts(s) {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      try {
-        val sink = "stream_reach_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = graft.streaming.StreamingEvents.reachStream(s, d)
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .trigger(
-            org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        graft.streaming.StreamingEvents.assertSingleBatch(
-          q, "stream_reach")
-        val newPerDay = graft.streaming.MemorySinks.drain(s, sink)
-          .groupBy("day")
-          .agg(count(lit(1)).as("n_new"))
-        val calendar = graft.Tables.events(s, d)
-          .select(expr("CAST(unix_micros(CAST(ts AS TIMESTAMP)) " +
-            "DIV 86400000000 AS BIGINT)").as("day"))
-          .distinct()
-        val w = org.apache.spark.sql.expressions.Window.orderBy("day")
-          .rowsBetween(
-            org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)
-        calendar
-          .join(newPerDay, Seq("day"), "left")
-          .withColumn("n_new", coalesce(col("n_new"), lit(0L)))
-          .withColumn("cum_users", sum(col("n_new")).over(w))
-          .orderBy("day")
-      } finally {
-        prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
-        }
-      }
+    "stream_reach" -> ((s, d) => {
+      val newPerDay = StreamingEvents.singleBatch(
+          StreamingEvents.reachStream(s, d), "stream_reach")
+        .groupBy("day")
+        .agg(count(lit(1)).as("n_new"))
+      val calendar = graft.Tables.events(s, d)
+        .select(expr("CAST(unix_micros(CAST(ts AS TIMESTAMP)) " +
+          "DIV 86400000000 AS BIGINT)").as("day"))
+        .distinct()
+      val w = org.apache.spark.sql.expressions.Window.orderBy("day")
+        .rowsBetween(
+          org.apache.spark.sql.expressions.Window.unboundedPreceding,
+          org.apache.spark.sql.expressions.Window.currentRow)
+      calendar
+        .join(newPerDay, Seq("day"), "left")
+        .withColumn("n_new", coalesce(col("n_new"), lit(0L)))
+        .withColumn("cum_users", sum(col("n_new")).over(w))
+        .orderBy("day")
     }),
 
     // Native session_window with a DYNAMIC per-row gap (Spark's
@@ -3330,27 +3105,15 @@ object SourceQueries {
     // identical recurrence as a recursive CTE over the same bounded
     // event slice, so the final S values hash-pin the whole per-key
     // update order.
-    "stream_cusum" -> ((s, d) => graft.streaming.StreamGates.withStateParts(s) {
-      val sink = "stream_cusum_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.StreamingEvents.cusumStream(s, d)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamingEvents.assertSingleBatch(
-        q, "stream_cusum")
-      graft.streaming.MemorySinks.drain(s, sink)
+    "stream_cusum" -> ((s, d) =>
+      StreamingEvents.singleBatch(
+        StreamingEvents.cusumStream(s, d), "stream_cusum")
         .groupBy("event_type")
         .agg(
           count(lit(1)).as("n_events"),
           sum(when(col("alarm"), 1L).otherwise(0L)).as("n_alarms"),
           max_by(col("s_cents"), col("seq")).as("last_s_cents"))
-        .orderBy("event_type")
-    }),
+        .orderBy("event_type")),
 
     // WARM-START quota (StatefulProcessorWithInitialState): the
     // batch→streaming HANDOVER — history (even event ids) counted
@@ -3360,41 +3123,16 @@ object SourceQueries {
     // (history count + stream rank per user-day), so un-loaded
     // initial state (accepts too much) and double-counted history
     // both break the hash.
-    "stream_quota_warm" -> ((s, d) => graft.streaming.StreamGates.withStateParts(s) {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      try {
-        val sink = "stream_quota_warm_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = graft.streaming.StreamingEvents.quotaStreamWarm(s, d)
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .trigger(
-            org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        graft.streaming.StreamingEvents.assertSingleBatch(
-          q, "stream_quota_warm")
-        graft.streaming.MemorySinks.drain(s, sink)
-          .groupBy("event_type")
-          .agg(
-            sum(when(col("accepted"), 1L).otherwise(0L))
-              .as("n_accepted"),
-            sum(when(col("accepted"), 0L).otherwise(1L))
-              .as("n_dropped"))
-          .orderBy("event_type")
-      } finally {
-        prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
-        }
-      }
-    }),
+    "stream_quota_warm" -> ((s, d) =>
+      StreamingEvents.singleBatch(
+        StreamingEvents.quotaStreamWarm(s, d), "stream_quota_warm")
+        .groupBy("event_type")
+        .agg(
+          sum(when(col("accepted"), 1L).otherwise(0L))
+            .as("n_accepted"),
+          sum(when(col("accepted"), 0L).otherwise(1L))
+            .as("n_dropped"))
+        .orderBy("event_type")),
 
     // MULTI-HOP streaming (bronze→silver→gold): hop 1 materializes
     // the watermark-gated hourly silver layer through its
@@ -3405,9 +3143,7 @@ object SourceQueries {
     // stateful aggregations). The oracle re-derives the silver layer
     // arithmetically and folds it the same way.
     "stream_multihop" -> ((s, d) =>
-      graft.streaming.StreamGates.withStateParts(s) {
-        graft.streaming.StreamingEvents.multihopResult(s, d)
-      }),
+      StreamingEvents.multihopResult(s, d)),
 
     // The streaming pipeline's aggregation, batch-executed.
     "stream_window_batch" -> ((s, d) =>
@@ -3495,21 +3231,11 @@ object SourceQueries {
     // hour window the propagated watermark has passed; the oracle
     // derives the same emission horizon arithmetically (min of the
     // two sides' max event times, minus the 1 h delay).
-    "stream_asof" -> ((s, d) => graft.streaming.StreamGates.withStateParts(s) {
-      val sink = "stream_asof_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.StreamingEvents
-        .clickViewAsofStream(graft.streaming.StreamingEvents.stream(s, d))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.MemorySinks.drain(s, sink)
-        .orderBy("user_id", "click_id")
-    }),
+    "stream_asof" -> ((s, d) =>
+      StreamGates.memory(
+        StreamingEvents.clickViewAsofStream(StreamingEvents.stream(s, d)),
+        "stream_asof")._1
+        .orderBy("user_id", "click_id")),
 
     // Sessionization, batch form (window functions); its streaming
     // twin (flatMapGroupsWithState) is asserted equal in SessionizeSpec.
@@ -3524,37 +3250,29 @@ object SourceQueries {
     // derives independently in DuckDB from the batch definition
     // (end + gap < max event time), so the streaming state machine's
     // output is hash-pinned, not just spec-compared.
-    "sessionize_stateful" -> ((s, d) => graft.streaming.StreamGates.withStateParts(s) {
-      val sink = "sess_stateful_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
+    "sessionize_stateful" -> ((s, d) =>
       graft.streaming.Sessionize
-        .runStatefulStreamToCompletion(s, d, sink)
-        .orderBy("user_id", "session_start")
-    }),
+        .runStatefulStreamToCompletion(s, d, "sess_stateful")
+        .orderBy("user_id", "session_start")),
 
     // The SAME continuous sessionizer on Spark 4's transformWithState
     // with EVENT-TIME TIMERS (the new API's native timeout) — run
     // against the identical closed-session oracle, so the legacy
     // GroupState timeout and the successor timer mechanism are
     // proven gate-indistinguishable.
-    "sessionize_tws" -> ((s, d) => graft.streaming.StreamGates.withStateParts(s) {
-      val sink = "sess_tws_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
+    "sessionize_tws" -> ((s, d) =>
       graft.streaming.Sessionize
-        .runTwsStreamToCompletion(s, d, sink)
-        .orderBy("user_id", "session_start")
-    }),
+        .runTwsStreamToCompletion(s, d, "sess_tws")
+        .orderBy("user_id", "session_start")),
 
     // The same stateful sessionizer through the DEPLOYABLE sink: a
     // checkpointed parquet file sink (exactly-once via the sink
     // manifest), read back from the files — hash-pinned against the
     // identical closed-session oracle as the memory-sink form.
     "sessionize_sink_parquet" -> ((s, d) =>
-      graft.streaming.StreamGates.withStateParts(s) {
-        graft.streaming.Sessionize
-          .runStatefulStreamToParquet(s, d)
-          .orderBy("user_id", "session_start")
-      }),
+      graft.streaming.Sessionize
+        .runStatefulStreamToParquet(s, d)
+        .orderBy("user_id", "session_start")),
 
     // Streaming DataSourceV2 with REAL offset management: the
     // `eventreplay` MicroBatchStream serves the staged event log in
@@ -3564,9 +3282,7 @@ object SourceQueries {
     // asserted in the gate, duplicates/holes are caught by this
     // oracle's count+hash.
     "stream_v2_source" -> ((s, d) =>
-      graft.streaming.StreamGates.withStateParts(s) {
-        graft.streaming.EventReplayGate.run(s, d)
-      }),
+      graft.streaming.EventReplayGate.run(s, d)),
 
     // The PARTITIONED form of the eventreplay kill/restart gate:
     // composite {partition → position} offsets over a 3-file log, a
@@ -3575,9 +3291,7 @@ object SourceQueries {
     // resume from its OWN position (the broker contract). Same
     // exactly-once oracle as the scalar gate.
     "stream_v2_partitioned" -> ((s, d) =>
-      graft.streaming.StreamGates.withStateParts(s) {
-        graft.streaming.EventReplayGate.runPartitioned(s, d)
-      }),
+      graft.streaming.EventReplayGate.runPartitioned(s, d)),
 
     // Broker-provenance METADATA COLUMNS through the STREAMING V2
     // source (SupportsMetadataColumns on eventreplay): _replay_part /
@@ -3587,9 +3301,7 @@ object SourceQueries {
     // sequence — derive in the oracle from raw events via the
     // event_id mod 3 routing rule.
     "stream_v2_metadata" -> ((s, d) =>
-      graft.streaming.StreamGates.withStateParts(s) {
-        graft.streaming.EventReplayGate.runMetadata(s, d)
-      })
+      graft.streaming.EventReplayGate.runMetadata(s, d))
   )
 
   /** DuckDB derivation of the CLOSED sessions (batch sessionization +

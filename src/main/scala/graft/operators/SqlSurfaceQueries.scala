@@ -38,10 +38,7 @@ object SqlSurfaceQueries {
     // first qualifying rung — loop ≡ ladder by construction.
     "sql_scripting" -> ((s, d) => {
       views(s, d)
-      val key = "spark.sql.scripting.enabled"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "true")
-      try {
+      graft.Confs.scoped(s, "spark.sql.scripting.enabled" -> "true") {
         s.sql(
           """BEGIN
             |  DECLARE cutoff BIGINT DEFAULT 100000;
@@ -57,11 +54,6 @@ object SqlSurfaceQueries {
             |  FROM customer_sq
             |  WHERE CAST(round(c_acctbal*100) AS BIGINT) > cutoff;
             |END""".stripMargin)
-      } finally {
-        prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
-        }
       }
     }),
 
@@ -197,17 +189,14 @@ object SqlSurfaceQueries {
       // Both write-side confs default ON in Spark 4.1; pinned here so
       // a deployment-level override can't silently degrade the gate
       // to unshredded binary. They are write-side only: the returned
-      // frame executes AFTER the finally restores them, and reading
+      // frame executes AFTER the scope restores them, and reading
       // shredded files is governed by
       // spark.sql.variant.allowReadingShredded, also default-on (the
       // spec exercises the read eagerly, so a default flip would fail
       // loudly there, never silently here).
-      val confs = Seq(
-        "spark.sql.variant.writeShredding.enabled" -> "true",
-        "spark.sql.variant.inferShreddingSchema" -> "true")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      try {
-        confs.foreach { case (k, v) => s.conf.set(k, v) }
+      graft.Confs.scoped(s,
+          "spark.sql.variant.writeShredding.enabled" -> "true",
+          "spark.sql.variant.inferShreddingSchema" -> "true") {
         events(s, d)
           .select(col("event_id"), col("event_type"),
             expr("parse_json(props)").as("v"))
@@ -221,9 +210,6 @@ object SqlSurfaceQueries {
             min(expr("variant_get(v, '$.k', 'int')")).as("min_k"),
             max(expr("variant_get(v, '$.k', 'int')")).as("max_k"))
           .orderBy("event_type")
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     }),
 

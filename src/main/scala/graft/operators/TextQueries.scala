@@ -2568,9 +2568,7 @@ object TextQueries {
     // against an independent batch implementation of the same
     // contract.
     "stream_neardup" -> ((s, d) =>
-      graft.streaming.StreamGates.withStateParts(s) {
-        graft.streaming.StreamNearDup.run(s, d, BucketCap)
-      }),
+      graft.streaming.StreamNearDup.run(s, d, BucketCap)),
 
     // STREAMING heavy hitters: the Misra-Gries summary lives as
     // transformWithState state sharded over 8 token-hash ranges while
@@ -2580,7 +2578,7 @@ object TextQueries {
     // identical oracle) under any arrival order, because the MG
     // guarantee makes every above-threshold token survive the stream
     // no matter how merges interleave. See StreamHeavyHitters.
-    "stream_heavy_hitters" -> ((s, d) => graft.streaming.StreamGates.withStateParts(s) {
+    "stream_heavy_hitters" -> ((s, d) => {
       val cands = graft.streaming.StreamHeavyHitters.candidates(s, d)
       val toks = documents(s, d)
         .select(explode(tokens(col("text"))).as("tok"))

@@ -69,16 +69,10 @@ object KvProcedures {
     * the sampling pass the exchange already runs.
     */
   private[sources] def withTightRangeSample[T](
-      spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "10000")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
+      spark: org.apache.spark.sql.SparkSession)(body: => T): T =
+    graft.Confs.scoped(spark,
+      "spark.sql.execution.rangeExchange.sampleSizePerPartition" -> "10000")(
+      body)
 }
 
 /** `system.cluster` — sort-by-key layout rewrite:

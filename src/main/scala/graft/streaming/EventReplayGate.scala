@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** End-to-end gate for the `eventreplay` MicroBatchStream: exactly-once
   * delivery ACROSS A KILL/RESTART BOUNDARY, proven through the oracle.
@@ -52,8 +51,10 @@ object EventReplayGate {
     * event_id mod `n`) in ONE pass over the source — previously each
     * partition ran its own filter + coalesce(1) write, re-computing
     * the event-formatting scan n times (guide §2.4: one staging pass;
-    * the same single-pass rewrite StreamGates.stageSlices got in
-    * r18). Row routing is IDENTICAL to the old per-partition filters
+    * the same single-pass rewrite as the parquet stager
+    * `StreamGates.stage`, which it does not share: this writes text
+    * into one directory per partition). Row routing is IDENTICAL to
+    * the old per-partition filters
     * (`pmod(event_id, n) === p`), so each staged file holds the same
     * set of lines; their order may differ, because `repartition` does
     * not keep it. Only the number of jobs changed. Returns the
@@ -118,18 +119,12 @@ object EventReplayGate {
         .option("path", log)
         .option("rowsPerBatch", perBatch.toString)
       maxRows.foreach(m => rd.option("maxRows", m.toString))
-      val q = rd.load()
-        .writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val progress = q.recentProgress.toSeq
-      (progress.map(_.numInputRows).sum,
-        progress.count(_.numInputRows > 0))
+      val progress = StreamGates.run(rd.load())(
+        _.format("parquet")
+          .option("path", out)
+          .option("checkpointLocation", ckpt)
+          .start())
+      (progress.map(_.numInputRows).sum, StreamGates.dataBatches(progress))
     }
 
     val (rows1, batches1) = runPhase(Some(half))
@@ -197,16 +192,12 @@ object EventReplayGate {
         .option("paths", logs.mkString(","))
         .option("rowsPerBatch", perBatch.toString)
       if (capped) rd.option("maxRowsPerPartition", horizon.toString)
-      val q = rd.load()
-        .writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.toSeq.map(_.numInputRows).sum
+      StreamGates.run(rd.load())(
+        _.format("parquet")
+          .option("path", out)
+          .option("checkpointLocation", ckpt)
+          .start())
+        .map(_.numInputRows).sum
     }
 
     val rows1 = runPhase(capped = true)
@@ -245,8 +236,6 @@ object EventReplayGate {
     graft.Fs.deleteRecursively(base)
     val lines = eventLines(spark, dir)
     val logs = stageLogParts(lines, NLogParts, base)
-    val sink = "erp_meta_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     // Admission scaled to the INPUT, not a constant: a fixed 5000-row
     // cap replays 10x data in 10x micro-batches (the sf1.0 probe's one
     // super-linear outlier — batch-machinery overhead, not plan cost).
@@ -258,20 +247,14 @@ object EventReplayGate {
     // routes every line, so the sum is the same count.
     val perBatch = math.max(5000L,
       spark.read.text(logs: _*).count() / 12)
-    val q = spark.readStream
-      .format(classOf[graft.sources.EventReplayDataSource].getName)
-      .option("paths", logs.mkString(","))
-      .option("rowsPerBatch", perBatch.toString)
-      .load()
-      .select(col("event_id"), col("_replay_part"), col("_replay_pos"))
-      .writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    MemorySinks.drain(spark, sink)
+    StreamGates.memory(
+      spark.readStream
+        .format(classOf[graft.sources.EventReplayDataSource].getName)
+        .option("paths", logs.mkString(","))
+        .option("rowsPerBatch", perBatch.toString)
+        .load()
+        .select(col("event_id"), col("_replay_part"), col("_replay_pos")),
+      "erp_meta")._1
       .groupBy(col("_replay_part").cast("long").as("part"))
       .agg(
         count(lit(1)).as("n_rows"),

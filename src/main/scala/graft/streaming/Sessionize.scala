@@ -287,69 +287,20 @@ object Sessionize {
         OutputMode.Append())
   }
 
-  /** Run the transformWithState sessionizer to completion under the
-    * RocksDB provider the operator requires (conf scoped + restored).
+  /** Run the transformWithState sessionizer to completion (the runner
+    * gives it the RocksDB provider the operator requires).
     */
   def runTwsStreamToCompletion(
-      spark: SparkSession, dir: String, sink: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
-      withStreamShufflePartitions(spark) {
-        val q = sessionizeStreamTws(spark, dir).writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .trigger(
-            org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(key, p)
-        case None => spark.conf.unset(key)
-      }
-    }
+      spark: SparkSession, dir: String, sinkPrefix: String): DataFrame =
     StreamingEvents.assertEmitted(
-      MemorySinks.drain(spark, sink), "sessionize_tws")
-  }
-
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily capped
-    * at 8 for the stateful streaming queries. The state-store partition
-    * count is frozen from this setting at a checkpoint's first batch;
-    * every micro-batch then pays a per-partition state-store
-    * open/commit cost that at toy scale is pure constant overhead
-    * (measured ≈18% of the whole bench with 32 partitions). A cluster
-    * deployment sizes this to executor count; correctness is
-    * unaffected either way.
-    */
-  private def withStreamShufflePartitions[T](
-      spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, math.min(prev.toInt, 8).toString)
-    try body
-    finally spark.conf.set(key, prev)
-  }
+      StreamGates.memory(sessionizeStreamTws(spark, dir), sinkPrefix)._1,
+      "sessionize_tws")
 
   def runStatefulStreamToCompletion(
-      spark: SparkSession, dir: String, sink: String): DataFrame = {
-    withStreamShufflePartitions(spark) {
-      val q = sessionizeStreamStateful(spark, dir).writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+      spark: SparkSession, dir: String, sinkPrefix: String): DataFrame =
     StreamingEvents.assertEmitted(
-      MemorySinks.drain(spark, sink), "sessionize_stateful")
-  }
+      StreamGates.memory(sessionizeStreamStateful(spark, dir), sinkPrefix)._1,
+      "sessionize_stateful")
 
   /** The DEPLOYABLE sink shape: the stateful sessionizer written to
     * parquet files with a checkpoint directory (exactly-once via the
@@ -365,16 +316,11 @@ object Sessionize {
     val out = base.resolve("out")
     val ckpt = base.resolve("ckpt")
     graft.Fs.deleteRecursively(base)
-    withStreamShufflePartitions(spark) {
-      val q = sessionizeStreamStateful(spark, dir).writeStream
-        .format("parquet")
+    StreamGates.run(sessionizeStreamStateful(spark, dir))(
+      _.format("parquet")
         .option("path", out.toString)
         .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+        .start())
     StreamingEvents.assertEmitted(
       spark.read.parquet(out.toString), "sessionize_sink_parquet")
   }
@@ -396,14 +342,6 @@ object Sessionize {
   }
 
   def runStreamToCompletion(spark: SparkSession, dir: String,
-                            sink: String): DataFrame = {
-    val q = sessionizeStream(spark, dir).writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    MemorySinks.drain(spark, sink)
-  }
+                            sinkPrefix: String): DataFrame =
+    StreamGates.memory(sessionizeStream(spark, dir), sinkPrefix)._1
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Offline STATE-STORE READER gate: run a stateful streaming
   * aggregation over a three-batch replay of the event log, then read
@@ -33,13 +32,13 @@ object StateStoreRead {
     * final state is the product of genuine cross-batch accumulation
     * rather than one bulk load.
     */
-  private def stage(spark: SparkSession, dir: String): String =
-    StreamGates.stageSlices(
-      spark,
-      graft.Tables.events(spark, dir)
-        .select(col("event_id"), col("event_type"),
-          graft.operators.Money.cents(col("value")).as("cents")),
-      "event_id", "graft_state_read", 3)
+  private def stage(spark: SparkSession, dir: String): StreamGates.Staged = {
+    val events = graft.Tables.events(spark, dir)
+      .select(col("event_id"), col("event_type"),
+        graft.operators.Money.cents(col("value")).as("cents"))
+    StreamGates.stage(events, StreamGates.stageDir("graft_state_read"),
+      StreamGates.keyRanges(events, "event_id", 3))
+  }
 
   /** Checkpoint root for a given source dir — sf-suffixed so tests
     * (sf0.001) and the driver's Verify (sf0.01) in one JVM never read
@@ -56,43 +55,34 @@ object StateStoreRead {
     * and change-feed readers, exactly as one production checkpoint
     * serves every offline inspection.
     *
-    * Deliberately NOT under `withStreamConfs`: the statestore reader
-    * instantiates the provider class from the session conf at scan
-    * time, and the returned frames execute after any scoped conf
-    * would have been restored — so the whole gate runs on the
-    * session default (HDFS-backed) provider, write and read alike.
-    * RocksDB state is exercised by the other stateful gates.
+    * The aggregation is not a `transformWithState`, so the runner
+    * leaves the session default (HDFS-backed) provider in place; the
+    * statestore reader instantiates the provider class from the
+    * session conf at scan time, after the run's scoped conf is
+    * restored, so write and read agree. RocksDB state is exercised by
+    * the transformWithState gates.
     */
   private[graft] def ensureCheckpoint(
       spark: SparkSession, dir: String): String =
     ckptCache.getOrCompute(spark, dir) {
-      val stageDir = stage(spark, dir)
+      val staged = stage(spark, dir)
       val ckpt = ckptDir(dir)
       graft.Fs.deleteRecursively(ckpt)
-      StreamGates.withStateParts(spark) {
-        val schema = spark.read.parquet(stageDir).schema
-        val sink = "state_read_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = spark.readStream
-          .schema(schema)
+      // Only the committed state matters, so the rows go to the noop
+      // sink.
+      val progress = StreamGates.run(
+        spark.readStream
+          .schema(staged.schema)
           .option("maxFilesPerTrigger", "1")
-          .parquet(stageDir)
+          .parquet(staged.dir)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n_events"),
-            sum(col("cents")).as("sum_cents"))
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val dataBatches =
-          q.recentProgress.toSeq.count(_.numInputRows > 0)
-        require(dataBatches >= 3,
-          s"expected >=3 replayed micro-batches, saw $dataBatches")
-      }
+            sum(col("cents")).as("sum_cents")),
+        "update")(
+        _.format("noop").option("checkpointLocation", ckpt).start())
+      val dataBatches = StreamGates.dataBatches(progress)
+      require(dataBatches >= 3,
+        s"expected >=3 replayed micro-batches, saw $dataBatches")
       ckpt
     }
 

@@ -1,34 +1,45 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, max}
+import java.nio.file.{Files, Paths}
 
-/** State-partition right-sizing for the registered streaming gates.
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
+import org.apache.spark.sql.functions.{col, lit, max, when}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, StreamingQueryProgress, Trigger}
+import org.apache.spark.sql.types.StructType
+
+/** The one runner of the registered streaming gates, and their shared
+  * replay stager.
   *
-  * A streaming query's stateful operators open one state store PER
-  * SHUFFLE PARTITION per operator (a stream-stream join opens four),
-  * and every micro-batch pays a fixed load/commit cost per store that
-  * is completely independent of the rows in it (provider setup, delta
-  * write, coordinator reporting): about 10 ms of trigger time per
-  * store per batch, measured on a 4-core host as the difference
-  * between a `dedupStream` at 32 and at 4 partitions over sf0.01 (two
-  * batches, one store per partition). It was 35-55 ms while each
-  * delta file's create and rename started `chmod` and `readlink`
-  * processes (see `graft.NioLocalFs`). The local gates hold kilobytes of
-  * state, so running them at the session's cluster-shaped partition
-  * count (32) buys no parallelism and multiplies that fixed cost:
-  * `stream_asof` at 32 partitions spends ~9.5 s, at 4 partitions
-  * ~2.7 s, with byte-identical output (profiled in round 11; the
-  * cost scales linearly with partition count in both directions).
+  * A gate runs a stream to completion (`Trigger.AvailableNow`: process
+  * everything available now, then stop) and asserts a contract about
+  * what came out. [[run]] is the only place that starts such a query:
   *
-  * State partitions should track STATE VOLUME, not cluster width —
-  * the same rule a 1000-executor deployment applies in the opposite
-  * direction (raise `spark.sql.shuffle.partitions` until per-store
-  * state fits executor memory; Kafka deployments routinely run
-  * hundreds of state partitions because their state is GBs). This
-  * helper pins the gate's partition count while the stream runs and
-  * restores the session's setting after, so batch queries in the
-  * same session keep their cluster-shaped plans.
+  *   - it waits at most [[RunTimeoutMs]] and always calls `stop()`; a
+  *     query still running at the bound fails the gate, naming it;
+  *   - a query that fails rethrows its error from the wait;
+  *   - it returns the query's `recentProgress`, which the gates count
+  *     batches and rows from ([[dataBatches]]);
+  *   - conf is scoped to the run (`graft.Confs.scoped`): state
+  *     partitions at [[LocalStateParts]], and the RocksDB state-store
+  *     provider iff the plan holds a `transformWithState` operator,
+  *     which requires it.
+  *
+  * [[memory]] is the memory-sink form: a unique sink name, drained
+  * into a local relation whose view is dropped, also on failure.
+  *
+  * State partitions track STATE VOLUME, not cluster width. A stateful
+  * operator opens one state store per shuffle partition (a
+  * stream-stream join opens four), and every micro-batch pays a fixed
+  * load/commit cost per store that is independent of the rows in it:
+  * about 10 ms of trigger time per store per batch, measured on a
+  * 4-core host as the difference between a `dedupStream` at 32 and at
+  * 4 partitions over sf0.01 (two batches, one store per partition).
+  * The local gates hold kilobytes of state, so the session's
+  * cluster-shaped count (32) buys no parallelism and multiplies that
+  * fixed cost: `stream_asof` at 32 partitions spent ~9.5 s, at 4
+  * ~2.7 s, with byte-identical output. A deployment holding GBs of
+  * state raises the count instead; the rule is the same.
   */
 object StreamGates {
 
@@ -38,69 +49,125 @@ object StreamGates {
     */
   val LocalStateParts = 4
 
-  def withStateParts[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, LocalStateParts.toString)
-    try body
-    finally s.conf.set(key, prev)
+  /** Bound on one run, start to termination. */
+  val RunTimeoutMs = 120000L
+
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run `ds` to completion: `start` gets its writer (output mode and
+    * trigger set) and adds the sink — `format(...).start()`,
+    * `toTable(...)` or `foreachBatch(...).start()`. Returns the
+    * query's progress.
+    */
+  def run[T](ds: Dataset[T], mode: String = "append")(
+      start: DataStreamWriter[T] => StreamingQuery)
+      : Seq[StreamingQueryProgress] = {
+    val tws = ds.queryExecution.analyzed.exists(
+      _.isInstanceOf[TransformWithState])
+    val confs =
+      Seq("spark.sql.shuffle.partitions" -> LocalStateParts.toString) ++
+        (if (tws)
+          Seq("spark.sql.streaming.stateStore.providerClass" ->
+            RocksDbProvider)
+        else Nil)
+    graft.Confs.scoped(ds.sparkSession, confs: _*) {
+      val q = start(
+        ds.writeStream.outputMode(mode).trigger(Trigger.AvailableNow()))
+      try {
+        if (!q.awaitTermination(RunTimeoutMs))
+          throw new java.util.concurrent.TimeoutException(
+            s"stream ${Option(q.name).getOrElse(q.id.toString)} did " +
+              s"not finish within ${RunTimeoutMs / 1000} s")
+        q.recentProgress.toSeq
+      } finally q.stop()
+    }
   }
 
-  /** Stage `df` as `n` single-file parquet slices of `keyCol`'s
-    * (long) range under `Fs.sinkDir(sinkName)/stage`, mtime-ordered
-    * so a file stream with maxFilesPerTrigger=1 replays them as `n`
-    * sequential micro-batches — the shared replay harness of the
-    * stateful gates (each slice is one "day" of arrivals).
+  /** [[run]] into a uniquely named memory sink (`prefix_<uuid>`);
+    * returns the drained rows and the progress.
     */
-  private[graft] def stageSlices(
-      spark: SparkSession, df: DataFrame, keyCol: String,
-      sinkName: String, n: Int): String = {
+  def memory[T](ds: Dataset[T], prefix: String, mode: String = "append")
+      : (DataFrame, Seq[StreamingQueryProgress]) = {
+    val spark = ds.sparkSession
+    val sink = prefix + "_" +
+      java.util.UUID.randomUUID().toString.replace("-", "")
+    try {
+      val progress =
+        run(ds, mode)(_.format("memory").queryName(sink).start())
+      (MemorySinks.drain(spark, sink), progress)
+    } finally spark.catalog.dropTempView(sink)
+  }
+
+  /** Micro-batches of a run that read at least one row. */
+  def dataBatches(progress: Seq[StreamingQueryProgress]): Int =
+    progress.count(_.numInputRows > 0)
+
+  /** A staged replay: its directory and the schema of the frame
+    * written there (a file stream reads it back forced nullable, as a
+    * footer read would give it).
+    */
+  case class Staged(dir: String, schema: StructType)
+
+  /** `Fs.sinkDir(name)/stage`, emptied. */
+  private[graft] def stageDir(name: String): String = {
+    val d = s"${graft.Fs.sinkDir(name)}/stage"
+    graft.Fs.deleteRecursively(d)
+    d
+  }
+
+  /** `n` slices of `keyCol`'s (long, non-negative) range, equal in
+    * width, named `slice_000`… — one "day" of arrivals each.
+    */
+  private[graft] def keyRanges(
+      df: DataFrame, keyCol: String, n: Int): Seq[(String, Column)] = {
     val maxKey = df.agg(max(keyCol)).head().getLong(0) + 1
-    val stageDir = s"${graft.Fs.sinkDir(sinkName)}/stage"
-    graft.Fs.deleteRecursively(stageDir)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(stageDir))
-    val t0 = System.currentTimeMillis()
-    // ONE staging pass (previously n filter+coalesce(1) jobs, each
-    // re-scanning and re-computing the source frame): the slice id
-    // is derived per row from the SAME integer boundaries the
-    // filters used, the frame is repartitioned BY slice so each
-    // dynamic-partition dir receives exactly one file (a slice's
-    // rows live in exactly one task), and the files then move into
-    // the flat mtime-ordered layout the replay contract expects.
-    val boundaries = (1 until n).map(i => i * maxKey / n)
-    val sliceCol = boundaries.zipWithIndex.foldLeft(
-      org.apache.spark.sql.functions.lit(0)) { case (acc, (b, i)) =>
-      org.apache.spark.sql.functions
-        .when(col(keyCol) >= b, i + 1).otherwise(acc)
-    }
+    val bounds = (0 to n).map(i => i * maxKey / n)
+    (0 until n).map(i => (f"slice_$i%03d",
+      col(keyCol) >= bounds(i) && col(keyCol) < bounds(i + 1)))
+  }
+
+  /** Stage `df` as one parquet file per slice (`name.parquet`, rows
+    * matching its condition; a row goes to the first slice it matches
+    * and rows matching none are dropped), mtime-ordered from `t0` so
+    * a file stream with maxFilesPerTrigger=1 replays them as one
+    * micro-batch each, and files staged later sort after every
+    * earlier file.
+    *
+    * One pass: repartitioning BY slice puts each slice's rows in one
+    * task, so each dynamic-partition dir receives exactly one file,
+    * which then moves into the flat layout. An empty slice still gets
+    * an (empty) file: the replay needs one file per micro-batch.
+    */
+  private[graft] def stage(
+      df: DataFrame, stageDir: String, slices: Seq[(String, Column)],
+      t0: Long = System.currentTimeMillis()): Staged = {
+    Files.createDirectories(Paths.get(stageDir))
+    val sliceCol = slices.zipWithIndex.reverse
+      .foldLeft(lit(null).cast("int")) { case (acc, ((_, cond), i)) =>
+        when(cond, lit(i)).otherwise(acc)
+      }
     val tmp = s"$stageDir-tmp"
-    df.filter(col(keyCol) >= 0L)
-      .withColumn("__slice", sliceCol)
+    df.withColumn("__slice", sliceCol)
+      .filter(col("__slice").isNotNull)
       .repartition(col("__slice"))
       .write.mode("overwrite").partitionBy("__slice").parquet(tmp)
-    (0 until n).foreach { i =>
+    slices.zipWithIndex.foreach { case ((name, _), i) =>
+      val dst = Paths.get(stageDir, s"$name.parquet")
       val pdir = new java.io.File(s"$tmp/__slice=$i")
-      val dst =
-        java.nio.file.Paths.get(stageDir, f"slice_$i%03d.parquet")
       if (pdir.isDirectory) {
-        java.nio.file.Files.move(
-          graft.Fs.onlyPart(pdir.getPath, ".parquet"), dst)
+        Files.move(graft.Fs.onlyPart(pdir.getPath, ".parquet"), dst)
       } else {
-        // Empty slice (no keys in its range): the dynamic writer
-        // skips the dir, but the replay contract needs one file per
-        // micro-batch — write the empty frame the old per-slice
-        // path produced.
-        val tmpE = s"$stageDir-tmp-empty-$i"
-        df.filter(org.apache.spark.sql.functions.lit(false))
-          .coalesce(1).write.mode("overwrite").parquet(tmpE)
-        java.nio.file.Files.move(graft.Fs.onlyPart(tmpE, ".parquet"), dst)
+        val tmpE = s"$stageDir-tmp-empty-$name"
+        df.filter(lit(false)).coalesce(1)
+          .write.mode("overwrite").parquet(tmpE)
+        Files.move(graft.Fs.onlyPart(tmpE, ".parquet"), dst)
         graft.Fs.deleteRecursively(tmpE)
       }
-      java.nio.file.Files.setLastModifiedTime(dst,
+      Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(t0 + i * 2000L))
     }
     graft.Fs.deleteRecursively(tmp)
-    stageDir
+    Staged(stageDir, df.schema)
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 import graft.functions.TextFunctions._
 
@@ -97,31 +97,22 @@ object StreamHeavyHitters {
   }
 
   /** Four replayed micro-batches of the document corpus, quartiled by
-    * doc_id (reuses the near-dup staging helper — single parquet
-    * files, mtime-ordered).
+    * doc_id (single parquet files, mtime-ordered).
     */
-  private def stage(spark: SparkSession, dir: String): String = {
-    val n = graft.Tables.documents(spark, dir).count()
-    val slices = (0 until 4).map { i =>
-      (f"$i%03d",
-        col("doc_id") >= i * n / 4 && col("doc_id") < (i + 1) * n / 4)
-    }
-    val stageDir = s"${graft.Fs.sinkDir("graft_stream_hh")}/stage"
-    graft.Fs.deleteRecursively(stageDir)
-    StreamNearDup.stageFiles(spark, dir, stageDir, slices,
-      System.currentTimeMillis())
-    stageDir
+  private def stage(spark: SparkSession, dir: String): StreamGates.Staged = {
+    val docs = StreamNearDup.docs(spark, dir)
+    StreamGates.stage(docs, StreamGates.stageDir("graft_stream_hh"),
+      StreamGates.keyRanges(docs, "doc_id", 4))
   }
 
   /** File stream → token rows → range-sharded MG summaries. */
   private[graft] def pipeline(
-      spark: SparkSession, stageDir: String): DataFrame = {
+      spark: SparkSession, staged: StreamGates.Staged): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(stageDir).schema
     spark.readStream
-      .schema(schema)
+      .schema(staged.schema)
       .option("maxFilesPerTrigger", "1")
-      .parquet(stageDir)
+      .parquet(staged.dir)
       .select(explode(tokens(col("text"))).as("tok"))
       .select((hash60(col("tok")) % NRanges).cast("int").as("range"),
         col("tok"))
@@ -137,29 +128,17 @@ object StreamHeavyHitters {
     */
   private[graft] def candidates(
       spark: SparkSession, dir: String): DataFrame = {
-    val stageDir = stage(spark, dir)
-    StreamNearDup.withStreamConfs(spark) {
-      val sink = "stream_hh_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = pipeline(spark, stageDir).writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val dataBatches =
-        q.recentProgress.toSeq.count(_.numInputRows > 0)
-      require(dataBatches >= 4,
-        s"expected ≥4 replayed micro-batches, saw $dataBatches")
-      val all = spark.table(sink)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("range")
-      all
-        .withColumn("max_upd", max(col("upd")).over(w))
-        .filter(col("upd") === col("max_upd"))
-        .select("tok")
-        .distinct()
-    }
+    val (all, progress) =
+      StreamGates.memory(pipeline(spark, stage(spark, dir)), "stream_hh")
+    val dataBatches = StreamGates.dataBatches(progress)
+    require(dataBatches >= 4,
+      s"expected ≥4 replayed micro-batches, saw $dataBatches")
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("range")
+    all
+      .withColumn("max_upd", max(col("upd")).over(w))
+      .filter(col("upd") === col("max_upd"))
+      .select("tok")
+      .distinct()
   }
 }

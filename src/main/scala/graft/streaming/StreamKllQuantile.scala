@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** STREAMING latency/price-quantile screen: a DataSketches KLL longs
   * sketch maintained as `transformWithState` state per group while
@@ -76,13 +76,13 @@ object StreamKllQuantile {
     * o_orderkey (single parquet files, mtime-ordered so
     * maxFilesPerTrigger=1 replays them in sequence).
     */
-  private def stage(spark: SparkSession, dir: String): String =
-    StreamGates.stageSlices(
-      spark,
-      graft.Tables.orders(spark, dir)
-        .select(col("o_orderkey"), col("o_orderpriority"),
-          graft.operators.Money.cents(col("o_totalprice")).as("v")),
-      "o_orderkey", "graft_stream_kll", 4)
+  private def stage(spark: SparkSession, dir: String): StreamGates.Staged = {
+    val df = graft.Tables.orders(spark, dir)
+      .select(col("o_orderkey"), col("o_orderpriority"),
+        graft.operators.Money.cents(col("o_totalprice")).as("v"))
+    StreamGates.stage(df, StreamGates.stageDir("graft_stream_kll"),
+      StreamGates.keyRanges(df, "o_orderkey", 4))
+  }
 
   /** Run the replay to completion; return the FINAL per-group sketch
     * rows (prio, n, sk) — last emission per group.
@@ -90,39 +90,26 @@ object StreamKllQuantile {
   private[graft] def finalSketches(
       spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val stageDir = stage(spark, dir)
-    StreamNearDup.withStreamConfs(spark) {
-      val schema = spark.read.parquet(stageDir).schema
-      val sink = "stream_kll_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = spark.readStream
-        .schema(schema)
+    val staged = stage(spark, dir)
+    val (all, progress) = StreamGates.memory(
+      spark.readStream
+        .schema(staged.schema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(stageDir)
+        .parquet(staged.dir)
         .select(col("o_orderpriority").as("prio"), col("v"))
         .as[VRow]
         .groupByKey(_.prio)
         .transformWithState(
-          new KllProcessor, TimeMode.None(), OutputMode.Append())
-        .toDF()
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val dataBatches =
-        q.recentProgress.toSeq.count(_.numInputRows > 0)
-      require(dataBatches >= 4,
-        s"expected ≥4 replayed micro-batches, saw $dataBatches")
-      val all = spark.table(sink)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("prio")
-      all
-        .withColumn("max_upd", max(col("upd")).over(w))
-        .filter(col("upd") === col("max_upd"))
-        .select(col("prio"), col("n"), col("sk"))
-    }
+          new KllProcessor, TimeMode.None(), OutputMode.Append()),
+      "stream_kll")
+    val dataBatches = StreamGates.dataBatches(progress)
+    require(dataBatches >= 4,
+      s"expected ≥4 replayed micro-batches, saw $dataBatches")
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("prio")
+    all
+      .withColumn("max_upd", max(col("upd")).over(w))
+      .filter(col("upd") === col("max_upd"))
+      .select(col("prio"), col("n"), col("sk"))
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 import graft.functions.TextFunctions._
 
@@ -158,91 +158,36 @@ object StreamNearDup {
         col("best.n_match").as("n_match"))
       .orderBy("doc_id")
 
+  /** The replayed documents: (doc_id, text). */
+  private[graft] def docs(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+
   /** The two corpus document slices and the two query slices, each
-    * (file suffix, filter) — staged corpus-before-queries so state is
+    * (file name, filter) — staged corpus-before-queries so state is
     * fully built before the first probe.
     */
   private[graft] def corpusSlices = Seq(
-    ("000", col("doc_id") < CorpusSplit / 2),
-    ("001", col("doc_id") >= CorpusSplit / 2 &&
+    ("docs_000", col("doc_id") < CorpusSplit / 2),
+    ("docs_001", col("doc_id") >= CorpusSplit / 2 &&
       col("doc_id") < CorpusSplit))
 
   private[graft] def querySlices = Seq(
-    ("002", col("doc_id") >= CorpusSplit &&
+    ("docs_002", col("doc_id") >= CorpusSplit &&
       col("doc_id") < CorpusSplit * 3 / 2),
-    ("003", col("doc_id") >= CorpusSplit * 3 / 2))
-
-  /** Stage document slices as single parquet files under `stageDir`,
-    * mtime-ordered from `t0` so the file stream source with
-    * maxFilesPerTrigger=1 replays them as one micro-batch each (and
-    * files staged LATER — the restart spec's second phase — sort
-    * after every earlier file).
-    */
-  private[graft] def stageFiles(
-      spark: SparkSession, dir: String, stageDir: String,
-      slices: Seq[(String, org.apache.spark.sql.Column)],
-      t0: Long): Unit = {
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(stageDir))
-    val docs = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"))
-    // ONE staging pass (previously one filter+coalesce(1) job per
-    // slice, each re-scanning documents): the slice id is the first
-    // matching condition (the slices are disjoint doc_id ranges, so
-    // first-match ≡ the old per-slice filters), rows matching no
-    // slice are dropped exactly as before, and repartition BY slice
-    // gives each dynamic-partition dir exactly one file.
-    val sliceCol = slices.zipWithIndex.reverse
-      .foldLeft(lit(null).cast("int")) { case (acc, ((_, cond), i)) =>
-        when(cond, lit(i)).otherwise(acc)
-      }
-    val tmp = s"$stageDir-tmp"
-    docs.withColumn("__slice", sliceCol)
-      .filter(col("__slice").isNotNull)
-      .repartition(col("__slice"))
-      .write.mode("overwrite").partitionBy("__slice").parquet(tmp)
-    slices.zipWithIndex.foreach { case ((sfx, _), i) =>
-      val dst = java.nio.file.Paths.get(stageDir, s"docs_$sfx.parquet")
-      val pdir = new java.io.File(s"$tmp/__slice=$i")
-      if (pdir.isDirectory) {
-        java.nio.file.Files.move(
-          graft.Fs.onlyPart(pdir.getPath, ".parquet"), dst)
-      } else {
-        // Empty slice: the dynamic writer skips the dir; the replay
-        // contract still needs one (empty) file per micro-batch.
-        val tmpE = s"$stageDir-tmp-empty-$sfx"
-        docs.filter(lit(false)).coalesce(1)
-          .write.mode("overwrite").parquet(tmpE)
-        java.nio.file.Files.move(graft.Fs.onlyPart(tmpE, ".parquet"), dst)
-        graft.Fs.deleteRecursively(tmpE)
-      }
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(t0 + i * 2000L))
-    }
-    graft.Fs.deleteRecursively(tmp)
-  }
-
-  /** Stage all four slices fresh (the single-run gate's input). */
-  private def stage(spark: SparkSession, dir: String): String = {
-    val stageDir = s"${graft.Fs.sinkDir("graft_stream_neardup")}/stage"
-    graft.Fs.deleteRecursively(stageDir)
-    stageFiles(spark, dir, stageDir, corpusSlices ++ querySlices,
-      System.currentTimeMillis())
-    stageDir
-  }
+    ("docs_003", col("doc_id") >= CorpusSplit * 3 / 2))
 
   /** The streaming pipeline over a staged directory: file stream →
     * expression-only signatures → band rows → the stateful bucket
     * processor. Shared by the single-run gate and the restart spec.
     */
   private[graft] def pipeline(
-      spark: SparkSession, stageDir: String, cap: Int): DataFrame = {
+      spark: SparkSession, staged: StreamGates.Staged,
+      cap: Int): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(stageDir).schema
     val stream = spark.readStream
-      .schema(schema)
+      .schema(staged.schema)
       .option("maxFilesPerTrigger", "1")
-      .parquet(stageDir)
+      .parquet(staged.dir)
       // spread (r18): each micro-batch is ONE staged file = one input
       // partition, so the 8-slot signature HOFs below otherwise run
       // single-threaded per batch (~20 CPU-s across the replay).
@@ -259,58 +204,21 @@ object StreamNearDup {
       .toDF()
   }
 
-  /** Run `body` with the RocksDB state-store provider and a small
-    * stream shuffle-partition count, restoring both afterwards (the
-    * scoped-conf pattern of the other stateful gates).
-    */
-  private[graft] def withStreamConfs[T](spark: SparkSession)(
-      body: => T): T = {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val prevShuffle = spark.conf.get(shuffleKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    // State-store partition count is frozen at the first batch; 8
-    // keeps the per-batch store open/commit overhead proportionate
-    // (same sizing note as Sessionize).
-    spark.conf.set(shuffleKey, "8")
-    try body
-    finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-      spark.conf.set(shuffleKey, prevShuffle)
-    }
-  }
-
-  /** Run the streaming near-dup to completion (RocksDB provider, four
-    * rate-limited micro-batches, memory sink) and return the
-    * best-match report.
+  /** Run the streaming near-dup to completion (four rate-limited
+    * micro-batches, memory sink) and return the best-match report.
     */
   def run(spark: SparkSession, dir: String, cap: Int): DataFrame = {
-    val stageDir = stage(spark, dir)
-    withStreamConfs(spark) {
-      val sink = "stream_neardup_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = pipeline(spark, stageDir, cap).writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val dataBatches =
-        q.recentProgress.toSeq.count(_.numInputRows > 0)
-      require(dataBatches >= 4,
-        s"streaming near-dup ran in $dataBatches data micro-batches; " +
-          "the 4-file staged replay should give one batch per file — " +
-          "rate limiting or the staged ordering is broken")
-      StreamingEvents.assertEmitted(
-        bestMatch(MemorySinks.drain(spark, sink)), "stream_neardup")
-    }
+    val staged = StreamGates.stage(docs(spark, dir),
+      StreamGates.stageDir("graft_stream_neardup"),
+      corpusSlices ++ querySlices)
+    val (pairs, progress) =
+      StreamGates.memory(pipeline(spark, staged, cap), "stream_neardup")
+    val dataBatches = StreamGates.dataBatches(progress)
+    require(dataBatches >= 4,
+      s"streaming near-dup ran in $dataBatches data micro-batches; " +
+        "the 4-file staged replay should give one batch per file — " +
+        "rate limiting or the staged ordering is broken")
+    StreamingEvents.assertEmitted(bestMatch(pairs), "stream_neardup")
   }
 
   /** Per-(band, key) corpus member counts — the stream's bucket
@@ -318,9 +226,7 @@ object StreamNearDup {
     * cap-observability query.
     */
   def corpusBandCounts(spark: SparkSession, dir: String): DataFrame =
-    bandRows(
-      graft.Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text")))
+    bandRows(docs(spark, dir))
       .filter(!col("isQuery"))
       .groupBy("band", "key")
       .agg(count(lit(1)).as("n"))
@@ -330,9 +236,7 @@ object StreamNearDup {
     * twin `StreamNearDupSpec` pins the stateful pipeline against.
     */
   def batchTwin(spark: SparkSession, dir: String, cap: Int): DataFrame = {
-    val bands = bandRows(
-      graft.Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text")))
+    val bands = bandRows(docs(spark, dir))
     val okb = bands
       .filter(!col("isQuery"))
       .groupBy("band", "key")

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** STREAMING in-flight metrics: `observe` (CollectMetrics) attached
   * to a replayed event stream, counters harvested per micro-batch
@@ -28,32 +27,26 @@ object StreamObserve {
     */
   def run(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val stageDir = StreamGates.stageSlices(
-      spark,
-      graft.Tables.events(spark, dir)
-        .select(col("event_id"), col("value"), col("props")),
-      "event_id", "graft_stream_observe", 3)
-    val sink = "stream_observe_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = spark.readStream
-      .schema(spark.read.parquet(stageDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stageDir)
-      .observe("batch_stats",
-        count(lit(1)).as("n_rows"),
-        sum(graft.operators.Money.cents(col("value")))
-          .as("sum_cents"),
-        count(when(col("value") > 100.0, 1)).as("n_big"),
-        count(when(col("props").isNull || col("props") === "", 1))
-          .as("n_blank_props"))
-      .writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val metrics = q.recentProgress.toSeq
+    val events = graft.Tables.events(spark, dir)
+      .select(col("event_id"), col("value"), col("props"))
+    val staged = StreamGates.stage(events,
+      StreamGates.stageDir("graft_stream_observe"),
+      StreamGates.keyRanges(events, "event_id", 3))
+    // The rows are not the answer, so they go to the noop sink; the
+    // metrics ride the progress.
+    val progress = StreamGates.run(
+      spark.readStream
+        .schema(staged.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(staged.dir)
+        .observe("batch_stats",
+          count(lit(1)).as("n_rows"),
+          sum(graft.operators.Money.cents(col("value")))
+            .as("sum_cents"),
+          count(when(col("value") > 100.0, 1)).as("n_big"),
+          count(when(col("props").isNull || col("props") === "", 1))
+            .as("n_blank_props")))(_.format("noop").start())
+    val metrics = progress
       .flatMap(p => Option(p.observedMetrics.get("batch_stats")))
     require(metrics.size >= 3,
       s"expected >=3 observed micro-batches, saw ${metrics.size}")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -104,7 +104,8 @@ object StreamingEvents {
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir))
 
-  /** Guard for the ORDER-SENSITIVE stateful runs (quota, recent-K):
+  /** Run `ds` into a memory sink and return its rows, guarding the
+    * ORDER-SENSITIVE stateful runs (quota, recent-K):
     * their processors run in TimeMode.None with no watermark, so they
     * sort events only WITHIN a micro-batch — their oracles assume a
     * global (ts, event_id) order per key, which holds exactly when the
@@ -118,14 +119,14 @@ object StreamingEvents {
     * processor does; these operators document the per-batch contract
     * instead, which is the semantics a real at-ingest throttle has.)
     */
-  def assertSingleBatch(
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      what: String): Unit = {
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+  def singleBatch(ds: Dataset[_], what: String): DataFrame = {
+    val (rows, progress) = StreamGates.memory(ds, what)
+    val dataBatches = StreamGates.dataBatches(progress)
     require(dataBatches <= 1,
       s"$what processed $dataBatches data micro-batches; its oracle " +
         "assumes single-batch ordering — input must arrive as one " +
         "available-now batch")
+    rows
   }
 
   /** Guard for finite replays whose oracle is KNOWN non-empty: the
@@ -388,25 +389,19 @@ object StreamingEvents {
     val ckpt = s"$base/ckpt"
     val ev = batch(spark, dir).select(
       col("ts"), col("event_type"), col("value"))
-    def runPhase(): Long = {
-      val q = hourlyAgg(
+    def runPhase(): Long =
+      StreamGates.run(hourlyAgg(
         spark.readStream
           .schema(lateStagedSchema)
           .option("pathGlobFilter", "*.parquet")
-          .parquet(ingest))
-        .writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.toSeq
+          .parquet(ingest)))(
+        _.format("parquet")
+          .option("path", out)
+          .option("checkpointLocation", ckpt)
+          .start())
         .flatMap(p => Option(p.stateOperators).toSeq.flatten)
         .map(_.numRowsDroppedByWatermark)
         .sum
-    }
     // coalesce(1): each phase stages ONE file → one input partition →
     // one map-side combine domain, which is what makes the
     // numRowsDroppedByWatermark counter equal the late GROUP count
@@ -439,42 +434,26 @@ object StreamingEvents {
       StructField("event_type", StringType),
       StructField("n_events", LongType),
       StructField("value_cents", LongType)))
-    val sink = "multihop_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = spark.readStream
-      .schema(silverSchema)
-      .parquet(silverPath)
-      .groupBy("event_type")
-      .agg(
-        count(lit(1)).as("n_windows"),
-        sum(col("n_events")).as("n_events"),
-        sum(col("value_cents")).as("value_cents"))
-      .writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    assertEmitted(
-      MemorySinks.drain(spark, sink).orderBy("event_type"),
-      "stream_multihop")
+    val rows = StreamGates.memory(
+      spark.readStream
+        .schema(silverSchema)
+        .parquet(silverPath)
+        .groupBy("event_type")
+        .agg(
+          count(lit(1)).as("n_windows"),
+          sum(col("n_events")).as("n_events"),
+          sum(col("value_cents")).as("value_cents")),
+      "multihop", "complete")._1
+    assertEmitted(rows.orderBy("event_type"), "stream_multihop")
   }
 
   /** Run the stream to completion (available-now trigger) into an
     * in-memory sink; returns the materialized result.
     */
   def runToCompletion(spark: SparkSession, dir: String,
-                      sinkName: String): DataFrame = {
-    val q = windowedAgg(stream(spark, dir)).writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    MemorySinks.drain(spark, sinkName)
-  }
+                      sinkPrefix: String): DataFrame =
+    StreamGates.memory(windowedAgg(stream(spark, dir)), sinkPrefix,
+      "complete")._1
 
   // ------------------------------------------------------------------
   // Per-key ingest quota (throttling)

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.Canonical
 import graft.sources.{Page, PageParsers}
@@ -81,18 +80,11 @@ object StreamingFlagship {
     * byte-identical to the batch `flagship`.
     */
   def flagshipReport(spark: SparkSession, snapshotDir: String,
-                     sinkName: String): DataFrame = {
+                     sinkPrefix: String): DataFrame = {
     writeSnapshots(snapshotDir)
-    val q = aggregatedStream(spark, snapshotDir).writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // Drained (view dropped): repeated invocations must not accumulate
-    // sink tables in the catalog; the state is O(titles), report-sized.
-    MemorySinks.drain(spark, sinkName)
+    // The state is O(titles), report-sized.
+    StreamGates.memory(aggregatedStream(spark, snapshotDir), sinkPrefix,
+      "complete")._1
       .filter(col("n_sources") === 3)
       .select(
         col("title_comp"),

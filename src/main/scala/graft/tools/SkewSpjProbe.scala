@@ -74,16 +74,6 @@ object SkewSpjProbe {
     val factH = mk("skew_fact_h",
       s"CASE WHEN id % 100 < $hotPct THEN ${hotKey}L ELSE id END")
 
-    def withConfs[T](pairs: (String, String)*)(body: => T): T = {
-      val olds = pairs.map { case (k, _) =>
-        k -> spark.conf.getOption(k) }
-      pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body finally olds.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-
     def joinTime(fact: String, wantShuffle: Boolean): Double =
       (1 to 3).map { _ =>
         val df = spark.sql(
@@ -122,12 +112,12 @@ object SkewSpjProbe {
       }.min
 
     def measure(fact: String): (Double, Double) = {
-      val spj = withConfs(
+      val spj = graft.Confs.scoped(spark,
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.adaptive.enabled" -> "false") {
         joinTime(fact, wantShuffle = false)
       }
-      val shuffled = withConfs(
+      val shuffled = graft.Confs.scoped(spark,
         "spark.sql.sources.v2.bucketing.enabled" -> "false",
         "spark.sql.adaptive.enabled" -> "true",
         "spark.sql.adaptive.skewJoin.enabled" -> "true",

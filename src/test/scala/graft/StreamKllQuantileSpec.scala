@@ -37,10 +37,8 @@ class StreamKllQuantileSpec extends SparkTestBase {
   test("final images round-trip through the native SQL surface") {
     import org.apache.datasketches.kll.KllLongsSketch
     import org.apache.datasketches.memory.Memory
-    val finals = graft.streaming.StreamGates.withStateParts(spark) {
-      graft.streaming.StreamKllQuantile.finalSketches(spark, sfDir)
-        .collect()
-    }
+    val finals = graft.streaming.StreamKllQuantile.finalSketches(spark, sfDir)
+      .collect()
     assert(finals.nonEmpty)
     finals.foreach { r =>
       val bytes = r.getAs[Array[Byte]]("sk")

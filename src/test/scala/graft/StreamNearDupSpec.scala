@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamNearDup
+import graft.streaming.{StreamGates, StreamNearDup}
 
 /** The stateful streaming near-dup must agree EXACTLY with an
   * independent batch implementation of the same corpus-capped
@@ -41,36 +41,28 @@ class StreamNearDupSpec extends SparkTestBase {
     val out = s"$base/out"
     val t0 = System.currentTimeMillis()
 
-    def drain(): org.apache.spark.sql.streaming.StreamingQuery = {
-      val q = StreamNearDup.pipeline(spark, stageDir, cap).writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q
-    }
+    def drain(staged: StreamGates.Staged)
+        : Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] =
+      StreamGates.run(StreamNearDup.pipeline(spark, staged, cap))(
+        _.format("parquet")
+          .option("path", out)
+          .option("checkpointLocation", ckpt)
+          .start())
 
     val total = Tables.documents(spark, sfDir).count()
     val corpusN = StreamNearDup.CorpusSplit
-    StreamNearDup.withStreamConfs(spark) {
-      StreamNearDup.stageFiles(
-        spark, sfDir, stageDir, StreamNearDup.corpusSlices, t0)
-      val q1 = drain()
-      val rows1 = q1.recentProgress.toSeq.map(_.numInputRows).sum
-      assert(rows1 === corpusN,
-        s"phase 1 ingested $rows1 docs, expected the $corpusN corpus")
+    val q1 = drain(StreamGates.stage(StreamNearDup.docs(spark, sfDir),
+      stageDir, StreamNearDup.corpusSlices, t0))
+    val rows1 = q1.map(_.numInputRows).sum
+    assert(rows1 === corpusN,
+      s"phase 1 ingested $rows1 docs, expected the $corpusN corpus")
 
-      StreamNearDup.stageFiles(
-        spark, sfDir, stageDir, StreamNearDup.querySlices, t0 + 60000)
-      val q2 = drain()
-      val rows2 = q2.recentProgress.toSeq.map(_.numInputRows).sum
-      assert(rows2 === total - corpusN,
-        s"phase 2 ingested $rows2 docs, expected ${total - corpusN} — " +
-          "a restart must resume past the corpus files, not replay them")
-    }
+    val q2 = drain(StreamGates.stage(StreamNearDup.docs(spark, sfDir),
+      stageDir, StreamNearDup.querySlices, t0 + 60000))
+    val rows2 = q2.map(_.numInputRows).sum
+    assert(rows2 === total - corpusN,
+      s"phase 2 ingested $rows2 docs, expected ${total - corpusN} — " +
+        "a restart must resume past the corpus files, not replay them")
 
     val schema = org.apache.spark.sql.Encoders
       .product[StreamNearDup.PairOut].schema
