@@ -80,8 +80,8 @@ object Fs {
 
   /** Per-process namespace token: two JVMs on one host (e.g. `sbt
     * test` overlapping a gate Verify run on a CI box) must never
-    * share a scratch sink or a warehouse table name, or they corrupt
-    * each other's write+read-back round trips mid-flight.
+    * share a scratch sink, or they corrupt each other's
+    * write+read-back round trips mid-flight.
     */
   val runId: String = java.util.UUID.randomUUID().toString.take(8)
 
@@ -158,17 +158,28 @@ object Fs {
     s"${System.getProperty("java.io.tmpdir")}/$name-$runId"
   }
 
-  /** Run-id-suffixed catalog table name, same isolation argument as
-    * [[sinkDir]] for tables in the shared warehouse dir.
+  /** The session's share of a table namespace: its UUID, shortened.
+    * Sibling sessions of one JVM (and other JVMs) never share it.
     */
-  def runTable(name: String): String = s"${name}_$runId"
+  def sessionToken(spark: org.apache.spark.sql.SparkSession): String =
+    org.apache.spark.sql.GraftShims.sessionUUID(spark)
+      .replace("-", "").take(12)
+
+  /** Session-suffixed table name for the gates that build their own
+    * table: a rerun in one session replaces its own table, while the
+    * same gate running at once in a sibling session gets another name
+    * instead of a `TableAlreadyExistsException`.
+    */
+  def sessionTable(
+      spark: org.apache.spark.sql.SparkSession, name: String): String =
+    s"${name}_${sessionToken(spark)}"
 
   /** Drop a managed table AND its warehouse location — an aborted
     * earlier in-process run can orphan the location, which
-    * overwrite-CREATE then refuses. Also reaps stale prior-run
-    * namesakes (this JVM's metastore never knew their names, but
-    * their directories persist). One implementation for every
-    * saveAsTable round-trip site.
+    * overwrite-CREATE then refuses. Also reaps stale namesakes of
+    * other sessions and runs (this JVM's metastore may never have
+    * known their names, but their directories persist). One
+    * implementation for every saveAsTable round-trip site.
     */
   def dropTableAndLocation(
       spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
@@ -176,7 +187,7 @@ object Fs {
     val wh = Paths.get(java.net.URI.create(
       spark.conf.get("spark.sql.warehouse.dir")).getPath)
     deleteRecursively(wh.resolve(table))
-    val base = table.stripSuffix("_" + runId)
+    val base = table.stripSuffix("_" + sessionToken(spark))
     if (base != table) reapStaleSiblings(wh, base)
   }
 }

@@ -579,7 +579,7 @@ object MiscQueries {
     // which is exactly what the oracle (reading the raw parquet)
     // pins.
     "analyzed_table_agg" -> ((s, d) => {
-      val tbl = graft.Fs.runTable("graft_supp_stats")
+      val tbl = graft.Fs.sessionTable(s, "graft_supp_stats")
       graft.Fs.dropTableAndLocation(s, tbl)
       supplier(s, d).write.mode("overwrite").saveAsTable(tbl)
       s.sql(s"ANALYZE TABLE $tbl COMPUTE STATISTICS FOR ALL COLUMNS")
@@ -593,7 +593,7 @@ object MiscQueries {
     }),
 
     "catalog_table" -> ((s, d) => {
-      val tbl = graft.Fs.runTable("graft_nation_cat")
+      val tbl = graft.Fs.sessionTable(s, "graft_nation_cat")
       graft.Fs.dropTableAndLocation(s, tbl)
       nation(s, d).write.mode("overwrite").saveAsTable(tbl)
       s.table(tbl)
@@ -1025,8 +1025,8 @@ object MiscQueries {
     // per-bucket merges (plan asserted shuffle-free in
     // BucketedJoinSpec; this query pins the result through the gate).
     "bucketed_join" -> ((s, d) => {
-      val ordTbl = graft.Fs.runTable("graft_ord_bkt")
-      val custTbl = graft.Fs.runTable("graft_cust_bkt")
+      val ordTbl = graft.Fs.sessionTable(s, "graft_ord_bkt")
+      val custTbl = graft.Fs.sessionTable(s, "graft_cust_bkt")
       Seq(ordTbl, custTbl).foreach(graft.Fs.dropTableAndLocation(s, _))
       orders(s, d)
         .write.bucketBy(8, "o_custkey").sortBy("o_custkey")
@@ -1212,7 +1212,7 @@ object MiscQueries {
     // raw rows, so a bucket-pruned or double-read file breaks the
     // hash. Output folds to per-bucket-count bands to stay bounded.
     "bucketed_agg" -> ((s, d) => {
-      val ordTbl = graft.Fs.runTable("graft_ord_bktagg")
+      val ordTbl = graft.Fs.sessionTable(s, "graft_ord_bktagg")
       graft.Fs.dropTableAndLocation(s, ordTbl)
       orders(s, d)
         .write.bucketBy(8, "o_custkey").sortBy("o_custkey")

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.{Page, PageParsers}
+import graft.sources.{KvGate, KvGateTable, Page, PageParsers}
 import graft.streaming.{StreamGates, StreamingEvents}
 
 /** Queries exercising the custom source and streaming surfaces:
@@ -17,26 +17,9 @@ object SourceQueries {
   private def webpages(s: SparkSession): DataFrame =
     s.read.format("graft.sources.WebpageDataSource").load()
 
-  /** Register the kv TableCatalog on this session and (re)create an
-    * empty `graft_kv.default.<name>` — the setup step of the SQL DML
-    * gates. Idempotent per run (bench re-executes gates), run-id
-    * isolated via the sinkDir warehouse.
-    */
-  private def registerKvCatalog(s: SparkSession): Unit = {
-    s.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      graft.Fs.sinkDir("graft_kv_wh"))
-  }
-
-  private def kvTable(
-      s: SparkSession, name: String): String = {
-    registerKvCatalog(s)
-    val t = s"graft_kv.default.$name"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    s.sql(s"CREATE TABLE $t (key BIGINT, value STRING)")
-    t
-  }
+  /** The DDL of a snapshotted (key, value) kv gate table. */
+  private val Snapshotted =
+    "(key BIGINT, value STRING) TBLPROPERTIES ('snapshots'='true')"
 
   /** The bucketed-table pair behind the storage-partitioned-join and
     * runtime-filter gates: orders and lineitem projected to
@@ -45,18 +28,14 @@ object SourceQueries {
     * before writing). Memoized per (session, dir) — the tables are
     * read-only for these gates, like production bucketed facts.
     */
-  private val spjTables = new SessionMemo[(String, String)]
+  private val spjTables = new SessionMemo[(KvGateTable, KvGateTable)]
 
-  private def spjPair(s: SparkSession, d: String): (String, String) =
+  private def spjPair(
+      s: SparkSession, d: String): (KvGateTable, KvGateTable) =
     spjTables.getOrCompute(s, d) {
-      registerKvCatalog(s)
-      val t1 = "graft_kv.default.spj_orders"
-      val t2 = "graft_kv.default.spj_items"
-      for (t <- Seq(t1, t2)) {
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-          "PARTITIONED BY (bucket(8, key))")
-      }
+      val Seq(t1, t2) = Seq("spj_orders", "spj_items").map(
+        KvGate.table(s, _,
+          "(key BIGINT, value STRING) PARTITIONED BY (bucket(8, key))"))
       s.sql(s"INSERT INTO $t1 SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`")
       s.sql(s"INSERT INTO $t2 SELECT l_orderkey, l_returnflag " +
@@ -240,7 +219,7 @@ object SourceQueries {
     // The oracle applies the inverse predicate to the raw orders:
     // hash equality proves DELETE removed exactly the matching rows.
     "catalog_dml_delete" -> ((s, d) => {
-      val t = kvTable(s, "dml_del")
+      val t = KvGate.table(s, "dml_del")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`")
       s.sql(s"DELETE FROM $t WHERE key % 3 = 0")
@@ -253,7 +232,7 @@ object SourceQueries {
     // distributed query. The oracle recomputes the post-image from
     // the raw orders.
     "catalog_dml_update" -> ((s, d) => {
-      val t = kvTable(s, "dml_upd")
+      val t = KvGate.table(s, "dml_upd")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`")
       s.sql(s"UPDATE $t SET value = concat('X-', value) " +
@@ -269,7 +248,7 @@ object SourceQueries {
     // 100 TB dimension-maintenance pipeline runs per batch; here it
     // plans as one distributed merge join + replace commit.
     "catalog_dml_merge" -> ((s, d) => {
-      val t = kvTable(s, "dml_mrg")
+      val t = KvGate.table(s, "dml_mrg")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = 0")
       s.sql(s"SELECT o_orderkey AS key, " +
@@ -296,12 +275,12 @@ object SourceQueries {
     // At 100 TB file COUNT, not bytes, is what kills scan planning;
     // this is the SQL-invocable twin of compact_small_files.
     "catalog_compact_call" -> ((s, d) => {
-      val t = kvTable(s, "cmp_gate")
+      val t = KvGate.table(s, "cmp_gate")
       s.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(16) */ " +
         s"o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`")
       val res = s.sql(
-        "CALL graft_kv.system.compact(table => 'default.cmp_gate', " +
+        s"CALL graft_kv.system.compact(table => ${t.arg}, " +
           "target_files => 2)").collect().head
       require(res.getLong(0) == 16L && res.getLong(1) == 2L,
         s"compact file counts off: $res")
@@ -320,11 +299,7 @@ object SourceQueries {
     // membership leak between versions (a deleted row resurfacing, a
     // retained file bleeding into the current read) breaks the hash.
     "catalog_time_travel" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.tt_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "tt_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = 0")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
@@ -352,11 +327,7 @@ object SourceQueries {
     // while the hashed result proves the CURRENT data is untouched by
     // the reclamation.
     "catalog_expire_call" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.exp_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "exp_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = 0")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
@@ -364,7 +335,7 @@ object SourceQueries {
       s.sql(s"DELETE FROM $t WHERE key % 3 = 0")
       val res = s.sql(
         "CALL graft_kv.system.expire_snapshots(" +
-          "table => 'default.exp_gate', keep_last => 1)")
+          s"table => ${t.arg}, keep_last => 1)")
         .collect().head
       require(res.getLong(0) == 3L && res.getLong(1) == 1L &&
           res.getLong(2) > 0L,
@@ -399,7 +370,7 @@ object SourceQueries {
     // or re-scanned membership breaks the hash against the raw-parquet
     // oracle.
     "catalog_enable_snapshots" -> ((s, d) => {
-      val t = kvTable(s, "mig_gate") // plain table, no snapshots
+      val t = KvGate.table(s, "mig_gate") // plain table, no snapshots
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = 0")
       s.sql(s"ALTER TABLE $t SET TBLPROPERTIES ('snapshots'='true')")
@@ -431,11 +402,7 @@ object SourceQueries {
     // At 100 TB this is the difference between a metadata lookup and
     // a table scan.
     "catalog_count_pushdown" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.cnt_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "cnt_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`")
       s.sql(s"DELETE FROM $t WHERE key % 5 = 0")
@@ -462,11 +429,7 @@ object SourceQueries {
     // the require() pins that files were actually skipped; the oracle
     // pins that skipping lost nothing.
     "catalog_zonemap_prune" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.zm_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "zm_gate", Snapshotted)
       s.sql(s"INSERT INTO $t " +
         s"SELECT /*+ REPARTITION_BY_RANGE(8, o_orderkey) */ " +
         s"o_orderkey, o_orderpriority FROM parquet.`$d/orders.parquet`")
@@ -488,11 +451,7 @@ object SourceQueries {
     // metadata row — zero data files opened, require()d. The DELETE
     // beforehand forces the stats through a copy-on-write rewrite.
     "catalog_minmax_pushdown" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.mm_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "mm_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`")
       s.sql(s"DELETE FROM $t WHERE key % 5 = 0")
@@ -519,16 +478,12 @@ object SourceQueries {
     // misattributed commit breaks either the batch-count require or
     // the hash.
     "catalog_changefeed" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.cf_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "cf_gate", Snapshotted)
       for (r <- 0 to 2)
         s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
           s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 3 = $r")
       val (rows, progress) =
-        StreamGates.memory(s.readStream.table(t), "cf_gate")
+        StreamGates.memory(s.readStream.table(t.qualified), "cf_gate")
       val dataBatches = StreamGates.dataBatches(progress)
       require(dataBatches == 3,
         s"catalog_changefeed: expected 3 one-commit micro-batches, " +
@@ -584,15 +539,10 @@ object SourceQueries {
     // Both plan facts are require()d on the executed plan; rows pin
     // against DuckDB joining the raw parquet.
     "catalog_sorted_join" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t1 = "graft_kv.default.ssj_orders"
-      val t2 = "graft_kv.default.ssj_items"
-      for (t <- Seq(t1, t2)) {
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
+      val Seq(t1, t2) = Seq("ssj_orders", "ssj_items").map(
+        KvGate.table(s, _, "(key BIGINT, value STRING) " +
           "PARTITIONED BY (bucket(8, key)) " +
-          "TBLPROPERTIES ('snapshots'='true', 'write.sort'='key')")
-      }
+          "TBLPROPERTIES ('snapshots'='true', 'write.sort'='key')"))
       s.sql(s"INSERT INTO $t1 SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`")
       s.sql(s"INSERT INTO $t2 SELECT l_orderkey, l_returnflag " +
@@ -629,17 +579,12 @@ object SourceQueries {
     // compatibility is keyed to the join condition and the shared V2
     // bucket function, never to name equality.
     "catalog_spj_named" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t1 = "graft_kv.default.spjn_orders"
-      val t2 = "graft_kv.default.spjn_items"
-      s.sql(s"DROP TABLE IF EXISTS $t1")
-      s.sql(s"CREATE TABLE $t1 (o_orderkey BIGINT, value STRING) " +
-        "PARTITIONED BY (bucket(8, o_orderkey)) " +
-        "TBLPROPERTIES ('snapshots'='true', 'write.sort'='o_orderkey')")
-      s.sql(s"DROP TABLE IF EXISTS $t2")
-      s.sql(s"CREATE TABLE $t2 (l_orderkey BIGINT, value STRING) " +
-        "PARTITIONED BY (bucket(8, l_orderkey)) " +
-        "TBLPROPERTIES ('snapshots'='true', 'write.sort'='l_orderkey')")
+      val t1 = KvGate.table(s, "spjn_orders", "(o_orderkey BIGINT, value " +
+        "STRING) PARTITIONED BY (bucket(8, o_orderkey)) TBLPROPERTIES " +
+        "('snapshots'='true', 'write.sort'='o_orderkey')")
+      val t2 = KvGate.table(s, "spjn_items", "(l_orderkey BIGINT, value " +
+        "STRING) PARTITIONED BY (bucket(8, l_orderkey)) TBLPROPERTIES " +
+        "('snapshots'='true', 'write.sort'='l_orderkey')")
       s.sql(s"INSERT INTO $t1 SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`")
       s.sql(s"INSERT INTO $t2 SELECT l_orderkey, l_returnflag " +
@@ -691,12 +636,9 @@ object SourceQueries {
     // FALLBACK scan — MIN/MAX(key) pushdown declines for string
     // keys by design) pin against DuckDB.
     "catalog_string_key" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.skg_docs"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (doc_id STRING, value STRING) " +
-        "PARTITIONED BY (bucket(8, doc_id)) " +
-        "TBLPROPERTIES ('snapshots'='true', 'bloom_cols'='doc_id')")
+      val t = KvGate.table(s, "skg_docs", "(doc_id STRING, value STRING) " +
+        "PARTITIONED BY (bucket(8, doc_id)) TBLPROPERTIES " +
+        "('snapshots'='true', 'bloom_cols'='doc_id')")
       s.sql(s"INSERT INTO $t SELECT concat('d-', doc_id), lang " +
         s"FROM parquet.`$d/documents.parquet`")
       val before = graft.sources.KvBloomPrune.prunedFiles.get()
@@ -723,17 +665,12 @@ object SourceQueries {
     // for BIGINT keys. Plan fact require()d; rows pin against DuckDB
     // joining the raw parquet.
     "catalog_spj_string" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t1 = "graft_kv.default.sks_orders"
-      val t2 = "graft_kv.default.sks_items"
-      s.sql(s"DROP TABLE IF EXISTS $t1")
-      s.sql(s"CREATE TABLE $t1 (o_id STRING, value STRING) " +
-        "PARTITIONED BY (bucket(8, o_id)) " +
-        "TBLPROPERTIES ('snapshots'='true')")
-      s.sql(s"DROP TABLE IF EXISTS $t2")
-      s.sql(s"CREATE TABLE $t2 (l_id STRING, value STRING) " +
-        "PARTITIONED BY (bucket(8, l_id)) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t1 = KvGate.table(s, "sks_orders", "(o_id STRING, value STRING) " +
+        "PARTITIONED BY (bucket(8, o_id)) TBLPROPERTIES " +
+        "('snapshots'='true')")
+      val t2 = KvGate.table(s, "sks_items", "(l_id STRING, value STRING) " +
+        "PARTITIONED BY (bucket(8, l_id)) TBLPROPERTIES " +
+        "('snapshots'='true')")
       s.sql(s"INSERT INTO $t1 SELECT concat('o-', o_orderkey), " +
         s"o_orderpriority FROM parquet.`$d/orders.parquet`")
       s.sql(s"INSERT INTO $t2 SELECT concat('o-', l_orderkey), " +
@@ -764,12 +701,9 @@ object SourceQueries {
     // counts; the final table state pins against DuckDB applying the
     // same DML to the raw parquet.
     "catalog_string_dml" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.skd_docs"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (doc_id STRING, value STRING) " +
-        "PARTITIONED BY (bucket(4, doc_id)) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "skd_docs", "(doc_id STRING, value STRING) " +
+        "PARTITIONED BY (bucket(4, doc_id)) TBLPROPERTIES " +
+        "('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT concat('d-', doc_id), lang " +
         s"FROM parquet.`$d/documents.parquet`")
       val delOk = s.sql(s"SELECT count(*) FROM $t " +
@@ -783,7 +717,7 @@ object SourceQueries {
       val net = s.sql(
         s"""SELECT sum(CASE _change_type WHEN 'delete' THEN 1
            |           ELSE -1 END)
-           |FROM graft_kv.default.`skd_docs$$changes`
+           |FROM ${t.meta("changes")}
            |WHERE _commit_version = 2""".stripMargin)
         .collect()(0).getLong(0)
       require(net == delOk,
@@ -806,12 +740,9 @@ object SourceQueries {
     // prune counters require()d; rows pin against DuckDB running the
     // same join on raw parquet.
     "catalog_string_runtime" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.srt_docs"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (doc_id STRING, value STRING) " +
-        "PARTITIONED BY (bucket(8, doc_id)) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "srt_docs", "(doc_id STRING, value STRING) " +
+        "PARTITIONED BY (bucket(8, doc_id)) TBLPROPERTIES " +
+        "('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT concat('d-', doc_id), lang " +
         s"FROM parquet.`$d/documents.parquet`")
       // the dim's join key must be an ATTRIBUTE for the runtime
@@ -819,7 +750,8 @@ object SourceQueries {
       // pruning key) — materialize the string-keyed dim once, then
       // filter it selectively at query time, the shape of a real
       // doc_id dimension
-      val dimDir = graft.Fs.sinkDir("srt_dim")
+      val dimDir =
+        s"${graft.Fs.sinkDir("srt_dim")}/${graft.Fs.sessionToken(s)}"
       s.sql(s"SELECT concat('d-', doc_id) AS k, doc_id AS raw_id " +
         s"FROM parquet.`$d/documents.parquet`")
         .write.mode("overwrite").parquet(dimDir)
@@ -854,18 +786,12 @@ object SourceQueries {
     // (plan fact require()d). Rows pin against DuckDB running the
     // same filtered join on raw parquet.
     "catalog_composed_layout" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t1 = "graft_kv.default.cl_orders"
-      val t2 = "graft_kv.default.cl_items"
-      s.sql(s"DROP TABLE IF EXISTS $t1")
-      s.sql(s"CREATE TABLE $t1 (o_orderkey BIGINT, value STRING, " +
-        "o_ts TIMESTAMP) " +
-        "PARTITIONED BY (months(o_ts), bucket(8, o_orderkey)) " +
-        "TBLPROPERTIES ('snapshots'='true')")
-      s.sql(s"DROP TABLE IF EXISTS $t2")
-      s.sql(s"CREATE TABLE $t2 (l_orderkey BIGINT, value STRING) " +
-        "PARTITIONED BY (bucket(8, l_orderkey)) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t1 = KvGate.table(s, "cl_orders", "(o_orderkey BIGINT, value " +
+        "STRING, o_ts TIMESTAMP) PARTITIONED BY (months(o_ts), bucket(8, " +
+        "o_orderkey)) TBLPROPERTIES ('snapshots'='true')")
+      val t2 = KvGate.table(s, "cl_items", "(l_orderkey BIGINT, value " +
+        "STRING) PARTITIONED BY (bucket(8, l_orderkey)) TBLPROPERTIES " +
+        "('snapshots'='true')")
       s.sql(s"INSERT INTO $t1 SELECT o_orderkey, o_orderpriority, " +
         s"o_orderdate FROM parquet.`$d/orders.parquet`")
       s.sql(s"INSERT INTO $t2 SELECT l_orderkey, l_returnflag " +
@@ -904,10 +830,7 @@ object SourceQueries {
     // bloom-pruned AT RUNTIME (no static predicate on the fact side
     // at all); rows pin against DuckDB running the same join.
     "catalog_runtime_bloom" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.rbf_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
+      val t = KvGate.table(s, "rbf_gate", "(key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true', 'bloom_cols'='value')")
       for (g <- 0 until 4)
         s.sql(s"INSERT INTO $t SELECT o_orderkey, " +
@@ -946,12 +869,9 @@ object SourceQueries {
     // after. Post-rewrite rows pin against DuckDB applying the same
     // DELETE.
     "catalog_rewrite_buckets" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.rw_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-        "PARTITIONED BY (bucket(8, key)) " +
-        "TBLPROPERTIES ('snapshots'='true', 'write.sort'='key')")
+      val t = KvGate.table(s, "rw_gate", "(key BIGINT, value STRING) " +
+        "PARTITIONED BY (bucket(8, key)) TBLPROPERTIES " +
+        "('snapshots'='true', 'write.sort'='key')")
       // two appends split on a column UNCORRELATED with the bucket
       // key, so both hit every bucket (a key-derived split would land
       // disjoint buckets and never fragment)
@@ -965,10 +885,9 @@ object SourceQueries {
             .BatchScanExec => b.ordering.map(_.size).getOrElse(0)
         }.sum
       def dataFiles: Long = {
-        val dir = s"${graft.Fs.sinkDir("graft_kv_wh")}/default/rw_gate"
         graft.sources.KvSnapshots.dataFiles(
-          graft.sources.KvSnapshots.membersWithStats(dir,
-            graft.sources.KvSnapshots.latest(dir).get)).size.toLong
+          graft.sources.KvSnapshots.membersWithStats(t.dir,
+            graft.sources.KvSnapshots.latest(t.dir).get)).size.toLong
       }
       require(dataFiles > 8L,
         "catalog_rewrite_buckets: the two appends did not fragment")
@@ -977,7 +896,7 @@ object SourceQueries {
           "STILL report ordering (merge read)")
       s.sql(s"DELETE FROM $t WHERE key % 9 = 0")
       val out = s.sql("CALL graft_kv.system.rewrite_buckets(" +
-        "table => 'default.rw_gate')").collect()(0)
+        s"table => ${t.arg})").collect()(0)
       require(out.getLong(1) == 8L,
         s"catalog_rewrite_buckets: expected 8 files after, got " +
           out.getLong(1))
@@ -985,16 +904,14 @@ object SourceQueries {
         "catalog_rewrite_buckets: the ordering claim fell over " +
           "after the rewrite")
       // MoR twin: the rewrite FOLDS accumulated tombstones
-      val tm = "graft_kv.default.rw_gate_mor"
-      s.sql(s"DROP TABLE IF EXISTS $tm")
-      s.sql(s"CREATE TABLE $tm (key BIGINT, value STRING) " +
-        "PARTITIONED BY (bucket(4, key)) " +
-        "TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
+      val tm = KvGate.table(s, "rw_gate_mor", "(key BIGINT, value STRING) " +
+        "PARTITIONED BY (bucket(4, key)) TBLPROPERTIES " +
+        "('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $tm SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey < 1000")
       s.sql(s"DELETE FROM $tm WHERE key % 2 = 0")
       val outM = s.sql("CALL graft_kv.system.rewrite_buckets(" +
-        "table => 'default.rw_gate_mor')").collect()(0)
+        s"table => ${tm.arg})").collect()(0)
       require(outM.getLong(2) >= 1L,
         "catalog_rewrite_buckets: no tombstone files were folded")
       val expectLive = s.sql(
@@ -1024,23 +941,18 @@ object SourceQueries {
     // shuffle PRESENT in the pinned join. Rows pin against DuckDB
     // joining the raw parquet.
     "catalog_rebucket" -> ((s, d) => {
-      registerKvCatalog(s)
-      val ta = "graft_kv.default.rbk_orders"
-      val tb = "graft_kv.default.rbk_items"
       // The key column is a ROLE (field id 1), not a literal name:
       // both tables carry their REAL join-key names — the adopter
       // shape the whole SPJ/rebucket machinery must serve without a
       // rename-to-`key` migration. Everything downstream (bucket
       // routing, sorted claims, zone maps, rebucket, the pinned-read
       // generation gate) runs over these names.
-      s.sql(s"DROP TABLE IF EXISTS $ta")
-      s.sql(s"CREATE TABLE $ta (o_orderkey BIGINT, value STRING) " +
-        "PARTITIONED BY (bucket(8, o_orderkey)) " +
-        "TBLPROPERTIES ('snapshots'='true', 'write.sort'='o_orderkey')")
-      s.sql(s"DROP TABLE IF EXISTS $tb")
-      s.sql(s"CREATE TABLE $tb (l_orderkey BIGINT, value STRING) " +
-        "PARTITIONED BY (bucket(8, l_orderkey)) " +
-        "TBLPROPERTIES ('snapshots'='true', 'write.sort'='l_orderkey')")
+      val ta = KvGate.table(s, "rbk_orders", "(o_orderkey BIGINT, value " +
+        "STRING) PARTITIONED BY (bucket(8, o_orderkey)) TBLPROPERTIES " +
+        "('snapshots'='true', 'write.sort'='o_orderkey')")
+      val tb = KvGate.table(s, "rbk_items", "(l_orderkey BIGINT, value " +
+        "STRING) PARTITIONED BY (bucket(8, l_orderkey)) TBLPROPERTIES " +
+        "('snapshots'='true', 'write.sort'='l_orderkey')")
       // fragment ta across every bucket (split uncorrelated with key)
       for (cond <- Seq("o_totalprice < 150000.0",
           "o_totalprice >= 150000.0"))
@@ -1048,8 +960,6 @@ object SourceQueries {
           s"FROM parquet.`$d/orders.parquet` WHERE $cond")
       s.sql(s"INSERT INTO $tb SELECT l_orderkey, l_returnflag " +
         s"FROM parquet.`$d/lineitem.parquet`")
-      val dirA =
-        s"${graft.Fs.sinkDir("graft_kv_wh")}/default/rbk_orders"
       def filesPerBucket(dir: String): Map[Int, Int] =
         graft.sources.KvSnapshots.dataFiles(
           graft.sources.KvSnapshots.membersWithStats(dir,
@@ -1058,9 +968,9 @@ object SourceQueries {
             .getOrElse(-1))
           .map { case (b, fs) => b -> fs.size }
       val out = s.sql("CALL graft_kv.system.rewrite_buckets(" +
-        "table => 'default.rbk_orders', " +
+        s"table => ${ta.arg}, " +
         "target_files_per_bucket => 3)").collect()(0)
-      val perBucket = filesPerBucket(dirA)
+      val perBucket = filesPerBucket(ta.dir)
       require(out.getLong(1) > 8L &&
         (0 until 8).forall(b => perBucket.getOrElse(b, 0) >= 2),
         s"catalog_rebucket: range split did not bound file size — " +
@@ -1080,25 +990,25 @@ object SourceQueries {
         df1.collect()
         requireShuffleFreeJoin(df1, "catalog_rebucket(split)")
         requireSortFreeJoin(df1, "catalog_rebucket(split)")
-        val preV = graft.sources.KvSnapshots.latest(dirA).get
+        val preV = graft.sources.KvSnapshots.latest(ta.dir).get
         // rebucket 8→16 with the RANGE-SPLIT rewrite: parallelism and
         // output file size bound by newN×perBucket, not by the target
         // count (16 tasks writing ~6 TB files is the 100 TB
         // scale-killer this knob exists for)
         val reb = s.sql("CALL graft_kv.system.rebucket(" +
-          "table => 'default.rbk_orders', buckets => 16, " +
+          s"table => ${ta.arg}, buckets => 16, " +
           "target_files_per_bucket => 3)")
           .collect()(0)
         require(reb.getLong(0) == 8L && reb.getLong(1) == 16L &&
           reb.getLong(2) > 16L,
           s"catalog_rebucket: unexpected rebucket result $reb")
-        val perBucket16 = filesPerBucket(dirA)
+        val perBucket16 = filesPerBucket(ta.dir)
         require((0 until 16).forall(b =>
             perBucket16.getOrElse(b, 0) >= 2),
           "catalog_rebucket: the 8→16 rebucket did not range-split " +
             s"— files/bucket = $perBucket16")
         s.sql("CALL graft_kv.system.rebucket(" +
-          "table => 'default.rbk_items', buckets => 16)").collect()
+          s"table => ${tb.arg}, buckets => 16)").collect()
         val df2 = spjAgg()
         val rows = df2.collect()
         requireShuffleFreeJoin(df2, "catalog_rebucket(16)")
@@ -1135,22 +1045,17 @@ object SourceQueries {
     // from the maintenance commit adds rows and breaks the hash; the
     // require() additionally names the invariant.
     "catalog_cdc_maintenance" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.cdcm_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-        "PARTITIONED BY (bucket(4, key)) " +
-        "TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
+      val t = KvGate.table(s, "cdcm_gate", "(key BIGINT, value STRING) " +
+        "PARTITIONED BY (bucket(4, key)) TBLPROPERTIES " +
+        "('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet` " +
         "WHERE o_orderkey <= 20000") // v1
       s.sql(s"DELETE FROM $t WHERE key % 3 = 0") // v2: tombstones only
       s.sql("CALL graft_kv.system.rewrite_buckets(" +
-        "table => 'default.cdcm_gate')").collect() // v3: maintenance
-      val dirPath =
-        s"${graft.Fs.sinkDir("graft_kv_wh")}/default/cdcm_gate"
-      val v3 = graft.sources.KvSnapshots.latest(dirPath).get
-      require(graft.sources.KvSnapshots.isMaintenance(dirPath, v3),
+        s"table => ${t.arg})").collect() // v3: maintenance
+      val v3 = graft.sources.KvSnapshots.latest(t.dir).get
+      require(graft.sources.KvSnapshots.isMaintenance(t.dir, v3),
         "catalog_cdc_maintenance: the rewrite commit lost its marker")
       s.sql(s"INSERT INTO $t SELECT o_orderkey + 10000000, " +
         s"o_orderpriority FROM parquet.`$d/orders.parquet` " +
@@ -1158,7 +1063,7 @@ object SourceQueries {
       val out = s.sql(
         s"""SELECT _commit_version AS v, _change_type AS kind,
            |count(*) AS n_rows, CAST(sum(key) AS BIGINT) AS sum_keys
-           |FROM graft_kv.default.`cdcm_gate$$changes`
+           |FROM ${t.meta("changes")}
            |GROUP BY 1, 2 ORDER BY v, kind""".stripMargin)
       val rows = out.collect()
       require(!rows.exists(_.getInt(0) == v3),
@@ -1234,16 +1139,12 @@ object SourceQueries {
     // row count. The hashed result pins that scans apply the tombstones
     // exactly (the oracle is the inverse predicate over raw orders).
     "catalog_dml_delete_mor" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.mor_del_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
+      val t = KvGate.table(s, "mor_del_gate", "(key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`")
-      val dir = s"${graft.Fs.sinkDir("graft_kv_wh")}/default/mor_del_gate"
       def members = graft.sources.KvSnapshots.membersWithStats(
-        dir, graft.sources.KvSnapshots.latest(dir).get)
+        t.dir, graft.sources.KvSnapshots.latest(t.dir).get)
       val dataBefore = graft.sources.KvSnapshots.dataFiles(members)
         .map(_.name).sorted
       s.sql(s"DELETE FROM $t WHERE key % 3 = 0")
@@ -1271,16 +1172,12 @@ object SourceQueries {
     // raw orders, so a resurrected tombstone or a lost survivor breaks
     // the hash.
     "catalog_dml_update_mor" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.mor_upd_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
+      val t = KvGate.table(s, "mor_upd_gate", "(key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`")
-      val dir = s"${graft.Fs.sinkDir("graft_kv_wh")}/default/mor_upd_gate"
       def members = graft.sources.KvSnapshots.membersWithStats(
-        dir, graft.sources.KvSnapshots.latest(dir).get)
+        t.dir, graft.sources.KvSnapshots.latest(t.dir).get)
       val dataBefore = graft.sources.KvSnapshots.dataFiles(members)
         .map(_.name).toSet
       s.sql(s"UPDATE $t SET value = concat('X-', value) " +
@@ -1302,10 +1199,7 @@ object SourceQueries {
     // rows plain inserts; same full-outer-join oracle as the CoW twin,
     // so the two protocols are pinned to IDENTICAL answers.
     "catalog_dml_merge_mor" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.mor_mrg_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
+      val t = KvGate.table(s, "mor_mrg_gate", "(key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = 0")
@@ -1319,10 +1213,9 @@ object SourceQueries {
            |WHEN MATCHED THEN UPDATE SET value = src.value
            |WHEN NOT MATCHED THEN INSERT (key, value)
            |  VALUES (src.key, src.value)""".stripMargin)
-      val dir = s"${graft.Fs.sinkDir("graft_kv_wh")}/default/mor_mrg_gate"
       require(graft.sources.KvSnapshots.deleteFiles(
           graft.sources.KvSnapshots.membersWithStats(
-            dir, graft.sources.KvSnapshots.latest(dir).get)).nonEmpty,
+            t.dir, graft.sources.KvSnapshots.latest(t.dir).get)).nonEmpty,
         "catalog_dml_merge_mor: merge committed no tombstones — the " +
           "matched updates went through a rewrite, not the delta path")
       s.sql(s"SELECT value, count(*) AS n_orders, " +
@@ -1340,10 +1233,7 @@ object SourceQueries {
     // lost tombstone, a misattributed version, or a value-less delete
     // breaks the hash.
     "catalog_changefeed_cdc" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.cdc_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
+      val t = KvGate.table(s, "cdc_gate", "(key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = 0")
@@ -1353,7 +1243,7 @@ object SourceQueries {
       s.sql(
         s"""SELECT _commit_version, _change_type, value,
            |count(*) AS n_rows, sum(key) AS sum_keys
-           |FROM graft_kv.default.`cdc_gate$$changes`
+           |FROM ${t.meta("changes")}
            |GROUP BY 1, 2, 3
            |ORDER BY 1, 2, 3""".stripMargin)
     }),
@@ -1368,11 +1258,7 @@ object SourceQueries {
     // barrier; this gate exercises the same path under real job
     // scheduling.
     "catalog_commit_retry" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.occ_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "occ_gate", Snapshotted)
       val ready = new java.util.concurrent.CountDownLatch(2)
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
       def insert(r: Int) = pool.submit(new Runnable {
@@ -1386,8 +1272,7 @@ object SourceQueries {
       val jobs = Seq(insert(0), insert(1))
       jobs.foreach(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
       pool.shutdown()
-      val dir = s"${graft.Fs.sinkDir("graft_kv_wh")}/default/occ_gate"
-      val versions = graft.sources.KvSnapshots.versions(dir)
+      val versions = graft.sources.KvSnapshots.versions(t.dir)
       require(versions == Seq(1, 2),
         s"catalog_commit_retry: expected a linear 2-commit history, " +
           s"got versions $versions")
@@ -1405,11 +1290,7 @@ object SourceQueries {
     // SAME query now prunes most of the table; the oracle pins that
     // the rewrite lost/duplicated nothing.
     "catalog_cluster_zonemap" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.cluster_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "cluster_gate", Snapshotted)
       s.sql(s"INSERT INTO $t " +
         s"SELECT /*+ REPARTITION(8) */ o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`")
@@ -1424,8 +1305,7 @@ object SourceQueries {
           s"$prunedBefore files — the 'before' side must be the " +
           "no-skipping baseline or the gate proves nothing")
       val res = s.sql(
-        "CALL graft_kv.system.cluster(" +
-          "table => 'default.cluster_gate', target_files => 8)")
+        s"CALL graft_kv.system.cluster(table => ${t.arg}, target_files => 8)")
         .collect().head
       require(res.getLong(0) == 8L && res.getLong(1) == 8L,
         s"cluster file counts off: $res")
@@ -1441,10 +1321,9 @@ object SourceQueries {
       // the layout system.cluster exists to produce — and (b) the
       // probe skipped EXACTLY the files whose manifest stats license
       // skipping (minKey > 1000 under `key <= 1000`).
-      val dirC = s"${graft.Fs.sinkDir("graft_kv_wh")}/default/cluster_gate"
       val statsC = graft.sources.KvSnapshots.dataFiles(
-        graft.sources.KvSnapshots.membersWithStats(dirC,
-          graft.sources.KvSnapshots.latest(dirC).get))
+        graft.sources.KvSnapshots.membersWithStats(t.dir,
+          graft.sources.KvSnapshots.latest(t.dir).get))
       val rangedC = statsC
         .filter(f => f.keysKnown && f.minKey.isDefined)
         .sortBy(_.minKey.get)
@@ -1480,11 +1359,7 @@ object SourceQueries {
     // from raw orders: a leaked post-rollback row or a lost original
     // breaks the hash.
     "catalog_rollback" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.rb_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "rb_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`")
       // the bad batch: clobber priorities, then delete a third
@@ -1492,7 +1367,7 @@ object SourceQueries {
       s.sql(s"DELETE FROM $t WHERE key % 3 = 0")
       val res = s.sql(
         "CALL graft_kv.system.rollback(" +
-          "table => 'default.rb_gate', version => 1)").collect().head
+          s"table => ${t.arg}, version => 1)").collect().head
       require(res.getLong(0) == 3L && res.getLong(1) == 1L &&
           res.getLong(2) == 4L,
         s"catalog_rollback: expected 3 -> 1 committing v4, got $res")
@@ -1518,15 +1393,10 @@ object SourceQueries {
     // (data files hit final names BEFORE the manifest conditional-put
     // lands). Live membership intact; the oracle pins table content.
     "catalog_vacuum" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.vac_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "vac_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`")
-      val dir = java.nio.file.Paths.get(
-        graft.Fs.sinkDir("graft_kv_wh"), "default", "vac_gate")
+      val dir = java.nio.file.Paths.get(t.dir)
       // a crashed writer's leftovers: a data file that never made a
       // manifest, and a stray tombstone file — both LONG dead
       val aged = java.nio.file.attribute.FileTime.fromMillis(
@@ -1544,7 +1414,7 @@ object SourceQueries {
         "{\"key\":5,\"value\":\"committing\"}\n".getBytes("UTF-8"))
       val before = s.sql(s"SELECT count(*) FROM $t").head().getLong(0)
       val res = s.sql(
-        "CALL graft_kv.system.vacuum(table => 'default.vac_gate')")
+        s"CALL graft_kv.system.vacuum(table => ${t.arg})")
         .collect().head
       require(res.getLong(1) == 2L,
         s"catalog_vacuum: expected exactly the 2 aged orphans " +
@@ -1578,15 +1448,10 @@ object SourceQueries {
     // renamed column still reads every byte written under its old
     // name. The oracle recomputes the same union from raw orders.
     "catalog_schema_evolution" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.evo_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "evo_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`") // v1
-      val dir = java.nio.file.Paths.get(
-        graft.Fs.sinkDir("graft_kv_wh"), "default", "evo_gate")
+      val dir = java.nio.file.Paths.get(t.dir)
       def dataFiles: Set[String] = {
         import scala.jdk.CollectionConverters._
         val l = java.nio.file.Files.list(dir)
@@ -1631,11 +1496,8 @@ object SourceQueries {
     // additions). The oracle recomputes each version's live count
     // from raw orders.
     "catalog_snapshots_table" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.snap_meta_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
+      val t = KvGate.table(s, "snap_meta_gate", "(key BIGINT, value " +
+        "STRING) TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`") // v1
       s.sql(s"INSERT INTO $t SELECT o_orderkey + 10000000, " +
@@ -1647,7 +1509,7 @@ object SourceQueries {
         s"""SELECT CAST(version AS BIGINT) AS version, live_rows,
            |       CAST(n_delete_files > 0 AS BIGINT) AS has_deletes,
            |       removed_files
-           |FROM graft_kv.default.`snap_meta_gate$$snapshots`
+           |FROM ${t.meta("snapshots")}
            |ORDER BY version""".stripMargin)
     }),
 
@@ -1662,21 +1524,16 @@ object SourceQueries {
     // expired manifest, resurrected tombstone, or tag drift breaks it
     // against the raw-orders oracle.
     "catalog_tags" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.tags_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "tags_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`") // v1
-      s.sql("CALL graft_kv.system.tag(table => 'default.tags_gate', " +
+      s.sql(s"CALL graft_kv.system.tag(table => ${t.arg}, " +
         "name => 'pristine')")
       s.sql(s"DELETE FROM $t WHERE key % 2 = 0") // v2 (CoW rewrite)
       s.sql(s"INSERT INTO $t VALUES (-1, 'JUNK')") // v3
       s.sql("CALL graft_kv.system.expire_snapshots(" +
-        "table => 'default.tags_gate', keep_last => 1)")
-      val retained = graft.sources.KvSnapshots.versions(
-        s"${graft.Fs.sinkDir("graft_kv_wh")}/default/tags_gate")
+        s"table => ${t.arg}, keep_last => 1)")
+      val retained = graft.sources.KvSnapshots.versions(t.dir)
       require(retained.contains(1),
         s"catalog_tags: expire reclaimed the TAGGED v1 " +
           s"(retained: ${retained.mkString(",")})")
@@ -1702,23 +1559,18 @@ object SourceQueries {
     // a sim), and the require()s pin that the tag survived
     // reclamation while the junk versions did not.
     "catalog_array_column" -> ((s, d) => {
-      registerKvCatalog(s)
       import org.apache.spark.sql.expressions.Window
-      val t = "graft_kv.default.arr_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, embedding ARRAY<DOUBLE>, " +
-        "label BIGINT) TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "arr_gate", "(key BIGINT, embedding " +
+        "ARRAY<DOUBLE>, label BIGINT) TBLPROPERTIES ('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT vec_id, " +
         "CAST(embedding AS ARRAY<DOUBLE>), CAST(label AS BIGINT) " +
         s"FROM parquet.`$d/embeddings.parquet`") // v1
-      s.sql("CALL graft_kv.system.tag(" +
-        "table => 'default.arr_gate', name => 'shipped')")
+      s.sql(s"CALL graft_kv.system.tag(table => ${t.arg}, name => 'shipped')")
       s.sql(s"INSERT INTO $t VALUES (-1, array(0.0D), -1)") // v2 junk
       s.sql(s"DELETE FROM $t WHERE key = -1") // v3 CoW rewrite
       s.sql("CALL graft_kv.system.expire_snapshots(" +
-        "table => 'default.arr_gate', keep_last => 1)")
-      val retained = graft.sources.KvSnapshots.versions(
-        s"${graft.Fs.sinkDir("graft_kv_wh")}/default/arr_gate")
+        s"table => ${t.arg}, keep_last => 1)")
+      val retained = graft.sources.KvSnapshots.versions(t.dir)
       require(retained.contains(1) && !retained.contains(2),
         s"catalog_array_column: expire broke the tag pin " +
           s"(retained: ${retained.mkString(",")})")
@@ -1748,11 +1600,8 @@ object SourceQueries {
     // at INSERT is exact, the bucket signs and sims are the same
     // left-to-right double folds.
     "catalog_array_ann" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.ann_arr_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, embedding ARRAY<DOUBLE>) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "ann_arr_gate", "(key BIGINT, embedding " +
+        "ARRAY<DOUBLE>) TBLPROPERTIES ('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT vec_id, " +
         "CAST(embedding AS ARRAY<DOUBLE>) " +
         s"FROM parquet.`$d/embeddings.parquet`")
@@ -1780,11 +1629,8 @@ object SourceQueries {
     // token, lost element, or escape drift anywhere in the stored
     // arrays moves a count and fails the hash.
     "catalog_array_string" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.toks_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (doc_id BIGINT, tokens ARRAY<STRING>, " +
-        "lang STRING) TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "toks_gate", "(doc_id BIGINT, tokens " +
+        "ARRAY<STRING>, lang STRING) TBLPROPERTIES ('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT doc_id, split(text, ' '), lang " +
         s"FROM parquet.`$d/documents.parquet`")
       s.sql(s"DELETE FROM $t WHERE doc_id % 7 = 0")
@@ -1811,19 +1657,16 @@ object SourceQueries {
     // corpus) — a stale answer, a lost delta row, or a drifted bucket
     // in either phase breaks the hash.
     "catalog_ann_pinned" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.annp_emb"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (vec_id BIGINT, embedding ARRAY<DOUBLE>) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "annp_emb", "(vec_id BIGINT, embedding " +
+        "ARRAY<DOUBLE>) TBLPROPERTIES ('snapshots'='true')")
       val n = graft.Tables.embeddings(s, d).count()
       val cut = 4L * n / 5
       s.sql(s"INSERT INTO $t SELECT vec_id, " +
         "CAST(embedding AS ARRAY<DOUBLE>) " +
         s"FROM parquet.`$d/embeddings.parquet` WHERE vec_id < $cut")
-      val tdir = s"${graft.Fs.sinkDir("graft_kv_wh")}/default/annp_emb"
-      val idx = s"${graft.Fs.sinkDir("graft_ann_pinned")}/gate"
-      AnnIndexQueries.buildPinned(s, t, tdir, idx)
+      val idx =
+        s"${graft.Fs.sinkDir("graft_ann_pinned")}/${graft.Fs.sessionToken(s)}"
+      AnnIndexQueries.buildPinned(s, t.qualified, t.dir, idx)
       val v1df = AnnIndexQueries.servePinned(s, idx)
       val v1rows = v1df.collect()
       // the table moves to v2 under the index
@@ -1840,7 +1683,7 @@ object SourceQueries {
           "the version pin did not detect the table moving")
       // CDC-incremental refresh: only the post-v1 inserts are hashed
       val changes =
-        s.sql(s"SELECT * FROM graft_kv.default.`annp_emb$$changes`")
+        s.sql(s"SELECT * FROM ${t.meta("changes")}")
       val pin = AnnIndexQueries.refreshPinned(s, changes, idx)
       require(pin.deltas == 1,
         s"catalog_ann_pinned: refresh wrote ${pin.deltas} deltas")
@@ -1870,25 +1713,21 @@ object SourceQueries {
     // against a literal oracle: any drift in version numbering, head
     // resolution or base bookkeeping breaks the hash.
     "catalog_refs_table" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.refs_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "refs_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`") // v1
       s.sql("CALL graft_kv.system.tag(" +
-        "table => 'default.refs_gate', name => 'pristine', " +
+        s"table => ${t.arg}, name => 'pristine', " +
         "version => 1)")
       s.sql(s"INSERT INTO $t SELECT o_orderkey + 10000000, " +
         s"o_orderpriority FROM parquet.`$d/orders.parquet` " +
         "WHERE o_orderkey % 4 = 0") // v2
       s.sql("CALL graft_kv.system.create_branch(" +
-        "table => 'default.refs_gate', name => 'audit')") // base v2
+        s"table => ${t.arg}, name => 'audit')") // base v2
       s.range(1, 4).selectExpr("id + 90000000 AS key", "'S' AS value")
-        .writeTo(t).option("branch", "audit").append() // head v3
+        .writeTo(t.qualified).option("branch", "audit").append() // head v3
       s.sql("SELECT name, kind, version, base_version " +
-        s"FROM graft_kv.default.`refs_gate$$refs` ORDER BY name")
+        s"FROM ${t.meta("refs")} ORDER BY name")
     }),
 
     // DATE-PARTITIONED catalog table (`PARTITIONED BY (days(col))` —
@@ -1903,19 +1742,14 @@ object SourceQueries {
     // and an over-pruned one fail), and the rows are oracle-pinned
     // against DuckDB recomputing the same predicate from raw parquet.
     "catalog_partition_prune" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.pp_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING, " +
-        "ts TIMESTAMP, mo DATE) PARTITIONED BY (days(mo)) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "pp_gate", "(key BIGINT, value STRING, ts " +
+        "TIMESTAMP, mo DATE) PARTITIONED BY (days(mo)) TBLPROPERTIES " +
+        "('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
         "o_orderdate, CAST(date_trunc('MONTH', o_orderdate) AS DATE) " +
         s"FROM parquet.`$d/orders.parquet`")
-      val dirPath =
-        s"${graft.Fs.sinkDir("graft_kv_wh")}/default/pp_gate"
-      val total = graft.sources.KvSnapshots.members(dirPath,
-        graft.sources.KvSnapshots.latest(dirPath).get).size
+      val total = graft.sources.KvSnapshots.members(t.dir,
+        graft.sources.KvSnapshots.latest(t.dir).get).size
       val before = graft.sources.KvPartitionPrune.prunedFiles.get()
       val out = s.sql(
         s"""SELECT value, count(*) AS n_orders,
@@ -1943,18 +1777,13 @@ object SourceQueries {
     // predicate must skip most of them at planning, and the rows pin
     // against DuckDB on the same range.
     "catalog_partition_months" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.pm_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING, " +
-        "ts TIMESTAMP) PARTITIONED BY (months(ts)) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "pm_gate", "(key BIGINT, value STRING, ts " +
+        "TIMESTAMP) PARTITIONED BY (months(ts)) TBLPROPERTIES " +
+        "('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
         s"o_orderdate FROM parquet.`$d/orders.parquet`")
-      val dirPath =
-        s"${graft.Fs.sinkDir("graft_kv_wh")}/default/pm_gate"
-      val total = graft.sources.KvSnapshots.members(dirPath,
-        graft.sources.KvSnapshots.latest(dirPath).get).size
+      val total = graft.sources.KvSnapshots.members(t.dir,
+        graft.sources.KvSnapshots.latest(t.dir).get).size
       val before = graft.sources.KvPartitionPrune.prunedFiles.get()
       val out = s.sql(
         s"""SELECT value, count(*) AS n_orders,
@@ -1985,10 +1814,7 @@ object SourceQueries {
     // files (require()d on the zone-map counter), and the rows pin
     // against DuckDB over raw orders.
     "catalog_colstats_prune" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.csp_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING, " +
+      val t = KvGate.table(s, "csp_gate", "(key BIGINT, value STRING, " +
         "price DOUBLE) TBLPROPERTIES ('snapshots'='true')")
       for ((lo, hi) <- Seq((0, 100000), (100000, 200000),
           (200000, 10000000)))
@@ -2018,22 +1844,16 @@ object SourceQueries {
     // one OCC manifest commit per epoch, replay-idempotent. Rows pin
     // against DuckDB over the same month slice of raw orders.
     "catalog_stream_partitioned" -> ((s, d) => {
-      registerKvCatalog(s)
-      val src = "graft_kv.default.sp_src"
-      val dst = "graft_kv.default.sp_dst"
-      s.sql(s"DROP TABLE IF EXISTS $src")
-      s.sql(s"DROP TABLE IF EXISTS $dst")
-      s.sql(s"CREATE TABLE $src (key BIGINT, value STRING, " +
-        "ts TIMESTAMP) TBLPROPERTIES ('snapshots'='true')")
-      s.sql(s"CREATE TABLE $dst (key BIGINT, value STRING, " +
-        "ts TIMESTAMP) PARTITIONED BY (months(ts)) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val src = KvGate.table(s, "sp_src", "(key BIGINT, value STRING, ts " +
+        "TIMESTAMP) TBLPROPERTIES ('snapshots'='true')")
+      val dst = KvGate.table(s, "sp_dst", "(key BIGINT, value STRING, ts " +
+        "TIMESTAMP) PARTITIONED BY (months(ts)) TBLPROPERTIES " +
+        "('snapshots'='true')")
       s.sql(s"INSERT INTO $src SELECT o_orderkey, o_orderpriority, " +
         s"o_orderdate FROM parquet.`$d/orders.parquet`")
-      val cp = graft.Fs.sinkDir("sp_cp_" +
-        java.util.UUID.randomUUID().toString.replace("-", ""))
-      StreamGates.run(s.readStream.table(src))(
-        _.option("checkpointLocation", cp).toTable(dst))
+      val cp = KvGate.checkpoint()
+      StreamGates.run(s.readStream.table(src.qualified))(
+        _.option("checkpointLocation", cp).toTable(dst.qualified))
       val before = graft.sources.KvPartitionPrune.prunedFiles.get()
       val out = s.sql(
         s"""SELECT value, count(*) AS n_orders,
@@ -2060,17 +1880,14 @@ object SourceQueries {
     // The rows pin against DuckDB over raw orders split on the same
     // date boundary.
     "catalog_partition_evolution" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.pe_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING, " +
-        "ts TIMESTAMP) PARTITIONED BY (days(ts)) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "pe_gate", "(key BIGINT, value STRING, ts " +
+        "TIMESTAMP) PARTITIONED BY (days(ts)) TBLPROPERTIES " +
+        "('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
         s"o_orderdate FROM parquet.`$d/orders.parquet` " +
         "WHERE o_orderdate < TIMESTAMP '1995-01-01 00:00:00'")
       s.sql("CALL graft_kv.system.set_partition(" +
-        "table => 'default.pe_gate', spec => 'months(ts)')")
+        s"table => ${t.arg}, spec => 'months(ts)')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
         s"o_orderdate FROM parquet.`$d/orders.parquet` " +
         "WHERE o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'")
@@ -2099,10 +1916,7 @@ object SourceQueries {
     // pinned against DuckDB. AQE partition coalescing is pinned off
     // for the INSERT so the layout exists at gate scale too.
     "catalog_sorted_write" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.so_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
+      val t = KvGate.table(s, "so_gate", "(key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true', 'write.sort'='key')")
       graft.Confs.scoped(s,
           "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
@@ -2127,10 +1941,9 @@ object SourceQueries {
       // (sf0.01+) is the same non-zero skipping the old require
       // asserted.
       val prunedDelta = graft.sources.KvZoneMap.prunedFiles.get() - before
-      val dirS = s"${graft.Fs.sinkDir("graft_kv_wh")}/default/so_gate"
       val statsS = graft.sources.KvSnapshots.dataFiles(
-        graft.sources.KvSnapshots.membersWithStats(dirS,
-          graft.sources.KvSnapshots.latest(dirS).get))
+        graft.sources.KvSnapshots.membersWithStats(t.dir,
+          graft.sources.KvSnapshots.latest(t.dir).get))
       val rangedS = statsS
         .filter(f => f.keysKnown && f.minKey.isDefined)
         .sortBy(_.minKey.get)
@@ -2165,22 +1978,17 @@ object SourceQueries {
     // table. Rows pin against DuckDB applying the same DELETE to raw
     // orders.
     "catalog_dml_selective" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.ds_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING, " +
-        "price DOUBLE) TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "ds_gate", "(key BIGINT, value STRING, price " +
+        "DOUBLE) TBLPROPERTIES ('snapshots'='true')")
       for ((lo, hi) <- Seq((0, 100000), (100000, 200000),
           (200000, 10000000)))
         s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
           s"o_totalprice FROM parquet.`$d/orders.parquet` " +
           s"WHERE o_totalprice >= $lo AND o_totalprice < $hi")
-      val dirPath =
-        s"${graft.Fs.sinkDir("graft_kv_wh")}/default/ds_gate"
       def names: Set[String] =
         graft.sources.KvSnapshots.dataFiles(
-          graft.sources.KvSnapshots.membersWithStats(dirPath,
-            graft.sources.KvSnapshots.latest(dirPath).get))
+          graft.sources.KvSnapshots.membersWithStats(t.dir,
+            graft.sources.KvSnapshots.latest(t.dir).get))
           .map(_.name).toSet
       val before = names
       s.sql(s"DELETE FROM $t WHERE price >= 200000.0D")
@@ -2203,17 +2011,12 @@ object SourceQueries {
     // same DELETE from raw orders — if $files misreported a single
     // file or count, the hash breaks. No data file is opened.
     "catalog_files_table" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.ft_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING, " +
-        "price DOUBLE) " +
-        "TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
+      val t = KvGate.table(s, "ft_gate", "(key BIGINT, value STRING, price " +
+        "DOUBLE) TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
         s"o_totalprice FROM parquet.`$d/orders.parquet`")
       s.sql(s"DELETE FROM $t WHERE key % 7 = 0")
-      val files = s.sql("SELECT * FROM " +
-        "graft_kv.default.`ft_gate$files`")
+      val files = s.sql(s"SELECT * FROM ${t.meta("files")}")
       // structural requires: both kinds present, data files carry
       // per-column stats, plain table → no layout token
       val byKind = files.groupBy("kind").count().collect()
@@ -2225,13 +2028,13 @@ object SourceQueries {
         .count() == 0,
         "catalog_files_table: a data file lost its column stats")
       s.sql(
-        """SELECT CAST(sum(CASE WHEN kind = 'data' THEN rows END)
+        s"""SELECT CAST(sum(CASE WHEN kind = 'data' THEN rows END)
           |         AS BIGINT) AS data_rows,
           |       CAST(sum(CASE WHEN kind = 'delete' THEN rows END)
           |         AS BIGINT) AS tombstones,
           |       CAST(sum(CASE WHEN kind = 'data' THEN rows
           |                     ELSE -rows END) AS BIGINT) AS live_rows
-          |FROM graft_kv.default.`ft_gate$files`""".stripMargin)
+          |FROM ${t.meta("files")}""".stripMargin)
     }),
 
     // $partitions METADATA TABLE (Iceberg's `.partitions` shape): the
@@ -2246,34 +2049,28 @@ object SourceQueries {
     // partition-agnostic tombstone files land on the NULL row with
     // the exact tombstone count (the documented honesty rule).
     "catalog_partitions_table" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.pt_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING, " +
-        "ts TIMESTAMP) PARTITIONED BY (months(ts)) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "pt_gate", "(key BIGINT, value STRING, ts " +
+        "TIMESTAMP) PARTITIONED BY (months(ts)) TBLPROPERTIES " +
+        "('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
         "CAST(o_orderdate AS TIMESTAMP) " +
         s"FROM parquet.`$d/orders.parquet`")
-      val parts = s.sql("SELECT * FROM " +
-        "graft_kv.default.`pt_gate$partitions`")
+      val parts = s.sql(s"SELECT * FROM ${t.meta("partitions")}")
       require(parts.where("partition IS NULL").count() == 0,
         "catalog_partitions_table: a member lost its layout token")
       require(parts.where("n_data_files < 1").count() == 0,
         "catalog_partitions_table: a partition lost its files")
       // MoR twin: tombstone files are partition-agnostic → NULL row,
       // exact count, and the data partitions keep tombstones = 0
-      val tm = "graft_kv.default.pt_gate_mor"
-      s.sql(s"DROP TABLE IF EXISTS $tm")
-      s.sql(s"CREATE TABLE $tm (key BIGINT, value STRING, " +
-        "ts TIMESTAMP) PARTITIONED BY (months(ts)) " +
-        "TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
+      val tm = KvGate.table(s, "pt_gate_mor", "(key BIGINT, value STRING, " +
+        "ts TIMESTAMP) PARTITIONED BY (months(ts)) TBLPROPERTIES " +
+        "('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $tm SELECT o_orderkey, o_orderpriority, " +
         "CAST(o_orderdate AS TIMESTAMP) " +
         s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey < 2000")
       s.sql(s"DELETE FROM $tm WHERE key % 7 = 0")
       val morNull = s.sql("SELECT tombstones, n_data_files FROM " +
-        "graft_kv.default.`pt_gate_mor$partitions` " +
+        s"${tm.meta("partitions")} " +
         "WHERE partition IS NULL").collect()
       val expectedDels = s.sql(
         s"""SELECT count(*) FROM parquet.`$d/orders.parquet`
@@ -2284,16 +2081,15 @@ object SourceQueries {
         s"catalog_partitions_table: tombstones misattributed — " +
           s"expected $expectedDels on the NULL row, got " +
           morNull.mkString(", "))
-      require(s.sql("SELECT count(*) FROM " +
-        "graft_kv.default.`pt_gate_mor$partitions` " +
+      require(s.sql(s"SELECT count(*) FROM ${tm.meta("partitions")} " +
         "WHERE partition IS NOT NULL AND tombstones != 0")
         .collect()(0).getLong(0) == 0,
         "catalog_partitions_table: a data partition claimed tombstones")
       s.sql(
-        """SELECT partition,
+        s"""SELECT partition,
           |       CAST(data_rows AS BIGINT) AS data_rows,
           |       min_key, max_key
-          |FROM graft_kv.default.`pt_gate$partitions`
+          |FROM ${t.meta("partitions")}
           |ORDER BY partition""".stripMargin)
     }),
 
@@ -2309,21 +2105,16 @@ object SourceQueries {
     // orders — an over-eager bloom (false negative) drops a group and
     // breaks the hash.
     "catalog_bloom_prune" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.bp_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
+      val t = KvGate.table(s, "bp_gate", "(key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true', 'bloom_cols'='value')")
       for (g <- 0 until 4)
         s.sql(s"INSERT INTO $t SELECT o_orderkey, " +
           "concat('c', o_custkey) " +
           s"FROM parquet.`$d/orders.parquet` " +
           s"WHERE pmod(hash(o_custkey), 4) = $g")
-      val dirPath =
-        s"${graft.Fs.sinkDir("graft_kv_wh")}/default/bp_gate"
       val total = graft.sources.KvSnapshots.dataFiles(
-        graft.sources.KvSnapshots.membersWithStats(dirPath,
-          graft.sources.KvSnapshots.latest(dirPath).get)).size
+        graft.sources.KvSnapshots.membersWithStats(t.dir,
+          graft.sources.KvSnapshots.latest(t.dir).get)).size
       val before = graft.sources.KvBloomPrune.prunedFiles.get()
       val out = s.sql(
         s"""SELECT value, count(*) AS n_orders,
@@ -2353,13 +2144,9 @@ object SourceQueries {
     // file is the sidecar's. The per-probe prune counts are
     // require()d and the surviving rows pinned against DuckDB at UTC.
     "catalog_bloom_temporal" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.bt_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING, " +
-        "ts TIMESTAMP, day DATE, price DOUBLE) " +
-        "TBLPROPERTIES ('snapshots'='true', " +
-        "'bloom_cols'='ts,day,price')")
+      val t = KvGate.table(s, "bt_gate", "(key BIGINT, value STRING, ts " +
+        "TIMESTAMP, day DATE, price DOUBLE) TBLPROPERTIES " +
+        "('snapshots'='true', 'bloom_cols'='ts,day,price')")
       for (g <- 0 until 4)
         s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
           "o_orderdate, CAST(o_orderdate AS DATE), o_totalprice " +
@@ -2415,20 +2202,15 @@ object SourceQueries {
     // of the key-only catalog_minmax_pushdown to the whole column
     // set. Values pin against DuckDB over raw orders.
     "catalog_colagg_pushdown" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.ca_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING, " +
-        "price DOUBLE, ts TIMESTAMP) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "ca_gate", "(key BIGINT, value STRING, price " +
+        "DOUBLE, ts TIMESTAMP) TBLPROPERTIES ('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
         s"o_totalprice, o_orderdate FROM parquet.`$d/orders.parquet`")
       graft.sources.KvAggScan.served.set(0)
       val df = s.sql(s"SELECT count(*) AS n_orders, " +
         "min(price) AS min_price, max(price) AS max_price, " +
         "unix_micros(min(ts)) AS min_ts_us, " +
-        "unix_micros(max(ts)) AS max_ts_us FROM $t"
-          .replace("$t", t))
+        s"unix_micros(max(ts)) AS max_ts_us FROM $t")
       val rows = df.collect()
       require(graft.sources.KvAggScan.served.get() > 0,
         "catalog_colagg_pushdown: aggregates were answered by a " +
@@ -2448,14 +2230,11 @@ object SourceQueries {
     // a 2-D dashboard filter opening every file and opening ~sqrt of
     // them.
     "catalog_zorder_prune" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.zp_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING, ck BIGINT, " +
-        "price DOUBLE) TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "zp_gate", "(key BIGINT, value STRING, ck " +
+        "BIGINT, price DOUBLE) TBLPROPERTIES ('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
         s"o_custkey, o_totalprice FROM parquet.`$d/orders.parquet`")
-      s.sql("CALL graft_kv.system.zorder(table => 'default.zp_gate', " +
+      s.sql(s"CALL graft_kv.system.zorder(table => ${t.arg}, " +
         "cols => 'ck,price', target_files => 16)")
       val before = graft.sources.KvZoneMap.prunedFiles.get()
       val out = s.sql(
@@ -2483,24 +2262,15 @@ object SourceQueries {
     // time-travel/CDC out, all through the same manifests batch
     // writers commit to.
     "catalog_stream_sink" -> ((s, d) => {
-      registerKvCatalog(s)
-      val src = "graft_kv.default.sk_src"
-      val dst = "graft_kv.default.sk_dst"
-      s.sql(s"DROP TABLE IF EXISTS $src")
-      s.sql(s"DROP TABLE IF EXISTS $dst")
-      s.sql(s"CREATE TABLE $src (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true')")
-      s.sql(s"CREATE TABLE $dst (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val src = KvGate.table(s, "sk_src", Snapshotted)
+      val dst = KvGate.table(s, "sk_dst", Snapshotted)
       for (r <- 0 to 2)
         s.sql(s"INSERT INTO $src SELECT o_orderkey, o_orderpriority " +
           s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 3 = $r")
-      val cp = graft.Fs.sinkDir("sk_cp_" +
-        java.util.UUID.randomUUID().toString.replace("-", ""))
-      StreamGates.run(s.readStream.table(src))(
-        _.option("checkpointLocation", cp).toTable(dst))
-      val dstDir = s"${graft.Fs.sinkDir("graft_kv_wh")}/default/sk_dst"
-      val nSnaps = graft.sources.KvSnapshots.versions(dstDir).size
+      val cp = KvGate.checkpoint()
+      StreamGates.run(s.readStream.table(src.qualified))(
+        _.option("checkpointLocation", cp).toTable(dst.qualified))
+      val nSnaps = graft.sources.KvSnapshots.versions(dst.dir).size
       require(nSnaps == 3,
         s"catalog_stream_sink: expected 3 epoch commits, got $nSnaps")
       s.sql(
@@ -2525,34 +2295,25 @@ object SourceQueries {
     // what makes streaming ingest and the SPJ layout coexist
     // unattended.
     "catalog_auto_compact" -> ((s, d) => {
-      registerKvCatalog(s)
-      val src = "graft_kv.default.ac_src"
-      val dst = "graft_kv.default.ac_dst"
-      s.sql(s"DROP TABLE IF EXISTS $src")
-      s.sql(s"DROP TABLE IF EXISTS $dst")
-      s.sql(s"CREATE TABLE $src (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true')")
-      s.sql(s"CREATE TABLE $dst (key BIGINT, value STRING) " +
-        "PARTITIONED BY (bucket(4, key)) " +
-        "TBLPROPERTIES ('snapshots'='true', " +
-        "'write.auto_compact'='2')")
+      val src = KvGate.table(s, "ac_src", Snapshotted)
+      val dst = KvGate.table(s, "ac_dst", "(key BIGINT, value STRING) " +
+        "PARTITIONED BY (bucket(4, key)) TBLPROPERTIES " +
+        "('snapshots'='true', 'write.auto_compact'='2')")
       for (r <- 0 to 5)
         s.sql(s"INSERT INTO $src SELECT o_orderkey, o_orderpriority " +
           s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 6 = $r")
       val fired0 = graft.sources.KvAutoCompact.compactions.get()
-      val cp = graft.Fs.sinkDir("ac_cp_" +
-        java.util.UUID.randomUUID().toString.replace("-", ""))
-      StreamGates.run(s.readStream.table(src))(
-        _.option("checkpointLocation", cp).toTable(dst))
-      val dstDir = s"${graft.Fs.sinkDir("graft_kv_wh")}/default/ac_dst"
+      val cp = KvGate.checkpoint()
+      StreamGates.run(s.readStream.table(src.qualified))(
+        _.option("checkpointLocation", cp).toTable(dst.qualified))
       val fired =
         graft.sources.KvAutoCompact.compactions.get() - fired0
       require(fired >= 1,
         "catalog_auto_compact: the policy never fired across six " +
           "trickle epochs")
-      val head = graft.sources.KvSnapshots.latest(dstDir).get
+      val head = graft.sources.KvSnapshots.latest(dst.dir).get
       val perBucket = graft.sources.KvSnapshots.dataFiles(
-          graft.sources.KvSnapshots.membersWithStats(dstDir, head))
+          graft.sources.KvSnapshots.membersWithStats(dst.dir, head))
         .groupBy(f =>
           graft.sources.KvBucketing.fileBucket(f.name).getOrElse(-1))
         .map { case (b, fs) => b -> fs.size }
@@ -2566,7 +2327,7 @@ object SourceQueries {
       // rewrites are invisible
       val ch = s.sql(
         s"""SELECT _change_type, count(*) AS n
-           |FROM graft_kv.default.`ac_dst$$changes`
+           |FROM ${dst.meta("changes")}
            |GROUP BY 1""".stripMargin).collect()
       val nOrders = s.sql(s"SELECT count(*) FROM " +
         s"parquet.`$d/orders.parquet`").collect()(0).getLong(0)
@@ -2591,20 +2352,16 @@ object SourceQueries {
     // log and retained files otherwise grow without bound. Rows pin
     // against DuckDB over raw orders.
     "catalog_auto_expire" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.ae_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
+      val t = KvGate.table(s, "ae_gate", "(key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true', 'expire.keep_last'='3')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 6 = 0")
       s.sql("CALL graft_kv.system.tag(" +
-        "table => 'default.ae_gate', name => 'baseline')") // pins v1
+        s"table => ${t.arg}, name => 'baseline')") // pins v1
       for (r <- 1 to 5)
         s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
           s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 6 = $r")
-      val dir = s"${graft.Fs.sinkDir("graft_kv_wh")}/default/ae_gate"
-      val retained = graft.sources.KvSnapshots.versions(dir)
+      val retained = graft.sources.KvSnapshots.versions(t.dir)
       require(retained == Seq(1, 4, 5, 6),
         s"catalog_auto_expire: expected versions 1 (tagged), 4, 5, 6" +
           s" — got ${retained.mkString(", ")}")
@@ -2639,21 +2396,17 @@ object SourceQueries {
     // published staged rows, minus the DELETE — from raw parquet; the
     // never-published second branch must leave no trace in it.
     "catalog_wap" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.wap_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
-        "TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "wap_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`") // main v1
       s.sql("CALL graft_kv.system.create_branch(" +
-        "table => 'default.wap_gate', name => 'audit')")
+        s"table => ${t.arg}, name => 'audit')")
       graft.Tables.orders(s, d)
         .where("o_orderkey % 3 = 0")
         .selectExpr("o_orderkey + 20000000 AS key",
           "concat('W-', o_orderpriority) AS value")
-        .writeTo(t).option("branch", "audit").append()
-      val mainCnt = s.table(t).count()
+        .writeTo(t.qualified).option("branch", "audit").append()
+      val mainCnt = s.table(t.qualified).count()
       val origCnt = graft.Tables.orders(s, d).count()
       require(mainCnt == origCnt,
         s"catalog_wap: branch write leaked into main " +
@@ -2664,25 +2417,25 @@ object SourceQueries {
       require(auditCnt > mainCnt,
         "catalog_wap: the audit read is missing the staged rows")
       s.sql("CALL graft_kv.system.fast_forward(" +
-        "table => 'default.wap_gate', branch => 'audit')")
-      require(s.table(t).count() == auditCnt,
+        s"table => ${t.arg}, branch => 'audit')")
+      require(s.table(t.qualified).count() == auditCnt,
         "catalog_wap: fast_forward did not publish the branch head")
       s.sql("CALL graft_kv.system.drop_branch(" +
-        "table => 'default.wap_gate', name => 'audit')")
+        s"table => ${t.arg}, name => 'audit')")
       // Second branch: stage rows, then garble main with a CoW DELETE
       // (file-replacing) and expire everything untagged.
       s.sql("CALL graft_kv.system.create_branch(" +
-        "table => 'default.wap_gate', name => 'stage2')")
+        s"table => ${t.arg}, name => 'stage2')")
       graft.Tables.orders(s, d)
         .where("o_orderkey % 7 = 0")
         .selectExpr("o_orderkey + 30000000 AS key",
           "'S2' AS value")
-        .writeTo(t).option("branch", "stage2").append()
+        .writeTo(t.qualified).option("branch", "stage2").append()
       val staged2 = graft.Tables.orders(s, d)
         .where("o_orderkey % 7 = 0").count()
       s.sql(s"DELETE FROM $t WHERE key % 2 = 0") // CoW rewrite
       s.sql("CALL graft_kv.system.expire_snapshots(" +
-        "table => 'default.wap_gate', keep_last => 1)")
+        s"table => ${t.arg}, keep_last => 1)")
       val stage2Cnt = s.sql(
         s"SELECT count(*) FROM $t VERSION AS OF 'stage2'")
         .collect().head.getLong(0)
@@ -2708,11 +2461,8 @@ object SourceQueries {
     // temporal extrema against DuckDB recomputing from the raw
     // parquet at UTC.
     "catalog_ts_column" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.ts_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING, " +
-        "ts TIMESTAMP, day DATE) TBLPROPERTIES ('snapshots'='true')")
+      val t = KvGate.table(s, "ts_gate", "(key BIGINT, value STRING, ts " +
+        "TIMESTAMP, day DATE) TBLPROPERTIES ('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
         "o_orderdate, CAST(o_orderdate AS DATE) " +
         s"FROM parquet.`$d/orders.parquet`") // v1
@@ -2751,10 +2501,7 @@ object SourceQueries {
     // rows all cancel must VANISH (HAVING), exactly as a true MV
     // refresh would drop them.
     "catalog_incremental_mv" -> ((s, d) => {
-      registerKvCatalog(s)
-      val t = "graft_kv.default.mv_gate"
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      s.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
+      val t = KvGate.table(s, "mv_gate", "(key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
         s"FROM parquet.`$d/orders.parquet`")
@@ -2767,7 +2514,7 @@ object SourceQueries {
            |           ELSE -1 END) AS n_orders,
            |       sum(CASE _change_type WHEN 'insert' THEN key
            |           ELSE -key END) AS sum_keys
-           |FROM graft_kv.default.`mv_gate$$changes`
+           |FROM ${t.meta("changes")}
            |GROUP BY value
            |HAVING sum(CASE _change_type WHEN 'insert' THEN 1
            |           ELSE -1 END) > 0

@@ -1457,8 +1457,9 @@ object KvPartitionReader {
   */
 class KvRowLevelOperation(
     path: String, cmd: RowLevelOperation.Command,
-    buckets: Option[Int] = None, snapshots: Boolean = false,
-    sorted: Boolean = false)
+    buckets: Option[Int] = None,
+    partition: Option[(KvBucketing.PartUnit, String)] = None,
+    snapshots: Boolean = false, sorted: Boolean = false)
     extends RowLevelOperation {
 
   override def command(): RowLevelOperation.Command = cmd
@@ -1512,10 +1513,11 @@ class KvRowLevelOperation(
     // catalog, so the bucket function resolves): without it every
     // rewrite task of a bucketed table fans out across ALL buckets —
     // up to n open writers per task and tasks×n files per DML instead
-    // of ~n — and a sorted table's replacement bands stop being
-    // zone-map-prunable. No partition transform is passed.
+    // of ~n — a sorted table's replacement bands stop being
+    // zone-map-prunable, and a partitioned table's rewrite tasks each
+    // write a file per partition they see.
     val requirement = KvJsonlTable.writeRequirement(
-      KvSchema.keyName(want), buckets, partition = None, sorted)
+      KvSchema.keyName(want), buckets, partition, sorted)
     new WriteBuilder {
       override def build(): Write = new KvWrite(path, info.queryId(),
         requirement,
@@ -1544,7 +1546,8 @@ class KvRowLevelOperation(
   * spark.conf.set("spark.sql.catalog.graft_kv.warehouse", dir)
   * }}}
   *
-  * after which the FULL SQL DDL/DML surface resolves against it:
+  * (`KvGate.table` does this for the registered gates), after which
+  * the FULL SQL DDL/DML surface resolves against it:
   * CREATE/DROP TABLE, INSERT INTO/OVERWRITE, SELECT, and — through
   * `SupportsRowLevelOperations` on the table — DELETE FROM, UPDATE
   * and MERGE INTO, the DML triad Spark's built-in file sources don't

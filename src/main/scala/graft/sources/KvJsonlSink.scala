@@ -365,6 +365,16 @@ class KvJsonlTable(
     KvBucketing.readMetaFull(path)
   private def buckets: Option[Int] = meta.buckets
 
+  /** The partition transform as (unit, current column name): what the
+    * table's writes and its copy-on-write rewrite both cluster by.
+    */
+  private lazy val partitionCol: Option[(KvBucketing.PartUnit, String)] =
+    meta.partition.map { case (unit, id) =>
+      unit -> cols.find(_.id == id).map(_.name).getOrElse(
+        throw new IllegalStateException(
+          s"partition field id $id missing from the schema of $path"))
+    }
+
   override def partitioning(): Array[Transform] =
     buckets.toArray.map(n =>
       org.apache.spark.sql.connector.expressions.Expressions
@@ -473,7 +483,7 @@ class KvJsonlTable(
       () => new KvMorRowLevelOperation(path, info.command(), buckets)
     else
       () => new KvRowLevelOperation(path, info.command(),
-        buckets, meta.snapshots, meta.sorted)
+        buckets, partitionCol, meta.snapshots, meta.sorted)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -562,11 +572,7 @@ class KvJsonlTable(
           // partitioned dir still routes rows to their files, it just
           // can't ask for the pre-shuffle.
           if (viaCatalog) buckets else None,
-          if (viaCatalog) meta.partition.map { case (unit, id) =>
-            unit -> cols.find(_.id == id).map(_.name).getOrElse(
-              throw new IllegalStateException(
-                s"partition field id $id missing from the schema of $path"))
-          } else None,
+          if (viaCatalog) partitionCol else None,
           meta.sorted, layoutRewrite),
         new KvJsonlBatchWrite(path, truncateFirst, info.queryId(),
           writeBranch,

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.{KvGate, KvGateTable}
+
 /** Measured evidence for the write.auto_compact policy (round 18) —
   * the two questions a 100 TB operator has before leaving a standing
   * policy on a streaming table:
@@ -34,42 +36,33 @@ object AutoCompactProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_ac_probe").toString
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse", wh)
 
     val rows = sys.env.getOrElse("SPARK_GRAFT_AC_ROWS", "1200000").toLong
     val commits = sys.env.getOrElse("SPARK_GRAFT_AC_COMMITS", "24").toInt
     val threshold = sys.env.getOrElse("SPARK_GRAFT_AC_T", "4").toInt
     val per = rows / commits
 
-    def ingest(table: String, props: String): Double = {
-      spark.sql(s"DROP TABLE IF EXISTS graft_kv.default.$table")
-      spark.sql(s"CREATE TABLE graft_kv.default.$table " +
-        "(key BIGINT, value STRING) PARTITIONED BY (bucket(8, key)) " +
+    def ingest(table: String, props: String): (KvGateTable, Double) = {
+      val t = KvGate.table(spark, table, "(key BIGINT, value STRING) " +
+        "PARTITIONED BY (bucket(8, key)) " +
         s"TBLPROPERTIES ('snapshots'='true'$props)")
       val t0 = System.nanoTime()
       for (c <- 0 until commits)
-        spark.sql(s"INSERT INTO graft_kv.default.$table " +
-          s"SELECT id, concat('v', id) " +
+        spark.sql(s"INSERT INTO $t SELECT id, concat('v', id) " +
           s"FROM range(${c * per}, ${(c + 1) * per})")
-      (System.nanoTime() - t0) / 1e9
+      (t, (System.nanoTime() - t0) / 1e9)
     }
 
-    def filesOf(table: String): Int = {
-      val d = s"$wh/default/$table"
+    def filesOf(t: KvGateTable): Int =
       graft.sources.KvSnapshots.dataFiles(
-        graft.sources.KvSnapshots.membersWithStats(d,
-          graft.sources.KvSnapshots.latest(d).get)).size
-    }
+        graft.sources.KvSnapshots.membersWithStats(t.dir,
+          graft.sources.KvSnapshots.latest(t.dir).get)).size
 
-    def scanTime(table: String): Double =
+    def scanTime(t: KvGateTable): Double =
       (1 to 3).map { _ =>
         val t0 = System.nanoTime()
         spark.sql("SELECT count(*) AS n, sum(length(value)) AS s " +
-          s"FROM graft_kv.default.$table WHERE key >= 0")
+          s"FROM $t WHERE key >= 0")
           .collect()
         (System.nanoTime() - t0) / 1e9
       }.min
@@ -77,18 +70,18 @@ object AutoCompactProbe {
     // warm the whole path once, untimed (codegen, catalog, committer)
     ingest("ac_warm", "")
 
-    val ingestNone = ingest("ac_none", "")
+    val (none, ingestNone) = ingest("ac_none", "")
     val rw0 = graft.sources.KvAutoCompact.rewrittenRows.get()
     val fired0 = graft.sources.KvAutoCompact.compactions.get()
-    val ingestPolicy =
+    val (policy, ingestPolicy) =
       ingest("ac_policy", s", 'write.auto_compact'='$threshold'")
     val fired = graft.sources.KvAutoCompact.compactions.get() - fired0
     val rewritten =
       graft.sources.KvAutoCompact.rewrittenRows.get() - rw0
-    val filesNone = filesOf("ac_none")
-    val filesPolicy = filesOf("ac_policy")
-    val scanNone = scanTime("ac_none")
-    val scanPolicy = scanTime("ac_policy")
+    val filesNone = filesOf(none)
+    val filesPolicy = filesOf(policy)
+    val scanNone = scanTime(none)
+    val scanPolicy = scanTime(policy)
     require(filesPolicy <= 8 * threshold,
       s"policy did not hold the bound: $filesPolicy files")
     require(filesNone == 8 * commits,

@@ -4,6 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.{KvGate, KvGateTable}
+
 /** Scaling evidence for the per-file bloom sidecars (KvBloom.scala):
   * builds a bloomed kv table and a bloom-less twin at 1×/3×/10× rows
   * (16 hash-disjoint value chunks each → 16 files), then times the
@@ -27,20 +29,13 @@ object BloomProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_bloom_probe").toString
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse", wh)
 
     val base = 1000000L
     for (k <- Seq(1, 3, 10)) {
       val n = base * k
-      val (tb, tn) = (s"graft_kv.default.bp_$k",
-        s"graft_kv.default.bn_$k")
-      spark.sql(s"CREATE TABLE $tb (key BIGINT, value STRING) " +
+      val tb = KvGate.table(spark, s"bp_$k", "(key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true', 'bloom_cols'='value')")
-      spark.sql(s"CREATE TABLE $tn (key BIGINT, value STRING) " +
+      val tn = KvGate.table(spark, s"bn_$k", "(key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true')")
       for (g <- 0 until 16; t <- Seq(tb, tn))
         spark.sql(s"INSERT INTO $t SELECT id, concat('u', id) " +
@@ -48,7 +43,7 @@ object BloomProbe {
           s"WHERE pmod(hash(concat('u', id)), 16) = $g")
       // the probed value exists once; its file group holds ~1/16
       val probe = s"u${n / 2}"
-      def time(t: String): Double = {
+      def time(t: KvGateTable): Double = {
         // warm once, then best of 3
         spark.sql(s"SELECT key FROM $t WHERE value = '$probe'").collect()
         (1 to 3).map { _ =>
@@ -67,7 +62,7 @@ object BloomProbe {
       val pruned =
         graft.sources.KvBloomPrune.prunedFiles.get() - before
       val noBloomS = time(tn)
-      val dir = java.nio.file.Paths.get(wh, "default", s"bp_$k")
+      val dir = java.nio.file.Paths.get(tb.dir)
       val sidecarBytes = {
         val s = java.nio.file.Files.list(dir)
         try s.iterator()

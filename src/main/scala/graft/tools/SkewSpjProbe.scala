@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.KvGate
+
 /** Skew evidence for the storage-partitioned-join path (round-16
   * verdict item 4): both SPJ gates pin AQE OFF to assert plan shape,
   * which leaves the question a 100 TB operator actually has — what
@@ -45,11 +47,6 @@ object SkewSpjProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_skew_probe").toString
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse", wh)
 
     val n = sys.env.getOrElse("SPARK_GRAFT_SKEW_ROWS", "2000000").toLong
     // SPARK_GRAFT_HOT_PCT: percentage of fact rows collapsed onto the
@@ -59,13 +56,12 @@ object SkewSpjProbe {
     val hotKey = 1000000L // floorMod(hotKey, 8) = 0 — bucket 0 is hot
 
     def mk(name: String, keyExpr: String): String = {
-      val t = s"graft_kv.default.$name"
-      spark.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
+      val t = KvGate.table(spark, name, "(key BIGINT, value STRING) " +
         "PARTITIONED BY (bucket(8, key)) " +
         "TBLPROPERTIES ('snapshots'='true', 'write.sort'='key')")
       spark.sql(s"INSERT INTO $t SELECT $keyExpr, " +
         s"concat('v', id % 97) FROM range(0, ${n}L)")
-      t
+      t.qualified
     }
     // dim: every key exactly once (hot fact keys still match 1 row)
     val dim = mk("skew_dim", "id")

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.KvGate
+
 /** Scaling evidence for the sorted-SPJ layout (write.sort × bucket —
   * KvScan.outputOrdering): joins two co-bucketed table pairs at
   * 1×/3×/10× rows, one pair SORTED (scan reports key order → the
@@ -28,25 +30,19 @@ object SortedJoinProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_sj_probe").toString
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse", wh)
 
     val base = 1000000L
     for (k <- Seq(1, 3, 10)) {
       val n = base * k
       def mk(name: String, sorted: Boolean): String = {
-        val t = s"graft_kv.default.$name"
         val props = "'snapshots'='true'" +
           (if (sorted) ", 'write.sort'='key'" else "")
-        spark.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
+        val t = KvGate.table(spark, name, "(key BIGINT, value STRING) " +
           s"PARTITIONED BY (bucket(8, key)) TBLPROPERTIES ($props)")
         // shuffled key order so the write-requested sort does real work
         spark.sql(s"INSERT INTO $t SELECT ${n}L - id, " +
           s"concat('v', id % 97) FROM range(0, ${n}L)")
-        t
+        t.qualified
       }
       val (sa, sb) = (mk(s"sj_sa_$k", sorted = true),
         mk(s"sj_sb_$k", sorted = true))

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   */
 class AnalyzeStatsSpec extends SparkTestBase {
 
-  private val Analyzed = Fs.runTable("graft_orders_stats")
-  private val Bare = Fs.runTable("graft_orders_nostats")
+  private lazy val Analyzed = Fs.sessionTable(spark, "graft_orders_stats")
+  private lazy val Bare = Fs.sessionTable(spark, "graft_orders_nostats")
 
   private def recreate(
       name: String,
@@ -119,7 +119,7 @@ class AnalyzeStatsSpec extends SparkTestBase {
     // at 1 and estimates ~90%. At 100 TB this is the difference
     // between planning a broadcast and planning a shuffle for the
     // filtered side of a skewed-dimension join.
-    val tbl = Fs.runTable("graft_skew_hist")
+    val tbl = Fs.sessionTable(spark, "graft_skew_hist")
     Fs.dropTableAndLocation(spark, tbl)
     Tables.orders(spark, sfDir)
       .withColumn("skewed",
@@ -165,9 +165,9 @@ class AnalyzeStatsSpec extends SparkTestBase {
     // reordering on, the optimizer must move the supplier join below
     // the orders join — the 100 TB habit of never carrying rows a
     // later selective join will drop.
-    val liT = Fs.runTable("graft_li_reord")
-    val ordT = Fs.runTable("graft_ord_reord")
-    val supT = Fs.runTable("graft_sup_reord")
+    val liT = Fs.sessionTable(spark, "graft_li_reord")
+    val ordT = Fs.sessionTable(spark, "graft_ord_reord")
+    val supT = Fs.sessionTable(spark, "graft_sup_reord")
     recreate(liT, Tables.lineitem(spark, sfDir))
     recreate(ordT, Tables.orders(spark, sfDir))
     recreate(supT, Tables.supplier(spark, sfDir))

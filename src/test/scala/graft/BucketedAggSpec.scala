@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   */
 class BucketedAggSpec extends SparkTestBase {
 
-  private val Tbl = Fs.runTable("ord_bktagg_spec")
+  private lazy val Tbl = Fs.sessionTable(spark, "ord_bktagg_spec")
 
   test("groupBy on the bucket key aggregates without an exchange") {
     Fs.dropTableAndLocation(spark, Tbl)

@@ -11,10 +11,10 @@ import org.apache.spark.sql.functions._
   */
 class BucketedJoinSpec extends SparkTestBase {
 
-  // Run-id-suffixed names: a concurrent test JVM on the same host
+  // Session-suffixed names: a concurrent test JVM on the same host
   // must not clobber this one's bucketed layout mid-assert.
-  private val LiTbl = Fs.runTable("li_bucketed")
-  private val OrdTbl = Fs.runTable("ord_bucketed")
+  private lazy val LiTbl = Fs.sessionTable(spark, "li_bucketed")
+  private lazy val OrdTbl = Fs.sessionTable(spark, "ord_bucketed")
 
   test("bucketed tables join without a shuffle exchange") {
     val li = Tables.lineitem(spark, sfDir)

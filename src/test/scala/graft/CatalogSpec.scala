@@ -7,9 +7,9 @@ package graft
   */
 class CatalogSpec extends SparkTestBase {
 
-  // The registered query creates its table under the per-process
-  // run-id namespace (see Fs.runTable).
-  private val Tbl = Fs.runTable("graft_nation_cat")
+  // The registered query creates its table under the session's
+  // namespace (see Fs.sessionTable).
+  private lazy val Tbl = Fs.sessionTable(spark, "graft_nation_cat")
 
   test("saveAsTable table is visible to SHOW TABLES, DESCRIBE, Catalog API") {
     // Runs the registered query, which creates the catalog table.

@@ -193,7 +193,7 @@ class KvSnapshotsSpec extends SparkTestBase {
     // but the DELETE rewrite refreshed the current manifest, so the
     // current count IS manifest-answered.
     graft.sources.KvAggScan.served.set(0)
-    val t = "graft_kv.default.mig_gate"
+    val t = graft.sources.KvGateTable(Fs.sessionTable(spark, "mig_gate"))
     val v1 = spark.sql(s"SELECT count(*) FROM $t VERSION AS OF 1")
       .collect().head.getLong(0)
     assert(graft.sources.KvAggScan.served.get() === 0,

@@ -184,6 +184,17 @@ class KvWriteLayoutSpec extends SparkTestBase {
       "ClusteredDistribution(bucket(4, key)) | ")
   }
 
+  test("copy-on-write rewrites of partitioned tables cluster like their inserts") {
+    val dated = table("wl_cow_dated", s"$Timed PARTITIONED BY (days(ts)) $Snap")
+    val composed = table("wl_cow_composed",
+      s"$Timed PARTITIONED BY (months(ts), bucket(2, key)) $Snap")
+    assert(rowLevelWrite(dated) === "ClusteredDistribution(days(ts)) | ")
+    assert(rowLevelWrite(composed) ===
+      "ClusteredDistribution(months(ts), bucket(2, key)) | ")
+    Seq(dated, composed).foreach(t =>
+      assert(rowLevelWrite(t) === tableWrite(t)))
+  }
+
   test("published names and commit order, layout by layout") {
     val plain = table("wn_plain", s"$Plain $Snap")
     // task 0 has rows, task 1 has none: a plain task opens its file
