@@ -45,12 +45,14 @@ object Checkpoints {
   def pin(df: DataFrame): DataFrame =
     reliableDir(df.sparkSession) match {
       case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        // setCheckpointDir is context-global and idempotent for our
-        // purposes: first reliable pin wins; a session that never
-        // configures the key never reaches this branch.
-        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-        df.checkpoint()
+        // The checkpoint dir belongs to the context, not the session:
+        // pointing it at this session's dir and writing happen under
+        // one lock, so a sibling session's pin never lands in this
+        // session's dir, which Fs.release may delete.
+        synchronized {
+          df.sparkSession.sparkContext.setCheckpointDir(dir)
+          df.checkpoint()
+        }
       case None => df.localCheckpoint(true)
     }
 

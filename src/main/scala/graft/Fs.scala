@@ -12,11 +12,11 @@ object Fs {
     * `Files.walk` stream is closed explicitly — it holds directory
     * handles, and the gate/bench JVMs are long-lived.
     *
-    * Race-tolerant by construction: this runs from shutdown hooks
-    * (e.g. the reliable-checkpoint cleanup) CONCURRENTLY with Spark's
-    * own ShutdownHookManager deleting the same tree, so any entry can
-    * vanish between the walk snapshot and its delete — that is a
-    * success (the file is gone), not an error. `deleteIfExists` plus
+    * Race-tolerant by construction: this runs from the [[root]]'s exit
+    * hook and from the reaper, and two JVMs starting at once reap the
+    * same stale tree CONCURRENTLY, so any entry can vanish between the
+    * walk snapshot and its delete — that is a success (the file is
+    * gone), not an error. `deleteIfExists` plus
     * swallowing `NoSuchFileException` covers per-file vanishing; a
     * `DirectoryNotEmptyException` (a child appeared after our
     * snapshot, or a racer re-created one) gets one fresh re-walk
@@ -75,9 +75,6 @@ object Fs {
           "passes (concurrent writer?)")
   }
 
-  def deleteRecursivelyVerified(path: String): Unit =
-    deleteRecursivelyVerified(Paths.get(path))
-
   /** Per-process namespace token: two JVMs on one host (e.g. `sbt
     * test` overlapping a gate Verify run on a CI box) must never
     * share a scratch sink, or they corrupt each other's
@@ -88,14 +85,15 @@ object Fs {
   /** Run-id namespaces isolate concurrent JVMs but orphan every PRIOR
     * run's scratch (a crashed run never cleans up, and its dirs carry
     * a different runId than any cleanup that keys on current names).
-    * So each namespace helper also REAPS stale siblings: same base
-    * name, different run id, untouched longer than this horizon —
-    * far beyond any live gate/bench/test run, so a concurrent run's
-    * fresh scratch is never collected.
+    * So the run root REAPS stale siblings when it is made, and the
+    * warehouse drop reaps stale namesakes: same base name, different
+    * run id, untouched longer than this horizon — far beyond any live
+    * gate/bench/test run, so a concurrent run's fresh scratch is never
+    * collected.
     */
   private val StaleMillis = 6L * 3600 * 1000
 
-  private def reapStaleSiblings(parent: Path, base: String): Unit = {
+  private def reapStale(parent: Path)(ours: String => Boolean): Unit = {
     val cutoff = System.currentTimeMillis() - StaleMillis
     val ls = try Files.list(parent) catch { case _: Exception => return }
     try {
@@ -103,8 +101,7 @@ object Fs {
       ls.iterator().asScala
         .filter { p =>
           val n = p.getFileName.toString
-          (n.startsWith(base + "-") || n.startsWith(base + "_")) &&
-            !n.endsWith(runId) &&
+          ours(n) && !n.endsWith(runId) &&
             (try Files.getLastModifiedTime(p).toMillis < cutoff
              catch { case _: Exception => false })
         }
@@ -112,6 +109,73 @@ object Fs {
         .foreach(p =>
           try deleteRecursively(p) catch { case _: Exception => () })
     } finally ls.close()
+  }
+
+  /** The run's scratch root, `<java.io.tmpdir>/graft-<runId>`: every
+    * file a gate writes outside its fixtures lives under it (the kv
+    * warehouse and each session's [[scratch]] dirs). Made once per
+    * JVM, which is also when the stale run-scoped entries of earlier
+    * runs are reaped: `graft-<runId>`, and `graft_<base>-<runId>` of
+    * the per-base layout before it, never another file of the temp
+    * dir. Deleted when the JVM exits, after Spark's own shutdown hooks
+    * (priority 40) have stopped the context.
+    */
+  lazy val root: Path = {
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    reapStale(tmp)(_.matches("graft([-_].*)?-[0-9a-f]{8}"))
+    val r = Files.createDirectories(tmp.resolve(s"graft-$runId"))
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => try deleteRecursively(r) catch { case _: Throwable => () }, 1)
+    r
+  }
+
+  /** Mark the root as in use. The reaper judges a root by its own
+    * mtime, which files written deeper down do not move, so every
+    * [[scratch]] and [[sessionTable]] call refreshes it: a run that
+    * lasts past the horizon keeps its root.
+    */
+  private def touchRoot(): Unit = Files.setLastModifiedTime(root,
+    java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
+
+  /** `<root>/<session token>`: every [[scratch]] dir of the session. */
+  private[graft] def sessionDir(
+      spark: org.apache.spark.sql.SparkSession): Path =
+    root.resolve(sessionToken(spark))
+
+  /** The session's scratch dir `name`: `<root>/<session token>/<name>`,
+    * with nothing at it (its parent exists). Every call empties it, so
+    * a rerun in one session starts clean, while a sibling session
+    * running the same gate at once writes to its own token dir.
+    * Resolve it with the caller's session: a stream's batches run in
+    * a cloned session with another token.
+    */
+  def scratch(
+      spark: org.apache.spark.sql.SparkSession, name: String): String = {
+    touchRoot()
+    val p = sessionDir(spark).resolve(name)
+    deleteRecursively(p)
+    Files.createDirectories(p.getParent)
+    p.toString
+  }
+
+  /** Forget a session: drop every `graft_kv` and `spark_catalog` table
+    * named with its token ([[sessionTable]]), delete its scratch dir,
+    * and evict its entries from every
+    * [[graft.operators.SessionMemo]]. A long-lived JVM that discards
+    * sessions calls it for each, so nothing a session made outlives
+    * it.
+    */
+  def release(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val suffix = "_" + sessionToken(spark)
+    graft.sources.KvGate.register(spark)
+    Option(Paths.get(graft.sources.KvGate.warehouse, "default").toFile.list)
+      .toSeq.flatten.filter(_.endsWith(suffix)).foreach(t =>
+        spark.sql(s"DROP TABLE IF EXISTS ${graft.sources.KvGateTable(t)}"))
+    spark.catalog.listTables("default").collect()
+      .filter(t => !t.isTemporary && t.name.endsWith(suffix))
+      .foreach(t => dropTableAndLocation(spark, t.name))
+    deleteRecursively(sessionDir(spark))
+    graft.operators.SessionMemo.evict(spark)
   }
 
   /** Replace the small file `target` with `bytes` atomically: write a
@@ -147,17 +211,6 @@ object Fs {
     parts.head.toPath
   }
 
-  /** Canonical scratch-sink path for gate queries that exercise a
-    * write+read-back round trip — run-id suffixed (see [[runId]]);
-    * stable within one JVM so repeated in-process runs overwrite
-    * rather than accumulate, with stale prior-run siblings reaped.
-    */
-  def sinkDir(name: String): String = {
-    reapStaleSiblings(
-      Paths.get(System.getProperty("java.io.tmpdir")), name)
-    s"${System.getProperty("java.io.tmpdir")}/$name-$runId"
-  }
-
   /** The session's share of a table namespace: its UUID, shortened.
     * Sibling sessions of one JVM (and other JVMs) never share it.
     */
@@ -171,8 +224,10 @@ object Fs {
     * instead of a `TableAlreadyExistsException`.
     */
   def sessionTable(
-      spark: org.apache.spark.sql.SparkSession, name: String): String =
+      spark: org.apache.spark.sql.SparkSession, name: String): String = {
+    touchRoot()
     s"${name}_${sessionToken(spark)}"
+  }
 
   /** Drop a managed table AND its warehouse location — an aborted
     * earlier in-process run can orphan the location, which
@@ -188,6 +243,7 @@ object Fs {
       spark.conf.get("spark.sql.warehouse.dir")).getPath)
     deleteRecursively(wh.resolve(table))
     val base = table.stripSuffix("_" + sessionToken(spark))
-    if (base != table) reapStaleSiblings(wh, base)
+    if (base != table)
+      reapStale(wh)(n => n.startsWith(base + "-") || n.startsWith(base + "_"))
   }
 }

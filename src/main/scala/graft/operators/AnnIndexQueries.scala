@@ -49,14 +49,15 @@ object AnnIndexQueries {
   private[operators] def indexDir(s: SparkSession, d: String): String =
     indexCache.getOrCompute(s, d)(build(s, d))
 
-  /** Index root is namespaced per source dir (two fixture scales in
-    * one JVM — the test suites — must not overwrite each other's
-    * index mid-read) and per process (see Fs.sinkDir).
+  /** The session's scratch dir `name-<hash of d>`: an index is
+    * memoized per (session, source dir), so two fixture scales in one
+    * session (the test suites) must not overwrite each other's index
+    * mid-read.
     */
-  private def root(d: String): String = {
+  private def root(s: SparkSession, name: String, d: String): String = {
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"${graft.Fs.sinkDir("graft_ann_index")}/$h"
+    graft.Fs.scratch(s, s"$name-$h")
   }
 
   /** LSH vector store rows for a corpus: NTables rows per vector,
@@ -95,7 +96,7 @@ object AnnIndexQueries {
   }
 
   private def build(s: SparkSession, d: String): String = {
-    val dir = root(d)
+    val dir = root(s, "graft_ann_index", d)
     val emb = embeddings(s, d)
 
     lshRowsOf(emb).write.mode("overwrite")
@@ -161,12 +162,6 @@ object AnnIndexQueries {
   private[graft] def incrIndex(s: SparkSession, d: String): IncrIndex =
     incrCache.getOrCompute(s, d)(buildIncr(s, d))
 
-  private def incrRoot(d: String): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"${graft.Fs.sinkDir("graft_ann_incr")}/$h"
-  }
-
   /** Recursive (relative path, size, mtime) inventory of a layer dir,
     * sorted — the "did the append touch base?" evidence.
     */
@@ -224,8 +219,7 @@ object AnnIndexQueries {
   private[graft] val NDeltas = 2
 
   private def buildIncr(s: SparkSession, d: String): IncrIndex = {
-    val dir = incrRoot(d)
-    graft.Fs.deleteRecursively(dir)
+    val dir = root(s, "graft_ann_incr", d)
     val emb = embeddings(s, d)
 
     // The "history vs arriving days" split: first 80% of vec_ids are

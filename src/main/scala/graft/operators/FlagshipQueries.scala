@@ -211,7 +211,7 @@ object FlagshipQueries {
     "flagship_stream" -> ((spark, _) =>
       graft.streaming.StreamingFlagship.flagshipReport(
         spark,
-        graft.Fs.sinkDir("graft_flagship_snaps"),
+        graft.Fs.scratch(spark, "flagship_snaps"),
         "flagship_stream")),
 
     // S10: union-all accumulation — per-source row counts.

@@ -20,12 +20,6 @@ object MiscQueries {
 
   private def cents(c: org.apache.spark.sql.Column) = Money.cents(c)
 
-  /** Fixed sink path for the write-then-read-back queries: overwrite
-    * mode keeps repeated gate/bench invocations from accumulating
-    * copies. See `graft.Fs.sinkDir` for the namespace convention.
-    */
-  private def sinkDir(name: String): String = graft.Fs.sinkDir(name)
-
   /** Merge-based as-of join over a (event_id, user_id, event_type,
     * tus) frame: each click matched to the user's LATEST view
     * at-or-before it. NOT an inequality join (which plans as a
@@ -315,7 +309,7 @@ object MiscQueries {
     // layout decision that turns a 100 TB scan into a directory pick);
     // the oracle computes the same summary straight from the source.
     "partitioned_sink_prune" -> ((s, d) => {
-      val dir = sinkDir("graft_part_sink")
+      val dir = graft.Fs.scratch(s, "part_sink")
       documents(s, d)
         .write
         .mode("overwrite")
@@ -336,7 +330,7 @@ object MiscQueries {
     // explicit schema, summarized. Oracle reads the source directly,
     // so the sink+source pair must be lossless for the hash to match.
     "jsonl_roundtrip" -> ((s, d) => {
-      val dir = sinkDir("graft_jsonl")
+      val dir = graft.Fs.scratch(s, "jsonl")
       documents(s, d)
         .select(col("doc_id"), col("lang"), col("text"))
         .write
@@ -358,7 +352,7 @@ object MiscQueries {
     // Money goes through as integer cents so the text round-trip is
     // exact by construction.
     "csv_sink_source" -> ((s, d) => {
-      val dir = sinkDir("graft_csv_sink")
+      val dir = graft.Fs.scratch(s, "csv_sink")
       customer(s, d)
         .select(
           col("c_custkey"),
@@ -500,7 +494,7 @@ object MiscQueries {
     // ORIGINAL table, so any padding/offset/cast slip breaks the
     // hash.
     "fixedwidth_scan" -> ((s, d) => {
-      val dir = sinkDir("graft_fixedwidth")
+      val dir = graft.Fs.scratch(s, "fixedwidth")
       nation(s, d)
         .select(format_string("%04d%-20s%04d",
           col("n_nationkey"), col("n_name"), col("n_regionkey"))
@@ -526,7 +520,7 @@ object MiscQueries {
     // The per-line hashes sum inside DECIMAL and re-reduce mod the
     // prime so the checksum cannot overflow at any corpus size.
     "text_sink_source" -> ((s, d) => {
-      val dir = sinkDir("graft_text_sink")
+      val dir = graft.Fs.scratch(s, "text_sink")
       documents(s, d)
         .select(col("text"))
         .write
@@ -548,7 +542,7 @@ object MiscQueries {
     // doubles exactly, unlike the text formats where money had to ride
     // as integer cents.
     "orc_sink_source" -> ((s, d) => {
-      val dir = sinkDir("graft_orc_sink")
+      val dir = graft.Fs.scratch(s, "orc_sink")
       part(s, d)
         .select(col("p_partkey"), col("p_brand"), col("p_retailprice"))
         .write
@@ -956,8 +950,7 @@ object MiscQueries {
     // aggregates only over clean rows, so partially-parsed corrupt
     // rows can't leak into the totals.
     "csv_corrupt_recovery" -> ((s, _) => {
-      val dir = sinkDir("graft_csv_corrupt")
-      graft.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
+      val dir = graft.Fs.scratch(s, "csv_corrupt")
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(dir))
       val lines = Seq(
@@ -998,8 +991,7 @@ object MiscQueries {
     // NULL, nothing rewrites. The summary pins row conservation and
     // the null-backfill split.
     "schema_evolution_merge" -> ((s, d) => {
-      val dir = sinkDir("graft_schema_evo")
-      graft.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
+      val dir = graft.Fs.scratch(s, "schema_evo")
       nation(s, d)
         .select("n_nationkey", "n_name")
         .write.mode("overwrite").parquet(s"$dir/gen1")
@@ -1055,8 +1047,7 @@ object MiscQueries {
     // if the metadata column reports the true provenance of every
     // row, and n_files pins the one-file-per-partition layout.
     "file_metadata_scan" -> ((s, d) => {
-      val dir = sinkDir("graft_meta_scan")
-      graft.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
+      val dir = graft.Fs.scratch(s, "meta_scan")
       events(s, d)
         .withColumn("bucket", (col("event_id") % 4).cast("long"))
         .repartition(col("bucket"))
@@ -1082,8 +1073,7 @@ object MiscQueries {
     // failing the batch; good rows keep flowing. The corruption mix
     // is fixed so the recovery counts pin exactly.
     "json_corrupt_recovery" -> ((s, _) => {
-      val dir = sinkDir("graft_json_corrupt")
-      graft.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
+      val dir = graft.Fs.scratch(s, "json_corrupt")
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(dir))
       val lines = Seq(
@@ -1128,8 +1118,7 @@ object MiscQueries {
     // metrics). At 100 TB this is what keeps a fact⋈dim join from
     // scanning every partition when the dim filter is selective.
     "dpp_join" -> ((s, d) => {
-      val base = graft.Fs.sinkDir("graft_dpp")
-      graft.Fs.deleteRecursively(java.nio.file.Paths.get(base))
+      val base = graft.Fs.scratch(s, "dpp")
       val factDir = s"$base/fact"
       events(s, d)
         .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
@@ -1240,7 +1229,7 @@ object MiscQueries {
     // under-overwrite (old rows surviving) and over-overwrite (other
     // days clobbered) break the hash.
     "partition_overwrite" -> ((s, d) => {
-      val dir = sinkDir("graft_part_overwrite")
+      val dir = graft.Fs.scratch(s, "part_overwrite")
       val ev = events(s, d).select(
         date_format(date_trunc("day", col("ts")), "yyyy-MM-dd")
           .as("day"),
@@ -1270,15 +1259,15 @@ object MiscQueries {
     // The `binaryFile` SOURCE surface: opaque files read as rows of
     // (path, modificationTime, length, content) — how a multimodal
     // ingest first touches image/audio archives before any codec
-    // runs. The fixture pages are staged from the classpath to a
-    // run-scoped directory, read back through the format, and pinned
+    // runs. The fixture pages are staged from the classpath to the
+    // session's scratch, read back through the format, and pinned
     // by (name, length, md5) against literal expectations — so the
     // source's content fidelity is the thing under test. At 100 TB
     // the reader parallelizes per file (and per block for large
     // files with a configured maxPartitionBytes); metadata-only
     // projections (path/length) never load content.
     "binaryfile_scan" -> ((s, d) => {
-      val dir = sinkDir("graft_binfile")
+      val dir = graft.Fs.scratch(s, "binfile")
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(dir))
       for (p <- Seq("empire.html", "imdb.html", "ranker.html")) {

@@ -183,8 +183,7 @@ object SourceQueries {
     // drives the protocol edges (duplicate attempts, temp invisibility)
     // directly.
     "v2_sink_roundtrip" -> ((s, d) => {
-      val dir = graft.Fs.sinkDir("graft_v2_sink")
-      graft.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
+      val dir = graft.Fs.scratch(s, "v2_sink")
       graft.Tables.orders(s, d)
         .select(
           col("o_orderkey").as("key"),
@@ -750,8 +749,7 @@ object SourceQueries {
       // pruning key) — materialize the string-keyed dim once, then
       // filter it selectively at query time, the shape of a real
       // doc_id dimension
-      val dimDir =
-        s"${graft.Fs.sinkDir("srt_dim")}/${graft.Fs.sessionToken(s)}"
+      val dimDir = graft.Fs.scratch(s, "srt_dim")
       s.sql(s"SELECT concat('d-', doc_id) AS k, doc_id AS raw_id " +
         s"FROM parquet.`$d/documents.parquet`")
         .write.mode("overwrite").parquet(dimDir)
@@ -1664,8 +1662,7 @@ object SourceQueries {
       s.sql(s"INSERT INTO $t SELECT vec_id, " +
         "CAST(embedding AS ARRAY<DOUBLE>) " +
         s"FROM parquet.`$d/embeddings.parquet` WHERE vec_id < $cut")
-      val idx =
-        s"${graft.Fs.sinkDir("graft_ann_pinned")}/${graft.Fs.sessionToken(s)}"
+      val idx = graft.Fs.scratch(s, "ann_pinned")
       AnnIndexQueries.buildPinned(s, t.qualified, t.dir, idx)
       val v1df = AnnIndexQueries.servePinned(s, idx)
       val v1rows = v1df.collect()
@@ -1851,7 +1848,7 @@ object SourceQueries {
         "('snapshots'='true')")
       s.sql(s"INSERT INTO $src SELECT o_orderkey, o_orderpriority, " +
         s"o_orderdate FROM parquet.`$d/orders.parquet`")
-      val cp = KvGate.checkpoint()
+      val cp = graft.Fs.scratch(s, "sp_ckpt")
       StreamGates.run(s.readStream.table(src.qualified))(
         _.option("checkpointLocation", cp).toTable(dst.qualified))
       val before = graft.sources.KvPartitionPrune.prunedFiles.get()
@@ -2267,7 +2264,7 @@ object SourceQueries {
       for (r <- 0 to 2)
         s.sql(s"INSERT INTO $src SELECT o_orderkey, o_orderpriority " +
           s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 3 = $r")
-      val cp = KvGate.checkpoint()
+      val cp = graft.Fs.scratch(s, "sk_ckpt")
       StreamGates.run(s.readStream.table(src.qualified))(
         _.option("checkpointLocation", cp).toTable(dst.qualified))
       val nSnaps = graft.sources.KvSnapshots.versions(dst.dir).size
@@ -2303,7 +2300,7 @@ object SourceQueries {
         s.sql(s"INSERT INTO $src SELECT o_orderkey, o_orderpriority " +
           s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 6 = $r")
       val fired0 = graft.sources.KvAutoCompact.compactions.get()
-      val cp = KvGate.checkpoint()
+      val cp = graft.Fs.scratch(s, "ac_ckpt")
       StreamGates.run(s.readStream.table(src.qualified))(
         _.option("checkpointLocation", cp).toTable(dst.qualified))
       val fired =
@@ -2567,8 +2564,7 @@ object SourceQueries {
     // reads. Counts/sums are associative, so the final state ≡ the
     // oracle's one-shot aggregation.
     "stream_foreach_upsert" -> ((s, d) => {
-      val base = graft.Fs.sinkDir("graft_feb")
-      graft.Fs.deleteRecursively(base)
+      val base = graft.Fs.scratch(s, "feb")
       val ingest = s"$base/ingest"
       val ev = graft.Tables.events(s, d).select(
         col("event_id"), col("event_type"),
@@ -2621,8 +2617,7 @@ object SourceQueries {
     // exact file counts (one file per shuffle partition, so both
     // counts are plan-determined constants).
     "compact_small_files" -> ((s, d) => {
-      val base = graft.Fs.sinkDir("graft_compact")
-      graft.Fs.deleteRecursively(base)
+      val base = graft.Fs.scratch(s, "compact")
       val small = s"$base/small"
       val compacted = s"$base/compacted"
       graft.Tables.events(s, d)

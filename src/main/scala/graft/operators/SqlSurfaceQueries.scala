@@ -185,7 +185,7 @@ object SqlSurfaceQueries {
     // shredding was on).
     "variant_shredded_roundtrip" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      val dir = graft.Fs.sinkDir("graft_variant_shred")
+      val dir = graft.Fs.scratch(s, "variant_shred")
       // Both write-side confs default ON in Spark 4.1; pinned here so
       // a deployment-level override can't silently degrade the gate
       // to unshredded binary. They are write-side only: the returned

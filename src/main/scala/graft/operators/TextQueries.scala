@@ -2201,19 +2201,12 @@ object TextQueries {
     "dedup_clusters_reliable" -> ((s, d) => {
       val rs = reliableSessionCache.getOrCompute(s, d) {
         val ns = s.newSession()
-        val dir = graft.Fs.sinkDir("graft-reliable-ckpt")
         // Checkpoint FILES outlive unpin (only blocks are released);
-        // reap our own dir at JVM exit instead of leaving it to a
-        // later process's 6-hour stale collector. The hook races
-        // Spark's own ShutdownHookManager on the same tree —
-        // deleteRecursively tolerates vanishing entries, and the
-        // catch-all keeps any residual FS surprise (permission flaps
-        // on half-deleted dirs) out of the shutdown log tail: cleanup
-        // of a tmpdir tree is best-effort by definition.
-        sys.addShutdownHook(
-          try graft.Fs.deleteRecursively(dir)
-          catch { case _: Throwable => () })
-        ns.conf.set(graft.Checkpoints.ConfKey, dir)
+        // they live in the parent's scratch, which Fs.release or the
+        // root's exit hook deletes, suffixed by the source dir since
+        // the child and its labels are memoized per (s, d).
+        ns.conf.set(graft.Checkpoints.ConfKey, graft.Fs.scratch(s,
+          s"reliable_ckpt-${new java.io.File(d).getName}"))
         ns
       }
       clusterLabels(rs, d).orderBy("doc_id")

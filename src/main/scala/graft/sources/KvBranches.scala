@@ -124,7 +124,7 @@ object KvBranches {
     */
   def drop(path: String, name: String): Int = {
     val h = head(path, name) // also validates existence
-    graft.Fs.deleteRecursivelyVerified(branchDir(path, name).toString)
+    graft.Fs.deleteRecursivelyVerified(branchDir(path, name))
     h
   }
 

@@ -2239,8 +2239,7 @@ class KvCatalog extends TableCatalog with SupportsNamespaces
         }
         // Strict delete: a silently-surviving _snapshots dir after the
         // meta flip would corrupt version numbering on re-enable.
-        graft.Fs.deleteRecursivelyVerified(
-          p.resolve(KvSnapshots.DirName).toString)
+        graft.Fs.deleteRecursivelyVerified(p.resolve(KvSnapshots.DirName))
 
       // ---- BLOOM COLUMNS can be enabled / re-targeted / disabled
       // after CREATE, metadata-only and always SOUND: files written
@@ -2443,7 +2442,7 @@ class KvCatalog extends TableCatalog with SupportsNamespaces
     if (!java.nio.file.Files.isDirectory(p)) false
     // Verified delete: returning true while the directory survives
     // would make the next CREATE TABLE throw TableAlreadyExists.
-    else { graft.Fs.deleteRecursivelyVerified(p.toString); true }
+    else { graft.Fs.deleteRecursivelyVerified(p); true }
   }
 
   override def renameTable(
@@ -2620,8 +2619,7 @@ class KvCatalog extends TableCatalog with SupportsNamespaces
     if (!cascade && listTables(ns).nonEmpty)
       throw new IllegalStateException(
         s"namespace ${ns.head} is not empty")
-    graft.Fs.deleteRecursivelyVerified(
-      warehouse.resolve(ns.head).toString)
+    graft.Fs.deleteRecursivelyVerified(warehouse.resolve(ns.head))
     true
   }
 }

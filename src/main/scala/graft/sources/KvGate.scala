@@ -39,14 +39,11 @@ final case class KvGateTable(name: String) {
 object KvGate {
   val Catalog = "graft_kv"
 
-  /** The run's warehouse, derived once per JVM: `Fs.sinkDir` lists the
-    * whole temp dir to reap stale siblings.
-    */
-  lazy val warehouse: String = graft.Fs.sinkDir("graft_kv_wh")
+  /** The run's warehouse, under the run's scratch root. */
+  lazy val warehouse: String = s"${graft.Fs.root}/kv_wh"
 
-  private lazy val checkpoints: String = graft.Fs.sinkDir("graft_kv_ckpt")
-
-  private def register(s: SparkSession): Unit = {
+  /** Point the session's `graft_kv` catalog at the run's warehouse. */
+  private[graft] def register(s: SparkSession): Unit = {
     s.conf.set(s"spark.sql.catalog.$Catalog", classOf[KvCatalog].getName)
     s.conf.set(s"spark.sql.catalog.$Catalog.warehouse", warehouse)
   }
@@ -63,10 +60,4 @@ object KvGate {
     s.sql(s"CREATE TABLE $t $ddl")
     t
   }
-
-  /** A fresh checkpoint directory for a gate's stream, under one
-    * run-scoped parent that later runs reap with the warehouse.
-    */
-  def checkpoint(): String =
-    s"$checkpoints/${java.util.UUID.randomUUID()}"
 }

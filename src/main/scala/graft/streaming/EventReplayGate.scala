@@ -101,8 +101,7 @@ object EventReplayGate {
   }
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Fs.sinkDir("graft_event_replay")
-    graft.Fs.deleteRecursively(base)
+    val base = graft.Fs.scratch(spark, "event_replay")
     val stage = s"$base/stage"
     val out = s"$base/out"
     val ckpt = s"$base/ckpt"
@@ -170,8 +169,7 @@ object EventReplayGate {
   val NLogParts = 3
 
   def runPartitioned(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Fs.sinkDir("graft_event_replay_parts")
-    graft.Fs.deleteRecursively(base)
+    val base = graft.Fs.scratch(spark, "event_replay_parts")
     val out = s"$base/out"
     val ckpt = s"$base/ckpt"
 
@@ -232,8 +230,7 @@ object EventReplayGate {
     * renumbered partition all break the hash.
     */
   def runMetadata(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Fs.sinkDir("graft_event_replay_meta")
-    graft.Fs.deleteRecursively(base)
+    val base = graft.Fs.scratch(spark, "event_replay_meta")
     val lines = eventLines(spark, dir)
     val logs = stageLogParts(lines, NLogParts, base)
     // Admission scaled to the INPUT, not a constant: a fixed 5000-row

@@ -306,23 +306,20 @@ object Sessionize {
     * parquet files with a checkpoint directory (exactly-once via the
     * file-sink manifest log), then read back. Append mode emits each
     * closed session once, so the files equal the memory-sink output —
-    * same oracle. Fixed paths, wiped before each run: a re-run against
-    * a stale checkpoint would see no new data and emit nothing.
+    * same oracle. The scratch dir is emptied before each run: a
+    * re-run against a stale checkpoint would see no new data and emit
+    * nothing.
     */
   def runStatefulStreamToParquet(
       spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_sessionize_parquet")
-    val out = base.resolve("out")
-    val ckpt = base.resolve("ckpt")
-    graft.Fs.deleteRecursively(base)
+    val base = graft.Fs.scratch(spark, "sessionize_parquet")
     StreamGates.run(sessionizeStreamStateful(spark, dir))(
       _.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", ckpt.toString)
+        .option("path", s"$base/out")
+        .option("checkpointLocation", s"$base/ckpt")
         .start())
     StreamingEvents.assertEmitted(
-      spark.read.parquet(out.toString), "sessionize_sink_parquet")
+      spark.read.parquet(s"$base/out"), "sessionize_sink_parquet")
   }
 
   /** Streaming form over the events file stream. */

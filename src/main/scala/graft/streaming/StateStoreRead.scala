@@ -36,24 +36,18 @@ object StateStoreRead {
     val events = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"),
         graft.operators.Money.cents(col("value")).as("cents"))
-    StreamGates.stage(events, StreamGates.stageDir("graft_state_read"),
+    StreamGates.stage(events, graft.Fs.scratch(spark, "state_read"),
       StreamGates.keyRanges(events, "event_id", 3))
   }
-
-  /** Checkpoint root for a given source dir — sf-suffixed so tests
-    * (sf0.001) and the driver's Verify (sf0.01) in one JVM never read
-    * each other's state.
-    */
-  private[graft] def ckptDir(dir: String): String =
-    s"${graft.Fs.sinkDir("graft_state_read")}/ckpt-" +
-      new java.io.File(dir).getName
 
   private val ckptCache = new graft.operators.SessionMemo[String]
 
   /** Run the replayed streaming agg to completion ONCE per (session,
     * dir) and return the checkpoint root — shared by the final-state
     * and change-feed readers, exactly as one production checkpoint
-    * serves every offline inspection.
+    * serves every offline inspection. The root is suffixed by the
+    * source dir, so tests (sf0.001) and a Verify run (sf0.01)
+    * in one session never read each other's state.
     *
     * The aggregation is not a `transformWithState`, so the runner
     * leaves the session default (HDFS-backed) provider in place; the
@@ -66,8 +60,8 @@ object StateStoreRead {
       spark: SparkSession, dir: String): String =
     ckptCache.getOrCompute(spark, dir) {
       val staged = stage(spark, dir)
-      val ckpt = ckptDir(dir)
-      graft.Fs.deleteRecursively(ckpt)
+      val ckpt = graft.Fs.scratch(spark,
+        s"state_read_ckpt-${new java.io.File(dir).getName}")
       // Only the committed state matters, so the rows go to the noop
       // sink.
       val progress = StreamGates.run(

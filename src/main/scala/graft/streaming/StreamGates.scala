@@ -109,13 +109,6 @@ object StreamGates {
     */
   case class Staged(dir: String, schema: StructType)
 
-  /** `Fs.sinkDir(name)/stage`, emptied. */
-  private[graft] def stageDir(name: String): String = {
-    val d = s"${graft.Fs.sinkDir(name)}/stage"
-    graft.Fs.deleteRecursively(d)
-    d
-  }
-
   /** `n` slices of `keyCol`'s (long, non-negative) range, equal in
     * width, named `slice_000`… — one "day" of arrivals each.
     */

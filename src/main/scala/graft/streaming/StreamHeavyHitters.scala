@@ -101,7 +101,7 @@ object StreamHeavyHitters {
     */
   private def stage(spark: SparkSession, dir: String): StreamGates.Staged = {
     val docs = StreamNearDup.docs(spark, dir)
-    StreamGates.stage(docs, StreamGates.stageDir("graft_stream_hh"),
+    StreamGates.stage(docs, graft.Fs.scratch(spark, "stream_hh"),
       StreamGates.keyRanges(docs, "doc_id", 4))
   }
 

@@ -80,7 +80,7 @@ object StreamKllQuantile {
     val df = graft.Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_orderpriority"),
         graft.operators.Money.cents(col("o_totalprice")).as("v"))
-    StreamGates.stage(df, StreamGates.stageDir("graft_stream_kll"),
+    StreamGates.stage(df, graft.Fs.scratch(spark, "stream_kll"),
       StreamGates.keyRanges(df, "o_orderkey", 4))
   }
 

@@ -209,7 +209,7 @@ object StreamNearDup {
     */
   def run(spark: SparkSession, dir: String, cap: Int): DataFrame = {
     val staged = StreamGates.stage(docs(spark, dir),
-      StreamGates.stageDir("graft_stream_neardup"),
+      graft.Fs.scratch(spark, "stream_neardup"),
       corpusSlices ++ querySlices)
     val (pairs, progress) =
       StreamGates.memory(pipeline(spark, staged, cap), "stream_neardup")

@@ -30,7 +30,7 @@ object StreamObserve {
     val events = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("value"), col("props"))
     val staged = StreamGates.stage(events,
-      StreamGates.stageDir("graft_stream_observe"),
+      graft.Fs.scratch(spark, "stream_observe"),
       StreamGates.keyRanges(events, "event_id", 3))
     // The rows are not the answer, so they go to the noop sink; the
     // metrics ride the progress.

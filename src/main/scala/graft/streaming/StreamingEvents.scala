@@ -370,7 +370,7 @@ object StreamingEvents {
     * medallion contract is that hop 2 consumes the EXISTING silver
     * layer — re-running ingest per consumer would both double the
     * bench cost and wipe the first consumer's sink mid-run (the build
-    * starts by clearing its fixed scratch dir).
+    * starts by clearing its scratch dir).
     */
   def lateDropRunWithPath(
       spark: SparkSession, dir: String): (String, Long, Long) =
@@ -382,8 +382,8 @@ object StreamingEvents {
 
   private def lateDropRunUncached(
       spark: SparkSession, dir: String): (String, Long, Long) = {
-    val base = graft.Fs.sinkDir("graft_late_drop")
-    graft.Fs.deleteRecursively(base)
+    val base = graft.Fs.scratch(spark,
+      s"late_drop-${new java.io.File(dir).getName}")
     val ingest = s"$base/ingest"
     val out = s"$base/sink"
     val ckpt = s"$base/ckpt"

@@ -27,9 +27,7 @@ object StreamingFlagship {
     * the file names carry source identity, as crawler drops do.
     */
   def writeSnapshots(dir: String): Unit = {
-    val d = java.nio.file.Paths.get(dir)
-    graft.Fs.deleteRecursively(d)
-    java.nio.file.Files.createDirectories(d)
+    val d = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     PageParsers.fixturePages().foreach { p =>
       java.nio.file.Files.write(
         d.resolve(java.net.URI.create(p.url).getHost + ".html"),

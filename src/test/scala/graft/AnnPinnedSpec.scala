@@ -11,15 +11,10 @@ import graft.sources.KvSnapshots
   */
 class AnnPinnedSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   private def dirOf(table: String): String =
-    s"${Fs.sinkDir("graft_kv_wh")}/default/$table"
+    graft.sources.KvGateTable(table).dir
 
   test("delete after the pin refuses the incremental refresh") {
     cat()
@@ -30,7 +25,7 @@ class AnnPinnedSpec extends SparkTestBase {
     spark.sql(s"INSERT INTO $t SELECT vec_id, " +
       "CAST(embedding AS ARRAY<DOUBLE>) " +
       s"FROM parquet.`$sfDir/embeddings.parquet`")
-    val idx = s"${Fs.sinkDir("graft_ann_pinned")}/spec"
+    val idx = Fs.scratch(spark, "ann_pinned_spec")
     AnnIndexQueries.buildPinned(spark, t, dirOf("annp_spec"), idx)
     assert(AnnIndexQueries.servePinned(spark, idx).count() > 0)
     spark.sql(s"DELETE FROM $t WHERE vec_id = 7")
@@ -57,7 +52,7 @@ class AnnPinnedSpec extends SparkTestBase {
     spark.sql(s"INSERT INTO $t SELECT vec_id, " +
       "CAST(embedding AS ARRAY<DOUBLE>) " +
       s"FROM parquet.`$sfDir/embeddings.parquet`")
-    val idx = s"${Fs.sinkDir("graft_ann_pinned")}/spec_maint"
+    val idx = Fs.scratch(spark, "ann_pinned_spec_maint")
     AnnIndexQueries.buildPinned(spark, t, dirOf("annp_maint"), idx)
     spark.sql("CALL graft_kv.system.cluster(" +
       "table => 'default.annp_maint', target_files => 2)").collect()

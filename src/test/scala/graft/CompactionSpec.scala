@@ -18,7 +18,7 @@ class CompactionSpec extends SparkTestBase {
       .count(_.endsWith(".parquet"))
 
   test("compaction rewrites fragmented output at a target file count") {
-    val base = System.getProperty("java.io.tmpdir") + "/graft_compaction"
+    val base = Fs.scratch(spark, "compaction")
     val fragmented = s"$base/fragmented"
     val compacted = s"$base/compacted"
     val docs = Tables

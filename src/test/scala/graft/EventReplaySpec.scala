@@ -46,7 +46,7 @@ class EventReplaySpec extends SparkTestBase {
 
   private def writeLog(name: String, ids: Range): String = {
     val p = java.nio.file.Paths.get(
-      Fs.sinkDir("graft_replay_unit"), name)
+      Fs.scratch(spark, s"replay_unit_$name"))
     java.nio.file.Files.createDirectories(p.getParent)
     java.nio.file.Files.write(p,
       ids.map(i => s"$i\t${i * 1000}\t${i % 7}\tclick\t$i")
@@ -130,7 +130,7 @@ class EventReplaySpec extends SparkTestBase {
     // confused the two would land mid-line and fail the 5-field parse.
     val n = 2 * EventReplayLineIndex.Stride + 421
     val p = java.nio.file.Paths.get(
-      Fs.sinkDir("graft_replay_unit"), "seek.tsv")
+      Fs.scratch(spark, "replay_unit_seek.tsv"))
     java.nio.file.Files.createDirectories(p.getParent)
     java.nio.file.Files.write(p,
       (0 until n).map(i => s"$i\t${i * 7L}\t${i % 5}\tclick_é中$i\t$i")

@@ -14,8 +14,7 @@ import graft.streaming.StreamingEvents
 class ForeachBatchSpec extends SparkTestBase {
 
   test("foreachBatch complete-mode sink converges to the batch result") {
-    val out = System.getProperty("java.io.tmpdir") + "/graft_feb_sink"
-    Fs.deleteRecursively(out)
+    val out = Fs.scratch(spark, "feb_sink")
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
     val q = StreamingEvents
       .windowedAgg(StreamingEvents.stream(spark, sfDir))

@@ -1,15 +1,16 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Fs.deleteRecursively` must tolerate a concurrent deleter of the
-  * SAME tree: the reliable-checkpoint shutdown hook races Spark's own
-  * ShutdownHookManager temp cleanup, and round 12's driver bench tail
-  * ended with a NoSuchFileException stack from exactly that window
-  * (a `.crc` vanished between the walk snapshot and its delete).
+  * SAME tree: a per-gate shutdown hook once raced Spark's own temp
+  * cleanup, and a bench tail ended with a NoSuchFileException stack
+  * from exactly that window (a `.crc` vanished between the walk
+  * snapshot and its delete); two JVMs reaping one stale root race the
+  * same way. The session cases pin the scratch root's contract.
   */
 class FsSpec extends AnyFunSuite {
 
@@ -131,5 +132,77 @@ class FsSpec extends AnyFunSuite {
     assert(left === Seq(graft.sources.KvBucketing.MetaFile),
       s"temp files left behind: $left")
     Fs.deleteRecursively(dir)
+  }
+
+  test("scratch is per session and emptied on every call") {
+    val (a, b) =
+      (SparkTestBase.session.newSession(), SparkTestBase.session.newSession())
+    try {
+      val d = Fs.scratch(a, "fsspec")
+      assert(d != Fs.scratch(b, "fsspec"))
+      Files.createDirectories(Paths.get(d))
+      Files.write(Paths.get(d, "f"), Array[Byte](1))
+      assert(Fs.scratch(a, "fsspec") === d)
+      assert(!Files.exists(Paths.get(d)))
+    } finally { Fs.release(a); Fs.release(b) }
+  }
+
+  test("scratch and session tables keep the run root fresh for the reaper") {
+    val s = SparkTestBase.session.newSession()
+    def age() = System.currentTimeMillis() -
+      Files.getLastModifiedTime(Fs.root).toMillis
+    // An hour back: older than any refresh, younger than the horizon.
+    val old = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 3600L * 1000)
+    try {
+      Files.setLastModifiedTime(Fs.root, old)
+      Fs.scratch(s, "fsspec")
+      assert(age() < 60000L)
+      Files.setLastModifiedTime(Fs.root, old)
+      Fs.sessionTable(s, "fsspec_fresh")
+      assert(age() < 60000L)
+    } finally Fs.release(s)
+  }
+
+  test("release drops the session's kv tables and scratch, not a sibling's") {
+    val (a, b) =
+      (SparkTestBase.session.newSession(), SparkTestBase.session.newSession())
+    val ta = graft.sources.KvGate.table(a, "fsspec_rel")
+    val tb = graft.sources.KvGate.table(b, "fsspec_rel")
+    Files.createDirectories(Paths.get(Fs.scratch(a, "fsspec")))
+    Files.createDirectories(Paths.get(Fs.scratch(b, "fsspec")))
+    Fs.release(a)
+    assert(!Files.exists(Paths.get(ta.dir)))
+    assert(!Files.exists(Fs.sessionDir(a)))
+    assert(Files.exists(Paths.get(tb.dir)))
+    assert(Files.exists(Fs.sessionDir(b)))
+    Fs.release(b)
+    assert(!Files.exists(Paths.get(tb.dir)))
+  }
+
+  test("after a release, a memoized value of the session computes again") {
+    val s = SparkTestBase.session.newSession()
+    val memo = new graft.operators.SessionMemo[Int]
+    var builds = 0
+    def get() = memo.getOrCompute(s, "d") { builds += 1; builds }
+    assert(get() === 1)
+    assert(get() === 1)
+    Fs.release(s)
+    assert(get() === 2)
+    Fs.release(s)
+  }
+
+  test("only Fs decides where scratch lives in src/main") {
+    // A fixed base under the temp dir would be shared by every session
+    // of the JVM; scratch goes through Fs.scratch instead.
+    val offenders = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") &&
+        f.getFileName.toString != "Fs.scala")
+      .filter { f =>
+        val text = new String(Files.readAllBytes(f), "UTF-8")
+        text.contains("java.io.tmpdir") || text.contains("sinkDir")
+      }
+      .toSeq
+    assert(offenders.isEmpty, offenders.mkString(", "))
   }
 }

@@ -17,12 +17,7 @@ import graft.sources.KvSchema
   */
 class KvArrayColumnSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   test("registry round-trips array types (canonical containsNull)") {
     val dir = java.nio.file.Files
@@ -90,8 +85,7 @@ class KvArrayColumnSpec extends SparkTestBase {
       "TBLPROPERTIES ('snapshots'='true')")
     spark.sql(s"INSERT INTO $t SELECT id, array(CAST(id AS DOUBLE), " +
       "CAST(id AS DOUBLE) * 0.5) FROM range(10)")
-    val dir = java.nio.file.Paths
-      .get(Fs.sinkDir("graft_kv_wh"), "default", "arr_spec").toString
+    val dir = graft.sources.KvGateTable("arr_spec").dir
     val vFirst = graft.sources.KvSnapshots.latest(dir).get
     val r = spark.sql(
         s"SELECT emb FROM $t WHERE key = 4").head.getSeq[Double](0)

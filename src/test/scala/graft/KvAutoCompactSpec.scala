@@ -9,15 +9,10 @@ import graft.sources.{KvAutoCompact, KvSnapshots}
   */
 class KvAutoCompactSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   private def dirOf(table: String): String =
-    s"${Fs.sinkDir("graft_kv_wh")}/default/$table"
+    graft.sources.KvGateTable(table).dir
 
   test("batch trickle: the third INSERT's write path compacts") {
     cat()

@@ -15,15 +15,10 @@ import graft.sources.{KvBloom, KvBloomPrune}
   */
 class KvBloomSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   private def warehouseDir(table: String): String =
-    s"${Fs.sinkDir("graft_kv_wh")}/default/$table"
+    graft.sources.KvGateTable(table).dir
 
   test("no false negatives, FPR bounded (1000 in, 10000 probes)") {
     val b = new KvBloom.Builder

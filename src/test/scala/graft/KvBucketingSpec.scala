@@ -18,15 +18,10 @@ import graft.sources.{KvBucketing, KvJsonlSink, KvRuntimeFilter}
   */
 class KvBucketingSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   private def warehouseDir(table: String): String =
-    s"${Fs.sinkDir("graft_kv_wh")}/default/$table"
+    graft.sources.KvGateTable(table).dir
 
   test("bucket spec: floorMod semantics, null to bucket 0") {
     assert(KvBucketing.bucketOf(7L, 4) === 3)

@@ -14,12 +14,7 @@ import java.nio.file.{Files, Paths}
   */
 class KvCatalogDdlSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   test("drop then create the same table never spuriously collides") {
     cat()
@@ -32,8 +27,8 @@ class KvCatalogDdlSpec extends SparkTestBase {
       spark.sql(s"DROP TABLE $t")
       // the verified delete's postcondition: the directory is GONE,
       // so the next CREATE in the loop cannot see a stale dir
-      assert(!Files.exists(Paths.get(
-        Fs.sinkDir("graft_kv_wh"), "default", "ddl_cycle")))
+      assert(!Files.exists(
+        Paths.get(graft.sources.KvGateTable("ddl_cycle").dir)))
     }
   }
 

@@ -10,12 +10,7 @@ import org.apache.spark.sql.functions._
   */
 class KvCatalogDmlSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   private def freshTable(name: String): String = {
     cat()
@@ -133,7 +128,7 @@ class KvCatalogDmlSpec extends SparkTestBase {
     src.addData((1L, "a"), (2L, "b"))
     val q = src.toDF().toDF("key", "value")
       .writeStream
-      .option("checkpointLocation", Fs.sinkDir("graft_kv_strm_ckpt"))
+      .option("checkpointLocation", Fs.scratch(spark, "kv_strm_ckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .toTable(t)
     q.awaitTermination()

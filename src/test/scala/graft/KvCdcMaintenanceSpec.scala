@@ -14,15 +14,10 @@ import graft.sources.KvSnapshots
   */
 class KvCdcMaintenanceSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   private def dirOf(table: String): String =
-    s"${Fs.sinkDir("graft_kv_wh")}/default/$table"
+    graft.sources.KvGateTable(table).dir
 
   private def changesByVersion(table: String): Map[Int, Long] =
     spark.sql(
@@ -68,13 +63,13 @@ class KvCdcMaintenanceSpec extends SparkTestBase {
     spark.sql("CALL graft_kv.system.cluster(" +
       "table => 'default.cdcm_feed', target_files => 2)").collect()
     spark.sql(s"INSERT INTO $t SELECT id, 'b' FROM range(40, 70)")
-    val out = Fs.sinkDir("cdcm_feed_out")
+    val out = Fs.scratch(spark, "cdcm_feed_out")
     val q = spark.readStream
       .table("graft_kv.default.cdcm_feed")
       .writeStream
       .format("parquet")
       .option("path", out)
-      .option("checkpointLocation", Fs.sinkDir("cdcm_feed_ckpt"))
+      .option("checkpointLocation", Fs.scratch(spark, "cdcm_feed_ckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination(120000)

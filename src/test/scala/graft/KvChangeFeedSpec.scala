@@ -19,12 +19,7 @@ import graft.sources.{KvJsonlSink, KvVersionOffset}
   */
 class KvChangeFeedSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   private def snapTable(name: String): String = {
     cat()

@@ -21,15 +21,10 @@ import graft.sources.{KvBucketing, KvJsonlSink, KvSnapshots}
   */
 class KvComposedLayoutSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   private def dirOf(table: String): String =
-    Paths.get(Fs.sinkDir("graft_kv_wh"), "default", table).toString
+    graft.sources.KvGateTable(table).dir
 
   /** Every data file's name tokens match a recomputation of BOTH
     * routings from its rows.

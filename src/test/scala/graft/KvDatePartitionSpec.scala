@@ -13,15 +13,10 @@ import graft.sources.{KvBucketing, KvPartitionPrune}
   */
 class KvDatePartitionSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   private def dir(t: String): String =
-    Paths.get(Fs.sinkDir("graft_kv_wh"), "default", t).toString
+    graft.sources.KvGateTable(t).dir
 
   private def jsonlFiles(t: String): Seq[String] = {
     val s = Files.list(Paths.get(dir(t)))

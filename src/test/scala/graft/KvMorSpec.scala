@@ -17,15 +17,10 @@ import graft.sources.{KvBloom, KvBucketing, KvSnapshots}
   */
 class KvMorSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   private def dir(table: String): String =
-    s"${Fs.sinkDir("graft_kv_wh")}/default/$table"
+    graft.sources.KvGateTable(table).dir
 
   private def morTable(name: String): String = {
     cat()

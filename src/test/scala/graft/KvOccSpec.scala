@@ -80,10 +80,7 @@ class KvOccSpec extends SparkTestBase {
   }
 
   test("two concurrent spark INSERTs both land (append rebase)") {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
+    graft.sources.KvGate.register(spark)
     val t = "graft_kv.default.occ_race"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
@@ -109,21 +106,18 @@ class KvOccSpec extends SparkTestBase {
       .head().getLong(0) === 1000L)
     assert(spark.sql(s"SELECT count(DISTINCT key) c FROM $t")
       .head().getLong(0) === 1000L)
-    val d = s"${Fs.sinkDir("graft_kv_wh")}/default/occ_race"
+    val d = graft.sources.KvGateTable("occ_race").dir
     assert(KvSnapshots.versions(d) === Seq(1, 2))
   }
 
   test("MoR commit aborts on a conflicting concurrent delete") {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
+    graft.sources.KvGate.register(spark)
     val t = "graft_kv.default.occ_mor"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (key BIGINT, value STRING) " +
       "TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
     spark.sql(s"INSERT INTO $t SELECT id, concat('v', id) FROM range(20)")
-    val d = s"${Fs.sinkDir("graft_kv_wh")}/default/occ_mor"
+    val d = graft.sources.KvGateTable("occ_mor").dir
     // Simulate a concurrent DELETE landing between this DML's scan
     // and its commit: hand-commit a tombstone manifest under the
     // operation's feet. The delta commit must then REFUSE — its

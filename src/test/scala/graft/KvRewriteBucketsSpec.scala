@@ -15,15 +15,10 @@ import graft.sources.{KvBucketing, KvJsonlSink, KvSnapshots}
   */
 class KvRewriteBucketsSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   private def dirOf(table: String): String =
-    s"${Fs.sinkDir("graft_kv_wh")}/default/$table"
+    graft.sources.KvGateTable(table).dir
 
   private def scanOrdering(table: String): Int = {
     val df = spark.sql(s"SELECT key, value FROM $table")

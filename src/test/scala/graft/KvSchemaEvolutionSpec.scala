@@ -13,15 +13,10 @@ import graft.sources.KvSchema
   */
 class KvSchemaEvolutionSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   private def dir(t: String): String =
-    Paths.get(Fs.sinkDir("graft_kv_wh"), "default", t).toString
+    graft.sources.KvGateTable(t).dir
 
   private def fresh(
       t: String, ddlCols: String = "key BIGINT, value STRING",
@@ -227,8 +222,7 @@ class KvSchemaEvolutionSpec extends SparkTestBase {
       "CAST(id AS DOUBLE) FROM range(0, 40)")
     // every data file carries its bucket suffix (routing survived the
     // evolved writer)
-    val dir = java.nio.file.Paths.get(
-      Fs.sinkDir("graft_kv_wh"), "default", "evo_bucket").toString
+    val dir = graft.sources.KvGateTable("evo_bucket").dir
     val members = graft.sources.KvSnapshots.membersWithStats(
       dir, graft.sources.KvSnapshots.latest(dir).get)
     val dataFiles = graft.sources.KvSnapshots.dataFiles(members)

@@ -21,12 +21,7 @@ import graft.sources.{KvBucketing, KvJsonlSink, KvSnapshots}
   */
 class KvSortedStreamSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   test("streamed epochs into a sorted bucketed table land key-sorted") {
     cat()
@@ -36,7 +31,7 @@ class KvSortedStreamSpec extends SparkTestBase {
       "PARTITIONED BY (bucket(2, key)) " +
       "TBLPROPERTIES ('snapshots'='true', 'write.sort'='key')")
     val dir = Paths.get(
-      s"${Fs.sinkDir("graft_kv_wh")}/default/ss_sorted")
+      graft.sources.KvGateTable("ss_sorted").dir)
 
     // input arrives key-DESCENDING: only the write-requested sort can
     // land it ascending

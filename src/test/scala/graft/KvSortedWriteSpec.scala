@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Paths
-
 import graft.sources.{KvSnapshots, KvZoneMap}
 
 /** Standing write-path sort order (TBLPROPERTIES 'write.sort'='key'):
@@ -11,15 +9,10 @@ import graft.sources.{KvSnapshots, KvZoneMap}
   */
 class KvSortedWriteSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   private def dir(t: String): String =
-    Paths.get(Fs.sinkDir("graft_kv_wh"), "default", t).toString
+    graft.sources.KvGateTable(t).dir
 
   private def stats(t: String) =
     KvSnapshots.dataFiles(KvSnapshots.membersWithStats(

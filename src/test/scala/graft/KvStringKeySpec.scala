@@ -23,15 +23,10 @@ import graft.sources.{KvBucketing, KvJsonlSink, KvSchema, KvSnapshots}
   */
 class KvStringKeySpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   private def dirOf(table: String): String =
-    Paths.get(Fs.sinkDir("graft_kv_wh"), "default", table).toString
+    graft.sources.KvGateTable(table).dir
 
   test("line format round-trips string keys (escapes, null, unicode)") {
     import org.apache.spark.sql.catalyst.InternalRow

@@ -7,12 +7,7 @@ package graft
   */
 class KvTagsSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   private def fresh(name: String): String = {
     cat()
@@ -52,7 +47,7 @@ class KvTagsSpec extends SparkTestBase {
       "table => 'default.tag_keep', keep_last => 1)")
     // v1 (tagged) and v3 (tail) survive; v2 is gone — a GAP
     assert(graft.sources.KvSnapshots.versions(
-      Fs.sinkDir("graft_kv_wh") + "/default/tag_keep") === Seq(1, 3))
+      graft.sources.KvGateTable("tag_keep").dir) === Seq(1, 3))
     assert(spark.sql(s"SELECT count(*) FROM $t VERSION AS OF 'pin1'")
       .head.getLong(0) == 1)
     assert(spark.sql(s"SELECT count(*) FROM $t").head.getLong(0) == 3)

@@ -23,19 +23,14 @@ import graft.sources.{KvJsonlBatchWrite, KvJsonlSink, KvJsonlStreamingWrite, KvJ
   */
 class KvWriteLayoutSpec extends SparkTestBase {
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft_kv",
-      classOf[graft.sources.KvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_kv.warehouse",
-      Fs.sinkDir("graft_kv_wh"))
-  }
+  private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   /** (Re)create `graft_kv.default.<name>` and return its directory. */
   private def table(name: String, ddl: String): String = {
     cat()
     spark.sql(s"DROP TABLE IF EXISTS graft_kv.default.$name")
     spark.sql(s"CREATE TABLE graft_kv.default.$name $ddl")
-    Paths.get(Fs.sinkDir("graft_kv_wh"), "default", name).toString
+    graft.sources.KvGateTable(name).dir
   }
 
   private val Plain = "(key BIGINT, value STRING)"

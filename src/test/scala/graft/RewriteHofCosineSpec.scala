@@ -37,7 +37,7 @@ class RewriteHofCosineSpec extends SparkTestBase {
     // scan keeps the plan out of local-relation folding, so the
     // rewritten expression itself must carry the ANSI throw.
     import spark.implicits._
-    val dir = Fs.sinkDir("graft_zero_vec") + "/v"
+    val dir = Fs.scratch(spark, "zero_vec") + "/v"
     Seq((0L, Seq(0f, 0f)), (1L, Seq(3f, 4f)))
       .toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(dir)

@@ -47,10 +47,10 @@ class StateStoreReadSpec extends SparkTestBase {
 
   test("state-metadata names one agg operator at the pinned width") {
     // The previous test just finished the run; its checkpoint is the
-    // run-id-stable dir.
+    // session's memoized one.
     SparkEntry.queries("state_store_read")(spark, sfDir).collect()
     val meta = spark.read.format("state-metadata")
-      .load(graft.streaming.StateStoreRead.ckptDir(sfDir))
+      .load(graft.streaming.StateStoreRead.ensureCheckpoint(spark, sfDir))
       .select("operatorId", "operatorName", "stateStoreName",
         "numPartitions")
       .collect()

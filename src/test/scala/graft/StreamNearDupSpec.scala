@@ -34,8 +34,7 @@ class StreamNearDupSpec extends SparkTestBase {
     // lost or replayed bucket changes pairs and breaks the batch-twin
     // equality.
     val cap = graft.operators.TextQueries.BucketCap
-    val base = Fs.sinkDir("graft_neardup_restart")
-    Fs.deleteRecursively(base)
+    val base = Fs.scratch(spark, "neardup_restart")
     val stageDir = s"$base/stage"
     val ckpt = s"$base/ckpt"
     val out = s"$base/out"

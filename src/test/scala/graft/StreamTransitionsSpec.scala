@@ -21,8 +21,7 @@ class StreamTransitionsSpec extends SparkTestBase {
       "org.apache.spark.sql.execution.streaming.state." +
         "RocksDBStateStoreProvider")
     try {
-    val base = Fs.sinkDir("graft_stream_transitions")
-    Fs.deleteRecursively(base)
+    val base = Fs.scratch(spark, "stream_transitions")
     val stage = s"$base/stage"
 
     // Stage the fixture events as three time-ordered slices — one
@@ -100,8 +99,7 @@ class StreamTransitionsSpec extends SparkTestBase {
       "org.apache.spark.sql.execution.streaming.state." +
         "RocksDBStateStoreProvider")
     try {
-      val base = Fs.sinkDir("graft_stream_funnel_spec")
-      Fs.deleteRecursively(base)
+      val base = Fs.scratch(spark, "stream_funnel_spec")
       val stage = s"$base/stage"
       val ev = Tables.events(spark, sfDir)
         .select(col("user_id"), col("event_id"), col("event_type"),

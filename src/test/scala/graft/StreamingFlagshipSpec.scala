@@ -15,7 +15,7 @@ class StreamingFlagshipSpec extends SparkTestBase {
     val streamed = StreamingFlagship
       .flagshipReport(
         spark,
-        Fs.sinkDir("graft_flagship_snaps_spec"),
+        Fs.scratch(spark, "flagship_snaps_spec"),
         "flagship_stream_spec")
       .collect()
       .toSeq

@@ -48,14 +48,16 @@ class VariantShreddedSpec extends SparkTestBase {
   }
 
   test("typed_value present iff shredding confs are on") {
-    // The registered query just wrote the shredded copy here.
+    // The registered query just wrote the shredded copy in the
+    // session's scratch.
     SparkEntry.queries("variant_shredded_roundtrip")(spark, sfDir)
       .collect()
-    val shredded = footerSchema(Fs.sinkDir("graft_variant_shred"))
+    val shredded =
+      footerSchema(Fs.sessionDir(spark).resolve("variant_shred").toString)
     assert(shredded.contains("typed_value"),
       s"shredded write carries no typed_value column:\n$shredded")
 
-    val controlDir = Fs.sinkDir("graft_variant_unshred")
+    val controlDir = Fs.scratch(spark, "variant_unshred")
     val key = "spark.sql.variant.writeShredding.enabled"
     val prev = spark.conf.getOption(key)
     try {
