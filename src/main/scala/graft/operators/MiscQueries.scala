@@ -194,14 +194,13 @@ object MiscQueries {
     // cold majority of the dimension is never replicated. The hot-key
     // list is not declared — [[SkewKeys.hotOrderCustkeys]] finds it
     // from the same per-key grouped count `skew_report` publishes
-    // (≥1.5× mean order count, bounded top-8 collect), exactly the
-    // flow graft.SkewBench documents. SkewBench measured the variants
-    // at sf0.1 with an 80% hot key: blanket salting 0.93× naive
-    // (dim-replication overhead EXCEEDS the skew cost), targeted
-    // salting 1.79× (SCALE.md "Skew"). Salting is semantics-
-    // preserving, so the result must equal the unsalted join — the
-    // oracle runs the plain join; SkewKeysSpec pins that the salt
-    // engages exactly on the above-threshold keys.
+    // (≥1.5× mean order count, bounded top-8 collect). SCALE.md's
+    // "Skew" row has the measurement of the variants at sf0.1 with
+    // an 80% hot key: blanket salting 0.93× naive (dim-replication
+    // overhead EXCEEDS the skew cost), targeted salting 1.79×.
+    // Salting is semantics-preserving, so the result must equal the
+    // unsalted join — the oracle runs the plain join; SkewKeysSpec
+    // pins that the salt engages exactly on the above-threshold keys.
     "join_salted_targeted" -> ((s, d) => {
       val nSalts = 8
       val hotKeys = typedLit(SkewKeys.hotOrderCustkeys(s, d))

@@ -33,19 +33,6 @@ object KvAutoCompact {
   /** Policy compactions run in this JVM (gate/spec observability). */
   val compactions = new java.util.concurrent.atomic.AtomicLong
 
-  /** Conflict-skipped policy compactions (observability). */
-  val skippedOnConflict = new java.util.concurrent.atomic.AtomicLong
-
-  /** Rows rewritten by policy compactions in this JVM — what the
-    * write-amplification probe measures. Spare-the-largest victim
-    * choice makes this LSM-like: each ingested row is re-merged
-    * O(log N) times over the table's life, never O(N/threshold).
-    */
-  val rewrittenRows = new java.util.concurrent.atomic.AtomicLong
-
-  /** Policy expirations run in this JVM (observability). */
-  val expirations = new java.util.concurrent.atomic.AtomicLong
-
   /** The post-data-commit policy hook — BOTH standing policies, in
     * the only sound order: compaction first (it appends a
     * maintenance version), then retention (so the keep_last bound
@@ -73,7 +60,6 @@ object KvAutoCompact {
     if (meta.rebucketTarget.isDefined) return
     if (KvSnapshots.versions(path).size <= keep) return
     KvSnapshots.expire(path, keep)
-    expirations.incrementAndGet()
     ()
   }
 
@@ -158,18 +144,13 @@ object KvAutoCompact {
         .mode("append")
         .save(path)
       compactions.incrementAndGet()
-      val vset = victims.toSet
-      rewrittenRows.addAndGet(
-        data.filter(f => vset(f.name)).map(_.rows.max(0L)).sum)
       ()
     } catch {
       // base pin lost to a concurrent commit: the policy re-fires on
       // that commit's own trigger — skipping is the correct move (the
       // user's write already committed; only the advisory rewrite
       // yields)
-      case _: KvSnapshots.CommitConflictException =>
-        skippedOnConflict.incrementAndGet()
-        ()
+      case _: KvSnapshots.CommitConflictException => ()
     }
   }
 }

@@ -3,36 +3,17 @@ package graft.sources
 import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 
-/** Streaming CHANGE FEED over a snapshotted kv table — `spark
-  * .readStream.table("graft_kv.default.t")`, the Delta-CDF /
-  * Iceberg-incremental-read shape: the table's own commit log (its
-  * snapshot manifests, KvSnapshots.scala) doubles as the streaming
-  * offset log.
-  *
-  *   - Offset = manifest VERSION. `initialOffset` is version 0
-  *     (before the first commit); the checkpoint therefore resumes
-  *     mid-history exactly like any other source.
-  *   - One COMMIT per micro-batch (admission control: `latestOffset
-  *     (start, limit)` advances a single version), so batch N carries
-  *     exactly commit N's delta — the grain downstream CDC consumers
-  *     reason about. Under Trigger.AvailableNow the engine keeps
-  *     planning one-commit batches until the drain target captured at
-  *     prepare time is reached.
-  *   - A batch's rows are the files ADDED by its commit
-  *     (`members(v) -- members(v-1)`): exact for append-only history
-  *     (INSERT INTO). A copy-on-write rewrite (DML, INSERT OVERWRITE)
-  *     re-adds its surviving rows and its removals are NOT emitted —
-  *     the documented file-add-feed contract; full CDC would need
-  *     per-commit tombstone manifests.
-  *
-  * Files already committed never change (the sink only ever publishes
-  * new names), so a batch is replayable forever — the property that
-  * makes checkpoint recovery exact.
+/** The offset machinery both kv version streams share — the rows
+  * feed below and the `$changes` stream (KvChanges.scala): offset =
+  * manifest version, admission by commits, the AvailableNow drain
+  * pin and the fail-loud checkpoint check. A subclass only plans a
+  * version range's partitions and reads them. `what` names the
+  * stream in the checkpoint error, `legacyName` in the no-arg
+  * `latestOffset` error.
   */
-class KvChangeFeedStream(
-    path: String, fields: Array[String],
-    cols: Seq[KvSchema.Col] = KvSchema.Legacy,
-    maxBytesPerTrigger: Option[Long] = None)
+abstract class KvVersionStream(
+    path: String, maxBytesPerTrigger: Option[Long], what: String,
+    legacyName: String)
     extends MicroBatchStream
     with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
@@ -67,7 +48,7 @@ class KvChangeFeedStream(
   // legacy no-arg form must never be called.
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException(
-      "kv changefeed implements SupportsAdmissionControl — " +
+      s"$legacyName implements SupportsAdmissionControl — " +
         "latestOffset(start, limit) is the entry point")
 
   /** Admission: by default ONE commit per micro-batch, whatever the
@@ -94,7 +75,7 @@ class KvChangeFeedStream(
     val latest = KvSnapshots.latest(path).getOrElse(0)
     if (s > latest)
       throw new IllegalStateException(
-        s"change feed of $path resumed from checkpoint version $s, " +
+        s"$what of $path resumed from checkpoint version $s, " +
           s"but the table's latest snapshot is v$latest — the " +
           "checkpoint does not belong to this table's history " +
           "(dropped and recreated?); restart with a fresh checkpoint")
@@ -103,6 +84,44 @@ class KvChangeFeedStream(
   }
 
   override def reportLatestOffset(): Offset = KvVersionOffset(head)
+
+  override def commit(end: Offset): Unit = ()
+
+  override def stop(): Unit = ()
+}
+
+/** Streaming CHANGE FEED over a snapshotted kv table — `spark
+  * .readStream.table("graft_kv.default.t")`, the Delta-CDF /
+  * Iceberg-incremental-read shape: the table's own commit log (its
+  * snapshot manifests, KvSnapshots.scala) doubles as the streaming
+  * offset log.
+  *
+  *   - Offset = manifest VERSION. `initialOffset` is version 0
+  *     (before the first commit); the checkpoint therefore resumes
+  *     mid-history exactly like any other source.
+  *   - One COMMIT per micro-batch (admission control: `latestOffset
+  *     (start, limit)` advances a single version), so batch N carries
+  *     exactly commit N's delta — the grain downstream CDC consumers
+  *     reason about. Under Trigger.AvailableNow the engine keeps
+  *     planning one-commit batches until the drain target captured at
+  *     prepare time is reached.
+  *   - A batch's rows are the files ADDED by its commit
+  *     (`members(v) -- members(v-1)`): exact for append-only history
+  *     (INSERT INTO). A copy-on-write rewrite (DML, INSERT OVERWRITE)
+  *     re-adds its surviving rows and its removals are NOT emitted —
+  *     the documented file-add-feed contract; full CDC would need
+  *     per-commit tombstone manifests.
+  *
+  * Files already committed never change (the sink only ever publishes
+  * new names), so a batch is replayable forever — the property that
+  * makes checkpoint recovery exact.
+  */
+class KvChangeFeedStream(
+    path: String, fields: Array[String],
+    cols: Seq[KvSchema.Col] = KvSchema.Legacy,
+    maxBytesPerTrigger: Option[Long] = None)
+    extends KvVersionStream(
+      path, maxBytesPerTrigger, "change feed", "kv changefeed") {
 
   override def planInputPartitions(
       start: Offset, end: Offset): Array[InputPartition] = {
@@ -170,10 +189,6 @@ class KvChangeFeedStream(
   override def createReaderFactory()
       : org.apache.spark.sql.connector.read.PartitionReaderFactory =
     new KvReaderFactory(fields, Array.empty, cols = cols)
-
-  override def commit(end: Offset): Unit = ()
-
-  override def stop(): Unit = ()
 }
 
 /** `{"version":N}` in the checkpoint offset log. */

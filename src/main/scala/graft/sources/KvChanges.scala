@@ -5,7 +5,7 @@ import java.util
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -320,53 +320,16 @@ class KvChangesReader(
   override def close(): Unit = in.close()
 }
 
-/** Streaming half: identical offset machinery to the rows feed (one
-  * commit per micro-batch, manifest version = offset, AvailableNow
-  * drain target pinned at prepare), but batches carry typed change
-  * rows instead of bare adds.
+/** Streaming half: the rows feed's offset machinery
+  * ([[KvVersionStream]]), but batches carry typed change rows instead
+  * of bare adds.
   */
 class KvChangesStream(
     path: String, fields: Array[String],
     cols: Seq[KvSchema.Col] = KvSchema.Legacy,
     maxBytesPerTrigger: Option[Long] = None)
-    extends MicroBatchStream
-    with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow {
-
-  @volatile private var availableNowEnd: Option[Int] = None
-
-  private def head: Int =
-    availableNowEnd.getOrElse(KvSnapshots.latest(path).getOrElse(0))
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd = Some(KvSnapshots.latest(path).getOrElse(0))
-
-  override def initialOffset(): Offset =
-    KvVersionOffset(
-      KvSnapshots.versions(path).headOption.map(_ - 1).getOrElse(0))
-
-  override def deserializeOffset(json: String): Offset =
-    KvVersionOffset.parse(json)
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "kv changes stream implements SupportsAdmissionControl — " +
-        "latestOffset(start, limit) is the entry point")
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[KvVersionOffset].version
-    val latest = KvSnapshots.latest(path).getOrElse(0)
-    if (s > latest)
-      throw new IllegalStateException(
-        s"changes stream of $path resumed from checkpoint version " +
-          s"$s, but the table's latest snapshot is v$latest — the " +
-          "checkpoint does not belong to this table's history " +
-          "(dropped and recreated?); restart with a fresh checkpoint")
-    KvVersionOffset(KvFeedAdmission.admit(
-      path, s, math.max(s, head), maxBytesPerTrigger))
-  }
-
-  override def reportLatestOffset(): Offset = KvVersionOffset(head)
+    extends KvVersionStream(
+      path, maxBytesPerTrigger, "changes stream", "kv changes stream") {
 
   override def planInputPartitions(
       start: Offset, end: Offset): Array[InputPartition] = {
@@ -392,8 +355,4 @@ class KvChangesStream(
 
   override def createReaderFactory(): PartitionReaderFactory =
     new KvChangesReaderFactory(fields, cols)
-
-  override def commit(end: Offset): Unit = ()
-
-  override def stop(): Unit = ()
 }

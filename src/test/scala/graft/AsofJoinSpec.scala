@@ -28,9 +28,7 @@ class AsofJoinSpec extends SparkTestBase {
 
     // Same plan as the registered query, driven by a synthetic frame:
     // write to a temp dir in the events layout and reuse the query.
-    val dir = java.nio.file.Files
-      .createTempDirectory("asof_spec")
-      .toString
+    val dir = SparkTestBase.tempDir("asof_spec").toString
     evs
       .withColumn("value", lit(0.0))
       .withColumn("props", lit("{}"))

@@ -20,8 +20,7 @@ class FixtureCanarySpec extends SparkTestBase {
   }
 
   test("a drifted column type fails loudly, naming column and types") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_canary").toString
+    val dir = SparkTestBase.tempDir("graft_canary").toString
     try {
       // Same columns, but ts re-encoded as double — a drift the
       // loaders do NOT tolerate.
@@ -42,8 +41,7 @@ class FixtureCanarySpec extends SparkTestBase {
   }
 
   test("a renamed/missing column fails loudly with both layouts") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_canary2").toString
+    val dir = SparkTestBase.tempDir("graft_canary2").toString
     try {
       Tables.events(spark, sfDir)
         .withColumnRenamed("user_id", "uid")

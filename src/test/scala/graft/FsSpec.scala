@@ -192,17 +192,46 @@ class FsSpec extends AnyFunSuite {
     Fs.release(s)
   }
 
+  private def sources(dir: String): Seq[(Path, String)] =
+    Files.walk(Paths.get(dir)).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(f => f -> new String(Files.readAllBytes(f), "UTF-8"))
+      .toSeq
+
   test("only Fs decides where scratch lives in src/main") {
     // A fixed base under the temp dir would be shared by every session
     // of the JVM; scratch goes through Fs.scratch instead.
-    val offenders = Files.walk(Paths.get("src/main")).iterator().asScala
-      .filter(f => f.toString.endsWith(".scala") &&
-        f.getFileName.toString != "Fs.scala")
-      .filter { f =>
-        val text = new String(Files.readAllBytes(f), "UTF-8")
-        text.contains("java.io.tmpdir") || text.contains("sinkDir")
+    val offenders = sources("src/main")
+      .filter { case (f, text) =>
+        f.getFileName.toString != "Fs.scala" &&
+          (text.contains("java.io.tmpdir") || text.contains("sinkDir"))
       }
-      .toSeq
+      .map(_._1)
     assert(offenders.isEmpty, offenders.mkString(", "))
+  }
+
+  test("specs take their temp dirs from SparkTestBase.tempDir") {
+    // A createTempDirectory dir outlives the run: no reaper knows its
+    // random name. Exception: this spec, which tests the scratch
+    // root itself and deletes what it makes.
+    val offenders = sources("src/test")
+      .filter { case (f, text) =>
+        f.getFileName.toString != "FsSpec.scala" &&
+          text.contains("createTempDirectory")
+      }
+      .map(_._1)
+    assert(offenders.isEmpty, offenders.mkString(", "))
+  }
+
+  test("the only mains are Verify, Bench, Explain and Smoke") {
+    // A diagnostic belongs in a spec, a registered query or a
+    // layerbench mode, where something runs it, not in a main of its own.
+    val Obj = """object (\w+)""".r
+    val mains = sources("src/main").flatMap { case (_, text) =>
+      """def main\(""".r.findAllMatchIn(text).map(m =>
+        Obj.findAllMatchIn(text.take(m.start)).toSeq.lastOption
+          .fold("<no object>")(_.group(1)))
+    }.toSet
+    assert(mains === Set("Verify", "Bench", "Explain", "Smoke"))
   }
 }

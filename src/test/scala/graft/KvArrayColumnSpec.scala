@@ -20,8 +20,7 @@ class KvArrayColumnSpec extends SparkTestBase {
   private def cat(): Unit = graft.sources.KvGate.register(spark)
 
   test("registry round-trips array types (canonical containsNull)") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("arr_reg").toString
+    val dir = SparkTestBase.tempDir("arr_reg").toString
     val cols = Seq(
       KvSchema.Col(1, "key", LongType),
       KvSchema.Col(3, "emb", ArrayType(DoubleType, containsNull = true)),

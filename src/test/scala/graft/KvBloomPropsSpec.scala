@@ -24,7 +24,7 @@ class KvBloomPropsSpec extends AnyFunSuite {
 
   test(s"$Trials random round trips: zero false negatives") {
     val rnd = new scala.util.Random(0xB100F5EEDL)
-    val dir = Files.createTempDirectory("graft_bloom_props")
+    val dir = SparkTestBase.tempDir("graft_bloom_props")
     (1 to Trials).foreach { trial =>
       val n = 1 + rnd.nextInt(2000)
       val strings = Vector.fill(n)(
@@ -52,7 +52,7 @@ class KvBloomPropsSpec extends AnyFunSuite {
 
   test(s"$Trials hostile mutations: never throw, never false-negative") {
     val rnd = new scala.util.Random(0xD15EA5E)
-    val dir = Files.createTempDirectory("graft_bloom_hostile")
+    val dir = SparkTestBase.tempDir("graft_bloom_hostile")
     val values = Vector.tabulate(500)(i => s"val-$i")
     val b = new KvBloom.Builder
     values.foreach(s => b.add(KvBloom.hashString(s)))

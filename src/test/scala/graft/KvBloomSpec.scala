@@ -44,7 +44,7 @@ class KvBloomSpec extends SparkTestBase {
   }
 
   test("sidecar round-trip; unreadable reads as None") {
-    val dir = Files.createTempDirectory("graft_bloom")
+    val dir = SparkTestBase.tempDir("graft_bloom")
     val b1 = new KvBloom.Builder
     b1.add(KvBloom.hashString("x"))
     val b2 = new KvBloom.Builder

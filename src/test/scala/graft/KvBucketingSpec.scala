@@ -34,7 +34,7 @@ class KvBucketingSpec extends SparkTestBase {
   }
 
   test("meta round-trip and file-name bucket parse") {
-    val d = Files.createTempDirectory("graft_bmeta").toString
+    val d = SparkTestBase.tempDir("graft_bmeta").toString
     assert(KvBucketing.readMeta(d).isEmpty)
     KvBucketing.writeMeta(d, 8)
     assert(KvBucketing.readMeta(d) === Some(8))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -50,8 +48,8 @@ class KvChangeFeedSpec extends SparkTestBase {
 
   test("checkpointed continuation: run 2 reads exactly the new commits") {
     val t = snapTable("cf_cont")
-    val ckpt = Files.createTempDirectory("graft_cf_ckpt").toString
-    val out = Files.createTempDirectory("graft_cf_out").toString
+    val ckpt = SparkTestBase.tempDir("graft_cf_ckpt").toString
+    val out = SparkTestBase.tempDir("graft_cf_out").toString
 
     def drain(): Unit = {
       val q = spark.readStream.table(t)
@@ -194,8 +192,8 @@ class KvChangeFeedSpec extends SparkTestBase {
   test("a checkpoint ahead of the table's history fails loud " +
       "(drop + recreate under the same name)") {
     val t = snapTable("cf_stale")
-    val ckpt = Files.createTempDirectory("graft_cf_stale_ckpt").toString
-    val out = Files.createTempDirectory("graft_cf_stale_out").toString
+    val ckpt = SparkTestBase.tempDir("graft_cf_stale_ckpt").toString
+    val out = SparkTestBase.tempDir("graft_cf_stale_out").toString
     def drain(): Unit = {
       val q = spark.readStream.table(t)
         .writeStream

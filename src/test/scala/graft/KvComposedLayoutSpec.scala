@@ -140,12 +140,12 @@ class KvComposedLayoutSpec extends SparkTestBase {
       "(key BIGINT, value STRING, ts TIMESTAMP) " +
       "PARTITIONED BY (months(ts), bucket(2, key)) " +
       "TBLPROPERTIES ('snapshots'='true')")
-    val in = Files.createTempDirectory("graft_cl_in")
+    val in = SparkTestBase.tempDir("graft_cl_in")
     Files.write(in.resolve("batch.jsonl"),
       (0L until 30L).map(k =>
         s"""{"key":$k,"value":"v$k","ts":"2024-0${1 + (k % 2)}-10T00:00:00.000Z"}""")
         .mkString("\n").getBytes("UTF-8"))
-    val ckpt = Files.createTempDirectory("graft_cl_ckpt").toString
+    val ckpt = SparkTestBase.tempDir("graft_cl_ckpt").toString
     val q = spark.readStream
       .schema("key BIGINT, value STRING, ts TIMESTAMP")
       .json(in.toString)

@@ -21,7 +21,7 @@ class KvOccSpec extends SparkTestBase {
     KvFileStat(name, 1L, Some(1L), Some(1L), keysKnown = true)
 
   test("forced CAS collision: loser rebases, nothing lost") {
-    val d = Files.createTempDirectory("graft_occ").toString
+    val d = SparkTestBase.tempDir("graft_occ").toString
     KvSnapshots.commit(d, Seq(stat("base.jsonl"))) // v1
     // Both writers snapshot base INSIDE the membership fn and meet at
     // the barrier before either can publish — guaranteeing both
@@ -67,7 +67,7 @@ class KvOccSpec extends SparkTestBase {
   }
 
   test("conflict budget: a hopeless herd fails loud") {
-    val d = Files.createTempDirectory("graft_occ2").toString
+    val d = SparkTestBase.tempDir("graft_occ2").toString
     // A membership function that sabotages itself by committing a
     // NEWER version before returning — every CAS attempt loses.
     val e = intercept[KvSnapshots.CommitConflictException] {

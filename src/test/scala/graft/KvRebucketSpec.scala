@@ -18,8 +18,7 @@ class KvRebucketSpec extends SparkTestBase {
     graft.sources.KvGateTable(table).dir
 
   test("meta round-trips the rebucket fields; absent on old tables") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("rbk_meta").toString
+    val dir = SparkTestBase.tempDir("rbk_meta").toString
     val m = KvBucketing.KvMeta(Some(8), snapshots = true,
       sorted = true, rebucketTarget = Some(16), bucketsFrom = Some(7))
     KvBucketing.writeMeta(dir, m)

@@ -129,8 +129,7 @@ class KvSchemaPropsSpec extends AnyFunSuite {
       cs <- Gen.listOfN(n, Gen.frequency(
         8 -> Gen.alphaNumChar, 2 -> Gen.const('_')))
     } yield cs.mkString
-    val dir = java.nio.file.Files
-      .createTempDirectory("kvschema-props").toString
+    val dir = SparkTestBase.tempDir("kvschema-props").toString
     (0 until 200).foreach { i =>
       val seed = Seed(4242L + i)
       val nVersions = Gen.chooseNum(1, 4).apply(params, seed).get

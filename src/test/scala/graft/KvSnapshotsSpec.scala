@@ -36,7 +36,7 @@ class KvSnapshotsSpec extends SparkTestBase {
 
   test("manifest mechanics: commit, members, timestamps, expire") {
     import KvSnapshots.KvFileStat
-    val d = Files.createTempDirectory("graft_snap").toString
+    val d = SparkTestBase.tempDir("graft_snap").toString
     assert(KvSnapshots.latest(d).isEmpty)
     assert(KvSnapshots.commit(d,
       Seq(KvFileStat("a.jsonl", 1L, Some(5L), Some(5L),

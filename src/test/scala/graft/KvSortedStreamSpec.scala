@@ -35,12 +35,12 @@ class KvSortedStreamSpec extends SparkTestBase {
 
     // input arrives key-DESCENDING: only the write-requested sort can
     // land it ascending
-    val in = Files.createTempDirectory("graft_ss_in")
+    val in = SparkTestBase.tempDir("graft_ss_in")
     Files.write(in.resolve("batch.jsonl"),
       (151L to 100L by -1L)
         .map(k => s"""{"key":$k,"value":"v$k"}""")
         .mkString("\n").getBytes("UTF-8"))
-    val ckpt = Files.createTempDirectory("graft_ss_ckpt").toString
+    val ckpt = SparkTestBase.tempDir("graft_ss_ckpt").toString
     val q = spark.readStream
       .schema(KvJsonlSink.Schema)
       .json(in.toString)

@@ -49,7 +49,7 @@ class KvStreamSinkSpec extends SparkTestBase {
   test("checkpointed stream into a snapshotted table: exactly-once " +
       "across restarts, one snapshot per data epoch, time travel") {
     val t = fresh("ss_e2e")
-    val base = Files.createTempDirectory("graft_ss").toString
+    val base = SparkTestBase.tempDir("graft_ss").toString
     val in = s"$base/in"; val cp = s"$base/cp"
     Files.createDirectories(Paths.get(in))
 
@@ -118,7 +118,7 @@ class KvStreamSinkSpec extends SparkTestBase {
   test("batch INSERTs interleave with streaming epochs under OCC — " +
       "both lineages land, nothing lost") {
     val t = fresh("ss_mix")
-    val base = Files.createTempDirectory("graft_ssmix").toString
+    val base = SparkTestBase.tempDir("graft_ssmix").toString
     val in = s"$base/in"; val cp = s"$base/cp"
     Files.createDirectories(Paths.get(in))
     Files.write(Paths.get(in, "a.jsonl"),
@@ -135,7 +135,7 @@ class KvStreamSinkSpec extends SparkTestBase {
   test("streaming epochs feed the table CHANGE FEED — stream in, " +
       "stream out, one batch per commit") {
     val t = fresh("ss_cdc")
-    val base = Files.createTempDirectory("graft_sscdc").toString
+    val base = SparkTestBase.tempDir("graft_sscdc").toString
     val in = s"$base/in"; val cp = s"$base/cp"
     Files.createDirectories(Paths.get(in))
     Files.write(Paths.get(in, "a.jsonl"),
@@ -156,7 +156,7 @@ class KvStreamSinkSpec extends SparkTestBase {
 
   test("streaming writes record per-column zone maps too") {
     val t = fresh("ss_stats", "key BIGINT, value STRING, amt DOUBLE")
-    val base = Files.createTempDirectory("graft_ssstats").toString
+    val base = SparkTestBase.tempDir("graft_ssstats").toString
     val in = s"$base/in"; val cp = s"$base/cp"
     Files.createDirectories(Paths.get(in))
     Files.write(Paths.get(in, "a.jsonl"),
@@ -182,7 +182,7 @@ class KvStreamSinkSpec extends SparkTestBase {
     spark.sql(s"CREATE TABLE $tb (key BIGINT, value STRING) " +
       "PARTITIONED BY (bucket(4, key)) " +
       "TBLPROPERTIES ('snapshots'='true')")
-    val base = Files.createTempDirectory("graft_ssbk").toString
+    val base = SparkTestBase.tempDir("graft_ssbk").toString
     val in = s"$base/in"; val cp = s"$base/cp"
     Files.createDirectories(Paths.get(in))
     Files.write(Paths.get(in, "a.jsonl"), (0 until 8).map(i =>
@@ -216,7 +216,7 @@ class KvStreamSinkSpec extends SparkTestBase {
     spark.sql(s"CREATE TABLE $tp (key BIGINT, value STRING, " +
       "ts TIMESTAMP) PARTITIONED BY (days(ts)) " +
       "TBLPROPERTIES ('snapshots'='true')")
-    val base = Files.createTempDirectory("graft_sspt").toString
+    val base = SparkTestBase.tempDir("graft_sspt").toString
     val in = s"$base/in"; val cp = s"$base/cp"
     Files.createDirectories(Paths.get(in))
     Files.write(Paths.get(in, "a.jsonl"), Seq(
@@ -253,7 +253,7 @@ class KvStreamSinkSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $tb")
     spark.sql(s"CREATE TABLE $tb (key BIGINT, value STRING) " +
       "PARTITIONED BY (bucket(4, key))")
-    val base = Files.createTempDirectory("graft_ssrej").toString
+    val base = SparkTestBase.tempDir("graft_ssrej").toString
     Files.createDirectories(Paths.get(s"$base/in"))
     Files.write(Paths.get(s"$base/in", "a.jsonl"),
       Seq("""{"key":1,"value":"x"}""").asJava)

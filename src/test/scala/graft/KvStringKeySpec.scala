@@ -279,7 +279,7 @@ class KvStringKeySpec extends SparkTestBase {
   }
 
   test("manifest `s` marker round-trips with column stats") {
-    val dir = Files.createTempDirectory("sk_manifest").toString
+    val dir = SparkTestBase.tempDir("sk_manifest").toString
     val in = Seq(
       KvSnapshots.KvFileStat("a.jsonl", 5, None, None,
         keysKnown = false,

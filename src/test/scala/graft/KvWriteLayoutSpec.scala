@@ -296,7 +296,7 @@ class KvWriteLayoutSpec extends SparkTestBase {
 
   test("streaming epochs publish epoch-keyed names and leave no scratch") {
     // unsnapshotted plain sink: epoch-keyed names, 0-row files too
-    val out = Files.createTempDirectory("graft_wl_stream").toString
+    val out = SparkTestBase.tempDir("graft_wl_stream").toString
     val sw = new KvJsonlStreamingWrite(out, "q-plain")
     val fac = sw.createStreamingWriterFactory(null)
     val a = fac.createWriter(0, 5L, 3L)

@@ -116,8 +116,7 @@ class KvZoneMapPropsSpec extends SparkTestBase {
       if (known && !keyless) Some(mn) else None,
       if (known && !keyless) Some(mn + span) else None,
       keysKnown = known)
-    val d = java.nio.file.Files
-      .createTempDirectory("graft_zm_props").toString
+    val d = SparkTestBase.tempDir("graft_zm_props").toString
     (0 until 20).foreach { i =>
       val stats = cases(statGen, 9600L + 37L * i, 8)
         .groupBy(_.name).map(_._2.head).toSeq // names unique per manifest

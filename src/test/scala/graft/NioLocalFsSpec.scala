@@ -24,10 +24,8 @@ class NioLocalFsSpec extends SparkTestBase {
 
   private val local = new URI("file:///")
 
-  private def withTempDir(body: JPath => Unit): Unit = {
-    val dir = Files.createTempDirectory("graft_nio_local_fs")
-    try body(dir) finally Fs.deleteRecursively(dir)
-  }
+  private def withTempDir(body: JPath => Unit): Unit =
+    body(SparkTestBase.tempDir("graft_nio_local_fs"))
 
   private def fs(raw: RawLocalFileSystem): RawLocalFileSystem = {
     raw.initialize(local, new Configuration)

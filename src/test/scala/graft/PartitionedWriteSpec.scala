@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Partitioned-sink behavior: hive-style partitioned parquet write,
@@ -11,7 +10,7 @@ import org.apache.spark.sql.functions._
 class PartitionedWriteSpec extends SparkTestBase {
 
   test("partitionBy write → read-back equals source; scan prunes partitions") {
-    val out = Files.createTempDirectory("graft_part_write").toString
+    val out = SparkTestBase.tempDir("graft_part_write").toString
     val src = Tables.orders(spark, sfDir)
     src.write
       .mode("overwrite")

@@ -18,7 +18,7 @@ class ReliableCheckpointSpec extends SparkTestBase {
     SparkEntry.queries(q)(s, sfDir).collect().map(_.toString).sorted.toSeq
 
   test("reliable-checkpoint tier matches the local tier and writes files") {
-    val ckptDir = Files.createTempDirectory("graft-reliable-ckpt")
+    val ckptDir = SparkTestBase.tempDir("graft-reliable-ckpt")
     // Separate session object: the memoized iterative frames key on
     // the session, so the reliable run cannot reuse a local-tier pin.
     val reliable = spark.newSession()

@@ -17,9 +17,7 @@ import org.apache.spark.sql.functions._
 class RuntimeFilterSpec extends SparkTestBase {
 
   test("dynamic partition pruning reaches the partitioned fact scan") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dpp")
-      .toString
+    val dir = SparkTestBase.tempDir("graft_dpp").toString
     Tables
       .orders(spark, sfDir)
       .write

@@ -21,7 +21,7 @@ class SkewKeysSpec extends SparkTestBase {
     // Bounded collect: the cap truncates after the heaviest.
     assert(SkewKeys.discover(df, col("k"), 1, 2000L) == Seq(1L))
     // Uniform data: nothing qualifies — salting must NOT engage
-    // (blanket salting measured slower than naive in SkewBench).
+    // (blanket salting measured slower than naive: SCALE.md "Skew").
     val uni = (1L to 10L).flatMap(k => Seq.fill(10)(k)).toDF("k")
     assert(SkewKeys.discover(uni, col("k"), 8, 1500L).isEmpty)
   }

@@ -25,4 +25,13 @@ object SparkTestBase {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** An empty dir for a spec's files, in the shared session's scratch
+    * ([[Fs.scratch]]), so it goes with the run root when the JVM
+    * exits. Each call site needs its own name: a second call with the
+    * same name empties the dir.
+    */
+  def tempDir(name: String): java.nio.file.Path =
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(Fs.scratch(session, name)))
 }

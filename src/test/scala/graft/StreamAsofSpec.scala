@@ -33,8 +33,7 @@ class StreamAsofSpec extends SparkTestBase {
       (6L, ts(360), 7L, "view", 1.0, "{}")) // advances view watermark
     // The loaders expect events.parquet as a single FILE (the fixture
     // layout): write to a staging dir, then move the one part file.
-    val dir = java.nio.file.Files
-      .createTempDirectory("stream_asof_spec").toString
+    val dir = SparkTestBase.tempDir("stream_asof_spec").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/_stage")

@@ -43,7 +43,7 @@ class TableSchemaSpec extends SparkTestBase {
   }
 
   test("a drifted file written to the same path trips the canary") {
-    val dir = Files.createTempDirectory("graft_schema_memo")
+    val dir = SparkTestBase.tempDir("graft_schema_memo")
     try {
       val path = dir.resolve("lineitem.parquet")
       Files.copy(Paths.get(sfDir, "lineitem.parquet"), path)

@@ -69,8 +69,7 @@ class TsEncodingSpec extends SparkTestBase {
       "ntz_us" -> timestamp_micros(col("us")).cast(TimestampNTZType),
       "ltz_us" -> timestamp_micros(col("us")).cast(TimestampType))
     encodings.foreach { case (label, tsCol) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_tsenc_$label").toString
+      val dir = SparkTestBase.tempDir(s"graft_tsenc_$label").toString
       try {
         write(dir, tsCol)
         val viaTables = timeline(Tables.events(spark, dir))

@@ -30,10 +30,8 @@ object JsonlFiles {
 
 class V2SinkSpec extends SparkTestBase {
 
-  private def newDir(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft_v2spec_$tag")
-    d.toString
-  }
+  private def newDir(tag: String): String =
+    SparkTestBase.tempDir(s"graft_v2spec_$tag").toString
 
   private def visibleLines(dir: String): Seq[String] = JsonlFiles.lines(dir)
 

@@ -38,7 +38,7 @@ class V2StreamingSinkSpec extends SparkTestBase {
   }
 
   test("checkpointed streaming writes survive restart exactly-once") {
-    val base = Files.createTempDirectory("graft_v2stream").toString
+    val base = SparkTestBase.tempDir("graft_v2stream").toString
     val in = s"$base/in"; val out = s"$base/out"; val cp = s"$base/cp"
     Files.createDirectories(Paths.get(in))
 

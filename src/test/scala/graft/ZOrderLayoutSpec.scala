@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -37,7 +35,7 @@ class ZOrderLayoutSpec extends SparkTestBase {
   }
 
   private lazy val dirs: (String, String) = {
-    val base = Files.createTempDirectory("graft_zorder").toString
+    val base = SparkTestBase.tempDir("graft_zorder").toString
     val withZ = SparkEntry.queries("zorder_layout")(spark, sf01)
     writeSorted(withZ, Seq("zx", "zy"), s"$base/linear")
     writeSorted(withZ, Seq("zval"), s"$base/zorder")
