@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -13,8 +14,10 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
   *
   * All queries read through here so the scan shape is uniform: a plain
   * parquet scan that Catalyst can push filters into and prune columns
-  * from. At 100 TB the same call sites work unchanged against a
-  * partitioned table root — nothing below assumes single-file layout.
+  * from. That holds for SQL text too: it names a fixture by the temp
+  * view [[view]] registers, never by a SQL-on-file path. At 100 TB
+  * the same call sites work unchanged against a partitioned table
+  * root — nothing below assumes single-file layout.
   */
 object Tables {
 
@@ -139,15 +142,11 @@ object Tables {
     * converter reads, `nanosAsLong` among them — so a changed conf
     * infers again too.
     */
-  private val schemas =
-    new ConcurrentHashMap[(Seq[(String, Long, Long)], Map[String, String]),
-      StructType]()
+  private type Key = (Seq[(String, Long, Long)], Map[String, String])
+  private val schemas = new ConcurrentHashMap[Key, StructType]()
 
-  /** Schema of `dir/name.parquet`, from [[schemas]]. The canary runs
-    * once per key, when the schema is inferred; a failed check stores
-    * nothing, so the drift fails again on the next load.
-    */
-  def schema(spark: SparkSession, dir: String, name: String): StructType = {
+  /** The [[schemas]] key of `dir/name.parquet` in `spark`. */
+  private def key(spark: SparkSession, dir: String, name: String): Key = {
     val path = new Path(s"$dir/$name.parquet")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // A file lists as itself; a directory as every file under it.
@@ -162,18 +161,60 @@ object Tables {
         k.startsWith("spark.sql.legacy.parquet.")
     } + (SQLConf.CASE_SENSITIVE.key ->
       spark.conf.get(SQLConf.CASE_SENSITIVE.key))
-    val key = (files(fs.getFileStatus(path)).map(f =>
+    (files(fs.getFileStatus(path)).map(f =>
       (f.getPath.toString, f.getLen, f.getModificationTime)), confs)
-    Option(schemas.get(key)).getOrElse {
-      val inferred = spark.read.parquet(path.toString).schema
-      check(name, inferred)
-      schemas.put(key, inferred)
-      inferred
-    }
   }
 
+  /** Schema of `dir/name.parquet`, from [[schemas]]. The canary runs
+    * once per key, when the schema is inferred; a failed check stores
+    * nothing, so the drift fails again on the next load.
+    */
+  def schema(spark: SparkSession, dir: String, name: String): StructType =
+    schemaAt(spark, dir, name, key(spark, dir, name))
+
+  private def schemaAt(
+      spark: SparkSession, dir: String, name: String, k: Key): StructType =
+    Option(schemas.get(k)).getOrElse {
+      val inferred = spark.read.parquet(s"$dir/$name.parquet").schema
+      check(name, inferred)
+      schemas.put(k, inferred)
+      inferred
+    }
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.schema(schema(spark, dir, name)).parquet(s"$dir/$name.parquet")
+    read(spark, dir, name, key(spark, dir, name))
+
+  private def read(
+      spark: SparkSession, dir: String, name: String, k: Key): DataFrame =
+    spark.read.schema(schemaAt(spark, dir, name, k))
+      .parquet(s"$dir/$name.parquet")
+
+  /** View names, one per [[schemas]] key for the whole JVM. Numbered,
+    * not hashed, so two dirs never share a name, and a replaced file or
+    * a changed conf gets a name of its own.
+    */
+  private val viewNames = new ConcurrentHashMap[Key, String]()
+  private val viewCount = new AtomicInteger
+
+  /** `dir/name.parquet` as a temp view of `spark`, for SQL text; returns
+    * the view's name. The view reads as [[table]] does, so the schema
+    * comes from the memo and the canary runs, where SQL-on-file (the
+    * `parquet` format with a backquoted path) starts a footer-reading
+    * job on every statement and skips the canary. It is registered
+    * once per session and key: each registration runs a command of its
+    * own, whose SQL execution the status store keeps for the rest of
+    * the run, and a replaced file gets a new name, so an existing view
+    * is never stale. A temp view belongs to its session: sibling
+    * sessions never see each other's.
+    */
+  def view(spark: SparkSession, dir: String, name: String): String = {
+    val k = key(spark, dir, name)
+    val v = viewNames.computeIfAbsent(k,
+      _ => s"fixture_${name}_${viewCount.getAndIncrement()}")
+    if (!spark.catalog.tableExists(v))
+      read(spark, dir, name, k).createOrReplaceTempView(v)
+    v
+  }
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.sources.{KvGate, KvGateTable, Page, PageParsers}
 import graft.streaming.{StreamGates, StreamingEvents}
 
@@ -37,9 +38,9 @@ object SourceQueries {
         KvGate.table(s, _,
           "(key BIGINT, value STRING) PARTITIONED BY (bucket(8, key))"))
       s.sql(s"INSERT INTO $t1 SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`")
+        s"FROM ${Tables.view(s, d, "orders")}")
       s.sql(s"INSERT INTO $t2 SELECT l_orderkey, l_returnflag " +
-        s"FROM parquet.`$d/lineitem.parquet`")
+        s"FROM ${Tables.view(s, d, "lineitem")}")
       (t1, t2)
     }
 
@@ -220,7 +221,7 @@ object SourceQueries {
     "catalog_dml_delete" -> ((s, d) => {
       val t = KvGate.table(s, "dml_del")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`")
+        s"FROM ${Tables.view(s, d, "orders")}")
       s.sql(s"DELETE FROM $t WHERE key % 3 = 0")
       s.sql(s"SELECT value, count(*) AS n_orders, " +
         s"sum(key) AS sum_keys FROM $t GROUP BY value ORDER BY value")
@@ -233,7 +234,7 @@ object SourceQueries {
     "catalog_dml_update" -> ((s, d) => {
       val t = KvGate.table(s, "dml_upd")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`")
+        s"FROM ${Tables.view(s, d, "orders")}")
       s.sql(s"UPDATE $t SET value = concat('X-', value) " +
         s"WHERE key % 5 = 0")
       s.sql(s"SELECT value, count(*) AS n_orders, " +
@@ -249,10 +250,10 @@ object SourceQueries {
     "catalog_dml_merge" -> ((s, d) => {
       val t = KvGate.table(s, "dml_mrg")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = 0")
+        s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 2 = 0")
       s.sql(s"SELECT o_orderkey AS key, " +
         s"concat('M-', o_orderpriority) AS value " +
-        s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 3 = 0")
+        s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 3 = 0")
         .createOrReplaceTempView("dml_mrg_src")
       s.sql(
         s"""MERGE INTO $t AS tgt USING dml_mrg_src AS src
@@ -277,7 +278,7 @@ object SourceQueries {
       val t = KvGate.table(s, "cmp_gate")
       s.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(16) */ " +
         s"o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`")
+        s"FROM ${Tables.view(s, d, "orders")}")
       val res = s.sql(
         s"CALL graft_kv.system.compact(table => ${t.arg}, " +
           "target_files => 2)").collect().head
@@ -300,9 +301,9 @@ object SourceQueries {
     "catalog_time_travel" -> ((s, d) => {
       val t = KvGate.table(s, "tt_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = 0")
+        s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 2 = 0")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = 1")
+        s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 2 = 1")
       s.sql(s"DELETE FROM $t WHERE key % 3 = 0")
       s.sql(
         s"""SELECT * FROM (
@@ -328,9 +329,9 @@ object SourceQueries {
     "catalog_expire_call" -> ((s, d) => {
       val t = KvGate.table(s, "exp_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = 0")
+        s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 2 = 0")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = 1")
+        s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 2 = 1")
       s.sql(s"DELETE FROM $t WHERE key % 3 = 0")
       val res = s.sql(
         "CALL graft_kv.system.expire_snapshots(" +
@@ -371,10 +372,10 @@ object SourceQueries {
     "catalog_enable_snapshots" -> ((s, d) => {
       val t = KvGate.table(s, "mig_gate") // plain table, no snapshots
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = 0")
+        s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 2 = 0")
       s.sql(s"ALTER TABLE $t SET TBLPROPERTIES ('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = 1")
+        s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 2 = 1")
       s.sql(s"DELETE FROM $t WHERE key % 3 = 0")
       s.sql(
         s"""SELECT * FROM (
@@ -403,7 +404,7 @@ object SourceQueries {
     "catalog_count_pushdown" -> ((s, d) => {
       val t = KvGate.table(s, "cnt_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`")
+        s"FROM ${Tables.view(s, d, "orders")}")
       s.sql(s"DELETE FROM $t WHERE key % 5 = 0")
       graft.sources.KvAggScan.served.set(0)
       val rows = s.sql(s"SELECT count(*) AS n_orders FROM $t").collect()
@@ -431,7 +432,7 @@ object SourceQueries {
       val t = KvGate.table(s, "zm_gate", Snapshotted)
       s.sql(s"INSERT INTO $t " +
         s"SELECT /*+ REPARTITION_BY_RANGE(8, o_orderkey) */ " +
-        s"o_orderkey, o_orderpriority FROM parquet.`$d/orders.parquet`")
+        s"o_orderkey, o_orderpriority FROM ${Tables.view(s, d, "orders")}")
       graft.sources.KvZoneMap.prunedFiles.set(0)
       val df = s.sql(
         s"""SELECT value, count(*) AS n_orders, sum(key) AS sum_keys
@@ -452,7 +453,7 @@ object SourceQueries {
     "catalog_minmax_pushdown" -> ((s, d) => {
       val t = KvGate.table(s, "mm_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`")
+        s"FROM ${Tables.view(s, d, "orders")}")
       s.sql(s"DELETE FROM $t WHERE key % 5 = 0")
       graft.sources.KvAggScan.served.set(0)
       val df = s.sql(s"SELECT count(*) AS n_orders, " +
@@ -480,7 +481,7 @@ object SourceQueries {
       val t = KvGate.table(s, "cf_gate", Snapshotted)
       for (r <- 0 to 2)
         s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-          s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 3 = $r")
+          s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 3 = $r")
       val (rows, progress) =
         StreamGates.memory(s.readStream.table(t.qualified), "cf_gate")
       val dataBatches = StreamGates.dataBatches(progress)
@@ -543,9 +544,9 @@ object SourceQueries {
           "PARTITIONED BY (bucket(8, key)) " +
           "TBLPROPERTIES ('snapshots'='true', 'write.sort'='key')"))
       s.sql(s"INSERT INTO $t1 SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`")
+        s"FROM ${Tables.view(s, d, "orders")}")
       s.sql(s"INSERT INTO $t2 SELECT l_orderkey, l_returnflag " +
-        s"FROM parquet.`$d/lineitem.parquet`")
+        s"FROM ${Tables.view(s, d, "lineitem")}")
       graft.Confs.scoped(s,
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -585,9 +586,9 @@ object SourceQueries {
         "STRING) PARTITIONED BY (bucket(8, l_orderkey)) TBLPROPERTIES " +
         "('snapshots'='true', 'write.sort'='l_orderkey')")
       s.sql(s"INSERT INTO $t1 SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`")
+        s"FROM ${Tables.view(s, d, "orders")}")
       s.sql(s"INSERT INTO $t2 SELECT l_orderkey, l_returnflag " +
-        s"FROM parquet.`$d/lineitem.parquet`")
+        s"FROM ${Tables.view(s, d, "lineitem")}")
       graft.Confs.scoped(s,
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -606,7 +607,7 @@ object SourceQueries {
         // READER (the pushed-key fast path), not just re-filter
         // materialized rows in Spark
         val probe = s.sql(s"SELECT min(o_orderkey) FROM " +
-          s"parquet.`$d/orders.parquet`").collect()(0).getLong(0)
+          s"${Tables.view(s, d, "orders")}").collect()(0).getLong(0)
         val skBefore = graft.sources.KvKeyPredicate.skipped.get()
         val one = s.sql(
           s"SELECT count(*) AS n FROM $t1 WHERE o_orderkey = $probe")
@@ -639,7 +640,7 @@ object SourceQueries {
         "PARTITIONED BY (bucket(8, doc_id)) TBLPROPERTIES " +
         "('snapshots'='true', 'bloom_cols'='doc_id')")
       s.sql(s"INSERT INTO $t SELECT concat('d-', doc_id), lang " +
-        s"FROM parquet.`$d/documents.parquet`")
+        s"FROM ${Tables.view(s, d, "documents")}")
       val before = graft.sources.KvBloomPrune.prunedFiles.get()
       require(s.sql(
         s"SELECT count(*) FROM $t WHERE doc_id = 'd-absent'")
@@ -671,9 +672,9 @@ object SourceQueries {
         "PARTITIONED BY (bucket(8, l_id)) TBLPROPERTIES " +
         "('snapshots'='true')")
       s.sql(s"INSERT INTO $t1 SELECT concat('o-', o_orderkey), " +
-        s"o_orderpriority FROM parquet.`$d/orders.parquet`")
+        s"o_orderpriority FROM ${Tables.view(s, d, "orders")}")
       s.sql(s"INSERT INTO $t2 SELECT concat('o-', l_orderkey), " +
-        s"l_returnflag FROM parquet.`$d/lineitem.parquet`")
+        s"l_returnflag FROM ${Tables.view(s, d, "lineitem")}")
       graft.Confs.scoped(s,
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -704,7 +705,7 @@ object SourceQueries {
         "PARTITIONED BY (bucket(4, doc_id)) TBLPROPERTIES " +
         "('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT concat('d-', doc_id), lang " +
-        s"FROM parquet.`$d/documents.parquet`")
+        s"FROM ${Tables.view(s, d, "documents")}")
       val delOk = s.sql(s"SELECT count(*) FROM $t " +
         "WHERE doc_id LIKE 'd-1%'").collect()(0).getLong(0)
       s.sql(s"DELETE FROM $t WHERE doc_id LIKE 'd-1%'")
@@ -743,21 +744,24 @@ object SourceQueries {
         "PARTITIONED BY (bucket(8, doc_id)) TBLPROPERTIES " +
         "('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT concat('d-', doc_id), lang " +
-        s"FROM parquet.`$d/documents.parquet`")
+        s"FROM ${Tables.view(s, d, "documents")}")
       // the dim's join key must be an ATTRIBUTE for the runtime
       // filter to inject (a concat() in the join condition is not a
       // pruning key) — materialize the string-keyed dim once, then
       // filter it selectively at query time, the shape of a real
-      // doc_id dimension
+      // doc_id dimension. It is read back with the written frame's
+      // schema, as a staged replay is, not inferred from its footer.
       val dimDir = graft.Fs.scratch(s, "srt_dim")
-      s.sql(s"SELECT concat('d-', doc_id) AS k, doc_id AS raw_id " +
-        s"FROM parquet.`$d/documents.parquet`")
-        .write.mode("overwrite").parquet(dimDir)
+      val dim = s.sql(s"SELECT concat('d-', doc_id) AS k, " +
+        s"doc_id AS raw_id FROM ${Tables.view(s, d, "documents")}")
+      dim.write.mode("overwrite").parquet(dimDir)
+      s.read.schema(dim.schema).parquet(dimDir)
+        .createOrReplaceTempView("srt_dim")
       graft.sources.KvRuntimeFilter.prunedFiles.set(0)
       graft.sources.KvRuntimeFilter.rowSkips.set(0)
       val df = s.sql(
         s"""SELECT b.value AS lang, count(*) AS n_docs
-           |FROM $t b JOIN parquet.`$dimDir` o
+           |FROM $t b JOIN srt_dim o
            |ON b.doc_id = o.k
            |WHERE o.raw_id IN (7, 19, 42)
            |GROUP BY b.value ORDER BY lang""".stripMargin)
@@ -791,9 +795,9 @@ object SourceQueries {
         "STRING) PARTITIONED BY (bucket(8, l_orderkey)) TBLPROPERTIES " +
         "('snapshots'='true')")
       s.sql(s"INSERT INTO $t1 SELECT o_orderkey, o_orderpriority, " +
-        s"o_orderdate FROM parquet.`$d/orders.parquet`")
+        s"o_orderdate FROM ${Tables.view(s, d, "orders")}")
       s.sql(s"INSERT INTO $t2 SELECT l_orderkey, l_returnflag " +
-        s"FROM parquet.`$d/lineitem.parquet`")
+        s"FROM ${Tables.view(s, d, "lineitem")}")
       graft.Confs.scoped(s,
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -833,7 +837,7 @@ object SourceQueries {
       for (g <- 0 until 4)
         s.sql(s"INSERT INTO $t SELECT o_orderkey, " +
           "concat('c', o_custkey) " +
-          s"FROM parquet.`$d/orders.parquet` " +
+          s"FROM ${Tables.view(s, d, "orders")} " +
           s"WHERE pmod(hash(o_custkey), 4) = $g")
       val before = graft.sources.KvBloomPrune.prunedFiles.get()
       val df = s.sql(
@@ -841,7 +845,7 @@ object SourceQueries {
            |       CAST(sum(f.key) AS BIGINT) AS sum_keys
            |FROM $t f JOIN (
            |  SELECT concat('c', c_custkey) AS cv
-           |  FROM parquet.`$d/customer.parquet`
+           |  FROM ${Tables.view(s, d, "customer")}
            |  WHERE c_custkey IN (7, 19)
            |) c ON f.value = c.cv
            |GROUP BY f.value ORDER BY f.value""".stripMargin)
@@ -876,7 +880,7 @@ object SourceQueries {
       for (cond <- Seq("o_totalprice < 150000.0",
           "o_totalprice >= 150000.0"))
         s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-          s"FROM parquet.`$d/orders.parquet` WHERE $cond")
+          s"FROM ${Tables.view(s, d, "orders")} WHERE $cond")
       def reported: Int = s.sql(s"SELECT key, value FROM $t")
         .queryExecution.executedPlan.collectLeaves().collect {
           case b: org.apache.spark.sql.execution.datasources.v2
@@ -906,14 +910,14 @@ object SourceQueries {
         "PARTITIONED BY (bucket(4, key)) TBLPROPERTIES " +
         "('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $tm SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey < 1000")
+        s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey < 1000")
       s.sql(s"DELETE FROM $tm WHERE key % 2 = 0")
       val outM = s.sql("CALL graft_kv.system.rewrite_buckets(" +
         s"table => ${tm.arg})").collect()(0)
       require(outM.getLong(2) >= 1L,
         "catalog_rewrite_buckets: no tombstone files were folded")
       val expectLive = s.sql(
-        s"""SELECT count(*) FROM parquet.`$d/orders.parquet`
+        s"""SELECT count(*) FROM ${Tables.view(s, d, "orders")}
            |WHERE o_orderkey < 1000 AND o_orderkey % 2 != 0"""
           .stripMargin).collect()(0).getLong(0)
       require(outM.getLong(3) == expectLive,
@@ -955,9 +959,9 @@ object SourceQueries {
       for (cond <- Seq("o_totalprice < 150000.0",
           "o_totalprice >= 150000.0"))
         s.sql(s"INSERT INTO $ta SELECT o_orderkey, o_orderpriority " +
-          s"FROM parquet.`$d/orders.parquet` WHERE $cond")
+          s"FROM ${Tables.view(s, d, "orders")} WHERE $cond")
       s.sql(s"INSERT INTO $tb SELECT l_orderkey, l_returnflag " +
-        s"FROM parquet.`$d/lineitem.parquet`")
+        s"FROM ${Tables.view(s, d, "lineitem")}")
       def filesPerBucket(dir: String): Map[Int, Int] =
         graft.sources.KvSnapshots.dataFiles(
           graft.sources.KvSnapshots.membersWithStats(dir,
@@ -1047,7 +1051,7 @@ object SourceQueries {
         "PARTITIONED BY (bucket(4, key)) TBLPROPERTIES " +
         "('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet` " +
+        s"FROM ${Tables.view(s, d, "orders")} " +
         "WHERE o_orderkey <= 20000") // v1
       s.sql(s"DELETE FROM $t WHERE key % 3 = 0") // v2: tombstones only
       s.sql("CALL graft_kv.system.rewrite_buckets(" +
@@ -1056,7 +1060,7 @@ object SourceQueries {
       require(graft.sources.KvSnapshots.isMaintenance(t.dir, v3),
         "catalog_cdc_maintenance: the rewrite commit lost its marker")
       s.sql(s"INSERT INTO $t SELECT o_orderkey + 10000000, " +
-        s"o_orderpriority FROM parquet.`$d/orders.parquet` " +
+        s"o_orderpriority FROM ${Tables.view(s, d, "orders")} " +
         "WHERE o_orderkey % 7 = 0") // v4
       val out = s.sql(
         s"""SELECT _commit_version AS v, _change_type AS kind,
@@ -1114,7 +1118,7 @@ object SourceQueries {
       val df = s.sql(
         s"""SELECT b.value AS flag, count(*) AS n_items,
            |sum(b.key) AS sum_keys
-           |FROM $t2 b JOIN parquet.`$d/orders.parquet` o
+           |FROM $t2 b JOIN ${Tables.view(s, d, "orders")} o
            |ON b.key = o.o_orderkey
            |WHERE o.o_orderkey % 8 < 2
            |GROUP BY b.value ORDER BY flag""".stripMargin)
@@ -1140,7 +1144,7 @@ object SourceQueries {
       val t = KvGate.table(s, "mor_del_gate", "(key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`")
+        s"FROM ${Tables.view(s, d, "orders")}")
       def members = graft.sources.KvSnapshots.membersWithStats(
         t.dir, graft.sources.KvSnapshots.latest(t.dir).get)
       val dataBefore = graft.sources.KvSnapshots.dataFiles(members)
@@ -1173,7 +1177,7 @@ object SourceQueries {
       val t = KvGate.table(s, "mor_upd_gate", "(key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`")
+        s"FROM ${Tables.view(s, d, "orders")}")
       def members = graft.sources.KvSnapshots.membersWithStats(
         t.dir, graft.sources.KvSnapshots.latest(t.dir).get)
       val dataBefore = graft.sources.KvSnapshots.dataFiles(members)
@@ -1200,10 +1204,10 @@ object SourceQueries {
       val t = KvGate.table(s, "mor_mrg_gate", "(key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = 0")
+        s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 2 = 0")
       s.sql(s"SELECT o_orderkey AS key, " +
         s"concat('M-', o_orderpriority) AS value " +
-        s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 3 = 0")
+        s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 3 = 0")
         .createOrReplaceTempView("mor_mrg_gate_src")
       s.sql(
         s"""MERGE INTO $t AS tgt USING mor_mrg_gate_src AS src
@@ -1234,9 +1238,9 @@ object SourceQueries {
       val t = KvGate.table(s, "cdc_gate", "(key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = 0")
+        s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 2 = 0")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = 1")
+        s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 2 = 1")
       s.sql(s"DELETE FROM $t WHERE key % 7 = 0")
       s.sql(
         s"""SELECT _commit_version, _change_type, value,
@@ -1264,7 +1268,7 @@ object SourceQueries {
           ready.countDown()
           ready.await(10, java.util.concurrent.TimeUnit.SECONDS)
           s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-            s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = $r")
+            s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 2 = $r")
         }
       })
       val jobs = Seq(insert(0), insert(1))
@@ -1291,7 +1295,7 @@ object SourceQueries {
       val t = KvGate.table(s, "cluster_gate", Snapshotted)
       s.sql(s"INSERT INTO $t " +
         s"SELECT /*+ REPARTITION(8) */ o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`")
+        s"FROM ${Tables.view(s, d, "orders")}")
       val probe = s"SELECT value, count(*) AS n_orders, " +
         s"sum(key) AS sum_keys FROM $t WHERE key <= 1000 " +
         s"GROUP BY value ORDER BY value"
@@ -1359,7 +1363,7 @@ object SourceQueries {
     "catalog_rollback" -> ((s, d) => {
       val t = KvGate.table(s, "rb_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`")
+        s"FROM ${Tables.view(s, d, "orders")}")
       // the bad batch: clobber priorities, then delete a third
       s.sql(s"UPDATE $t SET value = 'CORRUPT' WHERE key % 2 = 0")
       s.sql(s"DELETE FROM $t WHERE key % 3 = 0")
@@ -1393,7 +1397,7 @@ object SourceQueries {
     "catalog_vacuum" -> ((s, d) => {
       val t = KvGate.table(s, "vac_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`")
+        s"FROM ${Tables.view(s, d, "orders")}")
       val dir = java.nio.file.Paths.get(t.dir)
       // a crashed writer's leftovers: a data file that never made a
       // manifest, and a stray tombstone file — both LONG dead
@@ -1448,7 +1452,7 @@ object SourceQueries {
     "catalog_schema_evolution" -> ((s, d) => {
       val t = KvGate.table(s, "evo_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`") // v1
+        s"FROM ${Tables.view(s, d, "orders")}") // v1
       val dir = java.nio.file.Paths.get(t.dir)
       def dataFiles: Set[String] = {
         import scala.jdk.CollectionConverters._
@@ -1464,7 +1468,7 @@ object SourceQueries {
           "evolution must be metadata-only")
       s.sql(s"INSERT INTO $t SELECT o_orderkey + 10000000, " +
         "concat('NEW-', o_orderpriority), o_orderkey * 0.5 " +
-        s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 4 = 0")
+        s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 4 = 0")
       // time travel ACROSS the schema change: v1 reads its own shape
       val v1 = s.sql(s"SELECT * FROM $t VERSION AS OF 1")
       require(v1.schema.fieldNames.toSeq == Seq("key", "value"),
@@ -1497,10 +1501,10 @@ object SourceQueries {
       val t = KvGate.table(s, "snap_meta_gate", "(key BIGINT, value " +
         "STRING) TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`") // v1
+        s"FROM ${Tables.view(s, d, "orders")}") // v1
       s.sql(s"INSERT INTO $t SELECT o_orderkey + 10000000, " +
         "concat('N-', o_orderpriority) " +
-        s"FROM parquet.`$d/orders.parquet` " +
+        s"FROM ${Tables.view(s, d, "orders")} " +
         "WHERE o_orderkey % 4 = 0") // v2
       s.sql(s"DELETE FROM $t WHERE key % 3 = 0") // v3: tombstones only
       s.sql(
@@ -1524,7 +1528,7 @@ object SourceQueries {
     "catalog_tags" -> ((s, d) => {
       val t = KvGate.table(s, "tags_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`") // v1
+        s"FROM ${Tables.view(s, d, "orders")}") // v1
       s.sql(s"CALL graft_kv.system.tag(table => ${t.arg}, " +
         "name => 'pristine')")
       s.sql(s"DELETE FROM $t WHERE key % 2 = 0") // v2 (CoW rewrite)
@@ -1562,7 +1566,7 @@ object SourceQueries {
         "ARRAY<DOUBLE>, label BIGINT) TBLPROPERTIES ('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT vec_id, " +
         "CAST(embedding AS ARRAY<DOUBLE>), CAST(label AS BIGINT) " +
-        s"FROM parquet.`$d/embeddings.parquet`") // v1
+        s"FROM ${Tables.view(s, d, "embeddings")}") // v1
       s.sql(s"CALL graft_kv.system.tag(table => ${t.arg}, name => 'shipped')")
       s.sql(s"INSERT INTO $t VALUES (-1, array(0.0D), -1)") // v2 junk
       s.sql(s"DELETE FROM $t WHERE key = -1") // v3 CoW rewrite
@@ -1602,7 +1606,7 @@ object SourceQueries {
         "ARRAY<DOUBLE>) TBLPROPERTIES ('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT vec_id, " +
         "CAST(embedding AS ARRAY<DOUBLE>) " +
-        s"FROM parquet.`$d/embeddings.parquet`")
+        s"FROM ${Tables.view(s, d, "embeddings")}")
       val withBucket = s.sql(
           s"SELECT key AS vec_id, embedding FROM $t")
         .withColumn("bucket", graft.functions.Vectors.lshBucket(
@@ -1630,7 +1634,7 @@ object SourceQueries {
       val t = KvGate.table(s, "toks_gate", "(doc_id BIGINT, tokens " +
         "ARRAY<STRING>, lang STRING) TBLPROPERTIES ('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT doc_id, split(text, ' '), lang " +
-        s"FROM parquet.`$d/documents.parquet`")
+        s"FROM ${Tables.view(s, d, "documents")}")
       s.sql(s"DELETE FROM $t WHERE doc_id % 7 = 0")
       s.sql(
         s"""SELECT lang, token, count(*) AS n_tokens,
@@ -1661,7 +1665,7 @@ object SourceQueries {
       val cut = 4L * n / 5
       s.sql(s"INSERT INTO $t SELECT vec_id, " +
         "CAST(embedding AS ARRAY<DOUBLE>) " +
-        s"FROM parquet.`$d/embeddings.parquet` WHERE vec_id < $cut")
+        s"FROM ${Tables.view(s, d, "embeddings")} WHERE vec_id < $cut")
       val idx = graft.Fs.scratch(s, "ann_pinned")
       AnnIndexQueries.buildPinned(s, t.qualified, t.dir, idx)
       val v1df = AnnIndexQueries.servePinned(s, idx)
@@ -1669,7 +1673,7 @@ object SourceQueries {
       // the table moves to v2 under the index
       s.sql(s"INSERT INTO $t SELECT vec_id, " +
         "CAST(embedding AS ARRAY<DOUBLE>) " +
-        s"FROM parquet.`$d/embeddings.parquet` WHERE vec_id >= $cut")
+        s"FROM ${Tables.view(s, d, "embeddings")} WHERE vec_id >= $cut")
       val stale =
         try { AnnIndexQueries.servePinned(s, idx); false }
         catch {
@@ -1712,12 +1716,12 @@ object SourceQueries {
     "catalog_refs_table" -> ((s, d) => {
       val t = KvGate.table(s, "refs_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`") // v1
+        s"FROM ${Tables.view(s, d, "orders")}") // v1
       s.sql("CALL graft_kv.system.tag(" +
         s"table => ${t.arg}, name => 'pristine', " +
         "version => 1)")
       s.sql(s"INSERT INTO $t SELECT o_orderkey + 10000000, " +
-        s"o_orderpriority FROM parquet.`$d/orders.parquet` " +
+        s"o_orderpriority FROM ${Tables.view(s, d, "orders")} " +
         "WHERE o_orderkey % 4 = 0") // v2
       s.sql("CALL graft_kv.system.create_branch(" +
         s"table => ${t.arg}, name => 'audit')") // base v2
@@ -1744,7 +1748,7 @@ object SourceQueries {
         "('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
         "o_orderdate, CAST(date_trunc('MONTH', o_orderdate) AS DATE) " +
-        s"FROM parquet.`$d/orders.parquet`")
+        s"FROM ${Tables.view(s, d, "orders")}")
       val total = graft.sources.KvSnapshots.members(t.dir,
         graft.sources.KvSnapshots.latest(t.dir).get).size
       val before = graft.sources.KvPartitionPrune.prunedFiles.get()
@@ -1778,7 +1782,7 @@ object SourceQueries {
         "TIMESTAMP) PARTITIONED BY (months(ts)) TBLPROPERTIES " +
         "('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
-        s"o_orderdate FROM parquet.`$d/orders.parquet`")
+        s"o_orderdate FROM ${Tables.view(s, d, "orders")}")
       val total = graft.sources.KvSnapshots.members(t.dir,
         graft.sources.KvSnapshots.latest(t.dir).get).size
       val before = graft.sources.KvPartitionPrune.prunedFiles.get()
@@ -1816,7 +1820,7 @@ object SourceQueries {
       for ((lo, hi) <- Seq((0, 100000), (100000, 200000),
           (200000, 10000000)))
         s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
-          s"o_totalprice FROM parquet.`$d/orders.parquet` " +
+          s"o_totalprice FROM ${Tables.view(s, d, "orders")} " +
           s"WHERE o_totalprice >= $lo AND o_totalprice < $hi")
       val before = graft.sources.KvZoneMap.prunedFiles.get()
       val out = s.sql(
@@ -1847,7 +1851,7 @@ object SourceQueries {
         "TIMESTAMP) PARTITIONED BY (months(ts)) TBLPROPERTIES " +
         "('snapshots'='true')")
       s.sql(s"INSERT INTO $src SELECT o_orderkey, o_orderpriority, " +
-        s"o_orderdate FROM parquet.`$d/orders.parquet`")
+        s"o_orderdate FROM ${Tables.view(s, d, "orders")}")
       val cp = graft.Fs.scratch(s, "sp_ckpt")
       StreamGates.run(s.readStream.table(src.qualified))(
         _.option("checkpointLocation", cp).toTable(dst.qualified))
@@ -1881,12 +1885,12 @@ object SourceQueries {
         "TIMESTAMP) PARTITIONED BY (days(ts)) TBLPROPERTIES " +
         "('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
-        s"o_orderdate FROM parquet.`$d/orders.parquet` " +
+        s"o_orderdate FROM ${Tables.view(s, d, "orders")} " +
         "WHERE o_orderdate < TIMESTAMP '1995-01-01 00:00:00'")
       s.sql("CALL graft_kv.system.set_partition(" +
         s"table => ${t.arg}, spec => 'months(ts)')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
-        s"o_orderdate FROM parquet.`$d/orders.parquet` " +
+        s"o_orderdate FROM ${Tables.view(s, d, "orders")} " +
         "WHERE o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'")
       val before = graft.sources.KvPartitionPrune.prunedFiles.get()
       val out = s.sql(
@@ -1918,7 +1922,7 @@ object SourceQueries {
       graft.Confs.scoped(s,
           "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
         s.sql(s"INSERT INTO $t SELECT o_orderkey, " +
-          s"o_orderpriority FROM parquet.`$d/orders.parquet`")
+          s"o_orderpriority FROM ${Tables.view(s, d, "orders")}")
       }
       val before = graft.sources.KvZoneMap.prunedFiles.get()
       val out = s.sql(
@@ -1980,7 +1984,7 @@ object SourceQueries {
       for ((lo, hi) <- Seq((0, 100000), (100000, 200000),
           (200000, 10000000)))
         s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
-          s"o_totalprice FROM parquet.`$d/orders.parquet` " +
+          s"o_totalprice FROM ${Tables.view(s, d, "orders")} " +
           s"WHERE o_totalprice >= $lo AND o_totalprice < $hi")
       def names: Set[String] =
         graft.sources.KvSnapshots.dataFiles(
@@ -2011,7 +2015,7 @@ object SourceQueries {
       val t = KvGate.table(s, "ft_gate", "(key BIGINT, value STRING, price " +
         "DOUBLE) TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
-        s"o_totalprice FROM parquet.`$d/orders.parquet`")
+        s"o_totalprice FROM ${Tables.view(s, d, "orders")}")
       s.sql(s"DELETE FROM $t WHERE key % 7 = 0")
       val files = s.sql(s"SELECT * FROM ${t.meta("files")}")
       // structural requires: both kinds present, data files carry
@@ -2051,7 +2055,7 @@ object SourceQueries {
         "('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
         "CAST(o_orderdate AS TIMESTAMP) " +
-        s"FROM parquet.`$d/orders.parquet`")
+        s"FROM ${Tables.view(s, d, "orders")}")
       val parts = s.sql(s"SELECT * FROM ${t.meta("partitions")}")
       require(parts.where("partition IS NULL").count() == 0,
         "catalog_partitions_table: a member lost its layout token")
@@ -2064,13 +2068,13 @@ object SourceQueries {
         "('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $tm SELECT o_orderkey, o_orderpriority, " +
         "CAST(o_orderdate AS TIMESTAMP) " +
-        s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey < 2000")
+        s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey < 2000")
       s.sql(s"DELETE FROM $tm WHERE key % 7 = 0")
       val morNull = s.sql("SELECT tombstones, n_data_files FROM " +
         s"${tm.meta("partitions")} " +
         "WHERE partition IS NULL").collect()
       val expectedDels = s.sql(
-        s"""SELECT count(*) FROM parquet.`$d/orders.parquet`
+        s"""SELECT count(*) FROM ${Tables.view(s, d, "orders")}
            |WHERE o_orderkey < 2000 AND o_orderkey % 7 = 0"""
           .stripMargin).collect()(0).getLong(0)
       require(morNull.length == 1 && morNull(0).getLong(0) ==
@@ -2107,7 +2111,7 @@ object SourceQueries {
       for (g <- 0 until 4)
         s.sql(s"INSERT INTO $t SELECT o_orderkey, " +
           "concat('c', o_custkey) " +
-          s"FROM parquet.`$d/orders.parquet` " +
+          s"FROM ${Tables.view(s, d, "orders")} " +
           s"WHERE pmod(hash(o_custkey), 4) = $g")
       val total = graft.sources.KvSnapshots.dataFiles(
         graft.sources.KvSnapshots.membersWithStats(t.dir,
@@ -2147,7 +2151,7 @@ object SourceQueries {
       for (g <- 0 until 4)
         s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
           "o_orderdate, CAST(o_orderdate AS DATE), o_totalprice " +
-          s"FROM parquet.`$d/orders.parquet` " +
+          s"FROM ${Tables.view(s, d, "orders")} " +
           s"WHERE pmod(hash(o_orderdate), 4) = $g")
       // Deterministic MID-DOMAIN probe values that exist at every SF:
       // the >= floors keep the probes INTERIOR to every chunk's
@@ -2162,7 +2166,7 @@ object SourceQueries {
            |         'yyyy-MM-dd HH:mm:ss') AS ts,
            |       CAST(min(CASE WHEN o_totalprice >= 100000.0
            |         THEN o_totalprice END) AS STRING) AS price
-           |FROM parquet.`$d/orders.parquet`"""
+           |FROM ${Tables.view(s, d, "orders")}"""
           .stripMargin).collect()(0)
       val tsLit = probe.getString(0)
       val dayLit = tsLit.take(10)
@@ -2202,7 +2206,7 @@ object SourceQueries {
       val t = KvGate.table(s, "ca_gate", "(key BIGINT, value STRING, price " +
         "DOUBLE, ts TIMESTAMP) TBLPROPERTIES ('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
-        s"o_totalprice, o_orderdate FROM parquet.`$d/orders.parquet`")
+        s"o_totalprice, o_orderdate FROM ${Tables.view(s, d, "orders")}")
       graft.sources.KvAggScan.served.set(0)
       val df = s.sql(s"SELECT count(*) AS n_orders, " +
         "min(price) AS min_price, max(price) AS max_price, " +
@@ -2230,7 +2234,7 @@ object SourceQueries {
       val t = KvGate.table(s, "zp_gate", "(key BIGINT, value STRING, ck " +
         "BIGINT, price DOUBLE) TBLPROPERTIES ('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
-        s"o_custkey, o_totalprice FROM parquet.`$d/orders.parquet`")
+        s"o_custkey, o_totalprice FROM ${Tables.view(s, d, "orders")}")
       s.sql(s"CALL graft_kv.system.zorder(table => ${t.arg}, " +
         "cols => 'ck,price', target_files => 16)")
       val before = graft.sources.KvZoneMap.prunedFiles.get()
@@ -2263,7 +2267,7 @@ object SourceQueries {
       val dst = KvGate.table(s, "sk_dst", Snapshotted)
       for (r <- 0 to 2)
         s.sql(s"INSERT INTO $src SELECT o_orderkey, o_orderpriority " +
-          s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 3 = $r")
+          s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 3 = $r")
       val cp = graft.Fs.scratch(s, "sk_ckpt")
       StreamGates.run(s.readStream.table(src.qualified))(
         _.option("checkpointLocation", cp).toTable(dst.qualified))
@@ -2298,7 +2302,7 @@ object SourceQueries {
         "('snapshots'='true', 'write.auto_compact'='2')")
       for (r <- 0 to 5)
         s.sql(s"INSERT INTO $src SELECT o_orderkey, o_orderpriority " +
-          s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 6 = $r")
+          s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 6 = $r")
       val fired0 = graft.sources.KvAutoCompact.compactions.get()
       val cp = graft.Fs.scratch(s, "ac_ckpt")
       StreamGates.run(s.readStream.table(src.qualified))(
@@ -2327,7 +2331,7 @@ object SourceQueries {
            |FROM ${dst.meta("changes")}
            |GROUP BY 1""".stripMargin).collect()
       val nOrders = s.sql(s"SELECT count(*) FROM " +
-        s"parquet.`$d/orders.parquet`").collect()(0).getLong(0)
+        s"${Tables.view(s, d, "orders")}").collect()(0).getLong(0)
       require(ch.length == 1 && ch(0).getString(0) == "insert" &&
         ch(0).getLong(1) == nOrders,
         s"catalog_auto_compact: policy commits leaked into CDC — " +
@@ -2352,18 +2356,18 @@ object SourceQueries {
       val t = KvGate.table(s, "ae_gate", "(key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true', 'expire.keep_last'='3')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 6 = 0")
+        s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 6 = 0")
       s.sql("CALL graft_kv.system.tag(" +
         s"table => ${t.arg}, name => 'baseline')") // pins v1
       for (r <- 1 to 5)
         s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-          s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 6 = $r")
+          s"FROM ${Tables.view(s, d, "orders")} WHERE o_orderkey % 6 = $r")
       val retained = graft.sources.KvSnapshots.versions(t.dir)
       require(retained == Seq(1, 4, 5, 6),
         s"catalog_auto_expire: expected versions 1 (tagged), 4, 5, 6" +
           s" — got ${retained.mkString(", ")}")
       val expectV1 = s.sql(s"SELECT count(*) FROM " +
-          s"parquet.`$d/orders.parquet` WHERE o_orderkey % 6 = 0")
+          s"${Tables.view(s, d, "orders")} WHERE o_orderkey % 6 = 0")
         .collect()(0).getLong(0)
       val atTag = s.sql(
         s"SELECT count(*) FROM $t VERSION AS OF 'baseline'")
@@ -2395,7 +2399,7 @@ object SourceQueries {
     "catalog_wap" -> ((s, d) => {
       val t = KvGate.table(s, "wap_gate", Snapshotted)
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`") // main v1
+        s"FROM ${Tables.view(s, d, "orders")}") // main v1
       s.sql("CALL graft_kv.system.create_branch(" +
         s"table => ${t.arg}, name => 'audit')")
       graft.Tables.orders(s, d)
@@ -2462,11 +2466,11 @@ object SourceQueries {
         "TIMESTAMP, day DATE) TBLPROPERTIES ('snapshots'='true')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority, " +
         "o_orderdate, CAST(o_orderdate AS DATE) " +
-        s"FROM parquet.`$d/orders.parquet`") // v1
+        s"FROM ${Tables.view(s, d, "orders")}") // v1
       s.sql(s"ALTER TABLE $t ADD COLUMN qty BIGINT")
       s.sql(s"INSERT INTO $t SELECT o_orderkey + 10000000, " +
         "o_orderpriority, o_orderdate, CAST(o_orderdate AS DATE), " +
-        s"o_custkey + 7 FROM parquet.`$d/orders.parquet` " +
+        s"o_custkey + 7 FROM ${Tables.view(s, d, "orders")} " +
         "WHERE o_orderkey % 5 = 0") // v2, post-ALTER shape
       val out = s.sql(
         s"""SELECT value, count(*) AS n_orders,
@@ -2501,7 +2505,7 @@ object SourceQueries {
       val t = KvGate.table(s, "mv_gate", "(key BIGINT, value STRING) " +
         "TBLPROPERTIES ('snapshots'='true', 'dml'='mor')")
       s.sql(s"INSERT INTO $t SELECT o_orderkey, o_orderpriority " +
-        s"FROM parquet.`$d/orders.parquet`")
+        s"FROM ${Tables.view(s, d, "orders")}")
       s.sql(s"UPDATE $t SET value = concat('U-', value) " +
         "WHERE key % 7 = 0")
       s.sql(s"DELETE FROM $t WHERE key % 5 = 0")

@@ -210,6 +210,19 @@ class FsSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString(", "))
   }
 
+  test("src/main names no file in SQL-on-file text") {
+    // A `parquet.` + backquoted path clause infers the file's schema
+    // with a Spark job on every statement and skips the fixture
+    // canary; SQL reads a fixture through Tables.view instead.
+    val offenders = sources("src/main").flatMap { case (f, text) =>
+      text.linesIterator.zipWithIndex.collect {
+        case (line, i) if line.contains("parquet.`") => s"$f:${i + 1}"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"${offenders.size} sites: ${offenders.mkString(", ")}")
+  }
+
   test("specs take their temp dirs from SparkTestBase.tempDir") {
     // A createTempDirectory dir outlives the run: no reaper knows its
     // random name. Exception: this spec, which tests the scratch
